@@ -538,22 +538,6 @@ def neardup_leg(spark, src_dir: str, n_src: int = 1000) -> dict:
             "sec": round(time.perf_counter() - t0, 2),
             "rows": rows,
         }
-    # verify-plan A/B (round-5, r4 verdict #8): the same registered
-    # operating point with the interpreted long-array intersect vs the
-    # codegen explode-join count — outputs must be identical; the auto
-    # switch picks 'join' at dense candidate volumes based on this.
-    from fundamental_spark.operators.dedup import minhash_lsh_pairs
-
-    docs_df = spark.read.parquet(out)
-    for plan in ("array", "join"):
-        t0 = time.perf_counter()
-        rows = minhash_lsh_pairs(
-            docs_df, threshold=0.1, k=64, bands=16,
-            allow_low_recall=True, verify_plan=plan,
-        ).count()
-        timings[f"minhash_verify_{plan}"] = {
-            "sec": round(time.perf_counter() - t0, 2), "rows": rows,
-        }
     shutil.rmtree(out_dir, ignore_errors=True)
     return timings
 

@@ -234,6 +234,7 @@ class CrawlRunner:
         state = {
             "wave": self.wave,
             "spider_type": self.spider_type,
+            "n_shards": self.n_shards,
             "seen_count": self.seen_count,
             "seed_urls": self.seed_urls,
             "domains": sorted(self.domains),
@@ -256,6 +257,17 @@ class CrawlRunner:
     def _load_checkpoint(self) -> None:
         with open(self._ckpt_path()) as f:
             state = json.load(f)
+        # url_seen rows carry the domain_shard they were keyed under: a
+        # different n_shards makes the per-shard seen filter call every
+        # candidate new, re-fetching pages and duplicating url_seen rows.
+        # Checkpoints written before the field existed load as before.
+        ckpt_shards = state.get("n_shards", self.n_shards)
+        if ckpt_shards != self.n_shards:
+            raise ValueError(
+                f"checkpoint at {self._ckpt_path()} was written with "
+                f"n_shards={ckpt_shards}; resuming with n_shards="
+                f"{self.n_shards} would re-fetch already-seen pages"
+            )
         self.wave = state["wave"]
         self.seen_count = state.get("seen_count", 0)
         self.seed_urls = state.get("seed_urls", {})

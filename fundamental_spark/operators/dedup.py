@@ -3,10 +3,10 @@
 All are pure DataFrame plans (no Python in the hot path):
 
 - ``exact_dedup``: hash-groupBy on the normalized-text fingerprint.
-- ``ngram_jaccard_pairs``: exact word n-gram shingle Jaccard via
-  explode → self-join on shingle → |A∩B| / (|A|+|B|−|A∩B|). Quadratic
-  in *colliding* docs only; the shingle join is the classic inverted-
-  index trick, shuffles on shingle not on pair.
+- ``ngram_jaccard_pairs``: exact word n-gram shingle Jaccard
+  |A∩B| / (|A|+|B|−|A∩B|), computed by vectorized numpy postings
+  merges per block pair (mapInPandas); only per-doc hash arrays
+  shuffle, never the pair expansion.
 - ``minhash_lsh``: k minhash signatures computed row-wise (array HOFs,
   zero shuffle), banded into b bands of r rows; candidate pairs join on
   (band, band_hash), then verified with exact Jaccard via per-pair
@@ -26,24 +26,14 @@ from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint
 
-MERSENNE61 = (1 << 61) - 1
-P31 = (1 << 31) - 1  # prime 2^31 - 1: a*h < 2^61 fits int64, wraps ~2^30 times
+# MinHash position i is pmod(a_i*h + b_i, P31) with a_i < 2^30 and
+# h < 2^31: a*h < 2^61 fits int64 and the modulus wraps ~2^30 times, so
+# the k positions are independent hashes of each shingle and the banded
+# capture model 1-(1-j^r)^b holds (pinned by the capture tests). A
+# modulus above a*h+b would never wrap: every position would be a
+# monotone map of the same argmin shingle and capture would collapse to j.
+P31 = (1 << 31) - 1
 _A_SEED = 0x9E3779B97F4A7C15
-
-# Signature mixing modes (round 7). "wrap31" is the DEFAULT and the
-# statistically valid construction: with a < 2^30 and h < 2^31 the
-# product a*h reaches ~2^61, so pmod(a*h + b, P31) wraps ~2^30 times
-# and the k positions are genuinely independent hashes of each
-# shingle — the banded capture model 1-(1-j^r)^b holds. "affine61" is
-# the round-3..6 legacy construction kept ONLY for the two frozen
-# DuckDB-oracle queries (dedup_minhash_lsh / dedup_minhash_incremental
-# in queries.py): a*h+b < 2^61 never exceeds MERSENNE61, the mod is the
-# identity, min commutes with the monotone affine map, and every
-# position is a function of the single argmin shingle — banded capture
-# degenerates to exactly j (round-6 verdict #1). Do not use "affine61"
-# for new work; it exists so the registered oracle SQL (which unrolls
-# the legacy arithmetic) stays bit-identical.
-_MIXINGS = ("wrap31", "affine61")
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -132,13 +122,6 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def _shingle_table(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    return docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
-    )
-
-
 def _shingle_hashes(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(doc, h): one row per distinct shingle with its 60-bit hash —
     the exploded hash table the signature agg, the verify aggs and the
@@ -165,66 +148,38 @@ def ngram_jaccard_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    plan: str = "blocked",
     block_rows: int = 2048,
     broadcast_blocks: bool | None = None,
 ) -> DataFrame:
     """Exact shingle-Jaccard pairs ≥ threshold: (doc_a, doc_b, jaccard).
 
-    Two bit-identical physical plans (equality pinned by
-    tests/test_dedup.py::test_ngram_jaccard_plans_bit_identical):
+    The work is the inverted-index join's Σ_sh df(sh)² pair
+    increments, executed as vectorized numpy inside one mapInPandas
+    task per BLOCK PAIR (the jaccard twin of
+    similarity.embedding_near_dup_gemm). The row-at-a-time index join
+    (shingle self-join + pair groupBy) blows up on a small shingle
+    vocabulary: at sf1.0 the 50k synthetic documents share only 27,865
+    distinct shingles (mean df ≈ 94), so it emits 257M rows into a
+    114M-group aggregation — measured 273.8 s on local[32] against ~8 s
+    here. Docs hash into ~n/``block_rows`` blocks carrying per-doc
+    sorted 60-bit shingle-hash arrays; for each block pair the task
+    merges the two postings lists (argsort + intersect1d), expands the
+    per-hash cross products with cumsum tricks, and bincounts row-pair
+    keys into the dense intersection-count matrix. Only the (id,
+    hashes) arrays are ever shuffled (O(corpus), never O(df²)).
 
-    - ``plan='index'``: the classic inverted-index self-join on the
-      shingle STRING + pair groupBy. Cost is Σ_sh df(sh)² join rows
-      shuffled and hash-aggregated by (doc_a, doc_b) — on a corpus
-      with a small shingle vocabulary (high df) this blows up: at
-      sf1.0 the 50k synthetic documents share only 27,865 distinct
-      shingles (mean df ≈ 94), so the join emits 257M rows into a
-      114M-group aggregation — measured 273.8 s on local[32].
-    - ``plan='blocked'`` (default, round 7): the same Σ_sh df² pair
-      increments, executed as vectorized numpy inside one mapInPandas
-      task per BLOCK PAIR (the jaccard twin of
-      similarity.embedding_near_dup_gemm). Docs hash into ~n/
-      ``block_rows`` blocks carrying per-doc sorted 60-bit shingle-hash
-      arrays; for each block pair the task merges the two postings
-      lists (argsort + intersect1d), expands the per-hash cross
-      products with cumsum tricks, and bincounts row-pair keys into
-      the dense intersection-count matrix — compiled-C throughput for
-      exactly the work the index join does row-at-a-time, with only
-      the (id, hashes) arrays ever shuffled (O(corpus), never O(df²)).
-      Measured at sf1.0: 273.8 s → ~8 s. Tasks emit the integer
-      triples (inter, na, nb) for survivors only; jaccard is divided
-      and rounded JVM-side from those exact integers, so the float
-      result is the same single IEEE-754 division the index plan (and
-      the DuckDB oracle) performs — bit-identical by construction.
-      Equality rests on the same negligible-md5-collision assumption
-      the whole signature pipeline documents (two distinct shingles of
-      one corpus colliding in 60 bits: ~C(27865,2)·2⁻⁶⁰ ≈ 3e-10).
-      Ids may be any orderable type; non-ASCII string ids would order
-      by Python/numpy unicode rather than Spark's binary collation
-      (all fixtures and tables here use ASCII or numeric ids).
+    Tasks emit the integer triples (inter, na, nb) for survivors only;
+    jaccard is divided and rounded JVM-side from those exact integers,
+    so the float result is the same single IEEE-754 division the
+    DuckDB oracle performs (equality with the index join pinned by
+    tests/test_dedup.py::test_ngram_jaccard_plans_bit_identical).
+    Equality rests on the same negligible-md5-collision assumption the
+    whole signature pipeline documents (two distinct shingles of one
+    corpus colliding in 60 bits: ~C(27865,2)·2⁻⁶⁰ ≈ 3e-10). Ids may be
+    any orderable type; non-ASCII string ids would order by
+    Python/numpy unicode rather than Spark's binary collation (all
+    fixtures and tables here use ASCII or numeric ids).
     """
-    if plan == "index":
-        sh = _shingle_table(docs, id_col, text_col, n)
-        sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
-        a = sh.alias("a")
-        b = sh.alias("b")
-        inter = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
-            .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-            .agg(F.count("*").alias("inter"))
-        )
-        sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("na"))
-        sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("nb"))
-        jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-        return (
-            inter.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .filter(jac >= threshold)
-            .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        )
-    if plan != "blocked":
-        raise ValueError(f"unknown plan {plan!r}; one of ('blocked', 'index')")
     import math
 
     import numpy as np
@@ -384,7 +339,6 @@ def ngram_jaccard_pairs(
 def minhash_signatures(
     docs: DataFrame, k: int = 64, n: int = 3,
     id_col: str = "doc_id", text_col: str = "text",
-    mixing: str = "wrap31",
 ) -> DataFrame:
     """One row per doc with mh0..mh{k-1} — explode the shingle set,
     hash + affine-transform in WHOLE-STAGE CODEGEN, and take the k
@@ -405,21 +359,13 @@ def minhash_signatures(
     The base shingle hash is the md5-derived 60-bit hash mod 2^31 (not
     xxhash64) so the ENTIRE signature pipeline is reproducible in
     DuckDB — minhash-LSH gets a full cross-engine oracle, like SimHash
-    and winnowing.
-
-    ``mixing`` selects the per-position hash (see _MIXINGS above):
-    "wrap31" (default) = pmod(a_i*h + b_i, 2^31-1), independent
-    positions, valid banded-capture statistics; "affine61" = the
-    degenerate legacy arithmetic the two frozen oracle queries pin."""
-    if mixing not in _MIXINGS:
-        raise ValueError(f"unknown mixing {mixing!r}; one of {_MIXINGS}")
-    mod = P31 if mixing == "wrap31" else MERSENNE61
+    and winnowing. Position i is pmod(a_i*h + b_i, P31) (see P31)."""
     base = _shingle_hashes(docs, id_col=id_col, text_col=text_col, n=n)
     # bound the base hash to 2^31 so a*h fits int64 under ANSI
     ex = base.select("doc", F.pmod(F.col("h"), F.lit(1 << 31)).alias("h"))
     return ex.groupBy("doc").agg(
         *[
-            F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(mod))).alias(
+            F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(P31))).alias(
                 f"mh{i}"
             )
             for i, (a, b) in enumerate(_mh_constants(k))
@@ -507,9 +453,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     verify_exact: bool = True,
     allow_low_recall: bool = False,
-    verify_plan: str = "auto",
-    join_verify_min: int | None = None,
-    mixing: str = "wrap31",
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs. Candidates collide in ≥1 band of
     r=k/bands rows; with verify_exact the candidates are confirmed with
@@ -522,24 +465,15 @@ def minhash_lsh_pairs(
     operating point) — a silently under-recalling config was round-3
     verdict item #3.
 
-    ``verify_plan``: 'array' verifies each candidate pair row-wise with
-    a long-array ``array_intersect`` (ships one compact hash array per
-    doc per pair; the HOF is interpreted but candidate-proportional);
-    'join' re-derives the intersection with the codegen explode-join
-    COUNT the DuckDB oracle uses (cinter CTE shape) — no interpreter
-    in the loop, but the candidate×shingle expansion (~300 rows/pair
-    at web-page shingle counts) crosses TWO extra exchanges. Measured
-    A/B at 41k / 0.4M / 3.6M candidate pairs (local[32], sf0.1-derived
-    corpora, bit-identical outputs): array 2.0/16.7/32.3 s vs join
-    3.3/27.2/54.4 s — the hypothesized dense-volume crossover does not
-    exist at realistic shingle counts, because the join's shuffle
+    Candidates are verified row-wise with a long-array
+    ``array_intersect`` over the two docs' shingle-hash arrays
+    (_verify_candidate_pairs): cost ∝ |candidates| × shingles/doc. The
+    oracle's codegen explode-join COUNT shape (cinter CTE) lost the
+    round-5 A/B at every measured volume — 41k / 0.4M / 3.6M candidate
+    pairs (local[32], sf0.1-derived corpora, bit-identical outputs):
+    array 2.0/16.7/32.3 s vs join 3.3/27.2/54.4 s — because its shuffle
     volume grows with the same |candidates|×shingles/doc product that
-    the array plan pays only interpreter-cycles for. 'auto' therefore
-    resolves to 'array' unless the caller sets ``join_verify_min`` (a
-    measured-crossover escape hatch for corpora with very long shingle
-    arrays, where per-pair array rows outweigh exploded hash rows).
-    Both plans are bit-identical (shingles are distinct per doc, so
-    join-count == |∩|)."""
+    the array plan pays only interpreter cycles for."""
     if (k is None) != (bands is None):
         # deriving BOTH from the planner here would silently discard
         # the caller's explicit half (e.g. k=128 with bands unset would
@@ -574,9 +508,7 @@ def minhash_lsh_pairs(
     # ~31 s codegen'd fused scan+agg pass it replaced, and both
     # downstream aggs lose whole-stage fusion with the scan) — so the
     # two aggs intentionally re-run the fused shingle pipeline.
-    sigs = minhash_signatures(
-        docs, k=k, n=n, id_col=id_col, text_col=text_col, mixing=mixing
-    )
+    sigs = minhash_signatures(docs, k=k, n=n, id_col=id_col, text_col=text_col)
     # explicit repartition: the signature agg's output is tiny (one row
     # per doc), so AQE's size-based coalescing collapses it to 1-2
     # partitions — and the band self-join below is size-EXPANDING (it
@@ -622,70 +554,13 @@ def minhash_lsh_pairs(
     )
     if not verify_exact:
         return cands
-    if verify_plan not in ("auto", "array", "join"):
-        raise ValueError(f"unknown verify_plan {verify_plan!r}")
-    chosen = verify_plan
-    if chosen == "auto":
-        if join_verify_min is None:
-            # no measured crossover on this corpus class (see docstring
-            # A/B): array wins at every tested volume, and skipping the
-            # count also skips a cache + extra action
-            chosen = "array"
-        else:
-            # caller supplied a measured crossover: the count
-            # materializes candidate generation once (cached); the
-            # verify below reuses it, so the extra action costs only
-            # the count scan, not a second band join
-            cands = cands.cache()
-            chosen = "join" if cands.count() >= join_verify_min else "array"
-    if chosen == "join":
-        # codegen explode-join intersection count — the oracle's cinter
-        # CTE shape. Shingles are distinct per doc (word_shingles is
-        # array_distinct), so COUNT(*) of hash matches == |∩| exactly.
-        ex = _shingle_hashes(docs, id_col=id_col, text_col=text_col, n=n)
-        sizes = ex.groupBy("doc").agg(F.count("*").alias("n_sh"))
-        inter = (
-            cands.join(ex.select(F.col("doc").alias("doc_a"), "h"), "doc_a")
-            .join(ex.select(F.col("doc").alias("doc_b"), "h"), ["doc_b", "h"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("inter"))
-        )
-        scored_j = (
-            inter.join(
-                sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("na")),
-                "doc_a",
-            )
-            .join(
-                sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("nb")),
-                "doc_b",
-            )
-        )
-        jac_j = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-        return (
-            scored_j.filter(jac_j >= threshold)
-            .select("doc_a", "doc_b", F.round(jac_j, 4).alias("jaccard"))
-        )
-    # Candidate-proportional verification: join each candidate pair to
-    # the two docs' shingle-HASH arrays and verify row-wise with
-    # array_intersect — cost ∝ |candidates| × shingles/doc, never
-    # corpus². The arrays hold the md5-derived 60-bit hashes, NOT the
-    # shingle strings, and are built by a codegen'd explode + hash +
-    # collect_list agg: round-4 measurement showed string-array
-    # intersection interpreted at ~0.8 ms/pair (~9 s for a 10k-candidate
-    # wave) vs ~0.2 ms on long arrays built this way (verify stage
-    # 8.9 s → 1.6 s at sf0.1, identical output). |hash ∩| == |shingle ∩|
-    # barring md5 collisions — the same negligible-collision assumption
-    # the entire md5-keyed signature pipeline (and its DuckDB oracle)
-    # already rests on. (The round-2 implementation materialized the
-    # full exact-Jaccard pair table, defeating the LSH entirely.)
-    # Round 7: delegates to _verify_candidate_pairs, which (a) builds
-    # the hash arrays ONLY for candidate-involved docs (the former
-    # full-corpus collect_list agg paid one extra whole-shingle pass —
-    # the docstring's candidate-proportional claim now holds; the
-    # candidate subtree is shared via exchange reuse) and (b)
-    # repartitions the joined pairs before the interpreted
-    # array_intersect so AQE's size-based coalescing cannot serialize
-    # the verify onto 1 task (measured 8.5 s single-task at sf1.0).
+    # The verify arrays hold the md5-derived 60-bit hashes, NOT the
+    # shingle strings: string-array intersection ran interpreted at
+    # ~0.8 ms/pair vs ~0.2 ms on long arrays (verify stage 8.9 s →
+    # 1.6 s at sf0.1, identical output, round 4). |hash ∩| == |shingle
+    # ∩| barring md5 collisions — the same negligible-collision
+    # assumption the md5-keyed signature pipeline (and its DuckDB
+    # oracle) already rests on.
     return _verify_candidate_pairs(
         cands, docs, threshold=threshold, n=n, id_col=id_col, text_col=text_col
     )
@@ -1087,7 +962,6 @@ def minhash_incremental_pairs(
     allow_low_recall: bool = False,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mixing: str = "wrap31",
 ) -> DataFrame:
     """Delta dedup — near-dup pairs TOUCHING the new ingest slice only
     (``new_filter``, a boolean Column over ``docs``): the shape a
@@ -1121,9 +995,7 @@ def minhash_incremental_pairs(
     par = docs.sparkSession.sparkContext.defaultParallelism
     flags = docs.select(F.col(id_col).alias("doc"), new_filter.alias("is_new"))
     sigs = (
-        minhash_signatures(
-            docs, k=k, n=n, id_col=id_col, text_col=text_col, mixing=mixing
-        )
+        minhash_signatures(docs, k=k, n=n, id_col=id_col, text_col=text_col)
         .join(flags, "doc")
         .repartition(par)  # AQE-collapse guard before the expanding join
         # materialize once: `stacked` feeds both the probe side and the
@@ -1172,37 +1044,23 @@ def _verify_candidate_pairs(
     n: int,
     id_col: str,
     text_col: str,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate (doc_a, doc_b) pairs:
     shingle arrays are built ONLY for docs appearing in a candidate
     (semi-join before the collect_list agg), so the verify cost is
     O(candidate docs), never O(corpus).
 
-    The pair frame is explicitly repartitioned between the (cheap)
-    hash joins and the (expensive, interpreted) per-pair
-    array_intersect: the joined bytes are small, so AQE's size-based
-    coalescing would otherwise run the whole intersect loop on 1-2
-    tasks (measured 8.5 s single-task at sf1.0, round 7); the
-    round-robin exchange costs ~the array bytes once and buys the full
-    session parallelism for the HOF evaluation.
-
-    With ``materialize=True`` (default — the corpus-scale registered
-    queries) the candidate frame is materialized ONCE (eager
-    localCheckpoint — pair rows only, small by construction): it is
-    consumed twice below (``involved`` prune + the verify join), and
-    without the checkpoint Spark re-executes the entire
-    candidate-generation subtree per consumer — column pruning gives
-    each consumer a different canonical plan, so exchange reuse cannot
-    deduplicate them (measured: two extra full corpus passes at
-    sf1.0, round 7). ``materialize=False`` keeps the whole verify
-    LAZY (no checkpoints, no broadcast hints, planner-chosen joins):
-    the right shape for per-wave/per-batch DELTA probes, where the
-    candidate subtree is delta-sized and cheap to recompute but every
-    eager checkpoint is a fixed driver round-trip per wave (measured:
-    the eager shape cost the crawl hook +1.5-4 s/wave at sf0.1)."""
-    if materialize:
-        cands = cands.localCheckpoint(eager=True)
+    The candidate frame is materialized ONCE (eager localCheckpoint —
+    pair rows only, small by construction): it is consumed twice below
+    (``involved`` prune + the verify join), and without the checkpoint
+    Spark re-executes the entire candidate-generation subtree per
+    consumer — column pruning gives each consumer a different
+    canonical plan, so exchange reuse cannot deduplicate them
+    (measured: two extra full corpus passes at sf1.0, round 7). The
+    lazy alternative (no checkpoints, planner-chosen joins) had no
+    caller and lost on the crawl hook: ≈12 s/wave against ≈4.9 s/wave
+    at sf0.1 with 4.6M candidates by wave 7 (round 7)."""
+    cands = cands.localCheckpoint(eager=True)
     involved = (
         cands.select(F.col("doc_a").alias("doc"))
         .unionByName(cands.select(F.col("doc_b").alias("doc")))
@@ -1218,58 +1076,44 @@ def _verify_candidate_pairs(
     # subtree (measured as two full corpus passes at sf1.0)
     hsz = hs_src.groupBy("doc").agg(
         F.collect_list("h").alias("hs"), F.count("*").alias("n_sh")
-    )
-    if materialize:
-        hsz = hsz.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     a_sh = hsz.select(
         F.col("doc").alias("doc_a"), F.col("hs").alias("sh_a"), F.col("n_sh").alias("na")
     )
     b_sh = hsz.select(
         F.col("doc").alias("doc_b"), F.col("hs").alias("sh_b"), F.col("n_sh").alias("nb")
     )
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    # Materialized path: repartition the PAIRS before the joins (a
+    # Small array sides: repartition the PAIRS before the joins (a
     # projection placed after a trailing repartition gets pushed below
     # it, so the exchange must come first) and broadcast the array
-    # sides so the hash joins preserve the round-robin partitioning
-    # and the interpreted intersect runs at full parallelism. The
-    # broadcast is GATED on the ACTUAL array bytes (one cheap agg over
-    # the already-materialized hsz — an F.broadcast hint bypasses
+    # sides so the hash joins preserve the round-robin partitioning and
+    # the interpreted array_intersect runs at full parallelism instead
+    # of on the 1-2 tasks AQE's size-based coalescing would leave
+    # (measured 8.5 s single-task at sf1.0, round 7). The broadcast is
+    # GATED on the ACTUAL array bytes (one cheap agg over the
+    # materialized hsz — an F.broadcast hint bypasses
     # autoBroadcastJoinThreshold entirely, and a degenerate candidate
     # set can pull most of the corpus into `involved`, where a forced
     # multi-GB broadcast would hit the 8 GB hard cap or OOM the
-    # driver). Past the gate the planner-chosen join is the right
-    # plan anyway: at that volume the join exchanges are large, so
-    # AQE's small-bytes single-task collapse — the problem the
-    # broadcast shape exists to solve — cannot occur.
-    use_broadcast = False
-    if materialize:
-        tot = hsz.agg(F.sum("n_sh")).collect()[0][0] or 0
-        use_broadcast = tot * 8 <= 256 * 1024 * 1024
-    if not use_broadcast:
-        scored = cands.join(a_sh, "doc_a").join(b_sh, "doc_b").select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
-            "na",
-            "nb",
+    # driver). Past the gate the planner-chosen join is the right plan
+    # anyway: at that volume the join exchanges are large, so the
+    # single-task collapse cannot occur.
+    tot = hsz.agg(F.sum("n_sh")).collect()[0][0] or 0
+    if tot * 8 <= 256 * 1024 * 1024:
+        par = docs.sparkSession.sparkContext.defaultParallelism
+        joined = (
+            cands.repartition(par)
+            .join(F.broadcast(a_sh), "doc_a")
+            .join(F.broadcast(b_sh), "doc_b")
         )
-        jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-        return (
-            scored.filter(jac >= threshold)
-            .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        )
-    scored = (
-        cands.repartition(par)
-        .join(F.broadcast(a_sh), "doc_a")
-        .join(F.broadcast(b_sh), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
-            "na",
-            "nb",
-        )
+    else:
+        joined = cands.join(a_sh, "doc_a").join(b_sh, "doc_b")
+    scored = joined.select(
+        "doc_a",
+        "doc_b",
+        F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
+        "na",
+        "nb",
     )
     jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
     return (
@@ -1285,7 +1129,6 @@ def minhash_band_table(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mixing: str = "wrap31",
 ) -> DataFrame:
     """The STORED band index a delta-ingest pipeline maintains across
     runs: (doc, band_idx, band_hash), one row per (doc, band). Built
@@ -1294,20 +1137,16 @@ def minhash_band_table(
     table. Persist this table once; every future ingest probes it with
     ``minhash_probe_band_index`` and appends its own delta's rows.
 
-    STATE-VERSION WARNING: band hashes are a function of ``mixing``
-    (and of (k, bands, n)). An index persisted under the pre-round-7
-    default ("affine61", the degenerate construction) does NOT match
-    probes computed under the fixed "wrap31" default — the join finds
-    zero prior-run collisions and silently drops every cross-version
-    pair. A store that predates the wrap31 upgrade must either be
-    REBUILT from its texts or be probed with mixing="affine61"
-    explicitly; the table carries no marker, so the operator cannot
-    detect the mismatch itself."""
+    STATE-VERSION WARNING: band hashes are a function of the signature
+    hash construction (see P31) and of (k, bands, n). An index
+    persisted by pre-round-7 code (whose signature modulus never
+    wrapped) does NOT match probes computed now — the join finds zero
+    prior-run collisions and silently drops every cross-version pair.
+    Such an index must be REBUILT from its texts; the table carries no
+    marker, so the operator cannot detect the mismatch itself."""
     assert k % bands == 0
     r = k // bands
-    sigs = minhash_signatures(
-        docs, k=k, n=n, id_col=id_col, text_col=text_col, mixing=mixing
-    )
+    sigs = minhash_signatures(docs, k=k, n=n, id_col=id_col, text_col=text_col)
     band_cols = [
         F.concat_ws("-", *[F.col(f"mh{band * r + j}") for j in range(r)]).alias(
             f"band{band}"
@@ -1334,8 +1173,6 @@ def minhash_probe_band_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     new_bands: DataFrame | None = None,
-    mixing: str = "wrap31",
-    materialize: bool = True,
 ) -> DataFrame:
     """Probe a STORED band index with an ingest delta — the production
     sibling of ``minhash_incremental_pairs`` (which derives its index
@@ -1355,17 +1192,7 @@ def minhash_probe_band_index(
     unioning the outputs reproduces EXACTLY the full-corpus
     ``minhash_lsh_pairs`` set — a pair is caught by the ingest that
     completes it, and only that one (earlier docs sit in the index,
-    same-ingest pairs canonicalize + distinct).
-
-    ``materialize`` (default True): materialize the candidate set and
-    verify arrays once (see _verify_candidate_pairs). Round-7 A/B on
-    the sf0.1 crawl hook (4.6M candidates by wave 7 under the fixed
-    wrap31 statistics): True ≈ 4.9 s/wave vs False ≈ 12 s/wave —
-    the lazy shape re-runs the index probe and the text-derivation
-    HOFs once per verify consumer, which dominates as soon as the
-    candidate volume is non-trivial. False remains for genuinely tiny
-    deltas where the extra eager driver round-trips are the larger
-    term."""
+    same-ingest pairs canonicalize + distinct)."""
     if not allow_low_recall:
         cap = minhash_capture_prob(threshold, k, bands)
         if cap < 0.9:
@@ -1377,8 +1204,7 @@ def minhash_probe_band_index(
     par = new_docs.sparkSession.sparkContext.defaultParallelism
     if new_bands is None:
         new_bands = minhash_band_table(
-            new_docs, k=k, bands=bands, n=n, id_col=id_col, text_col=text_col,
-            mixing=mixing,
+            new_docs, k=k, bands=bands, n=n, id_col=id_col, text_col=text_col
         )
     # AQE-collapse guard before the expanding join
     new_bands = new_bands.repartition(par)
@@ -1401,8 +1227,7 @@ def minhash_probe_band_index(
         .distinct()
     )
     return _verify_candidate_pairs(
-        cands, texts, threshold=threshold, n=n, id_col=id_col,
-        text_col=text_col, materialize=materialize,
+        cands, texts, threshold=threshold, n=n, id_col=id_col, text_col=text_col
     )
 
 

@@ -10,7 +10,11 @@
   from fixed constants): bucket vectors by sign signature, search only
   same-bucket (multi-probe: hamming-1 buckets optional) — the scale
   path; recall measured against brute force in tests.
-- ``embedding_near_dup_pairs``: all pairs ≥ cosine threshold.
+- ``embedding_near_dup_gemm`` / ``embedding_near_dup_lsh_pairs`` /
+  ``embedding_near_dup_auto``: all pairs ≥ cosine threshold — exact
+  blocked GEMM, banded hyperplane LSH, and the threshold-driven
+  dispatcher between them. The O(n²) crossJoin reference they are
+  checked against lives in tests/test_similarity.py.
 """
 
 from __future__ import annotations
@@ -19,16 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def spread(df: DataFrame) -> DataFrame:
-    """Small-file inputs arrive in 1-2 scan partitions; heavy row-wise
-    vector expressions (HOF lambdas are interpreted) and cross joins
-    then run single-threaded. Spread to the session's parallelism;
-    no-op at scale where scans already split into ≥cores partitions."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+from .dedup import spread
 
 
 def _to_double(v: Column) -> Column:
@@ -481,6 +476,21 @@ def assign_cells_coarse(
     return df.mapInPandas(gen, schema)
 
 
+def _first_by_unique_id(ordered: DataFrame, k: int) -> list:
+    """The first ``k`` rows of an id-ordered frame, for seeding. Fetches
+    k+1 rows and raises if any id repeats among them: a tie at or
+    across the cut makes the seed order depend on partitioning, and
+    with it every centroid trained from the seeds."""
+    rows = ordered.limit(k + 1).collect()
+    ids = [r["id"] for r in rows]
+    if len(set(ids)) < len(ids):
+        raise ValueError(
+            "seed selection needs unique ids; repeated among the first "
+            f"{k + 1} by id: {sorted({i for i in ids if ids.count(i) > 1})}"
+        )
+    return rows[:k]
+
+
 def kmeans_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
@@ -502,10 +512,8 @@ def kmeans_centroids(
     base = spread(corpus).select(
         F.col(id_col).alias("id"), _to_double(F.col(vec_col)).alias("v")
     ).localCheckpoint(eager=True)
-    cents = [
-        _unit([float(x) for x in r["v"]])
-        for r in base.orderBy("id").limit(n_centroids).collect()
-    ]
+    seeds = _first_by_unique_id(base.orderBy("id"), n_centroids)
+    cents = [_unit([float(x) for x in r["v"]]) for r in seeds]
     dim = len(cents[0]) if cents else 0
     for _ in range(n_iters):
         # GEMM assignment (assign_cells_gemm): Lloyd's per-iteration
@@ -604,9 +612,9 @@ def embedding_near_dup_lsh_pairs(
     r = n_planes/bands bits; candidate pairs collide in ≥1 band
     (P[caught] = 1-(1-p^r)^b with p = 1-θ/π), then exact-cosine
     verified. Shuffles on (band, value) — never materializes the cross
-    product; ``embedding_near_dup_pairs`` (all-pairs) is the exact
-    verifier/oracle, this operator is the one that scales. Recall vs
-    the exact pair set is measured in tests/test_similarity.py."""
+    product; ``embedding_near_dup_gemm`` (all-pairs) is the exact
+    plan, this operator is the one that scales. Recall vs the exact
+    pair set is measured in tests/test_similarity.py."""
     assert n_planes % bands == 0
     r = n_planes // bands
     mask = (1 << r) - 1
@@ -723,12 +731,12 @@ def embedding_near_dup_auto(
     cfg = plan_near_dup_config(threshold, recall_target=recall_target)
     if cfg is None:
         # exact branch rides the DISTRIBUTED blocked-GEMM plan: same
-        # result set as embedding_near_dup_pairs (the pure-JVM oracle
-        # twin, kept registered separately), ~100× less per-pair
-        # overhead — numpy matmul per block pair instead of an
-        # interpreted HOF dot product per pair; no driver collect, any
-        # id type (round-5: the round-4 version collected the whole
-        # corpus matrix to the driver and hard-coded bigint ids)
+        # result set as the crossJoin HOF-dot reference (pinned in
+        # tests/test_similarity.py), ~100× less per-pair overhead —
+        # numpy matmul per block pair instead of an interpreted HOF dot
+        # product per pair; no driver collect, any id type (round-5:
+        # the round-4 version collected the whole corpus matrix to the
+        # driver and hard-coded bigint ids)
         return embedding_near_dup_gemm(
             corpus, threshold=threshold, id_col=id_col, vec_col=vec_col
         )
@@ -876,25 +884,6 @@ def embedding_near_dup_gemm(
     partial = tasks.mapInPandas(score, out_schema)
     return partial.select(
         "id_a", "id_b", F.round("cos", 4).alias("cos")
-    ).filter(F.col("cos") >= threshold)
-
-
-def embedding_near_dup_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All pairs with cosine ≥ threshold (embedding near-dup dedup).
-    O(n²) by construction — this is the exact verifier and the DuckDB
-    oracle twin; the fast exact plan is ``embedding_near_dup_gemm``,
-    the scale path ``embedding_near_dup_lsh_pairs``."""
-    a = spread(corpus).select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    cos = cosine(F.col("va"), F.col("vb"))
-    return pairs.select(
-        "id_a", "id_b", F.round(cos, 4).alias("cos")
     ).filter(F.col("cos") >= threshold)
 
 
@@ -1219,12 +1208,11 @@ def pq_codebooks(
     # The fold runs AFTER the orderBy+limit (ksub rows), not before:
     # projecting first paid the interpreted HOF over the whole corpus
     # just to keep 16 rows (measured 15.4 s executor time at sf1.0).
-    seeds = (
+    seeds = _first_by_unique_id(
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("rv"))
         .orderBy("id")
-        .limit(ksub)
-        .select("id", _unit_vec(F.col("rv")).alias("u"))
-        .collect()
+        .select("id", _unit_vec(F.col("rv")).alias("u")),
+        ksub,
     )
     if len(seeds) < ksub:
         raise ValueError(f"corpus smaller than ksub={ksub}")

@@ -53,7 +53,7 @@ from .functions.text import (
     token_count,
 )
 from .operators.dedup import (
-    MERSENNE61,
+    P31,
     _mh_constants,
     dedup_cluster_assignment,
     dup_span_stats,
@@ -975,9 +975,9 @@ def embedding_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     result set bit-for-bit (the GEMM twin has been hash-green against
     this very oracle shape via embedding_near_dup_auto since round 5;
     re-verified vs the oracle at sf0.001/0.01/0.1 this round). The
-    crossJoin form stays available as similarity.embedding_near_dup_pairs
-    (the O(n²)-by-construction reference verifier). Measured at sf1.0:
-    170.2 s → ~5 s (32 cores)."""
+    crossJoin form is the O(n²)-by-construction reference verifier in
+    tests/test_similarity.py. Measured at sf1.0: 170.2 s → ~5 s
+    (32 cores)."""
     from .operators.similarity import embedding_near_dup_gemm
 
     return embedding_near_dup_gemm(T(spark, sf_dir, "embeddings"), threshold=0.4)
@@ -1122,11 +1122,12 @@ def dedup_winnow_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # MinHash signature oracle: same affine constants, same md5-derived
-# base hash mod 2^31, same Mersenne-61 modulus — DuckDB reproduces the
-# 64 signature minima, the 16 four-row band keys, the collision join
-# and the exact-Jaccard verify bit-for-bit.
+# base hash mod 2^31, same P31 modulus — DuckDB reproduces the 64
+# signature minima, the 16 four-row band keys, the collision join and
+# the exact-Jaccard verify bit-for-bit (a*h+b < 2^61 fits BIGINT, and
+# % equals Spark's pmod on these non-negative operands).
 _MH_MINS = ",\n".join(
-    f"           MIN(({a} * h + {b}) % {MERSENNE61}) AS mh{i}"
+    f"           MIN(({a} * h + {b}) % {P31}) AS mh{i}"
     for i, (a, b) in enumerate(_mh_constants(64))
 )
 _MH_BANDS = " UNION ALL ".join(
@@ -1167,21 +1168,16 @@ _MH_BANDS = " UNION ALL ".join(
     """,
 )
 def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documented candidate-generation operating point, pinned to the
-    LEGACY "affine61" signature arithmetic because the DuckDB oracle
-    above unrolls exactly that arithmetic (frozen since round 3).
-    Round-6 verdict #1: under affine61 every signature position is a
-    monotone function of the argmin shingle, so the banded capture is
-    exactly j — NOT the 1-(1-j⁴)¹⁶ curve the banding model promises.
-    This query therefore documents a candidate-generation operating
-    point of the legacy construction only; production near-dup paths
-    (crawl hook, streaming drain, auto dispatcher) use the default
-    "wrap31" mixing whose capture model is valid (dedup.py _MIXINGS).
-    `allow_low_recall=True` states the under-recall on purpose; the
-    recall-guaranteed dispatcher is dedup_minhash_auto."""
+    """Documented candidate-generation operating point: the (64,16)
+    banding at jaccard 0.1 captures only 1-(1-0.1⁴)¹⁶ ≈ 0.2% of
+    at-threshold pairs (pairs well above it are caught — ~0.99 at
+    j=0.7), and `allow_low_recall=True` states that on purpose; the
+    recall-guaranteed dispatcher is dedup_minhash_auto. Same signature
+    construction as every production near-dup path (see dedup.P31),
+    unrolled by the oracle above."""
     return minhash_lsh_pairs(
         T(spark, sf_dir, "documents"), threshold=0.1, k=64, bands=16,
-        allow_low_recall=True, mixing="affine61",
+        allow_low_recall=True,
     )
 
 
@@ -2959,16 +2955,13 @@ def dedup_minhash_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe carries only new docs against the full index, and the
     verify-stage shingle arrays build only for candidate-involved
     docs. Oracle = the full-corpus banding SQL with a touch-new
-    predicate (identical pair set by construction). Pinned to the
-    legacy "affine61" mixing the frozen oracle unrolls (see
-    dedup_minhash_lsh_q)."""
+    predicate (identical pair set by construction)."""
     from .operators.dedup import minhash_incremental_pairs
 
     return minhash_incremental_pairs(
         T(spark, sf_dir, "documents"),
         new_filter=F.col("doc_id") % 10 == 0,
         threshold=0.1, k=64, bands=16, allow_low_recall=True,
-        mixing="affine61",
     )
 
 
@@ -3223,124 +3216,3 @@ def quality_classifier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.pipeline import quality_lr_fit
 
     return quality_lr_fit(T(spark, sf_dir, "documents"))
-
-
-# ---------------------------------------------------------------------------
-# Driver-window rotation (50-slot CORRECTNESS policy)
-# ---------------------------------------------------------------------------
-# The per-round correctness driver records rows for exactly the FIRST
-# 50 entries of SPARK_QUERIES in insertion order (verified against
-# CORRECTNESS_r04/r05: each file's key set equals the first 50
-# registrations of that round). With 73+ registered queries, anything
-# past slot 50 is only covered by the in-repo 73-way parity sweep
-# (tests/test_oracle_parity.py), never by a driver-green row.
-#
-# Rotation policy: each round, the window leads with every query that
-# has NO driver-green row yet (new registrations + anything pushed out
-# of a previous window), padded to 50 with the veterans whose last
-# driver confirmation is OLDEST — so every registered query re-earns a
-# driver-green row at most two rounds after it (or the module under
-# it) changes. The full-registry pytest parity sweep stays the
-# per-session backstop for whatever sits past slot 50.
-#
-# _DRIVER_CONFIRMED_R5 = the key set of CORRECTNESS_r05.json (all 50
-# green). Everything not in it — the round-4/5 assembly tier
-# (train_split_stats .. quality_classifier) plus all round-6
-# registrations — leads the round-6 window.
-_DRIVER_CONFIRMED_R5 = [
-    "pricing_summary", "status_weighted_stats", "prefix_area_stats",
-    "group_median", "recent_topk", "region_nation_rollup",
-    "customers_without_orders", "segment_with_orders",
-    "effective_date_filter", "days_to_ship", "monthly_timeseries",
-    "price_lag_per_customer", "topn_per_group", "regression",
-    "group_share_window", "distinct_prefixes", "union_distinct_users",
-    "quality_range_filter", "json_props_stats", "regex_first_word",
-    "rooms_impact", "room_premium", "heatmap_ranges",
-    "district_price_analysis", "client_multidim_filter", "metro_center",
-    "dedup_exact", "dedup_ngram_jaccard", "dedup_minhash_auto",
-    "embedding_near_dup", "ann_brute_force", "token_stats",
-    "text_quality", "doc_fingerprint_stats", "dedup_winnow",
-    "dedup_minhash_lsh", "dedup_clusters", "dedup_simhash", "ann_lsh",
-    "ann_lsh_recall", "event_sessions", "geocoding_progress", "ann_gemm",
-    "ann_ivf", "ann_ivf_recall", "ann_pq", "ann_pq_recall",
-    "semdedup_stats", "embedding_near_dup_auto", "langid_pred",
-]
-
-
-def _driver_confirmation_age() -> dict[str, int]:
-    """last round in which each query earned a driver-green row,
-    derived from the recorded CORRECTNESS_r*.json key sets (round-6
-    advice #1: no hardcoded snapshot, no stale list). Only rows whose
-    hash matched count as confirmation. Returns {} when no records are
-    readable (e.g. a dist tree without the round files)."""
-    import glob
-    import json as _json
-    import os
-    import re as _re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    ages: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rows = _json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if isinstance(row, dict) and row.get("hash_match"):
-                ages[name] = max(ages.get(name, 0), rnd)
-    return ages
-
-
-# Queries whose PHYSICAL PLAN changed in round 7 (blocked jaccard,
-# GEMM swap + flat payloads, checkpointed minhash verify, winnow/
-# session repartitions, kmeans/PQ trainer changes, operator spreads,
-# one-pass dsir, LR cache fix). A prior driver confirmation predates
-# the change, so for rotation purposes they count as UNCONFIRMED —
-# they must lead the round-7 window regardless of their last green
-# round (results are bit-identical by construction; the window is the
-# driver's independent proof).
-_PLAN_CHANGED_R7 = [
-    "dedup_ngram_jaccard", "dedup_minhash_auto", "dedup_clusters",
-    "dedup_keep_best", "dedup_minhash_lsh", "dedup_minhash_incremental",
-    "dedup_winnow", "embedding_near_dup", "embedding_near_dup_auto",
-    "ann_ivf", "ann_ivf_recall", "ann_ivfpq", "ann_ivfpq_recall",
-    "semdedup_stats", "ann_pq", "ann_pq_recall", "gopher_repetition",
-    "quality_classifier", "pipeline_e2e", "benchmark_contamination",
-    "line_dedup_stats", "bm25_search", "dsir_weights", "event_sessions",
-]
-
-
-def _rotate_driver_window() -> None:
-    """Reorder SPARK_QUERIES so the queries whose driver confirmation
-    is OLDEST (or absent, or stale because this round changed their
-    physical plan — _PLAN_CHANGED_R7) occupy the first slots — the
-    50-slot driver window then re-verifies exactly the registrations
-    whose last driver-green row is least meaningful. Age derives from
-    the recorded CORRECTNESS_r*.json files (ties break by registration
-    order, which is deterministic); with no records readable, the
-    static round-5 snapshot below approximates the same policy. Pure
-    reordering — the key set and every callable are unchanged, and
-    tests/test_oracle_parity.py remains the mandatory full-registry
-    backstop for whatever sits past slot 50."""
-    global SPARK_QUERIES, ORACLE_SQL
-    ages = _driver_confirmation_age()
-    if ages:
-        for n in _PLAN_CHANGED_R7:
-            ages[n] = 0
-        reg = {n: i for i, n in enumerate(SPARK_QUERIES)}
-        order = sorted(SPARK_QUERIES, key=lambda n: (ages.get(n, 0), reg[n]))
-    else:
-        confirmed = set(_DRIVER_CONFIRMED_R5)
-        priority = [n for n in SPARK_QUERIES if n not in confirmed]
-        pad = [n for n in SPARK_QUERIES if n in confirmed]
-        order = priority + pad
-    SPARK_QUERIES = {n: SPARK_QUERIES[n] for n in order}
-    ORACLE_SQL = {n: ORACLE_SQL[n] for n in order if n in ORACLE_SQL}
-
-
-_rotate_driver_window()

@@ -451,11 +451,11 @@ def drain_neardup(
     delta-table commit protocol).
 
     STATE-VERSION WARNING (round 7): stored band hashes depend on the
-    MinHash ``mixing`` construction. A ``state_dir`` written by
-    pre-round-7 code (the degenerate "affine61" default) must be
-    rebuilt before resuming under the fixed "wrap31" default — old
-    bands match nothing, so cross-version near-dup pairs would be
-    silently lost (see minhash_band_table)."""
+    MinHash signature construction. A ``state_dir`` written by
+    pre-round-7 code (whose signature modulus never wrapped) must be
+    rebuilt before resuming — old bands match nothing, so
+    cross-version near-dup pairs would be silently lost (see
+    minhash_band_table)."""
     from ..operators.dedup import minhash_band_table, minhash_probe_band_index
 
     bands_dir = os.path.join(state_dir, "bands")

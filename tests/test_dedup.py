@@ -16,6 +16,7 @@ from fundamental_spark.operators.dedup import (
     simhash_pairs,
     winnow_fingerprints,
     winnow_pairs,
+    word_shingles,
 )
 
 WORDS = (
@@ -26,6 +27,34 @@ WORDS = (
 
 def _doc(rng: random.Random, n: int = 60) -> str:
     return " ".join(WORDS[rng.randrange(len(WORDS))] for _ in range(n))
+
+
+def _index_jaccard_pairs(docs, threshold, n=3):
+    """Reference exact shingle Jaccard: the classic inverted-index
+    self-join on the shingle string + pair groupBy (the plan
+    ngram_jaccard_pairs replaced; Σ_sh df² join rows, so test-sized
+    corpora only)."""
+    sh = docs.select(
+        F.col("doc_id").alias("doc"),
+        F.explode(word_shingles(F.col("text"), n)).alias("shingle"),
+    )
+    sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
+    a = sh.alias("a")
+    b = sh.alias("b")
+    inter = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
+        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .agg(F.count("*").alias("inter"))
+    )
+    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("na"))
+    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("nb"))
+    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
+    return (
+        inter.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(jac >= threshold)
+        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
+    )
 
 
 @pytest.fixture(scope="module")
@@ -65,30 +94,21 @@ def test_ngram_jaccard_plans_bit_identical(planted):
     block pair) must reproduce the inverted-index join bit-for-bit —
     same pairs, same rounded jaccard — at several thresholds,
     including sub-block corpora where one task sees everything."""
-    for thr in (0.1, 0.5):
-        idx = sorted(
-            tuple(r)
-            for r in ngram_jaccard_pairs(planted, threshold=thr, plan="index").collect()
-        )
+    idx = {
+        thr: sorted(tuple(r) for r in _index_jaccard_pairs(planted, thr).collect())
+        for thr in (0.1, 0.5)
+    }
+    for thr in idx:
         blk = sorted(
-            tuple(r)
-            for r in ngram_jaccard_pairs(planted, threshold=thr, plan="blocked").collect()
+            tuple(r) for r in ngram_jaccard_pairs(planted, threshold=thr).collect()
         )
-        assert idx == blk and idx, thr
+        assert idx[thr] == blk and blk, thr
     # tiny block size forces real cross-block pairs through the flip path
     blk_small = sorted(
         tuple(r)
-        for r in ngram_jaccard_pairs(
-            planted, threshold=0.1, plan="blocked", block_rows=8
-        ).collect()
+        for r in ngram_jaccard_pairs(planted, threshold=0.1, block_rows=8).collect()
     )
-    idx_small = sorted(
-        tuple(r)
-        for r in ngram_jaccard_pairs(planted, threshold=0.1, plan="index").collect()
-    )
-    assert blk_small == idx_small
-    with pytest.raises(ValueError, match="unknown plan"):
-        ngram_jaccard_pairs(planted, plan="nope").collect()
+    assert blk_small == idx[0.1]
 
 
 def test_minhash_lsh_recall_and_estimate(planted):
@@ -115,8 +135,6 @@ def test_winnow_guarantee_and_compression(planted, spark):
     assert ("dup_a", "dup_b") in pairs          # identical docs
     assert ("dup_a", "near_a") in pairs         # 1-word mutation
     # compression: fingerprints ≪ shingles (~2/(w+1) expected density)
-    from fundamental_spark.operators.dedup import word_shingles
-
     stats = planted.select(
         F.size(winnow_fingerprints(F.col("text"))).alias("n_fp"),
         F.size(word_shingles(F.col("text"))).alias("n_sh"),
@@ -362,37 +380,6 @@ def test_word_kgrams_regex_equivalence(spark):
         got = [r["g"] for r in df.select(word_kgrams(F.col("text"), n).alias("g")).collect()]
         want = [ref(t[0], n) for t in rows]
         assert got == want, (n, got, want)
-
-
-def test_minhash_verify_plans_bit_identical(planted):
-    """Round-5 (r4 verdict #8): the codegen explode-join verify must
-    reproduce the long-array intersect verify bit-for-bit (shingles
-    are distinct per doc, so join-count == |intersection|), and the
-    auto switch must accept both regimes."""
-    runs = {
-        plan: sorted(
-            tuple(r)
-            for r in minhash_lsh_pairs(
-                planted, threshold=0.3, verify_plan=plan
-            ).collect()
-        )
-        for plan in ("array", "join", "auto")
-    }
-    assert runs["array"] == runs["join"] == runs["auto"]
-    assert runs["array"]  # planted near-dups present
-    # explicit crossover: auto + join_verify_min exercises the
-    # cached-count dispatch branch and must stay bit-identical
-    forced = sorted(
-        tuple(r)
-        for r in minhash_lsh_pairs(
-            planted, threshold=0.3, verify_plan="auto", join_verify_min=1
-        ).collect()
-    )
-    assert forced == runs["array"]
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        minhash_lsh_pairs(planted, threshold=0.3, verify_plan="nope").collect()
 
 
 def test_dup_spans_planted(spark):

@@ -1,0 +1,67 @@
+"""Structure of the query registry and the entry module around it.
+
+The library registers queries and nothing else: it reads no file
+outside its package at import, so a checkout and the zipped package
+(make_dist.sh) expose the same registry in the same order. Ordering
+for the per-round correctness window lives in ``__spark_entry__``.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+import subprocess
+import sys
+
+import __spark_entry__ as entrymod
+from fundamental_spark import queries as qmod
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "fundamental_spark")
+
+_AUDIT = r"""
+import os, sys
+import pyspark.sql, pyspark.sql.functions, pyspark.sql.window
+events = []
+def hook(ev, args):
+    if ev == "open" or ev.startswith(("glob.", "os.listdir", "os.scandir")):
+        events.append((ev, str(args[0])))
+sys.addaudithook(hook)
+import fundamental_spark.queries
+for ev, path in events:
+    print(ev, path)
+"""
+
+
+def test_queries_import_opens_no_file_outside_package():
+    out = subprocess.run(
+        [sys.executable, "-c", _AUDIT], cwd=REPO, capture_output=True,
+        text=True, check=True, env={**os.environ, "PYTHONPATH": REPO},
+    ).stdout.splitlines()
+    bad = []
+    for line in out:
+        ev, path = line.split(" ", 1)
+        inside = os.path.abspath(path).startswith(PKG + os.sep) or path == PKG
+        if ev.startswith("glob."):
+            bad.append(line)  # data discovery, never module loading
+        elif ev == "open" and not inside and not path.endswith((".py", ".pyc", ".so")):
+            bad.append(line)
+    assert not bad, bad
+
+
+def test_spark_queries_iterate_in_registration_order():
+    tree = ast.parse(open(qmod.__file__).read())
+    registered = [
+        dec.args[0].value
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef)
+        for dec in node.decorator_list
+        if isinstance(dec, ast.Call) and getattr(dec.func, "id", None) == "q"
+    ]
+    assert list(qmod.SPARK_QUERIES) == registered
+
+
+def test_entry_covers_the_registry():
+    assert set(entrymod.queries()) == set(qmod.SPARK_QUERIES)
+    assert set(entrymod.oracle_sql()) == set(qmod.ORACLE_SQL)
+    assert all(entrymod.queries()[n] is qmod.SPARK_QUERIES[n] for n in qmod.SPARK_QUERIES)

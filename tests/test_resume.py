@@ -8,8 +8,10 @@ identical to an uninterrupted run — including crawl order and spans.
 
 from __future__ import annotations
 
+import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from fundamental_spark.crawl.runner import CrawlRunner
@@ -128,3 +130,26 @@ def test_retry_ledger_refetches_then_drops(spark, tmp_path):
     assert f2[dead_url]["attempt"] == r2.politeness.retry_times + 1
     docs2 = {d["doc_id"] for d in r2.table("documents").collect()}
     assert docs2 == set(sim.spans_by_doc) - {dead_url}
+
+
+def test_resume_with_changed_n_shards_raises(spark, tmp_path):
+    """url_seen rows carry the domain_shard they were keyed under, so a
+    resume with a different n_shards would make the per-shard seen
+    filter call every pre-seeded URL new and fetch it again. The
+    checkpoint records n_shards and a mismatched resume must raise."""
+    site = build_site(seed=43, cities=("emmen",), listings_per_city=20, page_size=10)
+    seen = [u for _, page in site.pages_by_city["emmen"] for u in page]
+    root = tmp_path / "shards"
+    r = _mk_runner(spark, root, site, n_shards=32, bloom_min_seen=0)
+    r.init([(site.search_url("emmen", 1), "emmen")], existing_urls=seen)
+    del r
+    with pytest.raises(ValueError, match="n_shards=32"):
+        _mk_runner(spark, root, site, n_shards=7, bloom_min_seen=0)
+    assert _mk_runner(spark, root, site, n_shards=32, bloom_min_seen=0).wave == 0
+
+    # a checkpoint written before n_shards was recorded loads as before
+    ckpt = root / "checkpoint.json"
+    state = json.loads(ckpt.read_text())
+    del state["n_shards"]
+    ckpt.write_text(json.dumps(state))
+    assert _mk_runner(spark, root, site, n_shards=7).wave == 0

@@ -8,13 +8,28 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from fundamental_spark.operators.dedup import spread
 from fundamental_spark.operators.similarity import (
     brute_force_topk,
     cosine,
+    embedding_near_dup_gemm,
     embedding_near_dup_lsh_pairs,
-    embedding_near_dup_pairs,
     lsh_topk,
 )
+
+
+def embedding_near_dup_pairs(corpus, threshold=0.4, id_col="vec_id", vec_col="embedding"):
+    """Reference exact near-dup: every pair with cosine ≥ threshold via
+    a crossJoin and the JVM HOF cosine — O(n²) by construction, the
+    plan the blocked GEMM (embedding_near_dup_gemm) must reproduce
+    bit-for-bit, and the shape of the DuckDB oracle twin."""
+    a = spread(corpus).select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
+    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+    cos = cosine(F.col("va"), F.col("vb"))
+    return pairs.select(
+        "id_a", "id_b", F.round(cos, 4).alias("cos")
+    ).filter(F.col("cos") >= threshold)
 
 
 @pytest.fixture(scope="module")
@@ -83,10 +98,12 @@ def test_ivf_finds_planted_twin_and_prunes(vectors, spark):
 
 def test_near_dup_pairs_threshold(vectors):
     emb, _ = vectors
-    pairs = embedding_near_dup_pairs(emb, threshold=0.95)
+    pairs = embedding_near_dup_gemm(emb, threshold=0.95)
     rows = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (0, 200) in rows
     assert all(a < b for a, b in rows)
+    ref = embedding_near_dup_pairs(emb, threshold=0.95)
+    assert rows == {(r["id_a"], r["id_b"]) for r in ref.collect()}
 
 
 def test_gemm_topk_equals_jvm_brute_force(vectors):
@@ -212,16 +229,34 @@ def test_kmeans_centroids_deterministic_and_converges(spark):
         assert best > 0.95, (d, best)
 
 
+def test_seed_selection_rejects_repeated_ids(spark):
+    """k-means and PQ seed from the first k vectors by id. An id
+    repeated at the cut (here the 3rd and 4th smallest) makes the seed
+    order depend on partitioning, so both trainers must refuse it."""
+    from fundamental_spark.operators.similarity import kmeans_centroids, pq_codebooks
+
+    rng = random.Random(17)
+    ids = [0, 1, 2, 2] + list(range(3, 40))
+    emb = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in ids],
+        "vec_id bigint, embedding array<float>",
+    ).repartition(4)
+    with pytest.raises(ValueError, match="unique ids"):
+        kmeans_centroids(emb, n_centroids=3, n_iters=1)
+    with pytest.raises(ValueError, match="unique ids"):
+        pq_codebooks(emb, m=2, ksub=3, n_iters=1)
+    # a repeat past the first k+1 ids cannot reorder the seeds
+    late = emb.filter(F.col("vec_id") != 2).unionByName(emb.filter(F.col("vec_id") == 30))
+    assert len(kmeans_centroids(late, n_centroids=3, n_iters=1)) == 3
+    assert len(pq_codebooks(late, m=2, ksub=3, n_iters=1)) == 2
+
+
 def test_embedding_near_dup_gemm_equals_jvm_exact(spark):
     """The blocked-GEMM exact near-dup (round 4) must reproduce the
     pure-JVM exact plan bit-for-bit at the registered operating point
     (raw cosines rounded JVM-side, same tie semantics) — it is the plan
     embedding_near_dup_auto dispatches to at moderate thresholds."""
-    from fundamental_spark.operators.similarity import (
-        embedding_near_dup_auto,
-        embedding_near_dup_gemm,
-        embedding_near_dup_pairs,
-    )
+    from fundamental_spark.operators.similarity import embedding_near_dup_auto
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     jvm = sorted(tuple(r) for r in embedding_near_dup_pairs(emb, 0.4).collect())
@@ -236,11 +271,6 @@ def test_gemm_blocked_multi_block_and_string_ids(spark):
     — force MANY small blocks and verify bit-parity with the JVM exact
     plan, and that non-integral ids keep their type (the round-4
     version hard-coded bigint and collected the corpus)."""
-    from fundamental_spark.operators.similarity import (
-        embedding_near_dup_gemm,
-        embedding_near_dup_pairs,
-    )
-
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     jvm = sorted(tuple(r) for r in embedding_near_dup_pairs(emb, 0.4).collect())
     many = sorted(
