@@ -39,6 +39,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -91,9 +93,24 @@ URL_SEEN_SCHEMA = StructType(
     ]
 )
 
-DOCUMENTS_SCHEMA_DDL = (
-    "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, "
-    "wave int, city string, discovered_on_page int, page_pos int"
+SPAN_SCHEMA = StructType(
+    [
+        StructField("kind", StringType()),
+        StructField("text", StringType()),
+        StructField("media_ref", StringType()),
+        StructField("offset", IntegerType()),
+    ]
+)
+
+DOCUMENTS_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType()),
+        StructField("spans", ArrayType(SPAN_SCHEMA)),
+        StructField("wave", IntegerType()),
+        StructField("city", StringType()),
+        StructField("discovered_on_page", IntegerType()),
+        StructField("page_pos", IntegerType()),
+    ]
 )
 
 CRAWL_LOG_SCHEMA = StructType(
@@ -108,7 +125,13 @@ CRAWL_LOG_SCHEMA = StructType(
     ]
 )
 
-RESPONSE_CACHE_SCHEMA_DDL = "url string, html string, wave int"
+RESPONSE_CACHE_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("html", StringType()),
+        StructField("wave", IntegerType()),
+    ]
+)
 
 REFRESHED_URLS_SCHEMA = StructType(
     [
@@ -127,6 +150,23 @@ WAVE_METRICS_SCHEMA = StructType(
         StructField("detail_pages", LongType()),
         StructField("new_listing_urls", LongType()),
         StructField("shard_counts", StringType()),
+    ]
+)
+
+NEARDUP_BANDS_SCHEMA = StructType(
+    [
+        StructField("doc", StringType()),
+        StructField("band_idx", IntegerType()),
+        StructField("band_hash", StringType()),
+    ]
+)
+
+NEARDUP_PAIRS_SCHEMA = StructType(
+    [
+        StructField("doc_a", StringType()),
+        StructField("doc_b", StringType()),
+        StructField("jaccard", DoubleType()),
+        StructField("wave", IntegerType()),
     ]
 )
 
@@ -197,6 +237,9 @@ class CrawlRunner:
     seed_urls: dict[str, str] = field(default_factory=dict)
     domains: set[str] = field(default_factory=set)
     _versions: dict[str, int] = field(default_factory=dict)
+    # next wave's frontier emptiness when the last wave proved it (see
+    # step); None = unknown, pay the isEmpty check
+    _next_nonempty: bool | None = field(default=None, init=False, repr=False)
 
     def __post_init__(self) -> None:
         self.wh = Warehouse(self.spark, self.warehouse_root)
@@ -269,6 +312,7 @@ class CrawlRunner:
                 f"{self.n_shards} would re-fetch already-seen pages"
             )
         self.wave = state["wave"]
+        self._next_nonempty = None
         self.seen_count = state.get("seen_count", 0)
         self.seed_urls = state.get("seed_urls", {})
         self.domains = set(state.get("domains", []))
@@ -311,14 +355,15 @@ class CrawlRunner:
 
     def _write(self, name: str, df: DataFrame) -> None:
         if name in self.SMALL_TABLES:
-            # repartition (not coalesce): keeps upstream join parallelism,
-            # bounds snapshot file counts
-            df = df.repartition(self.state_partitions)
+            # coalesce bounds snapshot file counts. The write stage runs
+            # in state_partitions tasks with repartition too; the shuffle
+            # only added one more job per commit
+            df = df.coalesce(self.state_partitions)
         self._versions[name] = self.wh.overwrite(name, df)
 
     def _append_delta(self, name: str, df: DataFrame) -> None:
         if name in self.SMALL_TABLES:
-            df = df.repartition(self.state_partitions)
+            df = df.coalesce(self.state_partitions)
         self._versions[name] = self.wh.append_delta(name, df)
 
     # ---- initialization ----------------------------------------------------
@@ -368,47 +413,40 @@ class CrawlRunner:
             seen_src = existing_urls.select(
                 F.col(existing_urls.columns[0]).alias("url")
             ).localCheckpoint(eager=True)
+            n_seen = seen_src.count()
         else:
             seen_src = spark.createDataFrame(
                 [(u,) for u in (existing_urls or [])], "url string"
             )
+            n_seen = len(existing_urls or [])
         seen = (
             with_url_keys(seen_src, n_shards=self.n_shards)
             .withColumn("first_seen_wave", F.lit(-1))
             .select(*[f.name for f in URL_SEEN_SCHEMA.fields])
         )
-        inits += [
-            ("frontier_done", spark.createDataFrame([], FRONTIER_SCHEMA)),
-            ("url_seen", seen),
-            ("documents", spark.createDataFrame([], DOCUMENTS_SCHEMA_DDL)),
-            ("crawl_log", spark.createDataFrame([], CRAWL_LOG_SCHEMA)),
-            ("wave_metrics", spark.createDataFrame([], WAVE_METRICS_SCHEMA)),
-            ("refreshed_urls", spark.createDataFrame([], REFRESHED_URLS_SCHEMA)),
+        inits.append(("url_seen", seen))
+        # empty bootstrap tables are written on the driver with pyarrow
+        # (Warehouse.append_delta_rows): zero Spark jobs. The seeded
+        # tables need Spark: their url keys are Spark's xxhash64
+        empties = [
+            ("frontier_done", FRONTIER_SCHEMA),
+            ("documents", DOCUMENTS_SCHEMA),
+            ("crawl_log", CRAWL_LOG_SCHEMA),
+            ("wave_metrics", WAVE_METRICS_SCHEMA),
+            ("refreshed_urls", REFRESHED_URLS_SCHEMA),
         ]
         if self.neardup_dedup:
-            inits += [
-                (
-                    "neardup_bands",
-                    spark.createDataFrame(
-                        [], "doc string, band_idx int, band_hash string"
-                    ),
-                ),
-                (
-                    "neardup_pairs",
-                    spark.createDataFrame(
-                        [], "doc_a string, doc_b string, jaccard double, wave int"
-                    ),
-                ),
+            empties += [
+                ("neardup_bands", NEARDUP_BANDS_SCHEMA),
+                ("neardup_pairs", NEARDUP_PAIRS_SCHEMA),
             ]
         if self.http_cache:
-            cache0 = (
-                self.response_cache_seed.select("url", "html").withColumn(
-                    "wave", F.lit(0)
-                )
-                if self.response_cache_seed is not None
-                else spark.createDataFrame([], RESPONSE_CACHE_SCHEMA_DDL)
-            )
-            inits.append(("response_cache", cache0))
+            cache0 = self.response_cache_seed
+            if cache0 is None:
+                empties.append(("response_cache", RESPONSE_CACHE_SCHEMA))
+            else:
+                cache0 = cache0.select("url", "html").withColumn("wave", F.lit(0))
+                inits.append(("response_cache", cache0))
         # init is a RESET: the scheduler reuses one warehouse root
         # across ticks, and delta tables union EVERY snapshot since the
         # floor — a leftover run's rows would leak into read_deltas (a
@@ -416,7 +454,7 @@ class CrawlRunner:
         # as this run's). Drop the table dirs (and any stale checkpoint
         # pins) before the bootstrap snapshots.
         self._versions = {}
-        for name, _ in inits:
+        for name, _ in inits + empties:
             self.wh.drop(name)
         if not self.http_cache:
             self.wh.drop("response_cache")
@@ -424,12 +462,16 @@ class CrawlRunner:
             self.wh.drop("neardup_bands")
             self.wh.drop("neardup_pairs")
         # ...and the scalar state a stale checkpoint may have restored
-        # in __init__ (bloom sizing hint, AutoThrottle delay)
-        self.seen_count = 0
+        # in __init__. The bloom sizing hint restarts at the bootstrap's
+        # url_seen rows, so a large pre-seen set engages the prefilter
+        self.seen_count = n_seen
         self.politeness.current_delay_s = None  # re-derives lazily
-        # bootstrap snapshots are independent: commit them concurrently
-        # (same driver-thread trick as the per-wave writes) — the serial
-        # version cost ~7 scheduling round-trips of pure fixed overhead
+        self._next_nonempty = None
+        for name, schema in empties:
+            self._versions[name] = self.wh.append_delta_rows(name, [], schema)
+        # the Spark-written bootstrap snapshots are independent: commit
+        # them concurrently (same driver-thread trick as the per-wave
+        # writes)
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=len(inits)) as ex:
@@ -464,6 +506,19 @@ class CrawlRunner:
                 timings[phase] = round(now - _t, 2)
                 _t = now
 
+        # The previous wave's stats may already decide this wave's
+        # emptiness (exact accounting: with no politeness budget
+        # selected == pending, untouched == 0, and the enqueued count =
+        # retry-pending + pagination + detail rows is known driver-side —
+        # see the `_next_nonempty` update below). False skips this
+        # step's reads and isEmpty job, True skips the isEmpty driver
+        # round-trip (~0.15 s/wave of fixed latency). The flag is
+        # consumed here; resume, init and budgeted waves leave it None
+        # and pay the check.
+        known = self._next_nonempty
+        self._next_nonempty = None
+        if known is False:
+            return False
         wave = self.wave + 1
         pending = self._read("frontier_pending")
         url_seen = self._read_deltas("url_seen")
@@ -476,18 +531,7 @@ class CrawlRunner:
         selected = select_wave(
             pending, budget, n_domains=max(len(self.domains), 1)
         ).cache()
-        # Skip the per-wave isEmpty driver round-trip when the PREVIOUS
-        # wave's stats proved the frontier non-empty (exact accounting:
-        # with no politeness budget selected == pending, untouched == 0,
-        # and the enqueued count = retry-pending + pagination + detail
-        # rows is known driver-side — see the `_next_nonempty` update
-        # below). The flag is consumed here and only ever set True on
-        # that exact evidence; resume/budgeted waves leave it None and
-        # pay the check (round 7 — ~0.15 s/wave of fixed driver latency
-        # on the measured path).
-        known_nonempty = getattr(self, "_next_nonempty", None) is True
-        self._next_nonempty = None
-        if not known_nonempty and selected.isEmpty():
+        if known is None and selected.isEmpty():
             selected.unpersist()
             return False
         mark("select")
@@ -600,6 +644,7 @@ class CrawlRunner:
                 seen_count_hint=max(self.seen_count, 1),
                 broadcast_seen=not use_bloom_now,
                 backend=self.seen_backend,
+                n_shards=self.n_shards,
             ).cache()
         mark("seen_filter_def")
 
@@ -927,8 +972,8 @@ class CrawlRunner:
             # exact next-wave emptiness: with no budget, selected ==
             # pending so untouched == 0, and the rebuilt frontier is
             # retries + pagination (+ detail enqueues outside refresh
-            # mode). Only this exact evidence may skip next wave's
-            # isEmpty; budgeted waves leave None (untouched unknown).
+            # mode). Only this exact evidence may decide next wave's
+            # emptiness; budgeted waves leave None (untouched unknown).
             if budget is None:
                 enqueued = n_retry + len(next_pages)
                 if self.mode != "refresh":

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bloom import build_bloom, probe_bloom
+from .canonical import DEFAULT_N_SHARDS
 
 
 def filter_new_urls(
@@ -26,6 +27,7 @@ def filter_new_urls(
     fpp: float = 0.01,
     broadcast_seen: bool = False,
     backend: str = "bloom",
+    n_shards: int = DEFAULT_N_SHARDS,
 ) -> DataFrame:
     """Return candidate rows whose url is NOT in url_seen.
 
@@ -34,7 +36,9 @@ def filter_new_urls(
     sets — the reference's whole world fits in one executor's memory).
     ``backend`` selects the prefilter: "bloom" (default, most compact)
     or "cuckoo" (deletable — see crawl/cuckoo.py; same two-stage
-    exactness either way).
+    exactness either way). ``n_shards`` is the shard count the url keys
+    were made with; each per-shard filter is sized for
+    ``seen_count_hint / n_shards`` keys.
     """
     if not use_bloom:
         seen_keys = url_seen.select("url")
@@ -42,10 +46,8 @@ def filter_new_urls(
             seen_keys = F.broadcast(seen_keys)
         return candidates.join(seen_keys, "url", "left_anti")
 
-    from .canonical import DEFAULT_N_SHARDS
-
     n_hint = seen_count_hint if seen_count_hint is not None else url_seen.count()
-    per_shard = max(1024, n_hint // DEFAULT_N_SHARDS)
+    per_shard = max(1024, n_hint // n_shards)
     if backend == "cuckoo":
         from .cuckoo import build_cuckoo, probe_cuckoo
 

@@ -19,6 +19,17 @@ emulates the API over versioned parquet snapshot directories:
   one base dir (Iceberg's ``rewrite_data_files``), so ``read_deltas``
   opens O(deltas-since-compaction) dirs instead of every snapshot dir
   ever written.
+- the schema lives in table metadata, as in Iceberg: the first commit
+  of a flat table records it in ``_schema.json`` beside ``_current``
+  (outside every snapshot dir), and ``read``/``read_deltas`` hand it to
+  the parquet reader instead of running a footer-inference Spark job
+  per call. A later ``overwrite``/``append_delta``/``append_delta_rows``
+  whose column names or types differ from the record raises
+  ``ValueError`` before anything is written (nullability is not
+  compared; reads relax it, as Spark's file sources do). A table with
+  no record (written before the record existed, or only ever by
+  ``append_delta_files``) is read with schema inference. Bucketed
+  tables keep their schema in each snapshot's ``_manifest.json``.
 
 At 100 TB an Iceberg catalog replaces this class wholesale — all call
 sites go through this narrow API so the swap is one module.
@@ -81,10 +92,46 @@ class Warehouse:
 
     def _commit(self, name: str, df: DataFrame) -> int:
         new_v = self.current_version(name) + 1
+        self._check_schema(name, new_v, df.schema)
         out = self._snapshot_dir(name, new_v)
         df.write.mode("overwrite").parquet(out)
+        self._record_schema(name, new_v, df.schema)
         self._write_pointer(name, new_v)
         return new_v
+
+    # ---- schema metadata ----------------------------------------------------
+    def _schema_path(self, name: str) -> str:
+        return os.path.join(self._tdir(name), "_schema.json")
+
+    def _recorded_schema(self, name: str) -> StructType | None:
+        p = self._schema_path(name)
+        if not os.path.exists(p):
+            return None
+        with open(p) as f:
+            return StructType.fromJson(json.load(f))
+
+    def _check_schema(self, name: str, new_v: int, schema: StructType) -> None:
+        """Refuse a commit whose column names or types differ from the
+        recorded schema; a first commit (``new_v == 1``) sets it instead."""
+        rec = self._recorded_schema(name) if new_v > 1 else None
+        if rec is not None and rec.simpleString() != schema.simpleString():
+            raise ValueError(
+                f"table {name}: commit schema {schema.simpleString()} differs "
+                f"from the recorded {rec.simpleString()}"
+            )
+
+    def _record_schema(self, name: str, new_v: int, schema: StructType) -> None:
+        # after the data, before the pointer: a reader of v1 finds it
+        if new_v == 1:
+            tmp = self._schema_path(name) + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(schema.jsonValue(), f)
+            os.replace(tmp, self._schema_path(name))
+
+    def _read_flat(self, name: str, *paths: str) -> DataFrame:
+        schema = self._recorded_schema(name)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(*paths)
 
     # ---- bucketing metadata -------------------------------------------------
     def _meta_path(self, name: str) -> str:
@@ -228,7 +275,7 @@ class Warehouse:
             if df is None:  # bucketed table, all buckets empty
                 return self.spark.createDataFrame([], self._manifest_schema(name, v))
             return df.drop(BUCKET_COL)
-        return self.spark.read.parquet(self._snapshot_dir(name, v))
+        return self._read_flat(name, self._snapshot_dir(name, v))
 
     def read_matching(self, name: str, keys: DataFrame, key: str) -> DataFrame:
         """Rows of `name` whose `key` appears in `keys` — on a bucketed
@@ -299,6 +346,7 @@ class Warehouse:
         from pyspark.sql.pandas.types import to_arrow_schema
 
         new_v = self.current_version(name) + 1
+        self._check_schema(name, new_v, schema)
         out = self._snapshot_dir(name, new_v)
         os.makedirs(out, exist_ok=True)
         pq.write_table(
@@ -306,6 +354,7 @@ class Warehouse:
             os.path.join(out, "part-00000.parquet"),
             compression="snappy",
         )
+        self._record_schema(name, new_v, schema)
         self._write_pointer(name, new_v)
         return new_v
 
@@ -351,7 +400,7 @@ class Warehouse:
             )
         paths = [self._compact_dir(name, floor)] if floor > 0 else []
         paths += [self._snapshot_dir(name, i) for i in range(floor + 1, v + 1)]
-        return self.spark.read.parquet(*paths)
+        return self._read_flat(name, *paths)
 
     def compact_deltas(self, name: str, upto: int | None = None) -> int:
         """Fold delta snapshots (floor, upto] plus the previous base into

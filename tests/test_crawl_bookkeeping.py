@@ -1,0 +1,139 @@
+"""The crawl's table bookkeeping costs no Spark job that data does not
+need: empty bootstrap tables are written on the driver, reads take the
+schema from table metadata, and a frontier already proven empty ends
+the crawl without reading anything. Also pins the seen-filter sizing
+state that a pre-seeded ``init`` hands to the waves."""
+
+from __future__ import annotations
+
+import pytest
+from conftest import spark_jobs
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructType,
+)
+
+from fundamental_spark.crawl import runner as runner_mod
+from fundamental_spark.crawl.runner import CrawlRunner
+from fundamental_spark.synth.site import build_site, web_rows
+
+EMPTY_BOOTSTRAP = {
+    "frontier_done": runner_mod.FRONTIER_SCHEMA,
+    "documents": runner_mod.DOCUMENTS_SCHEMA,
+    "crawl_log": runner_mod.CRAWL_LOG_SCHEMA,
+    "wave_metrics": runner_mod.WAVE_METRICS_SCHEMA,
+    "refreshed_urls": runner_mod.REFRESHED_URLS_SCHEMA,
+    "neardup_bands": runner_mod.NEARDUP_BANDS_SCHEMA,
+    "neardup_pairs": runner_mod.NEARDUP_PAIRS_SCHEMA,
+    "response_cache": runner_mod.RESPONSE_CACHE_SCHEMA,
+}
+
+
+def _site():
+    return build_site(seed=53, cities=("zwolle",), listings_per_city=12, page_size=10)
+
+
+def _runner(spark, root, site, **kw):
+    web = spark.createDataFrame(web_rows(site), "url string, html string")
+    return CrawlRunner(spark=spark, warehouse_root=str(root), web=web,
+                       spider_type="active", **kw)
+
+
+def _seeds(site):
+    return [(site.search_url(c, 1), c) for c in site.cities]
+
+
+def _sample(dt):
+    """One non-null value of type ``dt``."""
+    if isinstance(dt, StructType):
+        return tuple(_sample(f.dataType) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return [_sample(dt.elementType)]
+    return {StringType: "x", IntegerType: 1, LongType: 2, DoubleType: 0.5}[type(dt)]
+
+
+def test_init_writes_empty_bootstrap_tables_without_jobs(spark, tmp_path):
+    """Only frontier_pending and url_seen (Spark's xxhash64 url keys)
+    are Spark writes; switching on the optional empty tables adds no
+    job."""
+    site = _site()
+    counts = []
+    for i, kw in enumerate([{}, {"neardup_dedup": True, "http_cache": True}]):
+        r = _runner(spark, tmp_path / f"wh{i}", site, **kw)
+        with spark_jobs(spark) as jobs:
+            r.init(_seeds(site))
+        counts.append(len(jobs))
+    assert counts == [2, 2]
+
+
+def test_empty_bootstrap_tables_read_back_and_union(spark, tmp_path):
+    site = _site()
+    r = _runner(spark, tmp_path / "wh", site, neardup_dedup=True, http_cache=True)
+    r.init(_seeds(site))
+    for name, schema in EMPTY_BOOTSTRAP.items():
+        empty = r.table(name)
+        assert empty.schema.simpleString() == schema.simpleString(), name
+        assert empty.count() == 0, name
+        row = _sample(schema)
+        r.wh.append_delta(name, spark.createDataFrame([row], schema))
+        got = r.wh.read_deltas(name).collect()
+        assert [tuple(g) for g in got] == [row], name
+
+
+def test_terminating_step_submits_no_job_and_init_crawls_again(spark, tmp_path):
+    site = _site()
+    r = _runner(spark, tmp_path / "wh", site)
+    r.init(_seeds(site))
+    while r._next_nonempty is not False:
+        assert r.step()
+    waves = r.wave
+    with spark_jobs(spark) as jobs:
+        assert r.step() is False
+    assert jobs == []
+    assert r.wave == waves
+    r.init(_seeds(site))
+    assert r._next_nonempty is None
+    assert r.step() is True
+    assert r.wave == 1
+
+
+def test_preseeded_init_sets_seen_count(spark, tmp_path):
+    site = _site()
+    urls = [f"https://www.funda.nl/detail/koop/x/huis-{i}/" for i in range(37)]
+    r = _runner(spark, tmp_path / "df", site)
+    r.init(_seeds(site), existing_urls=spark.createDataFrame([(u,) for u in urls], "url string"))
+    assert r.seen_count == len(urls)
+    assert _runner(spark, tmp_path / "df", site).seen_count == len(urls)  # checkpoint reload
+    r = _runner(spark, tmp_path / "list", site)
+    r.init(_seeds(site), existing_urls=urls[:5])
+    assert r.seen_count == 5
+
+
+class _Stop(Exception):
+    pass
+
+
+@pytest.mark.parametrize("backend", ["bloom", "cuckoo"])
+def test_seen_filter_sizes_shards_with_runner_n_shards(spark, tmp_path, monkeypatch, backend):
+    from fundamental_spark.crawl import cuckoo, seen
+
+    sizes = []
+
+    def capture(url_seen, n_keys_per_shard, **kw):
+        sizes.append(n_keys_per_shard)
+        raise _Stop
+
+    monkeypatch.setattr(seen, "build_bloom", capture)
+    monkeypatch.setattr(cuckoo, "build_cuckoo", capture)
+    site = _site()
+    r = _runner(spark, tmp_path / "wh", site, n_shards=7, bloom_min_seen=1,
+                seen_backend=backend)
+    urls = [f"https://www.funda.nl/detail/koop/x/huis-{i}/" for i in range(14_000)]
+    r.init(_seeds(site), existing_urls=urls)
+    with pytest.raises(_Stop):
+        r.step()
+    assert sizes == [14_000 // 7]

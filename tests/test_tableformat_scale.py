@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 
 from fundamental_spark.tableformat import Warehouse
@@ -317,3 +318,66 @@ def test_auto_vacuum_keeps_disk_usage_flat_over_long_merge_run(spark, tmp_path):
     assert len(rows) == 100
     with _pytest.raises(ValueError):
         wh.rollback("t", wh.vacuum_floor("t") - 1)
+
+
+def test_recorded_schema_reads_submit_no_job(spark, tmp_path):
+    """The first commit records the table schema beside ``_current``;
+    read/read_deltas hand it to the parquet reader instead of running a
+    footer-inference job, and return the schema inference would give."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.append_delta("t", _rows(spark, 3))
+    wh.append_delta_rows("t", [{"url": "u", "price": 9, "status": "s"}], _schema(spark))
+    assert sorted(os.listdir(tmp_path / "wh" / "t")) == [
+        "_current", "_schema.json", "v000001", "v000002",
+    ]
+    with spark_jobs(spark) as jobs:
+        deltas = wh.read_deltas("t")
+        snap = wh.read("t", version=1)
+    assert jobs == []
+    inferred = spark.read.parquet(wh._snapshot_dir("t", 1), wh._snapshot_dir("t", 2))
+    assert deltas.schema == snap.schema == inferred.schema
+    assert sorted(r["price"] for r in deltas.collect()) == [0, 1, 2, 9]
+
+
+@pytest.mark.parametrize("how", ["append_delta", "overwrite", "append_delta_rows"])
+def test_schema_mismatch_raises_and_writes_nothing(spark, tmp_path, how):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.overwrite("t", _rows(spark, 3))
+    bad = _rows(spark, 2).withColumn("price", F.col("price").cast("string"))
+    with pytest.raises(ValueError, match="differs from the recorded"):
+        if how == "append_delta_rows":
+            wh.append_delta_rows("t", [], bad.schema)
+        else:
+            getattr(wh, how)("t", bad)
+    assert wh.current_version("t") == 1
+    assert not os.path.exists(wh._snapshot_dir("t", 2))
+    with pytest.raises(ValueError):  # a renamed column is a mismatch too
+        wh.append_delta("t", _rows(spark, 2).withColumnRenamed("status", "state"))
+    # nullability is not part of the check (reads relax it anyway)
+    from pyspark.sql.types import StructField, StructType
+
+    strict = StructType([StructField(f.name, f.dataType, False) for f in _schema(spark)])
+    wh.append_delta_rows("t", [], strict)
+    assert wh.current_version("t") == 2
+
+
+def test_table_without_schema_record_reads_by_inference(spark, tmp_path):
+    """Warehouses written before the record existed, and tables only
+    ever written by append_delta_files, keep footer inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.append_delta("old", _rows(spark, 3))
+    os.remove(wh._schema_path("old"))
+    wh.append_delta("old", _rows(spark, 2))
+    assert wh._recorded_schema("old") is None
+    assert wh.read_deltas("old").count() == 5
+
+    def job(out_dir):
+        pq.write_table(pa.table({"url": ["a"]}), os.path.join(out_dir, "part-a.parquet"))
+        return ["part-a.parquet"]
+
+    wh.append_delta_files("files", job)
+    assert wh._recorded_schema("files") is None
+    assert wh.read_deltas("files").collect()[0]["url"] == "a"
