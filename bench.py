@@ -8,7 +8,7 @@ Prints ONE JSON line:
 
 - Headline: the north-star crawl metric — frontier URLs processed/sec
   (pages fetched+parsed through the full wave pipeline: politeness
-  top-k, distributed fetch join, JVM search parse, bloom+exact seen
+  top-k, distributed fetch join, JVM search parse, cuckoo+exact seen
   dedup, Arrow span parse, snapshot commits) on a synthetic
   funda-style site sized by SPARK_GRAFT_SF_DIR's scale factor.
 - Query timings: headline analytic operators at the same sf dir.
@@ -71,10 +71,7 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def crawl_bench(
-    spark, sf: float, cpus: int, seen_backend: str = "bloom",
-    neardup: bool = False,
-) -> dict:
+def crawl_bench(spark, sf: float, cpus: int, neardup: bool = False) -> dict:
     from fundamental_spark.crawl.runner import CrawlRunner
     from fundamental_spark.synth.site import build_site, spec_web_rows, web_rows
 
@@ -107,8 +104,6 @@ def crawl_bench(
             warehouse_root=root,
             web=web,
             spider_type="active",
-            use_bloom=True,
-            seen_backend=seen_backend,
             neardup_dedup=neardup,
             neardup_threshold=0.5,
         )

@@ -309,24 +309,20 @@ def vectors_leg(spark, src_dir: str) -> dict:
     return out
 
 
-def seen_backend_leg(spark, cpus: int, with_crawl: bool = True) -> dict:
-    """Cuckoo vs bloom URL-seen prefilter at bench scale (round-5
-    verdict #8). Two sub-legs:
+def seen_prefilter_leg(spark) -> dict:
+    """The cuckoo URL-seen prefilter at bench scale: a 2M-key seen set
+    (64k keys/shard — the load regime where the prefilter matters),
+    probed by 180k truly-new + 20k seen candidates.
 
-    - crawl: the sf1.0 frontier crawled once per backend — identical
-      input, the prefilter is the ONLY difference → pages/s each.
-    - probe: a 2M-key seen set (64k keys/shard — the load regime where
-      the prefilter matters), probed by 180k truly-new + 20k seen
-      candidates → exact-join bypass rate = fraction of truly-new
-      candidates cleared WITHOUT the anti-join (1 − FP rate), plus the
-      refresh-re-queue path only cuckoo supports: delete 100k keys
-      (re-queued listings) and re-probe them — cuckoo returns them to
-      definitely-new (bypass again); a bloom answers "maybe" forever
-      and every future refresh of those URLs pays the exact join.
+    - exact-join bypass rate = fraction of truly-new candidates cleared
+      WITHOUT the anti-join (1 − FP rate); seen false negatives must be 0;
+    - filter bytes per seen key (the broadcast the probe ships);
+    - the refresh-re-queue path: delete 100k keys (re-queued listings)
+      and re-probe them — they return to definitely-new (bypass again)
+      instead of paying the exact join on every future refresh.
     """
     from pyspark.sql import functions as F
 
-    from fundamental_spark.crawl.bloom import build_bloom, probe_bloom
     from fundamental_spark.crawl.canonical import DEFAULT_N_SHARDS, with_url_keys
     from fundamental_spark.crawl.cuckoo import (
         build_cuckoo,
@@ -343,6 +339,7 @@ def seen_backend_leg(spark, cpus: int, with_crawl: bool = True) -> dict:
             ).alias("url"),
         )
     ).cache()
+    keyed.count()  # materialize the keys before the build clock starts
     seen = keyed.filter(F.col("id") < n_seen)
     cands = keyed.filter(
         (F.col("id") >= n_seen) | (F.col("id") < n_probe_seen)
@@ -350,62 +347,39 @@ def seen_backend_leg(spark, cpus: int, with_crawl: bool = True) -> dict:
     per_shard = max(1024, n_seen // DEFAULT_N_SHARDS)
     out: dict = {"n_seen": n_seen, "n_new": n_new, "n_probe_seen": n_probe_seen}
 
-    def _rates(probed) -> tuple[float, int]:
-        r = probed.agg(
-            F.sum(
-                F.when((F.col("id") >= n_seen) & ~F.col("maybe_seen"), 1).otherwise(0)
-            ).alias("new_bypassed"),
-            F.sum(
-                F.when((F.col("id") < n_seen) & ~F.col("maybe_seen"), 1).otherwise(0)
-            ).alias("seen_missed"),
-        ).collect()[0]
-        return round(r["new_bypassed"] / n_new, 4), int(r["seen_missed"])
+    t0 = time.perf_counter()
+    filt = build_cuckoo(seen, n_keys_per_shard=per_shard).cache()
+    filt.count()
+    out["build_sec"] = round(time.perf_counter() - t0, 2)
+    filter_bytes = filt.agg(
+        F.sum(F.length("table") + F.length("stash")).alias("b")
+    ).collect()[0]["b"]
+    out["filter_bytes_per_key"] = round(filter_bytes / n_seen, 2)
 
-    for backend in ("bloom", "cuckoo"):
-        t0 = time.perf_counter()
-        filt = (
-            build_bloom(seen, n_keys_per_shard=per_shard)
-            if backend == "bloom"
-            else build_cuckoo(seen, n_keys_per_shard=per_shard)
-        ).cache()
-        filt.count()
-        build_sec = round(time.perf_counter() - t0, 2)
-        t0 = time.perf_counter()
-        probed = (probe_bloom if backend == "bloom" else probe_cuckoo)(cands, filt)
-        bypass, missed = _rates(probed)
-        probe_sec = round(time.perf_counter() - t0, 2)
-        leg = {
-            "build_sec": build_sec,
-            "probe_sec": probe_sec,
-            "new_bypass_rate": bypass,  # anti-join avoided for this fraction
-            "seen_false_negatives": missed,  # exactness: must be 0
-        }
-        if backend == "cuckoo":
-            deletes = keyed.filter(F.col("id") < n_del)
-            t0 = time.perf_counter()
-            filt2 = delete_keys(filt, deletes).cache()
-            filt2.count()
-            leg["delete_sec"] = round(time.perf_counter() - t0, 2)
-            # re-probe the deleted keys: definitely-new again == bypass
-            reprobe = probe_cuckoo(deletes, filt2)
-            n_bypass = reprobe.filter(~F.col("maybe_seen")).count()
-            leg["deleted_bypass_rate"] = round(n_bypass / n_del, 4)
-            filt2.unpersist()
-        else:
-            # a bloom cannot delete: re-queued urls stay maybe-seen
-            leg["deleted_bypass_rate"] = 0.0
-        filt.unpersist()
-        out[backend] = leg
+    t0 = time.perf_counter()
+    r = probe_cuckoo(cands, filt).agg(
+        F.sum(
+            F.when((F.col("id") >= n_seen) & ~F.col("maybe_seen"), 1).otherwise(0)
+        ).alias("new_bypassed"),
+        F.sum(
+            F.when((F.col("id") < n_seen) & ~F.col("maybe_seen"), 1).otherwise(0)
+        ).alias("seen_missed"),
+    ).collect()[0]
+    out["probe_sec"] = round(time.perf_counter() - t0, 2)
+    out["new_bypass_rate"] = round(r["new_bypassed"] / n_new, 4)
+    out["seen_false_negatives"] = int(r["seen_missed"])  # exactness: must be 0
+
+    deletes = keyed.filter(F.col("id") < n_del)
+    t0 = time.perf_counter()
+    filt2 = delete_keys(filt, deletes).cache()
+    filt2.count()
+    out["delete_sec"] = round(time.perf_counter() - t0, 2)
+    # re-probe the deleted keys: definitely-new again == bypass
+    n_bypass = probe_cuckoo(deletes, filt2).filter(~F.col("maybe_seen")).count()
+    out["deleted_bypass_rate"] = round(n_bypass / n_del, 4)
+    filt2.unpersist()
+    filt.unpersist()
     keyed.unpersist()
-
-    if with_crawl:
-        import bench
-
-        os.environ.setdefault("FS_BENCH_EXEC_RENDER", "1")
-        for backend in ("bloom", "cuckoo"):
-            c = bench.crawl_bench(spark, sf=1.0, cpus=cpus, seen_backend=backend)
-            out[backend]["crawl_pages_per_sec"] = c["pages_per_sec"]
-            out[backend]["crawl_seconds"] = c["seconds"]
     return out
 
 
@@ -437,7 +411,7 @@ def main() -> None:
         print(json.dumps(result))
         return
     if seen_only:
-        result["seen_backend"] = seen_backend_leg(spark, cpus)
+        result["seen_prefilter"] = seen_prefilter_leg(spark)
         print(json.dumps(result))
         return
     if "--vectors-only" in sys.argv:

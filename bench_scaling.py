@@ -192,7 +192,7 @@ SCALING_TEMPLATE = """<!-- SCALING:BEGIN -->
 
 Identical input (synthetic funda-style frontier, {pages} pages over
 {waves} waves, executor-side page rendering, full wave pipeline:
-politeness top-k -> fetch -> JVM search parse -> bloom/exact seen dedup
+politeness top-k -> fetch -> JVM search parse -> cuckoo/exact seen dedup
 -> Arrow span parse -> snapshot commits + lineage), run at each core
 count on the same machine. Per-leg minimum over interleaved repeats
 (sandbox wall-clock noise is +/-50% under contention; all runs listed).
@@ -237,7 +237,7 @@ evidenced rather than claimed.
 
 ## Skew evidence (salted single-host key)
 
-The crawl is one domain; frontier/seen/bloom shuffles key on
+The crawl is one domain; frontier/seen/prefilter shuffles key on
 pmod(xxhash64(url), {n_shards}). Max-shard / mean-shard fetch ratio at
 local[{top}]: **{skew}** (1.0 = perfectly flat).
 

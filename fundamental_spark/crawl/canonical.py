@@ -9,7 +9,7 @@ Canonical form here: absolute URL; key columns:
 - ``domain_shard`` = pmod(xxhash64(url), n_shards) — **salts the
   single-host hot key** (SURVEY.md §2.8 T7): a one-site crawl would
   otherwise hash every frontier row to one shuffle partition; sharding
-  by URL hash spreads seen-set/bloom/frontier work across the cluster
+  by URL hash spreads seen-set/prefilter/frontier work across the cluster
   while politeness stays a per-domain aggregate.
 """
 

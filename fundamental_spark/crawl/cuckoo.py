@@ -1,21 +1,19 @@
-"""Partitioned cuckoo filter over the URL-seen set — the bloom twin
-the north rule names ("bloom-filter/cuckoo-filter URL-seen set").
+"""Partitioned cuckoo filter over the URL-seen set — the prefilter the
+north rule names ("bloom-filter/cuckoo-filter URL-seen set").
 
-Same deployment shape as bloom.py: one filter row per domain_shard,
-built with applyInPandas (numpy-vectorized — no per-row Python on the
-build path), broadcast-joined to candidates and probed vectorized,
-used strictly as a PREFILTER in front of the exact anti-join (no false
-negatives for present keys; a false positive only routes a row through
-the exact join).
+One filter row per ``domain_shard`` (the salted url-hash shard,
+SURVEY.md §2.8 T7), built with applyInPandas (numpy-vectorized — no
+per-row Python on the build path), probed vectorized from a broadcast
+variable, and used strictly as a PREFILTER in front of the exact
+anti-join (seen.py): no false negatives for present keys; a false
+positive only routes a row through the exact join.
 
-Why a cuckoo filter at all, when the bloom works: DELETION. A bloom
-cannot unset a bit; when the refresh scheduler re-queues a listing
-(runner refresh slots) the bloom's answer for that URL is permanently
-"maybe seen" and every refresh pays the exact-join path forever. A
-cuckoo filter (Fan et al. 2014, "Cuckoo Filter: Practically Better
-Than Bloom") stores displaceable fingerprints, so `delete_keys`
-removes the re-queued URLs in place and they go back to the cheap
-definitely-new path.
+Why cuckoo over a bloom filter: DELETION. A bloom cannot unset a bit,
+so a listing the refresh scheduler re-queues stays "maybe seen" and
+pays the exact join forever; `delete_keys` removes re-queued URLs in
+place (Fan et al. 2014, "Cuckoo Filter: Practically Better Than
+Bloom"). Against the bloom it replaced (BENCH/BASELINE.md, round 6, 2M
+keys) it also built and probed faster with ~9x fewer false positives.
 
 Design (partial-key cuckoo, 4-slot buckets, f=12-bit fingerprints):
 
@@ -27,16 +25,24 @@ Design (partial-key cuckoo, 4-slot buckets, f=12-bit fingerprints):
   cuckoo hashing, Kirsch-Mitzenmacher-Wieder 2009). At the sizing
   load factor ~0.5 the stash is a vanishing fraction (asserted in
   tests) and membership stays exactly "fingerprint in either bucket
-  or stash" — no false negatives by construction;
+  or stash" — no false negatives by construction, also when the
+  sizing hint undercounts and the stash grows;
 - deletion zeroes one matching fingerprint occurrence (keys are
   distinct URLs, inserted once each) or drops the stash entry. Only
   inserted keys may be deleted — standard cuckoo semantics.
 
 FP rate ≈ 2·slots/2^f = 8/4096 ≈ 0.2% at f=12. Cost is 2 bytes/slot
-× 8·n slots ≈ 4 bytes/key at the greedy build's 50% load — heavier
-than the bloom's 10 bits/key but deletable; a sequential evict-loop
-build reaches 95% load (≈2.1 bytes/key) at the price of a per-key
-Python loop, the wrong trade on an executor.
+× 8·n slots ≈ 4 bytes/key at the greedy build's 50% load (up to ≈8
+after rounding m up to a power of two); a sequential evict-loop build
+reaches 95% load (≈2.1 bytes/key) at the price of a per-key Python
+loop, the wrong trade on an executor.
+
+Memory bound: all filter bytes must fit DRIVER memory (the bounded
+collect in probe_cuckoo) and executor memory (the broadcast) — 4-8 GB
+at 10^9 keys. Past that (10^10-key frontiers) the scale path is
+co-partitioning: shuffle candidates on domain_shard and read each
+shard's table only in its own task — never per-row duplication (see
+probe_cuckoo's docstring for the measured cost of getting this wrong).
 """
 
 from __future__ import annotations
@@ -53,7 +59,8 @@ _F_BITS = 12
 
 
 def _mix(x: np.ndarray, c1: int, c2: int) -> np.ndarray:
-    """splitmix64-style avalanche (same family as bloom._positions)."""
+    """splitmix64-style avalanche; each call site's constants give it
+    an independent stream."""
     z = x + np.uint64(c1)
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(c2)
@@ -168,11 +175,19 @@ def probe_cuckoo(candidates: DataFrame, cuckoo: DataFrame) -> DataFrame:
     candidates with ``maybe_seen``. maybe_seen=False is definitive
     for keys never deleted (no false negatives).
 
-    Per-shard tables ride a Spark broadcast variable read inside the
-    UDF (bounded collect: n_shards rows) — see probe_bloom for why the
-    broadcast-JOIN alternative pays the table bytes once PER CANDIDATE
-    ROW in Arrow traffic (measured 260 s -> ~2 s on a 200k-row probe),
-    and for the co-partitioned scale path past executor memory."""
+    The per-shard tables ride a Spark BROADCAST VARIABLE read inside
+    the UDF (bounded collect: n_shards rows), so candidates are never
+    shuffled and no table byte is ever serialized per candidate row.
+    The earlier broadcast-JOIN design was quietly quadratic in traffic:
+    the join column carrying the shard's table was materialized into
+    EVERY candidate row of the Arrow batches feeding the UDF — ~150 KB
+    duplicated per row at bench sizing (measured 260 s -> ~1.1 s for a
+    200k-row probe of a 2M-key filter). Broadcast lifecycle: one
+    broadcast per probe call, freed by Spark's ContextCleaner once the
+    caller releases the returned DataFrame — a wave-loop caller that
+    drops its frames per wave (the runner does) keeps O(1) broadcasts
+    live. For the memory bound and the co-partitioned path past it,
+    see the module docstring."""
     sc = candidates.sparkSession.sparkContext
     tables = {
         int(r["domain_shard"]): (
@@ -207,7 +222,7 @@ def probe_cuckoo(candidates: DataFrame, cuckoo: DataFrame) -> DataFrame:
 
 def delete_keys(cuckoo: DataFrame, deletes: DataFrame) -> DataFrame:
     """Remove previously-inserted keys from the per-shard filters —
-    the operation a bloom cannot do. deletes(url_hash, domain_shard)
+    the operation a bloom filter cannot do. deletes(url_hash, domain_shard)
     must contain only inserted keys (standard cuckoo deletion
     contract; deleting an absent key could evict another key's
     colliding fingerprint and create a false negative).

@@ -7,7 +7,7 @@ One **wave** = one micro-batch over the frontier (SURVEY.md §2.8 T1):
     → distributed fetch (join against the synthetic web table; a real
       deployment swaps in the mapInPandas HTTP fetcher, fetch.py)
     → search pages parsed JVM-side → candidate listing URLs
-    → two-stage seen-set filter (bloom prefilter + exact anti-join)
+    → two-stage seen-set filter (cuckoo prefilter + exact anti-join)
     → new detail rows + next-page rows enqueued
     → detail pages parsed into interleaved span sequences (Arrow UDF)
       → documents table
@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -208,12 +207,11 @@ class CrawlRunner:
     max_pages: int = 100
     politeness: PolitenessConfig = field(default_factory=PolitenessConfig)
     wave_seconds: float | None = None   # None -> unlimited budget per wave
-    use_bloom: bool = True
-    bloom_min_seen: int = 200_000      # below this, broadcast exact anti-join wins
-    # "bloom" (most compact) or "cuckoo" (deletable — crawl/cuckoo.py);
-    # both are strictly prefilters in front of the exact anti-join, so
-    # the crawl result is backend-invariant (pinned by test)
-    seen_backend: str = "bloom"
+    # seen-set size from which the cuckoo prefilter (crawl/cuckoo.py)
+    # runs in front of the exact anti-join; below it a broadcast exact
+    # anti-join is strictly faster. The crawl result is the same either
+    # way (pinned by test).
+    prefilter_min_seen: int = 200_000
     # fold delta snapshots into one base once this many accumulate since
     # the last compaction (Iceberg rewrite_data_files): bounds the
     # per-wave dir listing of url_seen / response_cache at O(compact_every)
@@ -462,8 +460,9 @@ class CrawlRunner:
             self.wh.drop("neardup_bands")
             self.wh.drop("neardup_pairs")
         # ...and the scalar state a stale checkpoint may have restored
-        # in __init__. The bloom sizing hint restarts at the bootstrap's
-        # url_seen rows, so a large pre-seen set engages the prefilter
+        # in __init__. The prefilter sizing hint restarts at the
+        # bootstrap's url_seen rows, so a large pre-seen set engages the
+        # prefilter
         self.seen_count = n_seen
         self.politeness.current_delay_s = None  # re-derives lazily
         self._next_nonempty = None
@@ -495,17 +494,6 @@ class CrawlRunner:
     # ---- one wave ----------------------------------------------------------
     def step(self) -> bool:
         """Advance one wave. Returns False when the frontier is drained."""
-        debug = bool(os.environ.get("FS_CRAWL_DEBUG"))
-        timings: dict[str, float] = {}
-        _t = time.perf_counter()
-
-        def mark(phase: str) -> None:
-            nonlocal _t
-            if debug:
-                now = time.perf_counter()
-                timings[phase] = round(now - _t, 2)
-                _t = now
-
         # The previous wave's stats may already decide this wave's
         # emptiness (exact accounting: with no politeness budget
         # selected == pending, untouched == 0, and the enqueued count =
@@ -534,7 +522,6 @@ class CrawlRunner:
         if known is None and selected.isEmpty():
             selected.unpersist()
             return False
-        mark("select")
 
         # one fetch join per wave; the cache is columnar so bookkeeping
         # scans that don't select `html` never deserialize the payload
@@ -590,7 +577,6 @@ class CrawlRunner:
             .withColumn("cache_hit", cache_hit)
             .cache()
         )
-        mark("fetch_join")
 
         # --- search pages ---------------------------------------------------
         search_ok = fetched.filter((F.col("kind") == "search") & F.col("fetch_ok"))
@@ -629,24 +615,23 @@ class CrawlRunner:
             )
             .select("url", "_s.*")
         )
-        # bloom prefilter pays for itself only on huge seen sets; below
-        # the threshold an exact broadcast anti-join is strictly faster.
-        # refresh mode collects ALL found URLs — no seen filtering
-        # (collect_active_urls has none, funda_spider.py:488-490)
+        # the prefilter pays for itself only on huge seen sets (see
+        # prefilter_min_seen). refresh mode collects ALL found URLs — no
+        # seen filtering (collect_active_urls has none,
+        # funda_spider.py:488-490)
         if self.mode == "refresh":
             new_cands = candidates.cache()
         else:
-            use_bloom_now = self.use_bloom and self.seen_count >= self.bloom_min_seen
             new_cands = filter_new_urls(
                 candidates,
                 url_seen,
-                use_bloom=use_bloom_now,
-                seen_count_hint=max(self.seen_count, 1),
-                broadcast_seen=not use_bloom_now,
-                backend=self.seen_backend,
+                prefilter_keys=(
+                    self.seen_count
+                    if self.seen_count >= self.prefilter_min_seen
+                    else None
+                ),
                 n_shards=self.n_shards,
             ).cache()
-        mark("seen_filter_def")
 
         # --- frontier state transitions (stats-independent) -------------------
         outcome = fetched.select(
@@ -677,7 +662,6 @@ class CrawlRunner:
 
         # --- seen set / refreshed urls ----------------------------------------
         if self.mode == "refresh":
-            seen_add = self.spark.createDataFrame([], URL_SEEN_SCHEMA)
             # cross-wave dedup: a URL listed on search pages of several
             # waves (listings shifting between pages) must land in
             # refreshed_urls ONCE, like the reference's active_urls SET
@@ -695,7 +679,6 @@ class CrawlRunner:
             seen_add = new_cands.select(
                 "url", "url_hash", "domain_shard", F.lit(wave).alias("first_seen_wave")
             )
-            refreshed = self.spark.createDataFrame([], REFRESHED_URLS_SCHEMA)
 
         # --- documents (detail pages -> interleaved spans) --------------------
         # fused SINK, not a UDF projection (docsink.py): the Python
@@ -761,7 +744,6 @@ class CrawlRunner:
                     F.col("fetch_ok") & ~F.col("cache_hit") & F.col("html").isNotNull()
                 ).select("url", "html", F.lit(wave).alias("wave"))
                 futures.append(pool.submit(self._append_delta, "response_cache", cache_add))
-            mark("writes_phase1_submit")
 
             # --- ONE union-tagged stats job (O(#cities)+O(#shards) rows) ----------
             # All per-wave driver bookkeeping folds into a single collect:
@@ -870,7 +852,6 @@ class CrawlRunner:
                 if self.politeness.autothrottle:
                     t = next(r for r in stats_rows if r["_t"] == "t")
                     self.politeness.observe_wave(t["n"], t["i"])
-            mark("stats_collect")
 
             # --- stop rules + pagination enqueue (sequential semantics) ----------
             next_pages: list[tuple[str, str, int]] = []  # (url, city, page_idx)
@@ -1012,11 +993,9 @@ class CrawlRunner:
             # rolls back on reopen.
             pool.shutdown(wait=True)
         self.seen_count += n_new_total
-        mark("snapshot_writes")
 
         if self.neardup_dedup and self.mode != "refresh":
             self._neardup_wave(wave)
-            mark("neardup")
 
         self.wave = wave
         self._commit_wave()
@@ -1031,12 +1010,8 @@ class CrawlRunner:
             v = self._versions.get(name)
             if v is not None and v - self.wh.compaction_floor(name) >= self.compact_every:
                 self.wh.compact_deltas(name, upto=v)
-        mark("commit_compact")
         for df in (selected, fetched, parsed, new_cands, transitioned):
             df.unpersist()
-        mark("unpersist")
-        if debug:
-            print(f"[wave {wave}] " + " ".join(f"{k}={v}" for k, v in timings.items()), flush=True)
         return True
 
     @staticmethod

@@ -117,21 +117,19 @@ class _Stop(Exception):
     pass
 
 
-@pytest.mark.parametrize("backend", ["bloom", "cuckoo"])
-def test_seen_filter_sizes_shards_with_runner_n_shards(spark, tmp_path, monkeypatch, backend):
-    from fundamental_spark.crawl import cuckoo, seen
+@pytest.mark.parametrize("prefilter", ["cuckoo"])
+def test_seen_filter_sizes_shards_with_runner_n_shards(spark, tmp_path, monkeypatch, prefilter):
+    from fundamental_spark.crawl import seen
 
     sizes = []
 
-    def capture(url_seen, n_keys_per_shard, **kw):
+    def capture(url_seen, n_keys_per_shard):
         sizes.append(n_keys_per_shard)
         raise _Stop
 
-    monkeypatch.setattr(seen, "build_bloom", capture)
-    monkeypatch.setattr(cuckoo, "build_cuckoo", capture)
+    monkeypatch.setattr(seen, f"build_{prefilter}", capture)
     site = _site()
-    r = _runner(spark, tmp_path / "wh", site, n_shards=7, bloom_min_seen=1,
-                seen_backend=backend)
+    r = _runner(spark, tmp_path / "wh", site, n_shards=7, prefilter_min_seen=1)
     urls = [f"https://www.funda.nl/detail/koop/x/huis-{i}/" for i in range(14_000)]
     r.init(_seeds(site), existing_urls=urls)
     with pytest.raises(_Stop):

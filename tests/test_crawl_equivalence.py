@@ -190,14 +190,18 @@ def test_spec_rendered_web_matches_html_web(spark, tmp_path):
     _assert_equivalent(runner, sim)
 
 
-def test_bloom_and_exact_paths_agree(spark, tmp_path):
+def test_prefilter_and_exact_paths_agree(spark, tmp_path):
+    """The cuckoo prefilter (prefilter_min_seen=0, engaged from the first
+    wave) and the default broadcast exact anti-join (a 5-URL seen set is
+    far below the threshold) yield the same crawl: the prefilter sits in
+    front of the same exact join, so both runs equal the simulator."""
     site = build_site(seed=23, cities=("gouda",), listings_per_city=30, page_size=10)
     pages = site.pages_by_city["gouda"]
     existing = set(pages[0][1][:5])
     sim = simulate_crawl(site, "active", existing_urls=existing)
     r1 = _run(spark, tmp_path / "a", site, "active", existing=existing,
-              use_bloom=True, bloom_min_seen=0)
-    r2 = _run(spark, tmp_path / "b", site, "active", existing=existing, use_bloom=False)
+              prefilter_min_seen=0)
+    r2 = _run(spark, tmp_path / "b", site, "active", existing=existing)
     _assert_equivalent(r1, sim)
     _assert_equivalent(r2, sim)
 
@@ -264,14 +268,14 @@ def test_resolve_href_urljoin_shapes(spark):
 
 
 def test_cuckoo_backend_crawl_is_backend_invariant(spark, tmp_path):
-    """The cuckoo prefilter (crawl/cuckoo.py) yields the exact same
-    crawl as bloom and as the pure exact anti-join — both filters are
-    prefilters in front of the same exact join, so the URL-seen result
-    is backend-invariant by construction; this pins it."""
+    """The cuckoo prefilter (crawl/cuckoo.py) engaged from the first wave
+    yields the exact crawl on a second site: it only sits in front of the
+    exact anti-join, so the URL-seen result does not depend on whether
+    the prefilter runs; this pins it."""
     site = build_site(seed=29, cities=("delft",), listings_per_city=30, page_size=10)
     pages = site.pages_by_city["delft"]
     existing = set(pages[0][1][:5])
     sim = simulate_crawl(site, "active", existing_urls=existing)
     r = _run(spark, tmp_path / "c", site, "active", existing=existing,
-             use_bloom=True, bloom_min_seen=0, seen_backend="cuckoo")
+             prefilter_min_seen=0)
     _assert_equivalent(r, sim)

@@ -1,7 +1,7 @@
-"""Cuckoo-filter URL-seen backend (crawl/cuckoo.py): no false
+"""Cuckoo-filter URL-seen prefilter (crawl/cuckoo.py): no false
 negatives, bounded false positives, tiny stash at the sizing load,
-deletion (the capability bloom lacks), and end-to-end agreement of
-filter_new_urls across backends."""
+deletion, and filter_new_urls' prefilter path agreeing with the exact
+anti-join even when its size hint undercounts."""
 
 from __future__ import annotations
 
@@ -74,24 +74,28 @@ def test_delete_keys_reopens_urls(spark):
     assert reopened > 190
 
 
-def test_filter_new_urls_backend_agreement(spark):
+def test_filter_new_urls_exact_when_size_hint_undercounts(spark):
+    """A size hint of 1 key over 20k seen keys sizes each of the 4 shard
+    filters for 1024 keys, so most keys overflow into the stash. The
+    prefilter path must still equal the exact anti-join (and the exact
+    set difference): the stash is exact, so overflow costs bytes, never
+    a false negative."""
     from fundamental_spark.crawl.seen import filter_new_urls
 
-    seen = spark.createDataFrame(
-        [(f"u{i}", i * 31 + 7, i % 4) for i in range(500)],
-        "url string, url_hash long, domain_shard int",
-    )
-    cands = spark.createDataFrame(
-        [(f"u{i}", i * 31 + 7, i % 4) for i in range(400, 900)],
-        "url string, url_hash long, domain_shard int",
-    )
-    expect = {f"u{i}" for i in range(500, 900)}
-    for backend in ("bloom", "cuckoo"):
-        got = {
-            r["url"]
-            for r in filter_new_urls(cands, seen, backend=backend).collect()
-        }
-        assert got == expect, backend
+    n_seen, n_shards = 20_000, 4
+    h = _hashes(30_000, seed=11)
+    rows = [(f"u{i}", int(h[i]) % (1 << 62), i % n_shards) for i in range(len(h))]
+    schema = "url string, url_hash long, domain_shard int"
+    seen = spark.createDataFrame(rows[:n_seen], schema)
+    cands = spark.createDataFrame(rows[15_000:], schema)
+
+    filt = build_cuckoo(seen, n_keys_per_shard=max(1024, 1 // n_shards))
+    assert sum(len(r["stash"]) for r in filt.collect()) > 0  # overflow regime
+
+    exact = {r["url"] for r in filter_new_urls(cands, seen).collect()}
+    assert exact == {f"u{i}" for i in range(n_seen, len(h))}
+    got = filter_new_urls(cands, seen, prefilter_keys=1, n_shards=n_shards).collect()
+    assert sorted(r["url"] for r in got) == sorted(exact)
 
 
 def test_delete_preserves_schema_and_slots():

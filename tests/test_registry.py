@@ -4,6 +4,8 @@ The library registers queries and nothing else: it reads no file
 outside its package at import, so a checkout and the zipped package
 (make_dist.sh) expose the same registry in the same order. Ordering
 for the per-round correctness window lives in ``__spark_entry__``.
+Only ``session.py`` reads the environment: its settings are deployment
+settings, and nothing else in the library grows an env-var knob.
 """
 
 from __future__ import annotations
@@ -65,3 +67,24 @@ def test_entry_covers_the_registry():
     assert set(entrymod.queries()) == set(qmod.SPARK_QUERIES)
     assert set(entrymod.oracle_sql()) == set(qmod.ORACLE_SQL)
     assert all(entrymod.queries()[n] is qmod.SPARK_QUERIES[n] for n in qmod.SPARK_QUERIES)
+
+
+def test_only_session_reads_the_environment():
+    readers = []
+    for dirpath, _, files in os.walk(PKG):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            for node in ast.walk(ast.parse(open(path).read(), path)):
+                if isinstance(node, ast.Attribute) and node.attr in ("environ", "getenv"):
+                    hit = node.attr
+                elif isinstance(node, ast.ImportFrom) and node.module == "os":
+                    hit = next(
+                        (a.name for a in node.names if a.name in ("environ", "getenv")), None
+                    )
+                else:
+                    continue
+                if hit:
+                    readers.append(f"{os.path.relpath(path, PKG)}:{node.lineno} {hit}")
+    assert readers and all(r.startswith("session.py:") for r in readers), readers

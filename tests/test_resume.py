@@ -140,12 +140,12 @@ def test_resume_with_changed_n_shards_raises(spark, tmp_path):
     site = build_site(seed=43, cities=("emmen",), listings_per_city=20, page_size=10)
     seen = [u for _, page in site.pages_by_city["emmen"] for u in page]
     root = tmp_path / "shards"
-    r = _mk_runner(spark, root, site, n_shards=32, bloom_min_seen=0)
+    r = _mk_runner(spark, root, site, n_shards=32, prefilter_min_seen=0)
     r.init([(site.search_url("emmen", 1), "emmen")], existing_urls=seen)
     del r
     with pytest.raises(ValueError, match="n_shards=32"):
-        _mk_runner(spark, root, site, n_shards=7, bloom_min_seen=0)
-    assert _mk_runner(spark, root, site, n_shards=32, bloom_min_seen=0).wave == 0
+        _mk_runner(spark, root, site, n_shards=7, prefilter_min_seen=0)
+    assert _mk_runner(spark, root, site, n_shards=32, prefilter_min_seen=0).wave == 0
 
     # a checkpoint written before n_shards was recorded loads as before
     ckpt = root / "checkpoint.json"
