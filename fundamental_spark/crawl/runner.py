@@ -1,18 +1,32 @@
 """Wave-driven crawl runner: the distributed twin of the Scrapy spider.
 
-One **wave** = one micro-batch over the frontier (SURVEY.md §2.8 T1):
+One **wave** = one micro-batch over the frontier (SURVEY.md §2.8 T1).
+``CrawlRunner.step`` runs it as a sequence of phases:
 
-  pending frontier rows
-    → politeness budget (canonical-order top-k per domain)
-    → distributed fetch (join against the synthetic web table; a real
-      deployment swaps in the mapInPandas HTTP fetcher, fetch.py)
-    → search pages parsed JVM-side → candidate listing URLs
-    → two-stage seen-set filter (cuckoo prefilter + exact anti-join)
-    → new detail rows + next-page rows enqueued
-    → detail pages parsed into interleaved span sequences (Arrow UDF)
-      → documents table
-    → lineage: crawl_log + per-wave metrics (incl. per-shard fetch
-      counts — the skew evidence for the salted single-host key)
+  _select_fetch     pending frontier rows → politeness budget
+                    (canonical-order top-k per domain) → distributed
+                    fetch (join against the synthetic web table; a real
+                    deployment swaps in the mapInPandas HTTP fetcher,
+                    fetch.py)
+  _discover         search pages parsed JVM-side → candidate listing
+                    URLs (robots filter, intra-wave dedup)
+  _seen             two-stage seen-set filter (cuckoo prefilter + exact
+                    anti-join); refresh mode keeps every candidate and
+                    dedups against refreshed_urls instead
+  _transitions      selected rows → fetched | retry-pending | dropped
+  _sink_documents   detail pages parsed into interleaved span sequences
+                    (Arrow sink) → documents table
+  _collect_stats    ONE union-tagged collect → WaveStats; the phase-1
+                    commits (frontier_done, crawl_log, url_seen or
+                    refreshed_urls, documents, response_cache) already
+                    run in a thread pool under it
+  stop_rules        pure driver function: stop counters → next pages
+  _enqueue          new detail rows + next-page rows → frontier_pending
+  _commit           checkpoint, compaction of the re-read delta
+                    tables, unpersist
+
+Lineage: crawl_log + per-wave metrics (incl. per-shard fetch counts —
+the skew evidence for the salted single-host key).
 
 Sequential-pagination semantics are preserved *structurally*: page p+1
 is only discovered while parsing page p, so each city has at most one
@@ -33,9 +47,12 @@ from __future__ import annotations
 
 import json
 import os
+import re
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -52,7 +69,13 @@ from . import PRIORITY_DETAIL, PRIORITY_PAGINATION, PRIORITY_REFRESH, PRIORITY_S
 from .canonical import DEFAULT_N_SHARDS, with_url_keys
 from .parse import parse_search_pages
 from .politeness import PolitenessConfig, select_wave
+from .robots import allowed_col, parse_robots
 from .seen import filter_new_urls
+
+MODES = ("crawl", "refresh")
+SPIDER_TYPES = ("active", "sold")
+# small-state snapshot files per commit (see CrawlRunner._write)
+STATE_PARTITIONS = 4
 
 # F3 (funda_spider.py:88-90,190-192): a 200 DETAIL response whose body
 # carries the bot-verification interstitial is DROPPED permanently —
@@ -178,6 +201,104 @@ class CityState:
     stopped: bool = False
 
 
+def stop_rules(
+    city_states: dict[str, CityState],
+    pages: dict[tuple[str, int], tuple[int, str | None]],
+    new_counts: dict[tuple[str, int], int],
+    seed_urls: dict[str, str],
+    *,
+    spider_type: str,
+    refresh: bool,
+    max_pages: int,
+) -> list[tuple[str, str, int]]:
+    """The sequential-pagination stop rules of one wave, on the driver.
+
+    ``pages`` maps each fetched search page (city, page_idx) to its
+    listing count and next-button URL (None when the page has no
+    button); ``new_counts`` maps it to the listing URLs the seen filter
+    kept. Updates ``city_states`` in place and returns the next search
+    pages to enqueue as (url, city, page_idx), in page order."""
+    next_pages: list[tuple[str, str, int]] = []
+    for (city, page_idx), (n_listings, next_url) in sorted(pages.items()):
+        st = city_states[city]
+        if refresh:
+            # collect_active_urls (funda_spider.py:492-504): no stop
+            # counters, next button ONLY (no manual fallback)
+            if page_idx >= max_pages or next_url is None:
+                st.stopped = True
+            elif not st.stopped:
+                next_pages.append((next_url, city, page_idx + 1))
+            continue
+        if n_listings == 0:
+            st.consecutive_empty += 1
+            if spider_type == "active":
+                # the active spider's no-new check also fires on empty
+                # pages (funda_spider.py:139-145 falls through); the
+                # sold spider's fires only on non-empty pages
+                # (funda_spider_sold.py:139-141)
+                st.consecutive_no_new += 1
+        else:
+            st.consecutive_empty = 0
+            if new_counts.get((city, page_idx), 0) == 0:
+                st.consecutive_no_new += 1
+            else:
+                st.consecutive_no_new = 0
+        no_new_threshold = 3 if spider_type == "active" else 1
+        if (
+            st.consecutive_empty >= 3
+            or st.consecutive_no_new >= no_new_threshold
+            or page_idx >= max_pages
+        ):
+            st.stopped = True
+        elif not st.stopped:
+            # next button if present, else the manual ?page=N
+            # construction (funda_spider.py:172-184 — a missing
+            # button never stops the crawl; a past-the-end manual
+            # page 404s and is dropped without retry)
+            nxt = next_url or f"{seed_urls[city]}&page={page_idx + 1}"
+            next_pages.append((nxt, city, page_idx + 1))
+    return next_pages
+
+
+_STATS_COLUMNS = {"k": "string", "i": "int", "n": "int", "s": "string"}
+
+
+def _stats_leg(tag: str, df: DataFrame, **cols: str | Column) -> DataFrame:
+    """One leg of the union-tagged stats frame: ``_t`` = tag, then the
+    k/i/n/s columns taken from ``cols`` (a column name or expression),
+    null where absent."""
+
+    def column(name: str, dtype: str) -> Column:
+        c = cols.get(name, F.lit(None))
+        return (F.col(c) if isinstance(c, str) else c).cast(dtype).alias(name)
+
+    return df.select(F.lit(tag).alias("_t"), *(column(n, t) for n, t in _STATS_COLUMNS.items()))
+
+
+@dataclass
+class WaveStats:
+    """What the driver learns from a wave's one stats collect."""
+
+    pages: dict[tuple[str, int], tuple[int, str | None]]  # search page -> (listings, next button)
+    new_counts: dict[tuple[str, int], int]  # search page -> listing URLs kept by the seen filter
+    shard_counts: dict[str, int]  # domain_shard -> pages fetched (skew lineage)
+    n_search: int  # search pages fetched
+    n_retry: int  # rows that stay pending as retries
+
+    def metrics_row(self, wave: int) -> dict:
+        n_pages = sum(self.shard_counts.values())
+        return {
+            "wave": wave,
+            "pages_fetched": n_pages,
+            "search_pages": self.n_search,
+            "detail_pages": n_pages - self.n_search,
+            "new_listing_urls": sum(self.new_counts.values()),
+            "shard_counts": json.dumps(
+                dict(sorted(self.shard_counts.items())), separators=(",", ":")
+            ),
+        }
+
+
 @dataclass
 class CrawlRunner:
     spark: SparkSession
@@ -228,18 +349,30 @@ class CrawlRunner:
     neardup_dedup: bool = False
     neardup_threshold: float = 0.5
     n_shards: int = DEFAULT_N_SHARDS
-    state_partitions: int = 4          # small-state snapshot files per commit
-    wave: int = 0
-    seen_count: int = 0
-    city_states: dict[str, CityState] = field(default_factory=dict)
-    seed_urls: dict[str, str] = field(default_factory=dict)
-    domains: set[str] = field(default_factory=set)
-    _versions: dict[str, int] = field(default_factory=dict)
+    # checkpointed crawl state: set by init() or loaded from checkpoint.json
+    wave: int = field(default=0, init=False)
+    seen_count: int = field(default=0, init=False)
+    city_states: dict[str, CityState] = field(default_factory=dict, init=False)
+    seed_urls: dict[str, str] = field(default_factory=dict, init=False)
+    domains: set[str] = field(default_factory=set, init=False)
+    _versions: dict[str, int] = field(default_factory=dict, init=False)
     # next wave's frontier emptiness when the last wave proved it (see
     # step); None = unknown, pay the isEmpty check
     _next_nonempty: bool | None = field(default=None, init=False, repr=False)
 
     def __post_init__(self) -> None:
+        for name, allowed in (("mode", MODES), ("spider_type", SPIDER_TYPES)):
+            if getattr(self, name) not in allowed:
+                raise ValueError(
+                    f"CrawlRunner {name}={getattr(self, name)!r}; expected one of {allowed}"
+                )
+        # the mode's search-path filter and frontier priorities; the
+        # refresh pass uses the looser '/koop/' filter
+        # (funda_spider.py:465-477)
+        refresh = self.mode == "refresh"
+        self._path_filter = "/koop/" if refresh else "/detail/koop/"
+        self._seed_priority = PRIORITY_REFRESH if refresh else PRIORITY_SEED
+        self._page_priority = PRIORITY_REFRESH if refresh else PRIORITY_PAGINATION
         self.wh = Warehouse(self.spark, self.warehouse_root)
         if "fail_until_attempt" not in self.web.columns:
             self.web = self.web.withColumn("fail_until_attempt", F.lit(0))
@@ -247,31 +380,24 @@ class CrawlRunner:
         # specs (url, spec) rendered inside the fetch stage — the web at
         # frontier scale never materializes on the driver
         self._has_spec = "spec" in self.web.columns
-        if self.robots_txt is not None:
-            from .robots import parse_robots
-
-            self._robots = parse_robots(self.robots_txt)
-            if self._robots.crawl_delay is not None:
-                self.politeness.crawl_delay_s = max(
-                    self.politeness.crawl_delay_s, self._robots.crawl_delay
-                )
-        else:
-            self._robots = None
+        self._robots = None if self.robots_txt is None else parse_robots(self.robots_txt)
+        if self._robots is not None and self._robots.crawl_delay is not None:
+            self.politeness.crawl_delay_s = max(
+                self.politeness.crawl_delay_s, self._robots.crawl_delay
+            )
         if os.path.exists(self._ckpt_path()):
             self._load_checkpoint()
 
     def _robots_filter(self, df: DataFrame, url_col: str = "url") -> DataFrame:
         if self._robots is None:
             return df
-        from .robots import allowed_col
-
         return df.filter(allowed_col(F.col(url_col), self._robots))
 
     # ---- checkpointing ----------------------------------------------------
     def _ckpt_path(self) -> str:
         return os.path.join(self.warehouse_root, "checkpoint.json")
 
-    def _commit_wave(self) -> None:
+    def _write_checkpoint(self) -> None:
         state = {
             "wave": self.wave,
             "spider_type": self.spider_type,
@@ -354,15 +480,31 @@ class CrawlRunner:
     def _write(self, name: str, df: DataFrame) -> None:
         if name in self.SMALL_TABLES:
             # coalesce bounds snapshot file counts. The write stage runs
-            # in state_partitions tasks with repartition too; the shuffle
+            # in STATE_PARTITIONS tasks with repartition too; the shuffle
             # only added one more job per commit
-            df = df.coalesce(self.state_partitions)
+            df = df.coalesce(STATE_PARTITIONS)
         self._versions[name] = self.wh.overwrite(name, df)
 
     def _append_delta(self, name: str, df: DataFrame) -> None:
         if name in self.SMALL_TABLES:
-            df = df.coalesce(self.state_partitions)
+            df = df.coalesce(STATE_PARTITIONS)
         self._versions[name] = self.wh.append_delta(name, df)
+
+    def _search_rows(
+        self, pages: list[tuple[str, str, int]], priority: int, wave: int
+    ) -> DataFrame:
+        """Pending frontier rows for the search pages (url, city,
+        page_idx), enqueued in ``wave``."""
+        df = self.spark.createDataFrame(
+            [(u, "search", priority, c, p, p - 1, 0, 0, "pending") for (u, c, p) in pages],
+            "url string, kind string, priority int, city string, page_idx int, "
+            "discovered_on_page int, page_pos int, attempt int, state string",
+        )
+        return (
+            with_url_keys(df, n_shards=self.n_shards)
+            .withColumn("wave_enqueued", F.lit(wave))
+            .select(*FRONTIER_SCHEMA.fieldNames())
+        )
 
     # ---- initialization ----------------------------------------------------
     def init(
@@ -375,20 +517,8 @@ class CrawlRunner:
         at scale, a one-column DataFrame of urls that never touches the
         driver."""
         spark = self.spark
-        seed_prio = PRIORITY_REFRESH if self.mode == "refresh" else PRIORITY_SEED
-        seed_rows = [
-            (url, "search", seed_prio, city, 1, 0, 0, 0, "pending")
-            for (url, city) in seeds
-        ]
-        seed_df = spark.createDataFrame(
-            seed_rows,
-            "url string, kind string, priority int, city string, page_idx int, "
-            "discovered_on_page int, page_pos int, attempt int, state string",
-        )
         frontier = self._robots_filter(
-            with_url_keys(seed_df, n_shards=self.n_shards)
-            .withColumn("wave_enqueued", F.lit(0))
-            .select(*[f.name for f in FRONTIER_SCHEMA.fields])
+            self._search_rows([(u, c, 1) for (u, c) in seeds], self._seed_priority, 0)
         )
         # frontier state is SPLIT: 'frontier_pending' holds only rows
         # still to fetch (rewritten per wave — O(pending)); rows that
@@ -420,7 +550,7 @@ class CrawlRunner:
         seen = (
             with_url_keys(seen_src, n_shards=self.n_shards)
             .withColumn("first_seen_wave", F.lit(-1))
-            .select(*[f.name for f in URL_SEEN_SCHEMA.fields])
+            .select(*URL_SEEN_SCHEMA.fieldNames())
         )
         inits.append(("url_seen", seen))
         # empty bootstrap tables are written on the driver with pyarrow
@@ -471,8 +601,6 @@ class CrawlRunner:
         # the Spark-written bootstrap snapshots are independent: commit
         # them concurrently (same driver-thread trick as the per-wave
         # writes)
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=len(inits)) as ex:
             futures = [ex.submit(self._write, name, df) for (name, df) in inits]
             for fu in futures:
@@ -481,15 +609,13 @@ class CrawlRunner:
         # base search URL per city — the manual ?page=N pagination
         # fallback (funda_spider.py:172-184) appends to this
         self.seed_urls = {city: url for (url, city) in seeds}
-        import re as _re
-
         self.domains = {
             m.group(1)
             for (url, _) in seeds
-            if (m := _re.match(r"^https?://([^/]+)/", url))
+            if (m := re.match(r"^https?://([^/]+)/", url))
         }
         self.wave = 0
-        self._commit_wave()
+        self._write_checkpoint()
 
     # ---- one wave ----------------------------------------------------------
     def step(self) -> bool:
@@ -503,25 +629,103 @@ class CrawlRunner:
         # round-trip (~0.15 s/wave of fixed latency). The flag is
         # consumed here; resume, init and budgeted waves leave it None
         # and pay the check.
-        known = self._next_nonempty
-        self._next_nonempty = None
+        known, self._next_nonempty = self._next_nonempty, None
         if known is False:
             return False
         wave = self.wave + 1
         pending = self._read("frontier_pending")
-        url_seen = self._read_deltas("url_seen")
-
         budget = (
             None
             if self.wave_seconds is None
             else self.politeness.wave_budget(self.wave_seconds)
         )
+        selected, fetched = self._select_fetch(pending, budget, known)
+        if fetched is None:
+            return False
+        parsed, candidates = self._discover(fetched)
+        new_cands, seen_writes = self._seen(candidates, fetched, wave)
+        transitioned, untouched = self._transitions(pending, selected, fetched)
+
+        # --- phase-1 snapshot commits: everything that does NOT depend on
+        # the stop rules launches BEFORE the driver's stats round-trip, so
+        # executor work (the heavy documents sink above all) runs UNDER the
+        # driver-side collect instead of after it. Driver latency is the
+        # non-scaling fraction of a wave; hiding it is a direct N->4N
+        # efficiency win. (Spark schedulers are thread-safe; the tables
+        # stay independent until the checkpoint pins them together.)
+        # retries stay pending; terminal rows append ONCE to the done log
+        done_rows = transitioned.filter(F.col("state") != "pending")
+        log_rows = fetched.filter(F.col("fetch_ok")).select(
+            "url", "kind", "city", "discovered_on_page", "priority", "page_pos",
+            F.lit(wave).alias("wave_fetched"),
+        )
+        writes = [
+            (self._append_delta, "frontier_done", done_rows),
+            (self._append_delta, "crawl_log", log_rows),
+            *seen_writes,
+        ]
+        if self.http_cache:
+            cache_add = fetched.filter(
+                F.col("fetch_ok") & ~F.col("cache_hit") & F.col("html").isNotNull()
+            ).select("url", "html", F.lit(wave).alias("wave"))
+            writes.append((self._append_delta, "response_cache", cache_add))
+        pool = ThreadPoolExecutor(max_workers=8)
+        try:
+            futures = [pool.submit(*w) for w in writes]
+            stats = self._collect_stats(parsed, new_cands, fetched)
+            next_pages = stop_rules(
+                self.city_states, stats.pages, stats.new_counts, self.seed_urls,
+                spider_type=self.spider_type, refresh=self.mode == "refresh",
+                max_pages=self.max_pages,
+            )
+            new_pending, n_details, n_pages = self._enqueue(
+                untouched, transitioned, new_cands, stats, next_pages, wave
+            )
+            futures.append(pool.submit(self._write, "frontier_pending", new_pending))
+            # exact next-wave emptiness: with no budget, selected ==
+            # pending so untouched == 0, and the rebuilt frontier is
+            # retries + enqueued rows. Only this exact evidence may
+            # decide next wave's emptiness; budgeted waves leave None
+            # (untouched unknown).
+            if budget is None:
+                self._next_nonempty = stats.n_retry + n_details + n_pages > 0
+            # wave_metrics is ONE row — append it driver-side with pyarrow
+            # (tableformat.append_delta_rows): zero Spark jobs, zero
+            # scheduling round-trips, identical on-disk shape for readers
+            self._versions["wave_metrics"] = self.wh.append_delta_rows(
+                "wave_metrics", [stats.metrics_row(wave)], WAVE_METRICS_SCHEMA
+            )
+            for fu in futures:
+                fu.result()
+        finally:
+            # always reap the pool — including on an exception
+            # raised anywhere between the phase-1 submits and the
+            # result loop (stats collect, stop rules): a leaked
+            # non-daemon worker would keep snapshot writes running
+            # unsupervised and block interpreter exit. Checkpoint
+            # is only written on full success, so a partial wave
+            # rolls back on reopen.
+            pool.shutdown(wait=True)
+        # url_seen grew by exactly the detail rows enqueued (none in
+        # refresh mode, which appends to refreshed_urls instead)
+        self.seen_count += n_details
+        if self.neardup_dedup and self.mode != "refresh":
+            self._neardup_wave(wave)
+        self._commit(wave, (selected, fetched, parsed, new_cands, transitioned))
+        return True
+
+    def _select_fetch(
+        self, pending: DataFrame, budget: int | None, known: bool | None
+    ) -> tuple[DataFrame, DataFrame | None]:
+        """Select+fetch phase: the wave's politeness-budgeted rows and
+        their fetch outcomes (both cached), or (selected, None) when
+        the frontier turns out empty."""
         selected = select_wave(
             pending, budget, n_domains=max(len(self.domains), 1)
         ).cache()
         if known is None and selected.isEmpty():
             selected.unpersist()
-            return False
+            return selected, None
 
         # one fetch join per wave; the cache is columnar so bookkeeping
         # scans that don't select `html` never deserialize the payload
@@ -542,8 +746,8 @@ class CrawlRunner:
             .withColumn("html", F.coalesce(F.col("_cached_html"), F.col("html")))
         )
         # spec rows (executor-side rendering) keep their compact spec:
-        # render+parse happen FUSED in the documents projection below,
-        # so the heavy page body never materializes JVM-side
+        # render+parse happen FUSED in the documents sink, so the heavy
+        # page body never materializes JVM-side
         has_body = F.col("html").isNotNull()
         if self._has_spec:
             has_body = has_body | F.col("spec").isNotNull()
@@ -577,12 +781,14 @@ class CrawlRunner:
             .withColumn("cache_hit", cache_hit)
             .cache()
         )
+        return selected, fetched
 
-        # --- search pages ---------------------------------------------------
+    def _discover(self, fetched: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """Discover phase: the fetched search pages parsed (cached) and
+        their listing URLs, robots-filtered and deduplicated within the
+        wave."""
         search_ok = fetched.filter((F.col("kind") == "search") & F.col("fetch_ok"))
-        # refresh mode uses the looser '/koop/' filter (funda_spider.py:465-477)
-        path_filter = "/koop/" if self.mode == "refresh" else "/detail/koop/"
-        parsed = parse_search_pages(search_ok, path_filter=path_filter).cache()
+        parsed = parse_search_pages(search_ok, path_filter=self._path_filter).cache()
         candidates = (
             parsed.select(
                 "city",
@@ -615,25 +821,56 @@ class CrawlRunner:
             )
             .select("url", "_s.*")
         )
-        # the prefilter pays for itself only on huge seen sets (see
-        # prefilter_min_seen). refresh mode collects ALL found URLs — no
-        # seen filtering (collect_active_urls has none,
-        # funda_spider.py:488-490)
-        if self.mode == "refresh":
-            new_cands = candidates.cache()
-        else:
-            new_cands = filter_new_urls(
-                candidates,
-                url_seen,
-                prefilter_keys=(
-                    self.seen_count
-                    if self.seen_count >= self.prefilter_min_seen
-                    else None
-                ),
-                n_shards=self.n_shards,
-            ).cache()
+        return parsed, candidates
 
-        # --- frontier state transitions (stats-independent) -------------------
+    def _seen(
+        self, candidates: DataFrame, fetched: DataFrame, wave: int
+    ) -> tuple[DataFrame, list[tuple]]:
+        """Seen phase: the candidates this wave keeps (cached) and the
+        mode's own phase-1 commits, as (function, *args) pool tasks."""
+        if self.mode == "refresh":
+            # refresh mode collects ALL found URLs — no seen filtering
+            # (collect_active_urls has none, funda_spider.py:488-490) —
+            # and fetches no detail pages, so it sinks no documents.
+            # Cross-wave dedup: a URL listed on search pages of several
+            # waves (listings shifting between pages) must land in
+            # refreshed_urls ONCE, like the reference's active_urls SET
+            # (funda_spider.py:488-504) — anti-join against the deltas
+            # already appended (intra-wave dedup happened in _discover)
+            new_cands = candidates.cache()
+            refreshed = new_cands.select(
+                "url",
+                "city",
+                F.col("discovered_on_page").alias("found_on_page"),
+                F.lit(wave).alias("wave"),
+            ).join(
+                self._read_deltas("refreshed_urls").select("url"), "url", "left_anti"
+            )
+            return new_cands, [(self._append_delta, "refreshed_urls", refreshed)]
+        # the prefilter pays for itself only on huge seen sets (see
+        # prefilter_min_seen)
+        new_cands = filter_new_urls(
+            candidates,
+            self._read_deltas("url_seen"),
+            prefilter_keys=(
+                self.seen_count if self.seen_count >= self.prefilter_min_seen else None
+            ),
+            n_shards=self.n_shards,
+        ).cache()
+        seen_add = new_cands.select(
+            "url", "url_hash", "domain_shard", F.lit(wave).alias("first_seen_wave")
+        )
+        return new_cands, [
+            (self._append_delta, "url_seen", seen_add),
+            (self._sink_documents, fetched, wave),
+        ]
+
+    def _transitions(
+        self, pending: DataFrame, selected: DataFrame, fetched: DataFrame
+    ) -> tuple[DataFrame, DataFrame]:
+        """Frontier-transition phase (stats-independent): the selected
+        rows with their new state and attempt (cached), and the pending
+        rows this wave left untouched."""
         outcome = fetched.select(
             "url",
             F.col("fetch_ok"),
@@ -655,350 +892,138 @@ class CrawlRunner:
                 .otherwise(F.lit("dropped")),
             )
             .withColumn("attempt", F.col("next_attempt"))
-            .select(*[f.name for f in FRONTIER_SCHEMA.fields])
+            .select(*FRONTIER_SCHEMA.fieldNames())
         ).cache()
-        # retries stay pending; terminal rows append ONCE to the done log
-        done_rows = transitioned.filter(F.col("state") != "pending")
+        return transitioned, untouched
 
-        # --- seen set / refreshed urls ----------------------------------------
-        if self.mode == "refresh":
-            # cross-wave dedup: a URL listed on search pages of several
-            # waves (listings shifting between pages) must land in
-            # refreshed_urls ONCE, like the reference's active_urls SET
-            # (funda_spider.py:488-504) — anti-join against the deltas
-            # already appended (intra-wave dedup happened above)
-            refreshed = new_cands.select(
-                "url",
-                "city",
-                F.col("discovered_on_page").alias("found_on_page"),
-                F.lit(wave).alias("wave"),
-            ).join(
-                self._read_deltas("refreshed_urls").select("url"), "url", "left_anti"
-            )
-        else:
-            seen_add = new_cands.select(
-                "url", "url_hash", "domain_shard", F.lit(wave).alias("first_seen_wave")
-            )
+    def _sink_documents(self, fetched: DataFrame, wave: int) -> None:
+        """Documents phase: the wave's fetched detail pages become one
+        documents snapshot of interleaved span rows.
 
-        # --- documents (detail pages -> interleaved spans) --------------------
-        # fused SINK, not a UDF projection (docsink.py): the Python
-        # worker renders (spec pages) / receives the body, parses the
-        # interleaved spans columnar, and parquet-encodes straight into
-        # the snapshot dir. Span bytes cross zero exchanges and never
-        # return to the JVM — only a one-row-per-task file manifest
-        # does (the Iceberg task-file commit shape). This is what keeps
-        # per-page DRAM traffic flat as executors are added.
-        detail_ok = fetched.filter((F.col("kind") == "detail") & F.col("fetch_ok"))
+        A fused SINK, not a UDF projection (docsink.py): the Python
+        worker renders (spec pages) / receives the body, parses the
+        interleaved spans columnar, and parquet-encodes straight into
+        the snapshot dir. Span bytes cross zero exchanges and never
+        return to the JVM — only a one-row-per-task file manifest
+        does (the Iceberg task-file commit shape). This is what keeps
+        per-page DRAM traffic flat as executors are added."""
+        from .docsink import SINK_SUMMARY_DDL, make_documents_sink, write_empty_documents
+
         doc_cols = ["url", "html", "city", "discovered_on_page", "page_pos"]
         if self._has_spec:
             doc_cols.insert(1, "spec")
-        docs_input = detail_ok.select(*doc_cols)
+        docs = fetched.filter((F.col("kind") == "detail") & F.col("fetch_ok")).select(*doc_cols)
 
-        def write_docs(name: str, df: DataFrame, _wave: int = wave) -> None:
-            from .docsink import (
-                SINK_SUMMARY_DDL,
-                make_documents_sink,
-                write_empty_documents,
-            )
+        def job(out_dir: str) -> list[str]:
+            sink = make_documents_sink(out_dir, wave, self._has_spec)
+            files = [r["file"] for r in docs.mapInArrow(sink, SINK_SUMMARY_DDL).collect()]
+            return files or [os.path.basename(write_empty_documents(out_dir))]
 
-            def job(out_dir: str) -> list[str]:
-                sink = make_documents_sink(out_dir, _wave, self._has_spec)
-                files = [
-                    r["file"]
-                    for r in df.mapInArrow(sink, SINK_SUMMARY_DDL).collect()
-                ]
-                if not files:
-                    files = [os.path.basename(write_empty_documents(out_dir))]
-                return files
+        self._versions["documents"] = self.wh.append_delta_files("documents", job)
 
-            self._versions[name] = self.wh.append_delta_files(name, job)
-
-        # --- lineage ----------------------------------------------------------
-        log_rows = fetched.filter(F.col("fetch_ok")).select(
-            "url", "kind", "city", "discovered_on_page", "priority", "page_pos",
-            F.lit(wave).alias("wave_fetched"),
+    def _collect_stats(
+        self, parsed: DataFrame, new_cands: DataFrame, fetched: DataFrame
+    ) -> WaveStats:
+        """Stats phase: ONE union-tagged collect (O(#cities)+O(#shards)
+        rows) for all per-wave driver bookkeeping:
+          p: per-search-page listing count + next-page url (stop rules)
+          n: per-page NEW-url count after the seen filter (stop rules)
+          s: per-shard fetched-page counts (skew lineage, wave_metrics)
+          r: rows that will STAY pending as retries (next wave's
+             isEmpty skip: exact frontier accounting)
+          d: newly seen domains (only when a politeness budget is active)
+          t: AutoThrottle ok/retryable tallies (only when throttling)
+        Separate jobs here were the dominant fixed cost per wave — each
+        driver round-trip is wall time that no added executor removes.
+        The d and t rows feed the politeness state here."""
+        retry_pending = F.col("retryable") & (
+            F.col("attempt") + 1 <= F.lit(self.politeness.retry_times)
+        )
+        legs = [
+            _stats_leg("p", parsed, k="city", i="page_idx",
+                       n=F.size("listing_urls"), s="next_page"),
+            _stats_leg("n", new_cands.groupBy("city", "discovered_on_page").agg(
+                F.count("*").alias("n")), k="city", i="discovered_on_page", n="n"),
+            _stats_leg("s", fetched.filter(F.col("fetch_ok")).groupBy("domain_shard").agg(
+                F.count("*").alias("n"),
+                F.count(F.when(F.col("kind") == "search", 1)).alias("i"),
+            ), k="domain_shard", i="i", n="n"),
+            _stats_leg("r", fetched.agg(F.count(F.when(retry_pending, 1)).alias("n")), n="n"),
+        ]
+        if self.wave_seconds is not None:
+            legs.append(_stats_leg("d", new_cands.select("domain").distinct(), k="domain"))
+            if self.politeness.autothrottle:
+                # Only RETRYABLE failures count — permanent misses (a
+                # past-the-end manual-pagination 404, a dropped
+                # interstitial) are not server distress and Scrapy's
+                # AutoThrottle never backs off on them
+                legs.append(_stats_leg("t", fetched.agg(
+                    F.count(F.when(F.col("retryable"), 1)).alias("i"),
+                    F.count(F.when(F.col("fetch_ok"), 1)).alias("n"),
+                ), i="i", n="n"))
+        rows = reduce(DataFrame.unionByName, legs).collect()
+        self.domains.update(r["k"] for r in rows if r["_t"] == "d")
+        for t in (r for r in rows if r["_t"] == "t"):
+            self.politeness.observe_wave(t["n"], t["i"])
+        return WaveStats(
+            pages={(r["k"], r["i"]): (r["n"] or 0, r["s"]) for r in rows if r["_t"] == "p"},
+            new_counts={(r["k"], r["i"]): r["n"] for r in rows if r["_t"] == "n"},
+            shard_counts={r["k"]: r["n"] for r in rows if r["_t"] == "s"},
+            n_search=sum(r["i"] for r in rows if r["_t"] == "s"),
+            n_retry=next(r["n"] for r in rows if r["_t"] == "r"),
         )
 
-        # --- phase-1 snapshot commits: everything that does NOT depend on
-        # the stop rules launches BEFORE the driver's stats round-trip, so
-        # executor work (the heavy documents sink above all) runs UNDER the
-        # driver-side collect instead of after it. Driver latency is the
-        # non-scaling fraction of a wave; hiding it is a direct N->4N
-        # efficiency win. (Spark schedulers are thread-safe; the tables
-        # stay independent until the checkpoint pins them together.)
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=8)
-        try:
-            futures = [
-                pool.submit(self._append_delta, "frontier_done", done_rows),
-                pool.submit(self._append_delta, "crawl_log", log_rows),
+    def _enqueue(
+        self,
+        untouched: DataFrame,
+        transitioned: DataFrame,
+        new_cands: DataFrame,
+        stats: WaveStats,
+        next_pages: list[tuple[str, str, int]],
+        wave: int,
+    ) -> tuple[DataFrame, int, int]:
+        """Enqueue phase: the next pending frontier = untouched +
+        retries + this wave's new detail and search rows. Returns it
+        with the number of detail rows and of search rows enqueued."""
+        pending = untouched.unionByName(transitioned.filter(F.col("state") == "pending"))
+        n_details = 0
+        if self.mode == "crawl":
+            # refresh mode fetches no detail pages: its collected URLs
+            # went to the refreshed_urls table instead
+            n_details = sum(stats.new_counts.values())
+            pending = pending.unionByName(new_cands.select(
+                "url",
+                "url_hash",
+                "domain",
+                "domain_shard",
+                F.lit("detail").alias("kind"),
+                F.lit(PRIORITY_DETAIL).alias("priority"),
+                "city",
+                F.col("discovered_on_page").alias("page_idx"),
+                "discovered_on_page",
+                "page_pos",
+                F.lit(wave).alias("wave_enqueued"),
+                F.lit(0).alias("attempt"),
+                F.lit("pending").alias("state"),
+            ))
+        if self._robots is not None:
+            next_pages = [
+                (u, c, p)
+                for (u, c, p) in next_pages
+                if self._robots.allowed(re.sub(r"^https?://[^/]+", "", u))
             ]
-            if self.mode == "refresh":
-                futures.append(pool.submit(self._append_delta, "refreshed_urls", refreshed))
-            else:
-                futures.append(pool.submit(self._append_delta, "url_seen", seen_add))
-                futures.append(pool.submit(write_docs, "documents", docs_input))
-            if self.http_cache:
-                cache_add = fetched.filter(
-                    F.col("fetch_ok") & ~F.col("cache_hit") & F.col("html").isNotNull()
-                ).select("url", "html", F.lit(wave).alias("wave"))
-                futures.append(pool.submit(self._append_delta, "response_cache", cache_add))
-
-            # --- ONE union-tagged stats job (O(#cities)+O(#shards) rows) ----------
-            # All per-wave driver bookkeeping folds into a single collect:
-            #   p: per-search-page listing count + next-page url (stop rules)
-            #   n: per-page NEW-url count after the seen filter (stop rules)
-            #   s: per-shard fetched-page counts (skew lineage, wave_metrics)
-            #   t: AutoThrottle ok/retryable tallies (only when throttling)
-            #   d: newly seen domains (only when a politeness budget is active)
-            # Separate jobs here were the dominant fixed cost per wave — each
-            # driver round-trip is wall time that no added executor removes.
-            legs = [
-                parsed.select(
-                    F.lit("p").alias("_t"),
-                    F.col("city").alias("k"),
-                    F.col("page_idx").alias("i"),
-                    F.size(F.col("listing_urls")).alias("n"),
-                    F.col("next_page").alias("s"),
-                ),
-                new_cands.groupBy("city", "discovered_on_page")
-                .agg(F.count("*").cast("int").alias("n"))
-                .select(
-                    F.lit("n").alias("_t"),
-                    F.col("city").alias("k"),
-                    F.col("discovered_on_page").alias("i"),
-                    "n",
-                    F.lit(None).cast("string").alias("s"),
-                ),
-                fetched.filter(F.col("fetch_ok"))
-                .groupBy("domain_shard")
-                .agg(
-                    F.count("*").cast("int").alias("n"),
-                    F.count(F.when(F.col("kind") == "search", 1)).cast("int").alias("ns"),
-                )
-                .select(
-                    F.lit("s").alias("_t"),
-                    F.col("domain_shard").cast("string").alias("k"),
-                    F.col("ns").alias("i"),
-                    "n",
-                    F.lit(None).cast("string").alias("s"),
-                ),
-                # r: rows that will STAY pending as retries — one tiny
-                # scan of the cached frame; feeds the next wave's
-                # isEmpty skip (exact frontier accounting)
-                fetched.agg(
-                    F.count(
-                        F.when(
-                            F.col("retryable")
-                            & (
-                                F.col("attempt") + 1
-                                <= F.lit(self.politeness.retry_times)
-                            ),
-                            1,
-                        )
-                    )
-                    .cast("int")
-                    .alias("n")
-                ).select(
-                    F.lit("r").alias("_t"),
-                    F.lit(None).cast("string").alias("k"),
-                    F.lit(None).cast("int").alias("i"),
-                    "n",
-                    F.lit(None).cast("string").alias("s"),
-                ),
-            ]
-            if self.wave_seconds is not None:
-                legs.append(
-                    new_cands.select("domain")
-                    .distinct()
-                    .select(
-                        F.lit("d").alias("_t"),
-                        F.col("domain").alias("k"),
-                        F.lit(None).cast("int").alias("i"),
-                        F.lit(None).cast("int").alias("n"),
-                        F.lit(None).cast("string").alias("s"),
-                    )
-                )
-                if self.politeness.autothrottle:
-                    # Only RETRYABLE failures count — permanent misses (a
-                    # past-the-end manual-pagination 404, a dropped
-                    # interstitial) are not server distress and Scrapy's
-                    # AutoThrottle never backs off on them
-                    legs.append(
-                        fetched.agg(
-                            F.count(F.when(F.col("retryable"), 1)).cast("int").alias("i"),
-                            F.count(F.when(F.col("fetch_ok"), 1)).cast("int").alias("n"),
-                        ).select(
-                            F.lit("t").alias("_t"),
-                            F.lit(None).cast("string").alias("k"),
-                            "i",
-                            "n",
-                            F.lit(None).cast("string").alias("s"),
-                        )
-                    )
-            stats_df = legs[0]
-            for leg in legs[1:]:
-                stats_df = stats_df.unionByName(leg)
-            stats_rows = stats_df.collect()
-            page_stats = {(r["k"], r["i"]): r for r in stats_rows if r["_t"] == "p"}
-            new_counts = {(r["k"], r["i"]): r["n"] for r in stats_rows if r["_t"] == "n"}
-            shard_counts = {r["k"]: r["n"] for r in stats_rows if r["_t"] == "s"}
-            n_retry = next(r["n"] for r in stats_rows if r["_t"] == "r")
-            n_search = sum(r["i"] for r in stats_rows if r["_t"] == "s")
-            n_new_total = sum(new_counts.values())
-            if self.wave_seconds is not None:
-                self.domains.update(r["k"] for r in stats_rows if r["_t"] == "d")
-                if self.politeness.autothrottle:
-                    t = next(r for r in stats_rows if r["_t"] == "t")
-                    self.politeness.observe_wave(t["n"], t["i"])
-
-            # --- stop rules + pagination enqueue (sequential semantics) ----------
-            next_pages: list[tuple[str, str, int]] = []  # (url, city, page_idx)
-            for (city, page_idx), r in sorted(page_stats.items()):
-                st = self.city_states[city]
-                if self.mode == "refresh":
-                    # collect_active_urls (funda_spider.py:492-504): no stop
-                    # counters, next button ONLY (no manual fallback)
-                    if page_idx >= self.max_pages or r["s"] is None:
-                        st.stopped = True
-                    elif not st.stopped:
-                        next_pages.append((r["s"], city, page_idx + 1))
-                    continue
-                n_listings = r["n"] or 0
-                n_new = new_counts.get((city, page_idx), 0)
-                if n_listings == 0:
-                    st.consecutive_empty += 1
-                    if self.spider_type == "active":
-                        # the active spider's no-new check also fires on empty
-                        # pages (funda_spider.py:139-145 falls through); the
-                        # sold spider's fires only on non-empty pages
-                        # (funda_spider_sold.py:139-141)
-                        st.consecutive_no_new += 1
-                else:
-                    st.consecutive_empty = 0
-                    if n_new == 0:
-                        st.consecutive_no_new += 1
-                    else:
-                        st.consecutive_no_new = 0
-                no_new_threshold = 3 if self.spider_type == "active" else 1
-                if (
-                    st.consecutive_empty >= 3
-                    or st.consecutive_no_new >= no_new_threshold
-                    or page_idx >= self.max_pages
-                ):
-                    st.stopped = True
-                elif not st.stopped:
-                    # next button if present, else the manual ?page=N
-                    # construction (funda_spider.py:172-184 — a missing
-                    # button never stops the crawl; a past-the-end manual
-                    # page 404s and is dropped without retry)
-                    nxt = r["s"] or f"{self.seed_urls[city]}&page={page_idx + 1}"
-                    next_pages.append((nxt, city, page_idx + 1))
-
-            # --- build new frontier rows -----------------------------------------
-            if self.mode == "refresh":
-                # no detail fetches in refresh mode — collected URLs go to
-                # the refreshed_urls table instead
-                detail_rows = self.spark.createDataFrame([], FRONTIER_SCHEMA)
-            else:
-                detail_rows = new_cands.select(
-                    "url",
-                    "url_hash",
-                    "domain",
-                    "domain_shard",
-                    F.lit("detail").alias("kind"),
-                    F.lit(PRIORITY_DETAIL).alias("priority"),
-                    "city",
-                    F.col("discovered_on_page").alias("page_idx"),
-                    "discovered_on_page",
-                    "page_pos",
-                    F.lit(wave).alias("wave_enqueued"),
-                    F.lit(0).alias("attempt"),
-                    F.lit("pending").alias("state"),
-                ).select(*[f.name for f in FRONTIER_SCHEMA.fields])
-            if next_pages and self._robots is not None:
-                import re as _re
-
-                next_pages = [
-                    (u, c, p)
-                    for (u, c, p) in next_pages
-                    if self._robots.allowed(_re.sub(r"^https?://[^/]+", "", u))
-                ]
-            if next_pages:
-                page_prio = (
-                    PRIORITY_REFRESH if self.mode == "refresh" else PRIORITY_PAGINATION
-                )
-                np_df = self.spark.createDataFrame(
-                    [
-                        (u, "search", page_prio, c, p, p - 1, 0, 0, "pending")
-                        for (u, c, p) in next_pages
-                    ],
-                    "url string, kind string, priority int, city string, page_idx int, "
-                    "discovered_on_page int, page_pos int, attempt int, state string",
-                )
-                np_rows = (
-                    with_url_keys(np_df, n_shards=self.n_shards)
-                    .withColumn("wave_enqueued", F.lit(wave))
-                    .select(*[f.name for f in FRONTIER_SCHEMA.fields])
-                )
-                detail_rows = detail_rows.unionByName(np_rows)
-            # pending frontier = untouched + retryable + newly enqueued rows
-            new_pending = (
-                untouched
-                .unionByName(transitioned.filter(F.col("state") == "pending"))
-                .unionByName(detail_rows)
+        if next_pages:
+            pending = pending.unionByName(
+                self._search_rows(next_pages, self._page_priority, wave)
             )
-            futures.append(pool.submit(self._write, "frontier_pending", new_pending))
-            # exact next-wave emptiness: with no budget, selected ==
-            # pending so untouched == 0, and the rebuilt frontier is
-            # retries + pagination (+ detail enqueues outside refresh
-            # mode). Only this exact evidence may decide next wave's
-            # emptiness; budgeted waves leave None (untouched unknown).
-            if budget is None:
-                enqueued = n_retry + len(next_pages)
-                if self.mode != "refresh":
-                    enqueued += n_new_total
-                self._next_nonempty = enqueued > 0
+        return pending, n_details, len(next_pages)
 
-            # wave_metrics is ONE row — append it driver-side with pyarrow
-            # (tableformat.append_delta_rows): zero Spark jobs, zero
-            # scheduling round-trips, identical on-disk shape for readers
-            n_pages = sum(shard_counts.values())
-            self._versions["wave_metrics"] = self.wh.append_delta_rows(
-                "wave_metrics",
-                [
-                    {
-                        "wave": wave,
-                        "pages_fetched": n_pages,
-                        "search_pages": n_search,
-                        "detail_pages": n_pages - n_search,
-                        "new_listing_urls": n_new_total,
-                        "shard_counts": json.dumps(
-                            dict(sorted(shard_counts.items())), separators=(",", ":")
-                        ),
-                    }
-                ],
-                WAVE_METRICS_SCHEMA,
-            )
-            for fu in futures:
-                fu.result()
-        finally:
-            # always reap the pool — including on an exception
-            # raised anywhere between the phase-1 submits and the
-            # result loop (stats collect, stop rules): a leaked
-            # non-daemon worker would keep snapshot writes running
-            # unsupervised and block interpreter exit. Checkpoint
-            # is only written on full success, so a partial wave
-            # rolls back on reopen.
-            pool.shutdown(wait=True)
-        self.seen_count += n_new_total
-
-        if self.neardup_dedup and self.mode != "refresh":
-            self._neardup_wave(wave)
-
+    def _commit(self, wave: int, cached: tuple[DataFrame, ...]) -> None:
+        """Commit phase: pin the wave's snapshots in the checkpoint,
+        compact the delta tables read every wave, drop the wave's
+        caches."""
         self.wave = wave
-        self._commit_wave()
+        self._write_checkpoint()
         # compact the delta tables that are re-read EVERY wave, up to the
         # version the checkpoint just pinned (never past a durable commit:
         # resume rolls back only to >= the floor, contract kept)
@@ -1010,9 +1035,8 @@ class CrawlRunner:
             v = self._versions.get(name)
             if v is not None and v - self.wh.compaction_floor(name) >= self.compact_every:
                 self.wh.compact_deltas(name, upto=v)
-        for df in (selected, fetched, parsed, new_cands, transitioned):
+        for df in cached:
             df.unpersist()
-        return True
 
     @staticmethod
     def _doc_text(docs: DataFrame) -> DataFrame:

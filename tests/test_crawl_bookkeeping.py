@@ -1,7 +1,8 @@
 """The crawl's table bookkeeping costs no Spark job that data does not
 need: empty bootstrap tables are written on the driver, reads take the
 schema from table metadata, and a frontier already proven empty ends
-the crawl without reading anything. Also pins the seen-filter sizing
+the crawl without reading anything. Also pins the job count of a
+steady crawl wave and of a refresh wave, and the seen-filter sizing
 state that a pre-seeded ``init`` hands to the waves."""
 
 from __future__ import annotations
@@ -99,6 +100,21 @@ def test_terminating_step_submits_no_job_and_init_crawls_again(spark, tmp_path):
     assert r._next_nonempty is None
     assert r.step() is True
     assert r.wave == 1
+
+
+@pytest.mark.parametrize("mode, wave, want", [("crawl", 2, 28), ("refresh", 1, 24)])
+def test_steady_wave_job_count(spark, tmp_path, mode, wave, want):
+    """A non-terminal wave's job count: crawl wave 2 fetches search page
+    2 and the ten detail pages found on page 1; refresh wave 1 fetches
+    the seed page. The wave's phases add no job of their own."""
+    site = _site()
+    r = _runner(spark, tmp_path / "wh", site, mode=mode)
+    r.init(_seeds(site))
+    for _ in range(wave - 1):
+        assert r.step()
+    with spark_jobs(spark) as jobs:
+        assert r.step()
+    assert len(jobs) == want
 
 
 def test_preseeded_init_sets_seen_count(spark, tmp_path):

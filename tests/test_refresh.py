@@ -6,6 +6,8 @@ mark-inactive (database.go:1252-1323)."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -106,6 +108,22 @@ def test_refresh_feeds_mark_inactive(spark, tmp_path, refresh_site):
         assert after[u] == "active"
     # cities the refresh never visited are untouched
     assert after["https://www.funda.nl/detail/koop/elders/huis-x/77000001/"] == "active"
+
+
+def test_refresh_leaves_seen_count_at_the_url_seen_rows(spark, tmp_path):
+    """Refresh mode appends nothing to url_seen, so the seen-set size
+    that sizes the prefilter (and is checkpointed) must not grow with
+    the URLs it collects."""
+    site = build_site(seed=43, cities=("eindhoven",), listings_per_city=40, page_size=15)
+    web = spark.createDataFrame(web_rows(site), "url string, html string")
+    root = tmp_path / "wh"
+    runner = CrawlRunner(spark=spark, warehouse_root=str(root), web=web, mode="refresh")
+    runner.init([(site.search_url("eindhoven", 1), "eindhoven")],
+                existing_urls=[site.listings[0].url])
+    assert runner.run() > 1
+    assert runner.table("refreshed_urls").count() == 40
+    assert runner.seen_count == runner.table("url_seen").count() == 1
+    assert json.loads((root / "checkpoint.json").read_text())["seen_count"] == 1
 
 
 def test_refresh_resumes_exactly_mid_run(spark, tmp_path, refresh_site):
