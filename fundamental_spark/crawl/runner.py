@@ -64,6 +64,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.dedup import minhash_probe_band_index, plan_minhash_config
 from ..tableformat import Warehouse
 from . import PRIORITY_DETAIL, PRIORITY_PAGINATION, PRIORITY_REFRESH, PRIORITY_SEED
 from .canonical import DEFAULT_N_SHARDS, with_url_keys
@@ -345,7 +346,8 @@ class CrawlRunner:
     # of dedup_minhash_incremental), appends verified pairs to
     # 'neardup_pairs' and its own bands to 'neardup_bands'. Per-wave
     # cost is O(delta), never O(corpus); off by default so the crawl
-    # headline bench is unaffected.
+    # headline bench is unaffected. A threshold plan_minhash_config
+    # cannot serve at recall 0.9 (e.g. 0.1) is refused at construction.
     neardup_dedup: bool = False
     neardup_threshold: float = 0.5
     n_shards: int = DEFAULT_N_SHARDS
@@ -365,6 +367,16 @@ class CrawlRunner:
             if getattr(self, name) not in allowed:
                 raise ValueError(
                     f"CrawlRunner {name}={getattr(self, name)!r}; expected one of {allowed}"
+                )
+        if self.neardup_dedup:
+            # the banded config must reach recall 0.9 at the threshold:
+            # there is no low-recall fallback to run silently
+            self._neardup_config = plan_minhash_config(self.neardup_threshold)
+            if self._neardup_config is None:
+                raise ValueError(
+                    f"CrawlRunner neardup_threshold={self.neardup_threshold}: no "
+                    f"banded MinHash config reaches recall 0.9 at that jaccard "
+                    f"within the signature budget"
                 )
         # the mode's search-path filter and frontier priorities; the
         # refresh pass uses the looser '/koop/' filter
@@ -1059,38 +1071,22 @@ class CrawlRunner:
 
     def _neardup_wave(self, wave: int) -> None:
         """Dedup this wave's documents DELTA against the stored band
-        index — the minhash_probe_band_index production shape: the
-        probe side is O(wave docs), verification shingles only docs
-        appearing in a candidate pair, and the wave's own bands append
-        to the index for every future wave. Cumulative neardup_pairs
-        across waves provably equals the full-corpus minhash_lsh_pairs
-        set (pinned by test_crawl_neardup)."""
-        from ..operators.dedup import (
-            minhash_band_table,
-            minhash_probe_band_index,
-            plan_minhash_config,
-        )
-
-        cfg = plan_minhash_config(self.neardup_threshold)
-        k, bands = cfg if cfg is not None else (64, 16)
+        index with one minhash_probe_band_index step: the probe side is
+        O(wave docs), verification shingles only docs appearing in a
+        candidate pair, and the wave's own bands append to the index
+        for every future wave. Cumulative neardup_pairs across waves
+        provably equals the full-corpus minhash_lsh_pairs set (pinned
+        by test_crawl_neardup)."""
+        k, bands = self._neardup_config
         texts_all = self._doc_text(self._read_deltas("documents"))
         delta = texts_all.filter(F.col("wave") == wave).select("doc_id", "text")
-        index = self._read_deltas("neardup_bands")
-        # compute the delta's bands ONCE (materialized): the probe AND
-        # the stored-index append both consume them — without the
-        # checkpoint the signature aggregation would run twice
-        delta_bands = minhash_band_table(delta, k=k, bands=bands).localCheckpoint(
-            eager=True
-        )
-        pairs = minhash_probe_band_index(
+        pairs, delta_bands = minhash_probe_band_index(
             delta,
-            index,
+            self._read_deltas("neardup_bands"),
             texts_all.select("doc_id", "text"),
             threshold=self.neardup_threshold,
             k=k,
             bands=bands,
-            allow_low_recall=cfg is None,
-            new_bands=delta_bands,
         )
         self._append_delta(
             "neardup_pairs", pairs.withColumn("wave", F.lit(wave))

@@ -7,10 +7,14 @@ All are pure DataFrame plans (no Python in the hot path):
   |A∩B| / (|A|+|B|−|A∩B|), computed by vectorized numpy postings
   merges per block pair (mapInPandas); only per-doc hash arrays
   shuffle, never the pair expansion.
-- ``minhash_lsh``: k minhash signatures computed row-wise (array HOFs,
-  zero shuffle), banded into b bands of r rows; candidate pairs join on
-  (band, band_hash), then verified with exact Jaccard via per-pair
-  array_intersect — only candidates pay the pair cost.
+- MinHash-LSH: k signature minima per doc (codegen'd explode +
+  groupBy), cut into b bands of r rows by one builder (``_band_rows``).
+  ``minhash_lsh_pairs`` self-joins the whole corpus's band rows;
+  ``minhash_probe_band_index`` joins a delta's band rows against a
+  stored band index, and serves ``minhash_incremental_pairs``, the
+  crawl's per-wave hook and the streaming drain. Candidates are
+  verified with exact Jaccard via per-pair array_intersect — only
+  candidates pay the pair cost.
 - ``simhash``: 64-bit sign fingerprint from token-frequency-weighted
   bit votes; near-dup pairs found by the 4×16-bit block-pigeonhole
   join (hamming ≤ 3 ⇒ at least one equal block), verified by
@@ -142,6 +146,92 @@ def _shingle_hashes(docs: DataFrame, id_col: str, text_col: str, n: int) -> Data
     )
 
 
+def _expand(starts, counts):
+    """Concatenated [start, start+count) ranges, vectorized."""
+    import numpy as np
+
+    total = int(counts.sum())
+    if total == 0:
+        return np.empty(0, dtype=np.int64)
+    out = np.ones(total, dtype=np.int64)
+    ends = np.cumsum(counts)
+    out[0] = starts[0]
+    out[ends[:-1]] = starts[1:] - (starts[:-1] + counts[:-1] - 1)
+    return np.cumsum(out)
+
+
+def _unpack_block(ids_cell, lens_cell, flat_cell):
+    """A block's (ids, per-doc shingle counts, all hashes sorted, the
+    row of each sorted hash)."""
+    import numpy as np
+
+    ids = np.asarray(ids_cell)
+    lens = np.asarray(lens_cell, dtype=np.int64)
+    flat = np.asarray(flat_cell, dtype=np.int64)
+    rows = np.repeat(np.arange(len(ids), dtype=np.int64), lens)
+    order = np.argsort(flat, kind="stable")
+    return ids, lens, flat[order], rows[order]
+
+
+def _jaccard_block_pairs(batches, threshold: float):
+    """mapInPandas kernel of ``ngram_jaccard_pairs``: one input row per
+    block pair (blk_a, blk_b, ids/lens/flat of each side); yields the
+    (doc_a < doc_b, inter, na, nb) integer rows whose jaccard reaches
+    the threshold."""
+    import numpy as np
+    import pandas as pd
+
+    for pdf in batches:
+        for row in pdf.itertuples(index=False):
+            ids_a, lens_a, sha, ra = _unpack_block(row.ids_a, row.lens_a, row.flat_a)
+            same = row.blk_a == row.blk_b
+            if same:
+                ids_b, lens_b, shb, rb = ids_a, lens_a, sha, ra
+            else:
+                ids_b, lens_b, shb, rb = _unpack_block(row.ids_b, row.lens_b, row.flat_b)
+            ua, ia, ca = np.unique(sha, return_index=True, return_counts=True)
+            ub, ib, cb = np.unique(shb, return_index=True, return_counts=True)
+            _, xa, xb = np.intersect1d(ua, ub, assume_unique=True, return_indices=True)
+            if not len(xa):
+                continue
+            pa, pb = ca[xa], cb[xb]
+            # each a-entry of a common hash pairs with all b-entries
+            reps = np.repeat(pb, pa)
+            left = np.repeat(ra[_expand(ia[xa], pa)], reps)
+            right = rb[_expand(np.repeat(ib[xb], pa), reps)]
+            nb_rows = len(ids_b)
+            counts = np.bincount(
+                left * nb_rows + right, minlength=len(ids_a) * nb_rows
+            ).reshape(len(ids_a), nb_rows)
+            na_m = lens_a[:, None]
+            nb_m = lens_b[None, :]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                jac = counts / (na_m + nb_m - counts)
+            mask = counts > 0
+            if same:
+                mask &= ids_a[:, None] < ids_b[None, :]
+            mask &= jac >= threshold
+            ii, jj = np.nonzero(mask)
+            if not len(ii):
+                continue
+            ia_ids, ib_ids = ids_a[ii], ids_b[jj]
+            if same:
+                lo, hi = ia_ids, ib_ids
+            else:
+                flip = ib_ids < ia_ids
+                lo = np.where(flip, ib_ids, ia_ids)
+                hi = np.where(flip, ia_ids, ib_ids)
+            yield pd.DataFrame(
+                {
+                    "doc_a": lo,
+                    "doc_b": hi,
+                    "inter": counts[ii, jj],
+                    "na": lens_a[ii],
+                    "nb": lens_b[jj],
+                }
+            )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.1,
@@ -149,7 +239,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     block_rows: int = 2048,
-    broadcast_blocks: bool | None = None,
 ) -> DataFrame:
     """Exact shingle-Jaccard pairs ≥ threshold: (doc_a, doc_b, jaccard).
 
@@ -182,13 +271,16 @@ def ngram_jaccard_pairs(
     """
     import math
 
-    import numpy as np
-    import pandas as pd
-
     sess = docs.sparkSession
     id_type = docs.schema[id_col].dataType.simpleString()
     mid_schema = f"doc_a {id_type}, doc_b {id_type}, inter long, na long, nb long"
-    n_docs = docs.count()
+    # one aggregation measures the corpus: its size, and a bound on its
+    # shingle hashes for the broadcast gate below (a token takes at
+    # least one character plus a separator, so a text of c characters
+    # has at most ceil(c/2) word n-grams)
+    n_docs, max_shingles = docs.agg(
+        F.count(F.lit(1)), F.sum(F.ceil(F.length(F.col(text_col)) / 2))
+    ).first()
     if n_docs == 0:
         return sess.createDataFrame([], f"doc_a {id_type}, doc_b {id_type}, jaccard double")
     par = sess.sparkContext.defaultParallelism
@@ -239,97 +331,21 @@ def ngram_jaccard_pairs(
     # the planner shuffle-join here instead ships every block once PER
     # PAIR through the exchange: measured 521 MB shuffled and 25 s of
     # fetch+deserialize at sf1.0 vs ~20 MB broadcast. The broadcast is
-    # gated on corpus size (hash arrays are O(corpus)); past the gate
+    # gated on the measured bound of the hash arrays' bytes (an
+    # F.broadcast hint bypasses autoBroadcastJoinThreshold, so the gate
+    # keeps a long-document corpus off the 8 GB broadcast cap); past it
     # the plain join keeps the operator correct in its degraded mode —
     # but an exact all-pairs jaccard at >1M docs is compute-infeasible
     # anyway (Σ df² pair increments), and the banded/winnow paths are
     # the scale plans.
     ntasks = min(nblocks * (nblocks + 1) // 2, 4 * par)
-    if broadcast_blocks is None:
-        # HEURISTIC, not a measurement: assumes ~64 distinct shingles
-        # per doc (the corpus class here runs ~52). An F.broadcast hint
-        # bypasses autoBroadcastJoinThreshold, so a long-document
-        # corpus (thousands of shingles/doc) should pass
-        # broadcast_blocks=False explicitly and take the shuffle join
-        # rather than risk the 8 GB broadcast cap / driver memory.
-        broadcast_blocks = n_docs * 64 * 8 <= 512 * 1024 * 1024
-    if broadcast_blocks:
+    if (max_shingles or 0) * 8 <= 512 * 1024 * 1024:
         a_side, b_side = F.broadcast(a_side), F.broadcast(b_side)
     tasks = pair_meta.repartition(ntasks).join(a_side, "blk_a").join(b_side, "blk_b")
 
-    def _expand(starts, counts):
-        """Concatenated [start, start+count) ranges, vectorized."""
-        total = int(counts.sum())
-        if total == 0:
-            return np.empty(0, dtype=np.int64)
-        out = np.ones(total, dtype=np.int64)
-        ends = np.cumsum(counts)
-        out[0] = starts[0]
-        out[ends[:-1]] = starts[1:] - (starts[:-1] + counts[:-1] - 1)
-        return np.cumsum(out)
-
-    def _unpack(ids_cell, lens_cell, flat_cell):
-        ids = np.asarray(ids_cell)
-        lens = np.asarray(lens_cell, dtype=np.int64)
-        flat = np.asarray(flat_cell, dtype=np.int64)
-        rows = np.repeat(np.arange(len(ids), dtype=np.int64), lens)
-        order = np.argsort(flat, kind="stable")
-        return ids, lens, flat[order], rows[order]
-
-    def score(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                ids_a, lens_a, sha, ra = _unpack(row.ids_a, row.lens_a, row.flat_a)
-                same = row.blk_a == row.blk_b
-                if same:
-                    ids_b, lens_b, shb, rb = ids_a, lens_a, sha, ra
-                else:
-                    ids_b, lens_b, shb, rb = _unpack(
-                        row.ids_b, row.lens_b, row.flat_b
-                    )
-                ua, ia, ca = np.unique(sha, return_index=True, return_counts=True)
-                ub, ib, cb = np.unique(shb, return_index=True, return_counts=True)
-                _, xa, xb = np.intersect1d(ua, ub, assume_unique=True, return_indices=True)
-                if not len(xa):
-                    continue
-                pa, pb = ca[xa], cb[xb]
-                # each a-entry of a common hash pairs with all b-entries
-                reps = np.repeat(pb, pa)
-                left = np.repeat(ra[_expand(ia[xa], pa)], reps)
-                right = rb[_expand(np.repeat(ib[xb], pa), reps)]
-                nb_rows = len(ids_b)
-                counts = np.bincount(
-                    left * nb_rows + right, minlength=len(ids_a) * nb_rows
-                ).reshape(len(ids_a), nb_rows)
-                na_m = lens_a[:, None]
-                nb_m = lens_b[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    jac = counts / (na_m + nb_m - counts)
-                mask = counts > 0
-                if same:
-                    mask &= ids_a[:, None] < ids_b[None, :]
-                mask &= jac >= threshold
-                ii, jj = np.nonzero(mask)
-                if not len(ii):
-                    continue
-                ia_ids, ib_ids = ids_a[ii], ids_b[jj]
-                if same:
-                    lo, hi = ia_ids, ib_ids
-                else:
-                    flip = ib_ids < ia_ids
-                    lo = np.where(flip, ib_ids, ia_ids)
-                    hi = np.where(flip, ia_ids, ib_ids)
-                yield pd.DataFrame(
-                    {
-                        "doc_a": lo,
-                        "doc_b": hi,
-                        "inter": counts[ii, jj],
-                        "na": lens_a[ii],
-                        "nb": lens_b[jj],
-                    }
-                )
-
-    partial = tasks.mapInPandas(score, mid_schema)
+    partial = tasks.mapInPandas(
+        lambda batches: _jaccard_block_pairs(batches, threshold), mid_schema
+    )
     jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
     return partial.filter(jac >= threshold).select(
         "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
@@ -373,10 +389,79 @@ def minhash_signatures(
     )
 
 
+def _band_rows(sigs: DataFrame, k: int, bands: int) -> DataFrame:
+    """(doc, band_idx, band_hash): one row per (doc, band) of a
+    signature table (``minhash_signatures``), band i holding signature
+    rows i·r .. i·r+r-1 with r = k/bands. The band key is the r values
+    verbatim (concat-joined), NOT a hash of them: exact tuple equality
+    has no collision-induced extra candidates and is reproducible in
+    DuckDB (full oracle)."""
+    if k % bands:
+        raise ValueError(f"k={k} signature rows do not split into {bands} bands")
+    r = k // bands
+    keys = [
+        F.concat_ws("-", *[F.col(f"mh{band * r + j}") for j in range(r)])
+        for band in range(bands)
+    ]
+    return sigs.select(
+        "doc", F.posexplode(F.array(*keys)).alias("band_idx", "band_hash")
+    )
+
+
 def minhash_capture_prob(jaccard: float, k: int, bands: int) -> float:
     """P(a pair at this jaccard collides in ≥1 band) = 1-(1-j^r)^b."""
     r = k // bands
     return 1.0 - (1.0 - jaccard**r) ** bands
+
+
+def _require_recall(
+    threshold: float, k: int, bands: int, allow_low_recall: bool
+) -> None:
+    """The recall guard of every banded MinHash operator: a config that
+    captures under 0.9 of the pairs at the threshold raises unless the
+    caller states ``allow_low_recall=True`` (a documented
+    candidate-generation operating point) — a silently under-recalling
+    config was round-3 verdict item #3."""
+    if allow_low_recall:
+        return
+    cap = minhash_capture_prob(threshold, k, bands)
+    if cap < 0.9:
+        raise ValueError(
+            f"MinHash config k={k} bands={bands} captures only "
+            f"{cap:.2f} of pairs at jaccard {threshold}; pass "
+            f"allow_low_recall=True to run it anyway"
+        )
+
+
+def cheapest_banding(
+    p_row: float,
+    p_bg: float,
+    recall_target: float,
+    bg_keep_limit: float,
+    max_rows: int,
+) -> tuple[int, int] | None:
+    """The banded-LSH search both near-dup planners share: the layout
+    (r rows per band, b bands) with the fewest signature rows r·b, or
+    None. ``p_row`` is one signature row's collision probability for a
+    pair AT the threshold, ``p_bg`` for a background pair. A layout is
+    valid iff at-threshold pairs collide in ≥1 band with probability
+    ≥ recall_target, background pairs with probability ≤ bg_keep_limit
+    (the banding actually prunes), and r·b ≤ max_rows. r scans 1..16;
+    b is the fewest bands reaching the recall target at that r."""
+    import math
+
+    best = None
+    for r in range(1, 17):
+        pr = p_row**r
+        if not 0.0 < pr < 1.0:
+            continue
+        b = math.ceil(math.log(1.0 - recall_target) / math.log(1.0 - pr))
+        if b < 1 or r * b > max_rows:
+            continue
+        bg = 1.0 - (1.0 - p_bg**r) ** b
+        if bg <= bg_keep_limit and (best is None or r * b < best[0] * best[1]):
+            best = (r, b)
+    return best
 
 
 def plan_minhash_config(
@@ -388,32 +473,20 @@ def plan_minhash_config(
 ) -> tuple[int, int] | None:
     """Derive a MinHash-LSH config (k signature rows, b bands) from the
     jaccard threshold — the twin of similarity.plan_near_dup_config for
-    cosine. A config is valid iff (a) pairs AT the threshold collide in
-    ≥1 band with probability ≥ recall_target and (b) unrelated
-    background pairs (jaccard ≈ bg_jaccard — web documents share almost
-    no shingles) collide with probability ≤ bg_keep_limit, i.e. the
-    banding actually prunes. Returns the cheapest valid (k, b) by
-    signature size, or None when none exists within max_k — at low
-    thresholds (e.g. 0.1, where rows/band must be 1-2) at-threshold
-    recall costs hundreds of signature rows, and the exact
-    inverted-index join is the honest plan instead. Round-3 verdict
-    item: the previous fixed (64,16) default silently captured only
-    ~half the pairs at jaccard 0.1."""
-    import math
-
+    cosine; a MinHash row collides with probability = the jaccard. A
+    config is valid iff (a) pairs AT the threshold collide in ≥1 band
+    with probability ≥ recall_target and (b) unrelated background pairs
+    (jaccard ≈ bg_jaccard — web documents share almost no shingles)
+    collide with probability ≤ bg_keep_limit. Returns the cheapest
+    valid (k, b) by signature size (``cheapest_banding``), or None when
+    none exists within max_k — at low thresholds (e.g. 0.1, where
+    rows/band must be 1-2) at-threshold recall costs hundreds of
+    signature rows, and the exact inverted-index join is the honest
+    plan instead. Round-3 verdict item: the previous fixed (64,16)
+    default silently captured only ~half the pairs at jaccard 0.1."""
     t = min(max(threshold, 1e-9), 1.0 - 1e-9)
-    best = None
-    for r in range(1, 17):
-        pr = t**r
-        if not 0.0 < pr < 1.0:
-            continue
-        b = math.ceil(math.log(1.0 - recall_target) / math.log(1.0 - pr))
-        if b < 1 or r * b > max_k:
-            continue
-        bg = 1.0 - (1.0 - bg_jaccard**r) ** b
-        if bg <= bg_keep_limit and (best is None or r * b < best[0]):
-            best = (r * b, b)
-    return best
+    best = cheapest_banding(t, bg_jaccard, recall_target, bg_keep_limit, max_k)
+    return None if best is None else (best[0] * best[1], best[1])
 
 
 def minhash_near_dup_auto(
@@ -461,9 +534,11 @@ def minhash_lsh_pairs(
     (k, bands) default to the threshold-derived config
     (plan_minhash_config) so at-threshold recall ≥ 0.9 by construction;
     an explicit config below that recall raises unless the caller
-    states ``allow_low_recall=True`` (a documented candidate-generation
-    operating point) — a silently under-recalling config was round-3
-    verdict item #3.
+    states ``allow_low_recall=True`` (``_require_recall``).
+
+    Pairs come from a ``x.doc < y.doc`` self-join of the band rows, so
+    each pair is emitted once; ``minhash_probe_band_index``'s delta
+    join (``!=``, both orders, then canonicalized) would emit it twice.
 
     Candidates are verified row-wise with a long-array
     ``array_intersect`` over the two docs' shingle-hash arrays
@@ -492,16 +567,7 @@ def minhash_lsh_pairs(
                 f"explicit (k, bands) with allow_low_recall=True"
             )
         k, bands = cfg
-    assert k % bands == 0
-    r = k // bands
-    if not allow_low_recall:
-        cap = minhash_capture_prob(threshold, k, bands)
-        if cap < 0.9:
-            raise ValueError(
-                f"MinHash config k={k} bands={bands} captures only "
-                f"{cap:.2f} of pairs at jaccard {threshold}; pass "
-                f"allow_low_recall=True to run it anyway"
-            )
+    _require_recall(threshold, k, bands, allow_low_recall)
     # NOTE (round 7): sharing one checkpointed (doc, h) exploded table
     # between the signature agg and the verify agg was measured SLOWER
     # (materializing 2.6M exploded rows cost 46 s executor time vs the
@@ -526,20 +592,7 @@ def minhash_lsh_pairs(
     sigs = sigs.repartition(
         docs.sparkSession.sparkContext.defaultParallelism
     ).localCheckpoint(eager=True)
-    # band key = the r signature values verbatim (concat-joined), NOT a
-    # hash of them: exact tuple equality has no collision-induced extra
-    # candidates and is reproducible in DuckDB (full oracle)
-    band_cols = [
-        F.concat_ws("-", *[F.col(f"mh{band * r + j}") for j in range(r)]).alias(f"band{band}")
-        for band in range(bands)
-    ]
-    banded = sigs.select("doc", *band_cols)
-    stacked = banded.select(
-        "doc",
-        F.posexplode(F.array(*[F.col(f"band{i}") for i in range(bands)])).alias(
-            "band_idx", "band_hash"
-        ),
-    )
+    stacked = _band_rows(sigs, k, bands)
     x = stacked.alias("x")
     y = stacked.alias("y")
     cands = (
@@ -968,73 +1021,24 @@ def minhash_incremental_pairs(
     daily-increment pipeline runs, where re-deduping the whole corpus
     per ingest would be O(corpus) every day for an O(delta) question.
 
-    The band PROBE side carries only new docs, joined against the full
-    band index — at a 10^10-doc corpus with a 10^7-doc daily delta the
-    collision join's probe side shrinks 1000×, and the verify stage's
-    shingle arrays are built ONLY for documents that appear in a
-    candidate pair (explicit semi-join before the collect_list agg —
-    the full-corpus form pays that agg for every doc). In production
-    the index side is the STORED signature/band table maintained by
-    the previous run; here it derives in-plan from the same docs so
-    the operator is self-contained and its output is provably the
-    full-corpus pair set restricted to pairs touching the delta
-    (pinned by test and by the DuckDB oracle's touch-new predicate).
-
-    Same verified-Jaccard semantics and config guards as
-    ``minhash_lsh_pairs``."""
-    if not allow_low_recall:
-        cap = minhash_capture_prob(threshold, k, bands)
-        if cap < 0.9:
-            raise ValueError(
-                f"MinHash config k={k} bands={bands} captures only "
-                f"{cap:.2f} of pairs at jaccard {threshold}; pass "
-                f"allow_low_recall=True to run it anyway"
-            )
-    assert k % bands == 0
-    r = k // bands
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    flags = docs.select(F.col(id_col).alias("doc"), new_filter.alias("is_new"))
-    sigs = (
-        minhash_signatures(docs, k=k, n=n, id_col=id_col, text_col=text_col)
-        .join(flags, "doc")
-        .repartition(par)  # AQE-collapse guard before the expanding join
-        # materialize once: `stacked` feeds both the probe side and the
-        # index side of the band join, which would otherwise re-run the
-        # whole signature pipeline per side (see minhash_lsh_pairs)
-        .localCheckpoint(eager=True)
+    It is ``minhash_probe_band_index`` with the delta
+    ``docs.filter(new_filter)`` probing the band table of EVERY doc
+    (so a row whose filter is null stays index-only) and ``docs`` as
+    the verification texts. In production the index is the STORED
+    band table maintained by the previous run; here it derives in-plan
+    from the same docs so the operator is self-contained and its output
+    is provably the full-corpus pair set restricted to pairs touching
+    the delta (pinned by test and by the DuckDB oracle's touch-new
+    predicate)."""
+    index = minhash_band_table(
+        docs, k=k, bands=bands, n=n, id_col=id_col, text_col=text_col
     )
-    band_cols = [
-        F.concat_ws("-", *[F.col(f"mh{band * r + j}") for j in range(r)]).alias(
-            f"band{band}"
-        )
-        for band in range(bands)
-    ]
-    stacked = sigs.select("doc", "is_new", *band_cols).select(
-        "doc",
-        "is_new",
-        F.posexplode(F.array(*[F.col(f"band{i}") for i in range(bands)])).alias(
-            "band_idx", "band_hash"
-        ),
+    pairs, _ = minhash_probe_band_index(
+        docs.filter(new_filter), index, docs, threshold=threshold, k=k,
+        bands=bands, n=n, allow_low_recall=allow_low_recall,
+        id_col=id_col, text_col=text_col,
     )
-    probe = stacked.filter(F.col("is_new")).select("doc", "band_idx", "band_hash")
-    x = probe.alias("x")
-    y = stacked.alias("y")
-    cands = (
-        x.join(
-            y,
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.band_hash") == F.col("y.band_hash"))
-            & (F.col("x.doc") != F.col("y.doc")),
-        )
-        .select(
-            F.least(F.col("x.doc"), F.col("y.doc")).alias("doc_a"),
-            F.greatest(F.col("x.doc"), F.col("y.doc")).alias("doc_b"),
-        )
-        .distinct()
-    )
-    return _verify_candidate_pairs(
-        cands, docs, threshold=threshold, n=n, id_col=id_col, text_col=text_col
-    )
+    return pairs
 
 
 def _verify_candidate_pairs(
@@ -1135,30 +1139,10 @@ def minhash_band_table(
     with the same codegen signature agg as ``minhash_lsh_pairs`` —
     one 65-value row per doc crosses the exchange, never the shingle
     table. Persist this table once; every future ingest probes it with
-    ``minhash_probe_band_index`` and appends its own delta's rows.
-
-    STATE-VERSION WARNING: band hashes are a function of the signature
-    hash construction (see P31) and of (k, bands, n). An index
-    persisted by pre-round-7 code (whose signature modulus never
-    wrapped) does NOT match probes computed now — the join finds zero
-    prior-run collisions and silently drops every cross-version pair.
-    Such an index must be REBUILT from its texts; the table carries no
-    marker, so the operator cannot detect the mismatch itself."""
-    assert k % bands == 0
-    r = k // bands
+    ``minhash_probe_band_index``, which returns the delta's own rows to
+    append."""
     sigs = minhash_signatures(docs, k=k, n=n, id_col=id_col, text_col=text_col)
-    band_cols = [
-        F.concat_ws("-", *[F.col(f"mh{band * r + j}") for j in range(r)]).alias(
-            f"band{band}"
-        )
-        for band in range(bands)
-    ]
-    return sigs.select("doc", *band_cols).select(
-        "doc",
-        F.posexplode(F.array(*[F.col(f"band{i}") for i in range(bands)])).alias(
-            "band_idx", "band_hash"
-        ),
-    )
+    return _band_rows(sigs, k, bands)
 
 
 def minhash_probe_band_index(
@@ -1172,46 +1156,46 @@ def minhash_probe_band_index(
     allow_low_recall: bool = False,
     id_col: str = "doc_id",
     text_col: str = "text",
-    new_bands: DataFrame | None = None,
-) -> DataFrame:
-    """Probe a STORED band index with an ingest delta — the production
-    sibling of ``minhash_incremental_pairs`` (which derives its index
-    in-plan): near-dup pairs touching ``new_docs``, against both the
-    persisted ``band_index`` (prior ingests) and the delta itself
-    (same-ingest pairs). ``texts`` must cover (id_col, text_col) for
-    every doc that can appear in a pair — typically the cumulative
-    documents table; verification shingles only the candidate docs.
+) -> tuple[DataFrame, DataFrame]:
+    """One ingest step against a STORED band index: returns
+    ``(pairs, delta_bands)`` — the verified near-dup pairs touching
+    ``new_docs``, against both the persisted ``band_index`` (prior
+    ingests) and the delta itself (same-ingest pairs), and the delta's
+    own band rows (materialized) for the caller to append to the
+    index. ``texts`` must cover (id_col, text_col) for every doc that
+    can appear in a pair — typically the cumulative documents table;
+    verification shingles only the candidate docs. The crawl runner's
+    per-wave hook, ``streaming.jobs.drain_neardup`` and
+    ``minhash_incremental_pairs`` all run this step.
 
-    Callers that ALSO append the delta's bands to the stored index
-    should compute them once with ``minhash_band_table``, materialize
-    (localCheckpoint), and pass them as ``new_bands`` — otherwise the
-    full shingle+signature aggregation over the delta runs twice, once
-    for the probe and once for the append.
+    The delta's bands are built once and materialized (eager
+    localCheckpoint): the collision join AND the caller's append both
+    consume them, and without it the shingle+signature aggregation
+    over the delta would run twice.
 
     Invariant (pinned by test): running ingests through this probe and
     unioning the outputs reproduces EXACTLY the full-corpus
     ``minhash_lsh_pairs`` set — a pair is caught by the ingest that
     completes it, and only that one (earlier docs sit in the index,
-    same-ingest pairs canonicalize + distinct)."""
-    if not allow_low_recall:
-        cap = minhash_capture_prob(threshold, k, bands)
-        if cap < 0.9:
-            raise ValueError(
-                f"MinHash config k={k} bands={bands} captures only "
-                f"{cap:.2f} of pairs at jaccard {threshold}; pass "
-                f"allow_low_recall=True to run it anyway"
-            )
+    same-ingest pairs canonicalize + distinct).
+
+    STATE-VERSION WARNING: band hashes are a function of the signature
+    hash construction (see P31) and of (k, bands, n). An index
+    persisted by pre-round-7 code (whose signature modulus never
+    wrapped) does NOT match probes computed now — the join finds zero
+    prior-run collisions and silently drops every cross-version pair.
+    Such an index (a crawl's ``neardup_bands``, a ``drain_neardup``
+    ``state_dir``) must be REBUILT from its texts; the table carries no
+    marker, so the operator cannot detect the mismatch itself."""
+    _require_recall(threshold, k, bands, allow_low_recall)
+    delta_bands = minhash_band_table(
+        new_docs, k=k, bands=bands, n=n, id_col=id_col, text_col=text_col
+    ).localCheckpoint(eager=True)
     par = new_docs.sparkSession.sparkContext.defaultParallelism
-    if new_bands is None:
-        new_bands = minhash_band_table(
-            new_docs, k=k, bands=bands, n=n, id_col=id_col, text_col=text_col
-        )
     # AQE-collapse guard before the expanding join
-    new_bands = new_bands.repartition(par)
-    index_all = band_index.select("doc", "band_idx", "band_hash").unionByName(
-        new_bands
-    )
-    x = new_bands.alias("x")
+    probe = delta_bands.repartition(par)
+    index_all = band_index.select("doc", "band_idx", "band_hash").unionByName(probe)
+    x = probe.alias("x")
     y = index_all.alias("y")
     cands = (
         x.join(
@@ -1226,9 +1210,10 @@ def minhash_probe_band_index(
         )
         .distinct()
     )
-    return _verify_candidate_pairs(
+    pairs = _verify_candidate_pairs(
         cands, texts, threshold=threshold, n=n, id_col=id_col, text_col=text_col
     )
+    return pairs, delta_bands
 
 
 def remove_dup_spans(

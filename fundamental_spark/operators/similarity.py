@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import spread
+from .dedup import cheapest_banding, spread
 
 
 def _to_double(v: Column) -> Column:
@@ -693,24 +693,14 @@ def plan_near_dup_config(
     product and exact scoring is strictly faster (the round-2 bench
     defect: at threshold 0.4 every ≤63-plane config keeps >59% of
     background, measured 13.4 s vs 2.7 s exact). Returns the cheapest
-    (fewest planes) config that satisfies both, scanning r=1..16;
-    max_planes=63 keeps the signature in one long."""
+    (fewest planes) config that satisfies both (dedup.cheapest_banding,
+    the search MinHash's planner shares); max_planes=63 keeps the
+    signature in one long."""
     import math
 
     t = min(max(threshold, -1.0), 1.0)
     p = 1.0 - math.acos(t) / math.pi
-    best = None
-    for r in range(1, 17):
-        pr = p**r
-        if not 0.0 < pr < 1.0:
-            continue
-        b = math.ceil(math.log(1.0 - recall_target) / math.log(1.0 - pr))
-        if b < 1 or r * b > max_planes:
-            continue
-        bg = 1.0 - (1.0 - 0.5**r) ** b
-        if bg <= bg_keep_limit and (best is None or r * b < best[0] * best[1]):
-            best = (r, b)
-    return best
+    return cheapest_banding(p, 0.5, recall_target, bg_keep_limit, max_planes)
 
 
 def embedding_near_dup_auto(

@@ -448,15 +448,10 @@ def drain_neardup(
     "prior" state: a doc duplicated into the verification corpus
     halves its own jaccard), which together make the foreachBatch sink
     exactly-once (the same contract the crawl gets from its
-    delta-table commit protocol).
-
-    STATE-VERSION WARNING (round 7): stored band hashes depend on the
-    MinHash signature construction. A ``state_dir`` written by
-    pre-round-7 code (whose signature modulus never wrapped) must be
-    rebuilt before resuming — old bands match nothing, so
-    cross-version near-dup pairs would be silently lost (see
-    minhash_band_table)."""
-    from ..operators.dedup import minhash_band_table, minhash_probe_band_index
+    delta-table commit protocol). A ``state_dir`` built under another
+    signature construction must be rebuilt (STATE-VERSION WARNING in
+    minhash_probe_band_index)."""
+    from ..operators.dedup import minhash_probe_band_index
 
     bands_dir = os.path.join(state_dir, "bands")
     texts_dir = os.path.join(state_dir, "texts")
@@ -494,11 +489,7 @@ def drain_neardup(
         batch = batch_df.select("doc_id", "text").localCheckpoint(eager=True)
         index = _read_state(bands_dir, bands_schema, batch_id)
         prior_texts = _read_state(texts_dir, texts_schema, batch_id)
-        # compute the batch's bands ONCE (probe + append both consume)
-        batch_bands = minhash_band_table(batch, k=k, bands=bands).localCheckpoint(
-            eager=True
-        )
-        pairs = minhash_probe_band_index(
+        pairs, batch_bands = minhash_probe_band_index(
             batch,
             index,
             prior_texts.unionByName(batch),
@@ -506,7 +497,6 @@ def drain_neardup(
             k=k,
             bands=bands,
             allow_low_recall=allow_low_recall,
-            new_bands=batch_bands,
         )
         pairs.write.mode("overwrite").parquet(
             os.path.join(pairs_dir, f"batch={batch_id}")

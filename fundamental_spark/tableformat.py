@@ -40,6 +40,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,7 +58,19 @@ class Warehouse:
         so MERGE-heavy tables don't grow dead snapshot dirs until a
         human intervenes. 0 disables. Vacuum raises the table's
         rollback floor to the vacuumed version — the same contract as
-        delta compaction expiry."""
+        delta compaction expiry.
+
+        ``root`` must be a local path: table metadata is written with
+        Python file calls, so a URI (``file:``, ``hdfs:``, ``s3a:``)
+        would split one table between the URI Spark resolves and a
+        relative directory named after the URI. It raises before
+        anything is created."""
+        scheme = urlsplit(os.fspath(root)).scheme
+        if scheme:
+            raise ValueError(
+                f"Warehouse root {root!r} has URI scheme {scheme!r}; "
+                f"pass a local filesystem path"
+            )
         self.spark = spark
         self.root = root
         self.auto_vacuum_every = auto_vacuum_every

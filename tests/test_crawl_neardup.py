@@ -6,6 +6,8 @@ shape (round-5 verdict #7)."""
 
 from __future__ import annotations
 
+import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 
 from fundamental_spark.crawl.runner import CrawlRunner
@@ -41,14 +43,16 @@ def test_probe_band_index_incremental_equals_full(spark):
     index = spark.createDataFrame([], "doc string, band_idx int, band_hash string")
     got = set()
     for sl in slices:
-        pairs = minhash_probe_band_index(
+        pairs, sl_bands = minhash_probe_band_index(
             sl, index, docs, threshold=thr, k=k, bands=bands,
             allow_low_recall=True,
         )
         got |= {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in pairs.collect()}
-        index = index.unionByName(
-            minhash_band_table(sl, k=k, bands=bands)
-        ).localCheckpoint(eager=True)
+        # the probe hands back the slice's band rows for the append
+        assert sorted(sl_bands.collect()) == sorted(
+            minhash_band_table(sl, k=k, bands=bands).collect()
+        )
+        index = index.unionByName(sl_bands).localCheckpoint(eager=True)
     assert got == full
 
 
@@ -149,3 +153,36 @@ def test_crawl_neardup_with_compaction(spark, tmp_path):
         ).collect()
     }
     assert want and got == want
+
+
+def test_runner_refuses_a_threshold_banding_cannot_serve(spark, tmp_path):
+    """At jaccard 0.1 no banded config reaches recall 0.9 within the
+    signature budget; the runner raises at construction, naming the
+    threshold, instead of running a fixed (64, 16) that captures
+    ~0.0016 of at-threshold pairs. Nothing is written."""
+    site = build_site(seed=7, cities=("delft",), listings_per_city=4, page_size=4)
+    web = spark.createDataFrame(web_rows(site), "url string, html string")
+    root = tmp_path / "wh"
+    with pytest.raises(ValueError, match="neardup_threshold=0.1"):
+        CrawlRunner(spark=spark, warehouse_root=str(root), web=web,
+                    neardup_dedup=True, neardup_threshold=0.1)
+    assert not root.exists()
+    # the hook off, the threshold is not consulted
+    CrawlRunner(spark=spark, warehouse_root=str(root), web=web,
+                neardup_threshold=0.1)
+
+
+def test_neardup_wave_job_count(spark, tmp_path):
+    """A non-terminal crawl wave with the near-dup hook on: wave 2
+    fetches search page 2 and the detail pages of page 1, so its delta
+    probes a band index that wave 1 already filled."""
+    site = build_site(seed=7, cities=("delft",), listings_per_city=12,
+                      page_size=8, clone_every=6)
+    web = spark.createDataFrame(web_rows(site), "url string, html string")
+    runner = CrawlRunner(spark=spark, warehouse_root=str(tmp_path / "wh"),
+                         web=web, neardup_dedup=True, neardup_threshold=0.6)
+    runner.init([(site.search_url(c, 1), c) for c in site.cities])
+    assert runner.step()
+    with spark_jobs(spark) as jobs:
+        assert runner.step()
+    assert len(jobs) == 50

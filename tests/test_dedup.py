@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import random
 
+import pandas as pd
 import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 
 from fundamental_spark.operators.dedup import (
@@ -109,6 +111,58 @@ def test_ngram_jaccard_plans_bit_identical(planted):
         for r in ngram_jaccard_pairs(planted, threshold=0.1, block_rows=8).collect()
     )
     assert blk_small == idx[0.1]
+
+
+def test_ngram_jaccard_measures_the_corpus_in_one_job(planted, spark):
+    """Building the plan runs one aggregation: the document count and
+    the shingle-bytes bound for the broadcast gate share it. Under AQE
+    that is two jobs (the shuffle-map stage, then the result), the same
+    two a bare ``count()`` submits."""
+    with spark_jobs(spark) as jobs:
+        ngram_jaccard_pairs(planted, threshold=0.5)
+    assert len(jobs) == 2
+
+
+def test_jaccard_block_kernel_matches_set_jaccard():
+    """The numpy block-pair kernel, without Spark, against brute-force
+    set Jaccard: a same-block pair whose ids sit in reverse order inside
+    the block, and cross-block pairs whose smaller id is on the b side
+    (the flip path)."""
+    from fundamental_spark.operators.dedup import _jaccard_block_pairs
+
+    sets = {
+        "a": {1, 2, 3, 4},
+        "b": {2, 3, 4, 5},
+        "c": {9, 10},
+        "d": {1, 2, 3, 4, 9},
+        "e": {7},
+    }
+    blocks = {0: ["d", "b", "c"], 1: ["e", "a"]}
+
+    def side(blk, tag):
+        ids = blocks[blk]
+        return {
+            f"blk_{tag}": blk,
+            f"ids_{tag}": ids,
+            f"lens_{tag}": [len(sets[i]) for i in ids],
+            f"flat_{tag}": [h for i in ids for h in sorted(sets[i])],
+        }
+
+    rows = [{**side(i, "a"), **side(j, "b")} for i, j in ((0, 0), (0, 1), (1, 1))]
+    threshold = 0.5
+    got = {}
+    for out in _jaccard_block_pairs(iter([pd.DataFrame(rows)]), threshold):
+        for r in out.itertuples(index=False):
+            assert (r.doc_a, r.doc_b) not in got
+            got[(r.doc_a, r.doc_b)] = r.inter / (r.na + r.nb - r.inter)
+    want = {}
+    for x in sets:
+        for y in sets:
+            jac = len(sets[x] & sets[y]) / len(sets[x] | sets[y])
+            if x < y and jac >= threshold:
+                want[(x, y)] = jac
+    assert got == want
+    assert {("b", "d"), ("a", "b"), ("a", "d")} <= set(want)  # same, cross, cross
 
 
 def test_minhash_lsh_recall_and_estimate(planted):

@@ -5,9 +5,8 @@ outside its package at import, so a checkout and the zipped package
 (make_dist.sh) expose the same registry in the same order. Ordering
 for the per-round correctness window lives in ``__spark_entry__``.
 Only ``session.py`` reads the environment: its settings are deployment
-settings, and nothing else in the library grows an env-var knob. The
-crawl runner keeps its wave split into phases: no function in
-``crawl/runner.py`` is over 150 lines.
+settings, and nothing else in the library grows an env-var knob. No
+function in the library is over 150 lines.
 """
 
 from __future__ import annotations
@@ -92,12 +91,18 @@ def test_only_session_reads_the_environment():
     assert readers and all(r.startswith("session.py:") for r in readers), readers
 
 
-def test_crawl_runner_functions_stay_short():
-    path = os.path.join(PKG, "crawl", "runner.py")
-    long = [
-        f"{node.name}:{node.lineno} {node.end_lineno - node.lineno + 1} lines"
-        for node in ast.walk(ast.parse(open(path).read(), path))
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-        and node.end_lineno - node.lineno + 1 > 150
-    ]
+def test_library_functions_stay_short():
+    long = []
+    for dirpath, _, files in os.walk(PKG):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            long += [
+                f"{os.path.relpath(path, PKG)}:{node.lineno} {node.name} "
+                f"{node.end_lineno - node.lineno + 1} lines"
+                for node in ast.walk(ast.parse(open(path).read(), path))
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and node.end_lineno - node.lineno + 1 > 150
+            ]
     assert not long, long

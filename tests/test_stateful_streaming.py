@@ -135,3 +135,42 @@ def test_streamed_neardup_matches_full_corpus_lsh(spark, tmp_path):
     # the persisted band index covers every doc exactly once per band
     idx = spark.read.parquet(f"{state}/bands/batch=*")
     assert idx.count() == n * 16
+
+
+def test_neardup_micro_batch_job_count(spark, tmp_path):
+    """The Spark jobs of one drain_neardup micro-batch (one source
+    file, first batch). Streaming jobs run under the query's run id as
+    their job group, which a listener reads at query start."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from fundamental_spark.streaming.jobs import drain_neardup
+
+    run_ids = []
+
+    class _RunIds(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            run_ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    src = str(tmp_path / "docs_src")
+    docs.filter(F.col("doc_id") < 30).coalesce(1).write.parquet(src)
+    listener = _RunIds()
+    spark.streams.addListener(listener)
+    try:
+        drain_neardup(spark, src, str(tmp_path / "ckpt"), str(tmp_path / "state"),
+                      threshold=0.1, k=64, bands=16, allow_low_recall=True)
+    finally:
+        spark.streams.removeListener(listener)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(run_ids) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(run_ids[0])) == 26

@@ -381,3 +381,15 @@ def test_table_without_schema_record_reads_by_inference(spark, tmp_path):
     wh.append_delta_files("files", job)
     assert wh._recorded_schema("files") is None
     assert wh.read_deltas("files").collect()[0]["url"] == "a"
+
+
+@pytest.mark.parametrize("scheme", ["file://", "hdfs://namenode", "s3a://bucket"])
+def test_uri_root_is_rejected_before_anything_is_created(spark, tmp_path, monkeypatch, scheme):
+    """Table metadata is written with Python file calls, so a URI root
+    would split one table between the path Spark resolves and a
+    relative directory named after the URI in the working directory."""
+    monkeypatch.chdir(tmp_path)
+    root = f"{scheme}{tmp_path}/wh"
+    with pytest.raises(ValueError, match="URI scheme"):
+        Warehouse(spark, root)
+    assert os.listdir(tmp_path) == []
