@@ -37,26 +37,11 @@ import os
 import uuid
 
 import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 
-SPAN_STRUCT = pa.struct(
-    [
-        pa.field("kind", pa.string()),
-        pa.field("text", pa.string()),
-        pa.field("media_ref", pa.string()),
-        pa.field("offset", pa.int32()),
-    ]
-)
+from ..schemas import DOCUMENTS_SCHEMA
 
-DOC_SCHEMA = pa.schema(
-    [
-        pa.field("doc_id", pa.string()),
-        pa.field("spans", pa.list_(SPAN_STRUCT)),
-        pa.field("wave", pa.int32()),
-        pa.field("city", pa.string()),
-        pa.field("discovered_on_page", pa.int32()),
-        pa.field("page_pos", pa.int32()),
-    ]
-)
+DOC_SCHEMA = to_arrow_schema(DOCUMENTS_SCHEMA)
 
 SINK_SUMMARY_DDL = "file string, n_docs long"
 
@@ -81,7 +66,7 @@ def _doc_batch(
                 pa.array(medias, pa.string()),
                 pa.array(offs, pa.int32()),
             ],
-            fields=list(SPAN_STRUCT),
+            fields=list(DOC_SCHEMA.field("spans").type.value_type),
         ),
     )
     n = len(urls)

@@ -18,6 +18,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType
+
+from ..schemas import SPAN_SCHEMA
 
 SEARCH_ITEMS_SCHEMA = "struct<itemListElement:array<struct<position:int,url:string>>>"
 
@@ -158,24 +161,7 @@ _SPAN_RE = re.compile(
     re.S,
 )
 
-from pyspark.sql.types import (  # noqa: E402
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-SPANS_TYPE = ArrayType(
-    StructType(
-        [
-            StructField("kind", StringType()),
-            StructField("text", StringType()),
-            StructField("media_ref", StringType()),
-            StructField("offset", IntegerType()),
-        ]
-    )
-)
+SPANS_TYPE = ArrayType(SPAN_SCHEMA)
 
 
 def parse_spans_columnar(

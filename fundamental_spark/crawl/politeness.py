@@ -34,9 +34,6 @@ class PolitenessConfig:
     crawl_delay_s: float = 2.0       # funda/settings.py:20-21
     max_concurrency: int = 2         # funda/settings.py:15-17
     retry_times: int = 5             # funda/settings.py:31
-    retry_http_codes: tuple[int, ...] = (500, 502, 503, 504, 522, 524, 408, 429, 403)
-    timeout_s: int = 30              # funda/settings.py:49
-    robots_allowed: bool = True
     # AutoThrottle (funda/settings.py:24-27: start 2 s, max 30 s) at
     # wave granularity: waves with fetch failures double the effective
     # delay (Scrapy never decreases on error responses); clean waves
@@ -71,23 +68,8 @@ class PolitenessConfig:
             1, math.floor(wave_seconds / self.effective_delay() * self.max_concurrency)
         )
 
-    @classmethod
-    def from_robots(cls, robots_txt: str, user_agent: str = "*", **overrides) -> "PolitenessConfig":
-        """Config honoring a robots.txt Crawl-delay (north rule; the
-        reference itself sets ROBOTSTXT_OBEY=False). The robots delay
-        wins over the default when present and larger."""
-        from .robots import parse_robots
 
-        policy = parse_robots(robots_txt, user_agent=user_agent)
-        cfg = cls(**overrides)
-        if policy.crawl_delay is not None:
-            cfg.crawl_delay_s = max(cfg.crawl_delay_s, policy.crawl_delay)
-        return cfg
-
-
-def select_wave(
-    pending: DataFrame, budget: int | None, n_domains: int | None = None
-) -> DataFrame:
+def select_wave(pending: DataFrame, budget: int | None, n_domains: int) -> DataFrame:
     """Take the next ≤budget frontier rows in canonical order, budget
     applied PER DOMAIN.
 
@@ -96,15 +78,11 @@ def select_wave(
     call runs per-domain via a rank window partitioned by ``domain`` —
     partitions are independent so no hot key. ``n_domains`` is the
     caller's count of domains present in the frontier (the CrawlRunner
-    maintains it incrementally from seeds + discovered candidates);
-    None derives it from the data with a countDistinct — correct but
-    a full pending scan, so callers that know should say.
+    maintains it incrementally from seeds + discovered candidates).
     """
     ordered = [F.col(c) for c in CANONICAL_ORDER]
     if budget is None:
         return pending
-    if n_domains is None:
-        n_domains = pending.select("domain").distinct().count()
     if n_domains <= 1:
         return pending.orderBy(*ordered).limit(budget)
     from pyspark.sql import Window

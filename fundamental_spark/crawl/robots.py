@@ -5,8 +5,8 @@ rebuild's north rule mandates honoring robots.txt and crawl-delay, so
 the engine parses the policy once on the driver (robots.txt is one
 small file per domain) and compiles it into:
 
-- ``PolitenessConfig.from_robots``: Crawl-delay overrides the default
-  budget delay;
+- a Crawl-delay that raises ``PolitenessConfig.crawl_delay_s`` (the
+  CrawlRunner applies it when given ``robots_txt``);
 - ``allowed_col``: a pure-JVM column expression deciding
   allow/disallow per URL — longest-matching-prefix rule wins, Allow
   beats Disallow at equal length (the de-facto REP semantics), so the

@@ -5,9 +5,7 @@ One **wave** = one micro-batch over the frontier (SURVEY.md §2.8 T1).
 
   _select_fetch     pending frontier rows → politeness budget
                     (canonical-order top-k per domain) → distributed
-                    fetch (join against the synthetic web table; a real
-                    deployment swaps in the mapInPandas HTTP fetcher,
-                    fetch.py)
+                    fetch (a join against the synthetic web table)
   _discover         search pages parsed JVM-side → candidate listing
                     URLs (robots filter, intra-wave dedup)
   _seen             two-stage seen-set filter (cuckoo prefilter + exact
@@ -54,17 +52,19 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..operators.dedup import minhash_probe_band_index, plan_minhash_config
+from ..schemas import (
+    CRAWL_LOG_SCHEMA,
+    DOCUMENTS_SCHEMA,
+    FRONTIER_SCHEMA,
+    NEARDUP_BANDS_SCHEMA,
+    NEARDUP_PAIRS_SCHEMA,
+    REFRESHED_URLS_SCHEMA,
+    RESPONSE_CACHE_SCHEMA,
+    URL_SEEN_SCHEMA,
+    WAVE_METRICS_SCHEMA,
+)
 from ..tableformat import Warehouse
 from . import PRIORITY_DETAIL, PRIORITY_PAGINATION, PRIORITY_REFRESH, PRIORITY_SEED
 from .canonical import DEFAULT_N_SHARDS, with_url_keys
@@ -87,111 +87,6 @@ STATE_PARTITIONS = 4
 # zero listings — the empty-page counter and the manual ?page=N
 # fallback handle it. (Only this one marker appears in the reference.)
 BLOCK_MARKERS = ("Je bent bijna op de pagina die je zoekt",)
-
-
-FRONTIER_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("url_hash", LongType()),
-        StructField("domain", StringType()),
-        StructField("domain_shard", IntegerType()),
-        StructField("kind", StringType()),               # 'search' | 'detail'
-        StructField("priority", IntegerType()),
-        StructField("city", StringType()),
-        StructField("page_idx", IntegerType()),          # search: its page number; detail: page found on
-        StructField("discovered_on_page", IntegerType()),
-        StructField("page_pos", IntegerType()),
-        StructField("wave_enqueued", IntegerType()),
-        StructField("attempt", IntegerType()),
-        StructField("state", StringType()),              # pending | fetched | failed | dropped
-    ]
-)
-
-URL_SEEN_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("url_hash", LongType()),
-        StructField("domain_shard", IntegerType()),
-        StructField("first_seen_wave", IntegerType()),
-    ]
-)
-
-SPAN_SCHEMA = StructType(
-    [
-        StructField("kind", StringType()),
-        StructField("text", StringType()),
-        StructField("media_ref", StringType()),
-        StructField("offset", IntegerType()),
-    ]
-)
-
-DOCUMENTS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("spans", ArrayType(SPAN_SCHEMA)),
-        StructField("wave", IntegerType()),
-        StructField("city", StringType()),
-        StructField("discovered_on_page", IntegerType()),
-        StructField("page_pos", IntegerType()),
-    ]
-)
-
-CRAWL_LOG_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("kind", StringType()),
-        StructField("city", StringType()),
-        StructField("discovered_on_page", IntegerType()),
-        StructField("priority", IntegerType()),
-        StructField("page_pos", IntegerType()),
-        StructField("wave_fetched", IntegerType()),
-    ]
-)
-
-RESPONSE_CACHE_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("html", StringType()),
-        StructField("wave", IntegerType()),
-    ]
-)
-
-REFRESHED_URLS_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("city", StringType()),
-        StructField("found_on_page", IntegerType()),
-        StructField("wave", IntegerType()),
-    ]
-)
-
-WAVE_METRICS_SCHEMA = StructType(
-    [
-        StructField("wave", IntegerType()),
-        StructField("pages_fetched", LongType()),
-        StructField("search_pages", LongType()),
-        StructField("detail_pages", LongType()),
-        StructField("new_listing_urls", LongType()),
-        StructField("shard_counts", StringType()),
-    ]
-)
-
-NEARDUP_BANDS_SCHEMA = StructType(
-    [
-        StructField("doc", StringType()),
-        StructField("band_idx", IntegerType()),
-        StructField("band_hash", StringType()),
-    ]
-)
-
-NEARDUP_PAIRS_SCHEMA = StructType(
-    [
-        StructField("doc_a", StringType()),
-        StructField("doc_b", StringType()),
-        StructField("jaccard", DoubleType()),
-        StructField("wave", IntegerType()),
-    ]
-)
 
 
 @dataclass

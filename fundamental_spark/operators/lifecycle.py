@@ -24,26 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..schemas import PROPERTIES_SCHEMA
 from ..tableformat import Warehouse
-
-PROPERTIES_DDL = (
-    "url string, url_hash bigint, street string, neighborhood string, "
-    "property_type string, city string, postal_code string, price bigint, "
-    "year_built int, living_area int, num_rooms int, status string, "
-    "listing_date date, selling_date date, energy_label string, "
-    "republish_count int, wave int"
-)
-
-HISTORY_DDL = "url string, status string, price bigint, listing_date date, wave int"
 
 # bucket count for the properties snapshot: at funda's ~1M listings a
 # bucket is ~30k rows; at 10^10-frontier scale the same layout holds
 # with a larger count — one knob, set before first write
 PROPERTIES_BUCKETS = 32
-
-
-def _props_schema(spark):
-    return spark.createDataFrame([], PROPERTIES_DDL).schema
 
 
 def upsert_properties(wh: Warehouse, items: DataFrame, wave: int) -> None:
@@ -52,7 +39,6 @@ def upsert_properties(wh: Warehouse, items: DataFrame, wave: int) -> None:
     items: the FundaItem projection (functions.extractors.extract_items)
     with `item_city` renamed to `city` by the caller or here.
     """
-    spark = items.sparkSession
     if "item_city" in items.columns:
         if "city" in items.columns:  # crawl passthrough; item's own city wins
             items = items.drop("city")
@@ -64,7 +50,6 @@ def upsert_properties(wh: Warehouse, items: DataFrame, wave: int) -> None:
         F.lit(0).alias("republish_count"), F.lit(wave).alias("wave"),
     ).dropDuplicates(["url"])
 
-    schema = _props_schema(spark)
     wh.ensure_bucketed("properties", key="url", n_buckets=PROPERTIES_BUCKETS)
     # republish transition: inactive target + active incoming ->
     # status 'republished', republish_count++ (database.go:786-793)
@@ -75,7 +60,7 @@ def upsert_properties(wh: Warehouse, items: DataFrame, wave: int) -> None:
             republished, F.col("t.republish_count") + 1
         ).otherwise(F.col("t.republish_count")),
     }
-    wh.merge_upsert("properties", batch, key="url", schema=schema,
+    wh.merge_upsert("properties", batch, key="url", schema=PROPERTIES_SCHEMA,
                     when_matched_update=when_matched)
 
     # history rows reflect the post-merge status for the batch keys;
@@ -99,9 +84,7 @@ def _apply_inactive(wh: Warehouse, stale: DataFrame, wave: int) -> int:
     batch = wh.read_matching("properties", stale.select("url"), key="url").withColumn(
         "status", F.lit("inactive")
     )
-    wh.merge_upsert(
-        "properties", batch, key="url", schema=_props_schema(batch.sparkSession)
-    )
+    wh.merge_upsert("properties", batch, key="url", schema=PROPERTIES_SCHEMA)
     hist = wh.read_matching("properties", stale.select("url"), key="url").select(
         "url", "status", "price", "listing_date", F.lit(wave).alias("wave")
     )

@@ -1,24 +1,17 @@
-"""Engine schemas.
+"""The schema of every table the crawl and lifecycle layers write.
 
-Shapes come from the reference data model (SURVEY.md §1) and from
-BASELINE.json's ``input_hint``:
-
-- ``documents``: interleaved text + media span sequences per page —
-  (doc_id, spans:array<struct<kind,text,media_ref,offset>>). The
-  reference parses detail pages *in place* (funda_spider.py:188-453);
-  we materialize the page as an order-preserved span array first and
-  project fields from it.
-- ``properties``: the fact table (server/internal/database/database.go:390-413).
-- ``frontier`` / ``url_seen`` / lineage: the crawl state the reference
-  keeps as Scrapy queues + an in-memory-and-SQLite URL set
-  (funda_spider.py:35,46; database.py:37-51).
+Each table's layout is defined here once; the crawl runner, the
+documents sink (its pyarrow schema is derived with ``to_arrow_schema``),
+the span parser, the documents stream and the properties lifecycle
+import it. ``documents`` is BASELINE.json's ``input_hint``:
+(doc_id, spans:array<struct<kind,text,media_ref,offset:int32>>) plus
+its crawl lineage columns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     DateType,
     DoubleType,
     IntegerType,
@@ -26,11 +19,36 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
-# BASELINE.json input_hint: spans:array<struct<kind,text,media_ref,offset:int32>>
-SPAN_TYPE = StructType(
+FRONTIER_SCHEMA = StructType(
+    [
+        StructField("url", StringType(), False),
+        StructField("url_hash", LongType()),
+        StructField("domain", StringType()),
+        StructField("domain_shard", IntegerType()),
+        StructField("kind", StringType()),               # 'search' | 'detail'
+        StructField("priority", IntegerType()),
+        StructField("city", StringType()),
+        StructField("page_idx", IntegerType()),          # search: its page number; detail: page found on
+        StructField("discovered_on_page", IntegerType()),
+        StructField("page_pos", IntegerType()),
+        StructField("wave_enqueued", IntegerType()),
+        StructField("attempt", IntegerType()),
+        StructField("state", StringType()),              # pending | fetched | failed | dropped
+    ]
+)
+
+URL_SEEN_SCHEMA = StructType(
+    [
+        StructField("url", StringType(), False),
+        StructField("url_hash", LongType()),
+        StructField("domain_shard", IntegerType()),
+        StructField("first_seen_wave", IntegerType()),
+    ]
+)
+
+SPAN_SCHEMA = StructType(
     [
         StructField("kind", StringType()),        # 'text' | 'media'
         StructField("text", StringType()),        # NULL for media spans
@@ -42,16 +60,75 @@ SPAN_TYPE = StructType(
 DOCUMENTS_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),      # canonical listing URL
-        StructField("spans", ArrayType(SPAN_TYPE)),
-        StructField("wave", IntegerType()),       # micro-batch that fetched it
-        StructField("fetched_at_wave_ts", LongType()),  # deterministic wave-derived ts
+        StructField("spans", ArrayType(SPAN_SCHEMA)),
+        StructField("wave", IntegerType()),
+        StructField("city", StringType()),
+        StructField("discovered_on_page", IntegerType()),
+        StructField("page_pos", IntegerType()),
     ]
 )
 
-# server/internal/database/database.go:390-413 (types mapped per SURVEY.md §1.2)
+CRAWL_LOG_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("kind", StringType()),
+        StructField("city", StringType()),
+        StructField("discovered_on_page", IntegerType()),
+        StructField("priority", IntegerType()),
+        StructField("page_pos", IntegerType()),
+        StructField("wave_fetched", IntegerType()),
+    ]
+)
+
+RESPONSE_CACHE_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("html", StringType()),
+        StructField("wave", IntegerType()),
+    ]
+)
+
+REFRESHED_URLS_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("city", StringType()),
+        StructField("found_on_page", IntegerType()),
+        StructField("wave", IntegerType()),
+    ]
+)
+
+WAVE_METRICS_SCHEMA = StructType(
+    [
+        StructField("wave", IntegerType()),
+        StructField("pages_fetched", LongType()),
+        StructField("search_pages", LongType()),
+        StructField("detail_pages", LongType()),
+        StructField("new_listing_urls", LongType()),
+        StructField("shard_counts", StringType()),  # json map shard -> pages fetched
+    ]
+)
+
+NEARDUP_BANDS_SCHEMA = StructType(
+    [
+        StructField("doc", StringType()),
+        StructField("band_idx", IntegerType()),
+        StructField("band_hash", StringType()),
+    ]
+)
+
+NEARDUP_PAIRS_SCHEMA = StructType(
+    [
+        StructField("doc_a", StringType()),
+        StructField("doc_b", StringType()),
+        StructField("jaccard", DoubleType()),
+        StructField("wave", IntegerType()),
+    ]
+)
+
+# the fact table (server/internal/database/database.go:390-413), keyed on url
 PROPERTIES_SCHEMA = StructType(
     [
-        StructField("url", StringType(), nullable=False),  # natural key (UNIQUE)
+        StructField("url", StringType()),
         StructField("url_hash", LongType()),
         StructField("street", StringType()),
         StructField("neighborhood", StringType()),
@@ -67,10 +144,7 @@ PROPERTIES_SCHEMA = StructType(
         StructField("selling_date", DateType()),
         StructField("energy_label", StringType()),
         StructField("republish_count", IntegerType()),
-        StructField("latitude", DoubleType()),
-        StructField("longitude", DoubleType()),
-        StructField("geocoding_attempted", BooleanType()),
-        StructField("scraped_at", TimestampType()),
+        StructField("wave", IntegerType()),
     ]
 )
 
@@ -82,42 +156,5 @@ PROPERTY_HISTORY_SCHEMA = StructType(
         StructField("price", LongType()),
         StructField("listing_date", DateType()),
         StructField("wave", IntegerType()),
-    ]
-)
-
-# Crawl frontier. Priorities (SURVEY.md §1.1/4): 1 = new-listing detail fetch,
-# 2 = detail refresh, 3 = pagination discovery. State machine:
-# pending -> fetched | failed(attempt<retries -> pending again) | dropped.
-FRONTIER_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), nullable=False),
-        StructField("url_hash", LongType()),
-        StructField("domain_shard", IntegerType()),
-        StructField("priority", IntegerType()),
-        StructField("wave_enqueued", IntegerType()),
-        StructField("page_pos", IntegerType()),   # on-page position (crawl-order key)
-        StructField("kind", StringType()),        # 'search' | 'detail'
-        StructField("attempt", IntegerType()),
-        StructField("state", StringType()),       # pending | fetched | dropped
-    ]
-)
-
-URL_SEEN_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), nullable=False),
-        StructField("url_hash", LongType()),
-        StructField("domain_shard", IntegerType()),
-        StructField("first_seen_wave", IntegerType()),
-    ]
-)
-
-# per-wave metrics/lineage (reference crawl-run stats funda_spider.py:530-537)
-WAVE_METRICS_SCHEMA = StructType(
-    [
-        StructField("wave", IntegerType()),
-        StructField("pages_fetched", LongType()),
-        StructField("new_listing_urls", LongType()),
-        StructField("items_parsed", LongType()),
-        StructField("shard_counts", StringType()),  # json map shard->fetches (skew evidence)
     ]
 )

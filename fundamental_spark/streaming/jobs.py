@@ -29,12 +29,8 @@ from pyspark.sql import functions as F
 
 from ..functions.extractors import extract_items
 from ..operators.lifecycle import upsert_properties
+from ..schemas import DOCUMENTS_SCHEMA
 from ..tableformat import Warehouse
-
-DOCS_STREAM_SCHEMA = (
-    "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, "
-    "wave int, city string, discovered_on_page int, page_pos int"
-)
 
 
 def documents_stream(spark: SparkSession, warehouse_root: str) -> DataFrame:
@@ -42,7 +38,7 @@ def documents_stream(spark: SparkSession, warehouse_root: str) -> DataFrame:
     Every wave's delta dir arrives as one micro-batch."""
     path = os.path.join(warehouse_root, "documents", "v*")
     return (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
+        spark.readStream.schema(DOCUMENTS_SCHEMA)
         .option("maxFilesPerTrigger", 64)
         .parquet(path)
     )
@@ -423,7 +419,7 @@ def drain_neardup(
     threshold: float = 0.1,
     k: int = 64,
     bands: int = 16,
-    allow_low_recall: bool = True,
+    allow_low_recall: bool = False,
     max_files_per_trigger: int = 1,
 ) -> None:
     """Streaming NEAR-dup dedup (T12's streaming twin — the crawl
@@ -450,8 +446,14 @@ def drain_neardup(
     exactly-once (the same contract the crawl gets from its
     delta-table commit protocol). A ``state_dir`` built under another
     signature construction must be rebuilt (STATE-VERSION WARNING in
-    minhash_probe_band_index)."""
-    from ..operators.dedup import minhash_probe_band_index
+    minhash_probe_band_index).
+
+    A (k, bands) config that captures under 0.9 of the pairs at the
+    threshold (the defaults do, at 0.1) raises before the query starts
+    unless the caller passes ``allow_low_recall=True``."""
+    from ..operators.dedup import _require_recall, minhash_probe_band_index
+
+    _require_recall(threshold, k, bands, allow_low_recall)
 
     bands_dir = os.path.join(state_dir, "bands")
     texts_dir = os.path.join(state_dir, "texts")

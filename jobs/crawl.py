@@ -6,11 +6,9 @@
       --listings-per-city 40 --spider-type active \\
       --wave-seconds 60 --max-waves 100
 
-The sandbox (and CI) runs against the deterministic synthetic site; a
-production deployment replaces the synthetic web table with the
-mapInPandas HTTP fetcher (fundamental_spark.crawl.fetch) and real seed
-URLs. Everything else — frontier, politeness, seen-set, documents,
-lineage, checkpointed resume — is identical.
+The crawl runs against the deterministic synthetic site: its fetch is
+a join against the synthetic web table. Fetching real pages over HTTP
+is outside this repository's scope.
 """
 
 from __future__ import annotations

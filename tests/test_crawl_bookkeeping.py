@@ -18,19 +18,22 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from fundamental_spark.crawl import runner as runner_mod
+from fundamental_spark import schemas
 from fundamental_spark.crawl.runner import CrawlRunner
+from fundamental_spark.functions.extractors import extract_items
+from fundamental_spark.operators.lifecycle import upsert_properties
 from fundamental_spark.synth.site import build_site, web_rows
+from fundamental_spark.tableformat import Warehouse
 
 EMPTY_BOOTSTRAP = {
-    "frontier_done": runner_mod.FRONTIER_SCHEMA,
-    "documents": runner_mod.DOCUMENTS_SCHEMA,
-    "crawl_log": runner_mod.CRAWL_LOG_SCHEMA,
-    "wave_metrics": runner_mod.WAVE_METRICS_SCHEMA,
-    "refreshed_urls": runner_mod.REFRESHED_URLS_SCHEMA,
-    "neardup_bands": runner_mod.NEARDUP_BANDS_SCHEMA,
-    "neardup_pairs": runner_mod.NEARDUP_PAIRS_SCHEMA,
-    "response_cache": runner_mod.RESPONSE_CACHE_SCHEMA,
+    "frontier_done": schemas.FRONTIER_SCHEMA,
+    "documents": schemas.DOCUMENTS_SCHEMA,
+    "crawl_log": schemas.CRAWL_LOG_SCHEMA,
+    "wave_metrics": schemas.WAVE_METRICS_SCHEMA,
+    "refreshed_urls": schemas.REFRESHED_URLS_SCHEMA,
+    "neardup_bands": schemas.NEARDUP_BANDS_SCHEMA,
+    "neardup_pairs": schemas.NEARDUP_PAIRS_SCHEMA,
+    "response_cache": schemas.RESPONSE_CACHE_SCHEMA,
 }
 
 
@@ -83,6 +86,39 @@ def test_empty_bootstrap_tables_read_back_and_union(spark, tmp_path):
         r.wh.append_delta(name, spark.createDataFrame([row], schema))
         got = r.wh.read_deltas(name).collect()
         assert [tuple(g) for g in got] == [row], name
+
+
+def test_every_table_matches_its_schemas_constant(spark, tmp_path):
+    """After a crawl and one properties upsert, every crawl and
+    lifecycle table has its ``schemas.py`` layout. The sink-written
+    documents snapshots record no schema of their own, so each is also
+    read by plain parquet footer inference."""
+    site = _site()
+    r = _runner(spark, tmp_path / "wh", site, neardup_dedup=True, http_cache=True)
+    r.init(_seeds(site))
+    r.run()
+    wh = Warehouse(spark, str(tmp_path / "life"))
+    upsert_properties(wh, extract_items(r.table("documents")), wave=1)
+    got = [(name, r.table(name), schema) for name, schema in EMPTY_BOOTSTRAP.items()]
+    got += [
+        ("frontier_pending", r.table("frontier_pending"), schemas.FRONTIER_SCHEMA),
+        ("url_seen", r.table("url_seen"), schemas.URL_SEEN_SCHEMA),
+        ("properties", wh.read("properties"), schemas.PROPERTIES_SCHEMA),
+        ("property_history", wh.read_deltas("property_history"),
+         schemas.PROPERTY_HISTORY_SCHEMA),
+    ]
+    n_docs = 0
+    for v in range(2, r.wh.current_version("documents") + 1):  # v1: the bootstrap
+        snap = spark.read.parquet(r.wh._snapshot_dir("documents", v))
+        got.append((f"documents v{v} footer", snap, schemas.DOCUMENTS_SCHEMA))
+        n_docs += snap.count()
+    assert n_docs == 12
+    wrong = [
+        (name, df.schema.simpleString())
+        for name, df, schema in got
+        if df.schema.simpleString() != schema.simpleString()
+    ]
+    assert not wrong, wrong
 
 
 def test_terminating_step_submits_no_job_and_init_crawls_again(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Geo enrichment + hulls (S11-S13) and the mapInPandas fetch stage."""
+"""Geo enrichment + hulls (S11-S13) and the blocked-page fetch guard."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import random
 
 from pyspark.sql import functions as F
 
-from fundamental_spark.crawl.fetch import dict_transport, fetch_batches
 from fundamental_spark.operators.geo import (
     dedup_points,
     district_hulls,
@@ -72,20 +71,6 @@ def test_hulls_and_geojson(spark):
     gj = json.loads(hulls_to_geojson(hulls))
     assert gj["type"] == "FeatureCollection"
     assert gj["features"][0]["geometry"]["type"] == "Polygon"
-
-
-def test_fetch_batches_transport_and_retry_signal(spark):
-    pages = {"http://x/a": "<html>A</html>", "http://x/b": "<html>B</html>"}
-    frontier = spark.createDataFrame(
-        [("http://x/a", 0), ("http://x/b", 0), ("http://x/missing", 0)],
-        "url string, attempt int",
-    ).coalesce(1)  # single batch: deterministic transport state
-    res = {r["url"]: r for r in
-           fetch_batches(frontier, dict_transport(pages)).collect()}
-    assert res["http://x/a"]["http_status"] == 200
-    assert res["http://x/a"]["html"] == "<html>A</html>"
-    assert res["http://x/missing"]["http_status"] == 404
-    assert res["http://x/missing"]["html"] is None
 
 
 def test_parse_wkt_point(spark):

@@ -12,10 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from fundamental_spark.crawl.runner import CrawlRunner
-from fundamental_spark.operators.lifecycle import (
-    PROPERTIES_DDL,
-    mark_inactive_from_refresh,
-)
+from fundamental_spark.operators.lifecycle import mark_inactive_from_refresh
+from fundamental_spark.schemas import PROPERTIES_SCHEMA
 from fundamental_spark.synth.reference_sim import simulate_refresh
 from fundamental_spark.synth.site import build_site, web_rows
 from fundamental_spark.tableformat import Warehouse
@@ -93,7 +91,7 @@ def test_refresh_feeds_mark_inactive(spark, tmp_path, refresh_site):
     rows = [(u, "eindhoven", "active") for u in live + stale_urls]
     rows.append(("https://www.funda.nl/detail/koop/elders/huis-x/77000001/", "elders", "active"))
     props = spark.createDataFrame(rows, "url string, city string, status string")
-    full = spark.createDataFrame([], PROPERTIES_DDL)
+    full = spark.createDataFrame([], PROPERTIES_SCHEMA)
     for c in full.columns:
         if c not in props.columns:
             props = props.withColumn(c, F.lit(None).cast(dict(full.dtypes)[c]))

@@ -6,7 +6,8 @@ outside its package at import, so a checkout and the zipped package
 for the per-round correctness window lives in ``__spark_entry__``.
 Only ``session.py`` reads the environment: its settings are deployment
 settings, and nothing else in the library grows an env-var knob. No
-function in the library is over 150 lines.
+function in the library is over 150 lines. The crawl and lifecycle
+table schemas are defined in ``schemas.py`` alone.
 """
 
 from __future__ import annotations
@@ -106,3 +107,27 @@ def test_library_functions_stay_short():
                 and node.end_lineno - node.lineno + 1 > 150
             ]
     assert not long, long
+
+
+def test_table_schemas_are_defined_only_in_schemas_module():
+    """The crawl and lifecycle layers import their table schemas from
+    ``schemas.py`` (or derive them from it): none of their modules
+    builds a Spark or pyarrow schema of its own."""
+    paths = [
+        os.path.join(PKG, "crawl", name)
+        for name in sorted(os.listdir(os.path.join(PKG, "crawl")))
+        if name.endswith(".py")
+    ] + [os.path.join(PKG, "operators", "lifecycle.py"), os.path.join(PKG, "streaming", "jobs.py")]
+    builders = []
+    for path in paths:
+        for node in ast.walk(ast.parse(open(path).read(), path)):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            owner = getattr(getattr(f, "value", None), "id", None)
+            if name in ("StructType", "StructField") or (
+                owner in ("pa", "pyarrow") and name in ("schema", "struct", "field")
+            ):
+                builders.append(f"{os.path.relpath(path, PKG)}:{node.lineno} {name}")
+    assert not builders, builders

@@ -37,8 +37,10 @@ def test_parse_robots_groups_and_delay():
     assert not evil.allowed("/anything")
 
 
-def test_crawl_delay_raises_politeness_budget():
-    cfg = PolitenessConfig.from_robots(ROBOTS)
+def test_crawl_delay_raises_politeness_budget(spark, tmp_path):
+    web = spark.createDataFrame([], "url string, html string")
+    cfg = CrawlRunner(spark=spark, warehouse_root=str(tmp_path / "wh"), web=web,
+                      robots_txt=ROBOTS).politeness
     assert cfg.crawl_delay_s == 5.0
     # budget shrinks accordingly: 10s / 5s * 2 = 4 pages
     assert cfg.wave_budget(10.0) == 4

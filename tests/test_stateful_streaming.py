@@ -174,3 +174,23 @@ def test_neardup_micro_batch_job_count(spark, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(run_ids) == 1
     assert len(sc.statusTracker().getJobIdsForGroup(run_ids[0])) == 26
+
+
+def test_drain_neardup_refuses_its_low_recall_default(spark, tmp_path):
+    """Called with no config, the drain would run (64, 16) at jaccard
+    0.1, which captures 0.0016 of the pairs at the threshold: it raises
+    before the query starts, so no checkpoint or state is written."""
+    import os
+
+    import pytest
+
+    from fundamental_spark.streaming.jobs import drain_neardup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    src = str(tmp_path / "docs_src")
+    docs.filter(F.col("doc_id") < 30).coalesce(1).write.parquet(src)
+    ckpt, state = str(tmp_path / "ckpt"), str(tmp_path / "state")
+    with pytest.raises(ValueError, match="allow_low_recall"):
+        drain_neardup(spark, src, ckpt, state)
+    assert not os.path.exists(ckpt)
+    assert not os.path.exists(state)
