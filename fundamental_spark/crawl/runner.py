@@ -47,7 +47,7 @@ import json
 import os
 import re
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -281,6 +281,9 @@ class CrawlRunner:
         self._seed_priority = PRIORITY_REFRESH if refresh else PRIORITY_SEED
         self._page_priority = PRIORITY_REFRESH if refresh else PRIORITY_PAGINATION
         self.wh = Warehouse(self.spark, self.warehouse_root)
+        # the runner's own copy: robots and the adaptive delay write
+        # into it, never into the caller's config
+        self.politeness = replace(self.politeness)
         if "fail_until_attempt" not in self.web.columns:
             self.web = self.web.withColumn("fail_until_attempt", F.lit(0))
         # executor-side page rendering: detail rows may ship as compact
@@ -292,8 +295,9 @@ class CrawlRunner:
             self.politeness.crawl_delay_s = max(
                 self.politeness.crawl_delay_s, self._robots.crawl_delay
             )
-        if os.path.exists(self._ckpt_path()):
-            self._load_checkpoint()
+        state = self.wh.read_meta("checkpoint.json")
+        if state is not None:
+            self._load_checkpoint(state)
 
     def _robots_filter(self, df: DataFrame, url_col: str = "url") -> DataFrame:
         if self._robots is None:
@@ -301,9 +305,6 @@ class CrawlRunner:
         return df.filter(allowed_col(F.col(url_col), self._robots))
 
     # ---- checkpointing ----------------------------------------------------
-    def _ckpt_path(self) -> str:
-        return os.path.join(self.warehouse_root, "checkpoint.json")
-
     def _write_checkpoint(self) -> None:
         state = {
             "wave": self.wave,
@@ -323,14 +324,9 @@ class CrawlRunner:
                 for c, s in self.city_states.items()
             },
         }
-        tmp = self._ckpt_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._ckpt_path())
+        self.wh.write_meta("checkpoint.json", state)
 
-    def _load_checkpoint(self) -> None:
-        with open(self._ckpt_path()) as f:
-            state = json.load(f)
+    def _load_checkpoint(self, state: dict) -> None:
         # url_seen rows carry the domain_shard they were keyed under: a
         # different n_shards makes the per-shard seen filter call every
         # candidate new, re-fetching pages and duplicating url_seen rows.
@@ -338,7 +334,7 @@ class CrawlRunner:
         ckpt_shards = state.get("n_shards", self.n_shards)
         if ckpt_shards != self.n_shards:
             raise ValueError(
-                f"checkpoint at {self._ckpt_path()} was written with "
+                f"checkpoint in {self.warehouse_root} was written with "
                 f"n_shards={ckpt_shards}; resuming with n_shards="
                 f"{self.n_shards} would re-fetch already-seen pages"
             )

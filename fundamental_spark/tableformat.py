@@ -6,7 +6,14 @@ emulates the API over versioned parquet snapshot directories:
 
 - every write is a new immutable snapshot dir (``v000001/``...), with a
   ``_current`` pointer file updated atomically last — that gives us the
-  snapshot pinning the crawl resume path needs (SURVEY.md §2.8 T5);
+  snapshot pinning the crawl resume path needs (SURVEY.md §2.8 T5).
+  Every write method runs the one commit sequence ``_commit``: version
+  bump, schema check, data files, schema record on v1, pointer flip;
+- every piece of driver metadata (``_current``, ``_schema.json``,
+  ``_meta.json``, ``_manifest.json``, the compaction and vacuum floors,
+  the crawl's ``checkpoint.json``) is JSON read by ``read_meta`` and
+  written by ``write_meta`` (tmp file + atomic rename), paths relative
+  to the root;
 - ``merge_upsert`` emulates ``MERGE INTO target USING batch ON key``.
   For **bucketed** tables (``ensure_bucketed``) the snapshot is
   hash-partitioned on the merge key and the merge rewrites ONLY the
@@ -20,16 +27,16 @@ emulates the API over versioned parquet snapshot directories:
   opens O(deltas-since-compaction) dirs instead of every snapshot dir
   ever written.
 - the schema lives in table metadata, as in Iceberg: the first commit
-  of a flat table records it in ``_schema.json`` beside ``_current``
-  (outside every snapshot dir), and ``read``/``read_deltas`` hand it to
-  the parquet reader instead of running a footer-inference Spark job
-  per call. A later ``overwrite``/``append_delta``/``append_delta_rows``
-  whose column names or types differ from the record raises
-  ``ValueError`` before anything is written (nullability is not
-  compared; reads relax it, as Spark's file sources do). A table with
-  no record (written before the record existed, or only ever by
-  ``append_delta_files``) is read with schema inference. Bucketed
-  tables keep their schema in each snapshot's ``_manifest.json``.
+  of a table, flat or bucketed, records it in ``_schema.json`` beside
+  ``_current`` (outside every snapshot dir). ``read``/``read_deltas``
+  hand it to the parquet reader instead of running a footer-inference
+  Spark job per call, and a bucketed table whose buckets are all empty
+  reads as no rows under it. A later commit whose column names or
+  types differ from the record raises ``ValueError`` before anything
+  is written (nullability is not compared; reads relax it, as Spark's
+  file sources do). A table with no record (written before the record
+  existed, or only ever by ``append_delta_files``) is read with schema
+  inference.
 
 At 100 TB an Iceberg catalog replaces this class wholesale — all call
 sites go through this narrow API so the swap is one module.
@@ -76,19 +83,33 @@ class Warehouse:
         self.auto_vacuum_every = auto_vacuum_every
         os.makedirs(root, exist_ok=True)
 
+    # ---- metadata I/O -------------------------------------------------------
+    def read_meta(self, rel: str, default=None):
+        """The JSON value stored at ``rel`` (a path relative to the
+        root), or ``default`` when the file does not exist. Every piece
+        of driver metadata is read here."""
+        try:
+            with open(os.path.join(self.root, rel)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return default
+
+    def write_meta(self, rel: str, value) -> None:
+        """Store ``value`` as JSON at ``rel`` (relative to the root)
+        atomically: a reader sees the old file or the new one, never a
+        torn write. Every piece of driver metadata is written here."""
+        path = os.path.join(self.root, rel)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path + ".tmp", "w") as f:
+            json.dump(value, f)
+        os.replace(path + ".tmp", path)
+
     # ---- snapshot plumbing -------------------------------------------------
     def _tdir(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def _current_path(self, name: str) -> str:
-        return os.path.join(self._tdir(name), "_current")
-
     def current_version(self, name: str) -> int:
-        p = self._current_path(name)
-        if not os.path.exists(p):
-            return 0
-        with open(p) as f:
-            return int(f.read().strip())
+        return self.read_meta(f"{name}/_current", 0)
 
     def _snapshot_dir(self, name: str, version: int) -> str:
         return os.path.join(self._tdir(name), f"v{version:06d}")
@@ -96,50 +117,39 @@ class Warehouse:
     def exists(self, name: str) -> bool:
         return self.current_version(name) > 0
 
-    def _write_pointer(self, name: str, version: int) -> None:
-        tmp = self._current_path(name) + ".tmp"
-        os.makedirs(self._tdir(name), exist_ok=True)
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._current_path(name))  # atomic pointer swap = commit
-
-    def _commit(self, name: str, df: DataFrame) -> int:
+    def _commit(self, name: str, schema: StructType | None, write) -> int:
+        """The one commit sequence: bump the version, refuse a schema
+        that differs from the record, ``write(out_dir)`` the snapshot's
+        files, record the schema on the first commit, flip the pointer.
+        Column names and types are compared, not nullability; a first
+        commit sets the record instead. ``schema=None`` is neither
+        checked nor recorded."""
         new_v = self.current_version(name) + 1
-        self._check_schema(name, new_v, df.schema)
-        out = self._snapshot_dir(name, new_v)
-        df.write.mode("overwrite").parquet(out)
-        self._record_schema(name, new_v, df.schema)
-        self._write_pointer(name, new_v)
+        rec = self._recorded_schema(name) if schema is not None and new_v > 1 else None
+        if rec is not None and rec.simpleString() != schema.simpleString():
+            raise ValueError(
+                f"table {name}: commit schema {schema.simpleString()} differs "
+                f"from the recorded {rec.simpleString()}"
+            )
+        write(self._snapshot_dir(name, new_v))
+        if schema is not None and new_v == 1:
+            # after the data, before the pointer: a reader of v1 finds it
+            self.write_meta(f"{name}/_schema.json", schema.jsonValue())
+        self.write_meta(f"{name}/_current", new_v)  # atomic pointer swap = commit
         return new_v
+
+    def _commit_frame(self, name: str, df: DataFrame) -> int:
+        return self._commit(
+            name, df.schema, lambda out: df.write.mode("overwrite").parquet(out)
+        )
 
     # ---- schema metadata ----------------------------------------------------
     def _schema_path(self, name: str) -> str:
         return os.path.join(self._tdir(name), "_schema.json")
 
     def _recorded_schema(self, name: str) -> StructType | None:
-        p = self._schema_path(name)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return StructType.fromJson(json.load(f))
-
-    def _check_schema(self, name: str, new_v: int, schema: StructType) -> None:
-        """Refuse a commit whose column names or types differ from the
-        recorded schema; a first commit (``new_v == 1``) sets it instead."""
-        rec = self._recorded_schema(name) if new_v > 1 else None
-        if rec is not None and rec.simpleString() != schema.simpleString():
-            raise ValueError(
-                f"table {name}: commit schema {schema.simpleString()} differs "
-                f"from the recorded {rec.simpleString()}"
-            )
-
-    def _record_schema(self, name: str, new_v: int, schema: StructType) -> None:
-        # after the data, before the pointer: a reader of v1 finds it
-        if new_v == 1:
-            tmp = self._schema_path(name) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(schema.jsonValue(), f)
-            os.replace(tmp, self._schema_path(name))
+        rec = self.read_meta(f"{name}/_schema.json")
+        return None if rec is None else StructType.fromJson(rec)
 
     def _read_flat(self, name: str, *paths: str) -> DataFrame:
         schema = self._recorded_schema(name)
@@ -151,17 +161,15 @@ class Warehouse:
         return os.path.join(self._tdir(name), "_meta.json")
 
     def bucket_meta(self, name: str) -> dict | None:
-        p = self._meta_path(name)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+        return self.read_meta(f"{name}/_meta.json")
 
     def ensure_bucketed(self, name: str, key: str, n_buckets: int = 32) -> None:
         """Declare `name` hash-bucketed on `key` (Iceberg
         ``PARTITIONED BY (bucket(n, key))``). Idempotent. If a flat
         snapshot already exists it is migrated once (full rewrite —
-        the last one this table will ever pay)."""
+        the last one this table will ever pay); a crash before that
+        commit leaves a flat current snapshot under the meta, which
+        ``read`` reads as flat and ``merge_upsert`` migrates."""
         meta = self.bucket_meta(name)
         if meta is not None:
             if meta["key"] != key or meta["n_buckets"] != n_buckets:
@@ -170,23 +178,14 @@ class Warehouse:
                     f"requested key={key} n_buckets={n_buckets}"
                 )
             return
-        os.makedirs(self._tdir(name), exist_ok=True)
         meta = {"key": key, "n_buckets": n_buckets}
-        tmp = self._meta_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        # migrate an existing flat snapshot BEFORE the meta becomes
-        # visible, so readers never see meta without a manifest
+        self.write_meta(f"{name}/_meta.json", meta)
         if self.exists(name):
             flat = self.spark.read.parquet(
                 self._snapshot_dir(name, self.current_version(name))
             )
-            os.replace(tmp, self._meta_path(name))
-            self._commit_bucketed(name, self._with_bucket(flat, meta), meta,
-                                  touched=list(range(n_buckets)),
-                                  prev_manifest={})
-        else:
-            os.replace(tmp, self._meta_path(name))
+            self._commit_bucketed(name, self._with_bucket(flat, meta),
+                                  touched=list(range(n_buckets)), prev_manifest={})
 
     def _with_bucket(self, df: DataFrame, meta: dict) -> DataFrame:
         return df.withColumn(
@@ -200,55 +199,42 @@ class Warehouse:
     def _manifest_path(self, name: str, version: int) -> str:
         return os.path.join(self._snapshot_dir(name, version), "_manifest.json")
 
-    def _read_manifest(self, name: str, version: int) -> dict[int, int]:
-        """bucket -> snapshot version holding its live data."""
-        p = self._manifest_path(name, version)
-        with open(p) as f:
-            doc = json.load(f)
-        return {int(k): v for k, v in doc["buckets"].items()}
-
-    def _manifest_schema(self, name: str, version: int) -> StructType:
-        with open(self._manifest_path(name, version)) as f:
-            return StructType.fromJson(json.loads(json.load(f)["schema"]))
+    def _read_manifest(self, name: str, version: int) -> dict[int, int] | None:
+        """bucket -> snapshot version holding its live data; None when
+        the snapshot is flat (no manifest)."""
+        doc = self.read_meta(f"{name}/v{version:06d}/_manifest.json")
+        return None if doc is None else {int(k): v for k, v in doc["buckets"].items()}
 
     def _commit_bucketed(
         self,
         name: str,
         df_with_bkt: DataFrame,
-        meta: dict,
         touched: list[int],
         prev_manifest: dict[int, int],
     ) -> int:
-        new_v = self.current_version(name) + 1
-        out = self._snapshot_dir(name, new_v)
-        df_with_bkt.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(out)
-        manifest = dict(prev_manifest)
-        for k in touched:
-            # a touched bucket with zero surviving rows has no dir —
-            # drop it from the manifest rather than point at nothing
-            if os.path.isdir(os.path.join(out, f"{BUCKET_COL}={k}")):
-                manifest[k] = new_v
-            else:
-                manifest.pop(k, None)
-        tmp = self._manifest_path(name, new_v) + ".tmp"
+        def write(out: str) -> None:
+            new_v = self.current_version(name) + 1  # the pointer flips after this
+            df_with_bkt.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(out)
+            manifest = dict(prev_manifest)
+            for k in touched:
+                # a touched bucket with zero surviving rows has no dir —
+                # drop it from the manifest rather than point at nothing
+                if os.path.isdir(os.path.join(out, f"{BUCKET_COL}={k}")):
+                    manifest[k] = new_v
+                else:
+                    manifest.pop(k, None)
+            self.write_meta(
+                f"{name}/v{new_v:06d}/_manifest.json",
+                {"buckets": {str(k): v for k, v in manifest.items()}},
+            )
+
         data_schema = StructType(
             [f for f in df_with_bkt.schema.fields if f.name != BUCKET_COL]
         )
-        os.makedirs(out, exist_ok=True)  # empty write may create nothing
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "buckets": {str(k): v for k, v in manifest.items()},
-                    "schema": data_schema.json(),
-                },
-                f,
-            )
-        os.replace(tmp, self._manifest_path(name, new_v))
-        self._write_pointer(name, new_v)  # manifest in place before commit
+        new_v = self._commit(name, data_schema, write)
         # periodic snapshot expiry: bucketed tables are MERGE-rewritten
         # in place, so without GC every rewrite of a bucket strands its
-        # old dir forever (round-4 verdict item: vacuum existed but was
-        # never called)
+        # old dir forever
         if self.auto_vacuum_every and new_v % self.auto_vacuum_every == 0:
             self.vacuum(name)
         return new_v
@@ -277,18 +263,25 @@ class Warehouse:
             out = out.unionByName(p)
         return out
 
+    def _read_live(
+        self, name: str, manifest: dict[int, int], buckets: list[int] | None = None
+    ) -> DataFrame:
+        """``_read_buckets`` without the bucket column; when every
+        bucket is empty, no rows under the recorded schema."""
+        df = self._read_buckets(name, manifest, buckets)
+        if df is None:
+            return self.spark.createDataFrame([], self._recorded_schema(name))
+        return df.drop(BUCKET_COL)
+
     # ---- public API (Iceberg-shaped) ---------------------------------------
     def read(self, name: str, version: int | None = None) -> DataFrame:
         v = version if version is not None else self.current_version(name)
         if v <= 0:
             raise FileNotFoundError(f"table {name} has no snapshot")
-        meta = self.bucket_meta(name)
-        if meta is not None and os.path.exists(self._manifest_path(name, v)):
-            df = self._read_buckets(name, self._read_manifest(name, v))
-            if df is None:  # bucketed table, all buckets empty
-                return self.spark.createDataFrame([], self._manifest_schema(name, v))
-            return df.drop(BUCKET_COL)
-        return self._read_flat(name, self._snapshot_dir(name, v))
+        manifest = self._read_manifest(name, v) if self.bucket_meta(name) else None
+        if manifest is None:
+            return self._read_flat(name, self._snapshot_dir(name, v))
+        return self._read_live(name, manifest)
 
     def read_matching(self, name: str, keys: DataFrame, key: str) -> DataFrame:
         """Rows of `name` whose `key` appears in `keys` — on a bucketed
@@ -297,21 +290,18 @@ class Warehouse:
         per-batch read cost O(touched buckets), not O(table)."""
         meta = self.bucket_meta(name)
         v = self.current_version(name)
-        if meta is None or v <= 0 or meta["key"] != key or not os.path.exists(
-            self._manifest_path(name, v)
-        ):
-            base = self.read(name) if v > 0 else None
-            if base is None:
-                raise FileNotFoundError(f"table {name} has no snapshot")
-            return base.join(keys.select(key), key, "left_semi")
+        manifest = (
+            self._read_manifest(name, v)
+            if meta is not None and v > 0 and meta["key"] == key else None
+        )
+        if manifest is None:
+            return self.read(name).join(keys.select(key), key, "left_semi")
         keys_b = self._with_bucket(keys.select(key), meta)
         touched = sorted(
             r[BUCKET_COL] for r in keys_b.select(BUCKET_COL).distinct().collect()
         )
-        df = self._read_buckets(name, self._read_manifest(name, v), buckets=touched)
-        if df is None:
-            return self.spark.createDataFrame([], self._manifest_schema(name, v))
-        return df.drop(BUCKET_COL).join(keys.select(key), key, "left_semi")
+        live = self._read_live(name, manifest, buckets=touched)
+        return live.join(keys.select(key), key, "left_semi")
 
     def read_or_empty(self, name: str, schema: StructType) -> DataFrame:
         if self.exists(name):
@@ -322,21 +312,14 @@ class Warehouse:
         meta = self.bucket_meta(name)
         if meta is not None:
             return self._commit_bucketed(
-                name, self._with_bucket(df, meta), meta,
+                name, self._with_bucket(df, meta),
                 touched=list(range(meta["n_buckets"])), prev_manifest={},
             )
-        return self._commit(name, df)
+        return self._commit_frame(name, df)
 
     # ---- append-only delta log ----------------------------------------------
-    def _floor_path(self, name: str) -> str:
-        return os.path.join(self._tdir(name), "_compaction")
-
     def compaction_floor(self, name: str) -> int:
-        p = self._floor_path(name)
-        if not os.path.exists(p):
-            return 0
-        with open(p) as f:
-            return int(f.read().strip())
+        return self.read_meta(f"{name}/_compaction", 0)
 
     def _compact_dir(self, name: str, floor: int) -> str:
         return os.path.join(self._tdir(name), f"c{floor:06d}")
@@ -346,7 +329,7 @@ class Warehouse:
         ``read_deltas`` unions the compacted base (if any) plus the delta
         dirs since — the parquet emulation of Iceberg appends (no rewrite
         of history)."""
-        return self._commit(name, df)
+        return self._commit_frame(name, df)
 
     def append_delta_rows(self, name: str, rows: list[dict], schema: StructType) -> int:
         """Driver-side micro-append for O(1)-row lineage tables (per-wave
@@ -358,18 +341,15 @@ class Warehouse:
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        new_v = self.current_version(name) + 1
-        self._check_schema(name, new_v, schema)
-        out = self._snapshot_dir(name, new_v)
-        os.makedirs(out, exist_ok=True)
-        pq.write_table(
-            pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)),
-            os.path.join(out, "part-00000.parquet"),
-            compression="snappy",
-        )
-        self._record_schema(name, new_v, schema)
-        self._write_pointer(name, new_v)
-        return new_v
+        def write(out: str) -> None:
+            os.makedirs(out, exist_ok=True)
+            pq.write_table(
+                pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)),
+                os.path.join(out, "part-00000.parquet"),
+                compression="snappy",
+            )
+
+        return self._commit(name, schema, write)
 
     def append_delta_files(self, name: str, job) -> int:
         """Append-only commit whose data files are written directly by
@@ -385,22 +365,22 @@ class Warehouse:
         and speculation can never double data. The pointer swap stays
         the single atomic commit; a crash mid-job leaves an unreferenced
         snapshot dir that ``rollback`` prunes, exactly like
-        ``append_delta``."""
-        new_v = self.current_version(name) + 1
-        out = self._snapshot_dir(name, new_v)
-        os.makedirs(out, exist_ok=True)
-        committed = set(job(out))
-        # delete EVERY non-committed file, not just '*.parquet': a task
-        # attempt killed mid-write leaves its temp file (e.g. docsink's
-        # '*.parquet.inprogress') in the snapshot dir, and any stray
-        # file not starting with '_'/'.' would be treated as a data
-        # file by spark.read.parquet and break every subsequent read
-        for f in os.listdir(out):
-            p = os.path.join(out, f)
-            if os.path.isfile(p) and f not in committed:
-                os.remove(p)
-        self._write_pointer(name, new_v)
-        return new_v
+        ``append_delta``. The files' schema is neither checked nor
+        recorded."""
+        def write(out: str) -> None:
+            os.makedirs(out, exist_ok=True)
+            committed = set(job(out))
+            # delete EVERY non-committed file, not just '*.parquet': a task
+            # attempt killed mid-write leaves its temp file (e.g. docsink's
+            # '*.parquet.inprogress') in the snapshot dir, and any stray
+            # file not starting with '_'/'.' would be treated as a data
+            # file by spark.read.parquet and break every subsequent read
+            for f in os.listdir(out):
+                p = os.path.join(out, f)
+                if os.path.isfile(p) and f not in committed:
+                    os.remove(p)
+
+        return self._commit(name, None, write)
 
     def read_deltas(self, name: str, version: int | None = None) -> DataFrame:
         v = version if version is not None else self.current_version(name)
@@ -433,20 +413,13 @@ class Warehouse:
         base = self.read_deltas(name, version=v)
         staging = self._compact_dir(name, v)
         base.write.mode("overwrite").parquet(staging)
-        tmp = self._floor_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._floor_path(name))  # atomic: readers switch here
+        self.write_meta(f"{name}/_compaction", v)  # atomic: readers switch here
         # GC below the new floor
         if old_floor > 0:
             shutil.rmtree(self._compact_dir(name, old_floor), ignore_errors=True)
         for i in range(old_floor + 1, v + 1):
             shutil.rmtree(self._snapshot_dir(name, i), ignore_errors=True)
         return v
-
-    def append(self, name: str, df: DataFrame, schema: StructType) -> int:
-        base = self.read_or_empty(name, schema)
-        return self._commit(name, base.unionByName(df))
 
     def merge_upsert(
         self,
@@ -472,49 +445,36 @@ class Warehouse:
         """
         meta = self.bucket_meta(name)
         cols = [f.name for f in schema.fields]
-        if meta is not None:
-            if meta["key"] != key:
-                raise ValueError(
-                    f"merge key {key} != bucket key {meta['key']} for {name}"
-                )
-            batch_b = self._with_bucket(batch, meta)
-            touched = sorted(
-                r[BUCKET_COL] for r in batch_b.select(BUCKET_COL).distinct().collect()
+        if meta is None:
+            target = self.read_or_empty(name, schema)
+            merged = self._merge_frames(target, batch, key, cols, when_matched_update)
+            return self._commit_frame(name, merged)
+        if meta["key"] != key:
+            raise ValueError(f"merge key {key} != bucket key {meta['key']} for {name}")
+        batch_b = self._with_bucket(batch, meta)
+        touched = sorted(
+            r[BUCKET_COL] for r in batch_b.select(BUCKET_COL).distinct().collect()
+        )
+        cur_v = self.current_version(name)
+        manifest = self._read_manifest(name, cur_v) if cur_v > 0 else {}
+        if manifest is None:
+            # crash window in ensure_bucketed: _meta.json became visible
+            # but the process died before the migration committed, so the
+            # current snapshot is FLAT. read() already falls back; complete
+            # the migration here — merge against the flat snapshot over ALL
+            # buckets, one full rewrite, bucketed from then on.
+            target = self._with_bucket(
+                self.spark.read.parquet(self._snapshot_dir(name, cur_v)), meta
             )
-            cur_v = self.current_version(name)
-            if cur_v > 0 and not os.path.exists(self._manifest_path(name, cur_v)):
-                # crash window in ensure_bucketed: _meta.json became
-                # visible but the process died before _commit_bucketed
-                # finished, so the current snapshot is FLAT (no
-                # manifest). read() already falls back; complete the
-                # migration here instead of crashing in _read_manifest —
-                # merge against the flat snapshot over ALL buckets, one
-                # full rewrite, and the table is bucketed from then on.
-                target = self._with_bucket(
-                    self.spark.read.parquet(self._snapshot_dir(name, cur_v)), meta
-                )
-                merged = self._merge_frames(
-                    target, batch_b, key, cols + [BUCKET_COL], when_matched_update
-                )
-                return self._commit_bucketed(
-                    name, merged, meta,
-                    touched=list(range(meta["n_buckets"])), prev_manifest={},
-                )
-            prev_manifest = self._read_manifest(name, cur_v) if cur_v > 0 else {}
-            target = self._read_buckets(name, prev_manifest, buckets=touched)
+            touched, manifest = list(range(meta["n_buckets"])), {}
+        else:
+            target = self._read_buckets(name, manifest, buckets=touched)
             if target is None:
-                target = self._with_bucket(
-                    self.spark.createDataFrame([], schema), meta
-                )
-            merged = self._merge_frames(
-                target, batch_b, key, cols + [BUCKET_COL], when_matched_update
-            )
-            return self._commit_bucketed(
-                name, merged, meta, touched=touched, prev_manifest=prev_manifest
-            )
-        target = self.read_or_empty(name, schema)
-        merged = self._merge_frames(target, batch, key, cols, when_matched_update)
-        return self._commit(name, merged)
+                target = self._with_bucket(self.spark.createDataFrame([], schema), meta)
+        merged = self._merge_frames(
+            target, batch_b, key, cols + [BUCKET_COL], when_matched_update
+        )
+        return self._commit_bucketed(name, merged, touched=touched, prev_manifest=manifest)
 
     @staticmethod
     def _merge_frames(
@@ -566,17 +526,10 @@ class Warehouse:
         for v in range(version + 1, cur + 1):
             shutil.rmtree(self._snapshot_dir(name, v), ignore_errors=True)
         if cur != version:
-            self._write_pointer(name, version)
-
-    def _vacuum_floor_path(self, name: str) -> str:
-        return os.path.join(self._tdir(name), "_vacuum_floor")
+            self.write_meta(f"{name}/_current", version)
 
     def vacuum_floor(self, name: str) -> int:
-        p = self._vacuum_floor_path(name)
-        if not os.path.exists(p):
-            return 0
-        with open(p) as f:
-            return int(f.read().strip())
+        return self.read_meta(f"{name}/_vacuum_floor", 0)
 
     def vacuum(self, name: str) -> int:
         """Delete snapshot dirs of a bucketed table that hold no live
@@ -589,17 +542,14 @@ class Warehouse:
         cur = self.current_version(name)
         if meta is None or cur <= 0:
             return 0
-        live = set(self._read_manifest(name, cur).values()) | {cur}
+        live = set((self._read_manifest(name, cur) or {}).values()) | {cur}
         removed = 0
         for v in range(1, cur):
             d = self._snapshot_dir(name, v)
             if v not in live and os.path.isdir(d):
                 shutil.rmtree(d, ignore_errors=True)
                 removed += 1
-        tmp = self._vacuum_floor_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(cur))
-        os.replace(tmp, self._vacuum_floor_path(name))
+        self.write_meta(f"{name}/_vacuum_floor", cur)
         return removed
 
     def drop(self, name: str) -> None:

@@ -7,7 +7,8 @@ for the per-round correctness window lives in ``__spark_entry__``.
 Only ``session.py`` reads the environment: its settings are deployment
 settings, and nothing else in the library grows an env-var knob. No
 function in the library is over 150 lines. The crawl and lifecycle
-table schemas are defined in ``schemas.py`` alone.
+table schemas are defined in ``schemas.py`` alone. Driver metadata is
+written by ``Warehouse.write_meta`` alone.
 """
 
 from __future__ import annotations
@@ -131,3 +132,42 @@ def test_table_schemas_are_defined_only_in_schemas_module():
             ):
                 builders.append(f"{os.path.relpath(path, PKG)}:{node.lineno} {name}")
     assert not builders, builders
+
+
+def _file_writes(node, func=None):
+    """(line, enclosing function) of each ``os.replace`` call and each
+    ``open`` call whose mode is not a read mode."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        func = node.name
+    f = node.func if isinstance(node, ast.Call) else None
+    if isinstance(f, ast.Attribute) and f.attr == "replace" and getattr(f.value, "id", None) == "os":
+        yield node.lineno, func
+    elif isinstance(f, ast.Name) and f.id == "open":
+        mode = next((k.value for k in node.keywords if k.arg == "mode"),
+                    node.args[1] if len(node.args) > 1 else None)
+        reads = mode is None or (
+            isinstance(mode, ast.Constant) and set(str(mode.value)) <= set("rbt")
+        )
+        if not reads:
+            yield node.lineno, func
+    for child in ast.iter_child_nodes(node):
+        yield from _file_writes(child, func)
+
+
+def test_metadata_has_one_atomic_writer():
+    """No ``os.replace`` and no write-mode ``open`` under the library
+    outside ``Warehouse.write_meta``, and the documents sink's rename
+    of a finished part file on the worker."""
+    allowed = {("tableformat.py", "write_meta"), (os.path.join("crawl", "docsink.py"), "sink")}
+    writes = []
+    for dirpath, _, files in os.walk(PKG):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                rel = os.path.relpath(path, PKG)
+                writes += [
+                    f"{rel}:{line} in {func}"
+                    for line, func in _file_writes(ast.parse(open(path).read(), path))
+                    if (rel, func) not in allowed
+                ]
+    assert not writes, writes

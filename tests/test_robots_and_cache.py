@@ -46,6 +46,20 @@ def test_crawl_delay_raises_politeness_budget(spark, tmp_path):
     assert cfg.wave_budget(10.0) == 4
 
 
+def test_runner_keeps_the_callers_politeness_config(spark, tmp_path):
+    """A robots Crawl-delay raises the runner's own delay, not the
+    config object the caller passed in: a second runner built on the
+    same config and no robots.txt keeps the default budget."""
+    web = spark.createDataFrame([], "url string, html string")
+    cfg = PolitenessConfig()
+    CrawlRunner(spark=spark, warehouse_root=str(tmp_path / "a"), web=web,
+                politeness=cfg, robots_txt="User-agent: *\nCrawl-delay: 9\n")
+    second = CrawlRunner(spark=spark, warehouse_root=str(tmp_path / "b"), web=web,
+                         politeness=cfg)
+    assert cfg.crawl_delay_s == 2.0
+    assert second.politeness.wave_budget(10.0) == 10
+
+
 def test_allowed_col_matches_python(spark):
     p = parse_robots(ROBOTS)
     paths = [
@@ -128,7 +142,7 @@ def test_autothrottle_backoff_and_recovery(spark, tmp_path):
     runner.init([(seed_url, "assen")])
     delays = []
     while runner.step():
-        delays.append(cfg.effective_delay())
+        delays.append(runner.politeness.effective_delay())
     # wave 1 fails -> delay doubled; wave 2 fails again -> doubled again;
     # clean waves then decay halfway back toward the floor
     assert delays[0] == 4.0 and delays[1] == 8.0
@@ -196,4 +210,4 @@ def test_autothrottle_ignores_permanent_misses(spark, tmp_path):
     # the 404 wave happened (manual page 3 tried) but delay never rose
     tried = {r["url"] for r in runner.table("frontier_done").collect()}
     assert f"{site.search_url('gouda', 1)}&page=3" in tried
-    assert cfg.effective_delay() == 2.0
+    assert runner.politeness.effective_delay() == 2.0

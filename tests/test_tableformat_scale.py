@@ -361,6 +361,62 @@ def test_schema_mismatch_raises_and_writes_nothing(spark, tmp_path, how):
     assert wh.current_version("t") == 2
 
 
+def test_bucketed_merge_refuses_schema_drift(spark, tmp_path):
+    """Bucketed tables record their schema like flat ones, so a merge
+    that would widen a column's type raises before anything is
+    written."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.ensure_bucketed("t", key="url", n_buckets=4)
+    wh.merge_upsert("t", _rows(spark, 10), key="url", schema=_schema(spark))
+    drift = _rows(spark, 2).withColumn("price", F.col("price").cast("double"))
+    with pytest.raises(ValueError, match="differs from the recorded"):
+        wh.merge_upsert("t", drift, key="url", schema=drift.schema)
+    assert wh.current_version("t") == 1
+    assert not os.path.exists(wh._snapshot_dir("t", 2))
+    assert dict(wh.read("t").dtypes)["price"] == "bigint"
+    # with every bucket empty the record still gives the columns
+    wh.overwrite("t", _rows(spark, 0))
+    assert wh.read("t").dtypes == _rows(spark, 0).dtypes
+    assert wh.read("t").count() == 0
+
+
+def test_metadata_written_before_json_encoding_still_reads(spark, tmp_path):
+    """Pointers and floors were bare integers and manifests carried a
+    ``schema`` field; such files still read, commit and roll back, and
+    the pointer the writer leaves is still the bare integer."""
+    import json
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.append_delta("log", _rows(spark, 2))
+    wh.append_delta("log", _rows(spark, 3, start=2))
+    wh.compact_deltas("log", upto=1)
+    wh.ensure_bucketed("b", key="url", n_buckets=4)
+    wh.merge_upsert("b", _rows(spark, 8), key="url", schema=_schema(spark))
+    tdir = tmp_path / "wh"
+    (tdir / "log" / "_current").write_text("2\n")
+    (tdir / "log" / "_compaction").write_text("1")
+    (tdir / "b" / "_current").write_text("1")
+    (tdir / "b" / "_vacuum_floor").write_text("1")
+    manifest = tdir / "b" / "v000001" / "_manifest.json"
+    doc = json.loads(manifest.read_text())
+    manifest.write_text(json.dumps({**doc, "schema": _schema(spark).json()}))
+
+    assert (wh.current_version("log"), wh.compaction_floor("log")) == (2, 1)
+    assert wh.read_deltas("log").count() == 5
+    assert wh.append_delta("log", _rows(spark, 1, start=5)) == 3
+    wh.rollback("log", 2)
+    assert wh.read_deltas("log").count() == 5
+    assert wh.vacuum_floor("b") == 1
+    assert wh.read("b").count() == 8
+    assert wh.merge_upsert("b", _rows(spark, 2, start=8), key="url",
+                           schema=_schema(spark)) == 2
+    assert wh.read("b").count() == 10
+    wh.rollback("b", 1)
+    assert wh.read("b").count() == 8
+    assert (tdir / "log" / "_current").read_bytes() == b"2"
+    assert (tdir / "b" / "_current").read_bytes() == b"1"
+
+
 def test_table_without_schema_record_reads_by_inference(spark, tmp_path):
     """Warehouses written before the record existed, and tables only
     ever written by append_delta_files, keep footer inference."""
