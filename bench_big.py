@@ -278,14 +278,6 @@ def vectors_leg(spark, src_dir: str) -> dict:
         )
         sem_sec = round(time.perf_counter() - t0, 2)
         t0 = time.perf_counter()
-        n_dropped_coarse = (
-            semdedup(corpus, threshold=0.9, n_centroids=n_cents,
-                     assignment="coarse")
-            .filter(~F.col("kept"))
-            .count()
-        )
-        sem_coarse_sec = round(time.perf_counter() - t0, 2)
-        t0 = time.perf_counter()
         pq_rows = pq_topk(corpus, queries, k=5).count()
         pq_sec = round(time.perf_counter() - t0, 2)
         corpus.unpersist()
@@ -295,8 +287,6 @@ def vectors_leg(spark, src_dir: str) -> dict:
             "kmeans_train_sec": kmeans_sec,
             "semdedup_sec": sem_sec,
             "semdedup_dropped": int(n_dropped),
-            "semdedup_coarse_sec": sem_coarse_sec,
-            "semdedup_coarse_dropped": int(n_dropped_coarse),
             "ann_pq_sec": pq_sec,
             "ann_pq_rows": int(pq_rows),
         }

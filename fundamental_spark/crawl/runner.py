@@ -330,14 +330,16 @@ class CrawlRunner:
         # url_seen rows carry the domain_shard they were keyed under: a
         # different n_shards makes the per-shard seen filter call every
         # candidate new, re-fetching pages and duplicating url_seen rows.
-        # Checkpoints written before the field existed load as before.
-        ckpt_shards = state.get("n_shards", self.n_shards)
-        if ckpt_shards != self.n_shards:
-            raise ValueError(
-                f"checkpoint in {self.warehouse_root} was written with "
-                f"n_shards={ckpt_shards}; resuming with n_shards="
-                f"{self.n_shards} would re-fetch already-seen pages"
-            )
+        # spider_type sets the stop rule the recorded per-city no-new
+        # counters were kept under (stop_rules). Checkpoints written
+        # before a field existed load as before.
+        for key in ("n_shards", "spider_type"):
+            recorded, current = state.get(key, getattr(self, key)), getattr(self, key)
+            if recorded != current:
+                raise ValueError(
+                    f"checkpoint in {self.warehouse_root} was written with "
+                    f"{key}={recorded!r}; refusing to resume with {key}={current!r}"
+                )
         self.wave = state["wave"]
         self._next_nonempty = None
         self.seen_count = state.get("seen_count", 0)

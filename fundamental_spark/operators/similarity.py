@@ -15,6 +15,18 @@
   blocked GEMM, banded hyperplane LSH, and the threshold-driven
   dispatcher between them. The O(n²) crossJoin reference they are
   checked against lives in tests/test_similarity.py.
+- ``gemm_topk`` / ``ivf_topk`` / ``pq_topk`` / ``ivfpq_topk``: the
+  exact GEMM, IVF-cell, PQ-ADC and composed IVF+PQ top-k, and
+  ``semdedup`` (k-means cells, in-cell greedy drop).
+
+Every top-k operator ends in one shared core: ``_topk_by_cos`` (the
+rank window, cos DESC / neighbor_id ASC, cos rounded to 4 dp after
+the cut), ``_adc_rerank`` + ``_lut`` (the PQ ADC scan and exact
+re-rank), and ``_pin9`` (the 1e-9 half-away grid every BLAS-side
+compare is pinned to, mirrored by the oracles' ROUND(.., 9)). Cell
+assignment and PQ encoding run as GEMM over Arrow batches
+(``assign_cells_gemm`` / ``assign_pq_codes_gemm``); their interpreted
+JVM-fold twins are test references in tests/test_similarity.py.
 """
 
 from __future__ import annotations
@@ -80,6 +92,35 @@ def _sql_to_double(vec_sql: str) -> str:
     return f"transform({vec_sql}, x -> CAST(x AS DOUBLE))"
 
 
+# ---- the shared ANN core ----------------------------------------------------
+
+
+def _pin9(a):
+    """Pin a numpy array to the 1e-9 grid, rounding half AWAY from zero.
+
+    The cross-engine contract of every BLAS-side compare: the DuckDB
+    oracles mirror it with ``ROUND(.., 9)``, which rounds half away;
+    ``np.round`` rounds half to even and disagrees exactly at grid
+    boundaries. BLAS pairwise and the oracle's sequential fold differ
+    by ~1e-15, far below the grid."""
+    import numpy as np
+
+    return np.sign(a) * np.floor(np.abs(a) * 1e9 + 0.5) / 1e9
+
+
+def _topk_by_cos(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, neighbor_id, cos) from (query_id, neighbor_id,
+    cos) rows: the top ``k`` per query by raw cosine DESC, neighbor_id
+    ASC on ties, with the cosine rounded to 4 dp only after the cut —
+    the tail every top-k operator and its DuckDB twin share."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", F.round("cos", 4).alias("cos"))
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -106,12 +147,7 @@ def brute_force_topk(
             cosine(F.col("qv"), F.col("cv")).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", 4).alias("cos"))
-    )
+    return _topk_by_cos(scored, k)
 
 
 def gemm_topk(
@@ -172,13 +208,7 @@ def gemm_topk(
                     }
                 )
 
-    partial = spread(corpus).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", 4).alias("cos"))
-    )
+    return _topk_by_cos(spread(corpus).mapInPandas(score, out_schema), k)
 
 
 _PLANE_SEED = 0x2545F4914F6CDD1D
@@ -263,12 +293,7 @@ def lsh_topk(
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", 4).alias("cos"))
-    )
+    return _topk_by_cos(scored, k)
 
 
 def _unit(vec: list[float]) -> list[float]:
@@ -285,24 +310,6 @@ def _unit(vec: list[float]) -> list[float]:
     return [round(x / n, 9) for x in vec]
 
 
-def _nearest_cells_col(
-    cents_normed: list[list[float]], vec_name: str, n: int
-) -> Column:
-    """Array of the n nearest centroid indices, computed JVM-side.
-    Centroids are unit-normalized, so cosine argmax reduces to a dot
-    product (the per-vector norm divides every score equally).
-    ``vec_name`` is the input COLUMN NAME — the n_centroids×dim
-    literal matrix is rendered as one SQL string (see _sql_dot)."""
-    vd = _sql_to_double(f"`{vec_name}`")
-    scored = "array(" + ", ".join(
-        f"named_struct('s', {_sql_dot(vd, cvec)}, 'c', {i})"
-        for i, cvec in enumerate(cents_normed)
-    ) + ")"
-    return F.expr(
-        f"transform(slice(reverse(array_sort({scored})), 1, {n}), t -> t.c)"
-    )
-
-
 def assign_cells_gemm(
     df: DataFrame,
     cents_normed: list[list[float]],
@@ -313,16 +320,16 @@ def assign_cells_gemm(
     """Append ``out_col`` = the n nearest centroid indices — the
     O(n·k·d) GEMM scale path for cell assignment.
 
-    Same selection contract as ``_nearest_cells_col`` (top-n by dot
-    DESC, cell index DESC on ties — stable ascending argsort reversed),
+    Same selection contract as the JVM-fold twin in
+    tests/test_similarity.py (top-n by dot DESC, cell index DESC on
+    ties — stable ascending argsort reversed),
     but the k dots per vector are ONE BLAS matmul per Arrow batch
     instead of k interpreted JVM fold expressions per row: at 500k
     vectors × 320 centroids (the bench_big vectors leg) the fold form
     spent ~200 s in Lloyd assignment alone, the GEMM form runs the
     same assignment in seconds, and at SemDeDup's deployment sizing
     (110k clusters) the fold form is simply not runnable. Dots are
-    pinned to the 1e-9 grid (half-away rounding — the F.round/DuckDB
-    ROUND twin already used for centroid means) BEFORE the compare, so
+    pinned to the 1e-9 grid (``_pin9``) BEFORE the compare, so
     the argmax is engine-independent despite BLAS pairwise vs
     sequential-fold summation (~1e-15 apart); the DuckDB oracles
     mirror the pin with ROUND(list_dot_product(..), 9)."""
@@ -344,133 +351,9 @@ def assign_cells_gemm(
                 yield pdf
                 continue
             mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            s = mat @ C.T
-            s = np.sign(s) * np.floor(np.abs(s) * 1e9 + 0.5) / 1e9
+            s = _pin9(mat @ C.T)
             order = np.argsort(s, axis=1, kind="stable")[:, ::-1][:, :n]
             pdf[out_col] = [row.astype("int32").tolist() for row in order]
-            yield pdf
-
-    return df.mapInPandas(gen, schema)
-
-
-def assign_cells_coarse(
-    df: DataFrame,
-    cents_normed: list[list[float]],
-    n: int,
-    vec_col: str,
-    out_col: str = "cells",
-    n_probe_groups: int = 3,
-    n_groups: int | None = None,
-) -> DataFrame:
-    """APPROXIMATE two-level cell assignment — the coarse-quantizer
-    trick FAISS uses when the cell count reaches deployment sizing
-    (SemDeDup's 110k clusters): even a single GEMM against all k
-    centroids is n·k·d flops, and at 10^10 docs × 10^5 cells that is
-    the dominant cost of the whole dedup. Here the k centroids are
-    grouped DRIVER-side into ~√k coarse groups (numpy k-means over the
-    centroids themselves — k is small, this costs nothing at scale);
-    each batch row scores the √k group representatives, keeps its
-    ``n_probe_groups`` best groups, and runs the exact pinned argmax
-    only against those groups' member centroids — ~(n_probe_groups/√k)
-    of the full GEMM's flops.
-
-    DEVIATION CONTRACT (why this is not on the oracle surface): the
-    result differs from ``assign_cells_gemm`` exactly when a vector's
-    true nearest cell lives in a group outside its top
-    ``n_probe_groups`` — a boundary-vector miss, the standard
-    coarse-quantizer recall trade. Per-cell keys, the 1e-9 pin, and
-    the (dot DESC, cell DESC) tie rule are identical to the exact
-    form, so agreement is deterministic and measured (sf0.01 embeddings,
-    32 cells / 5 groups: top-1 agreement 0.874 / 0.946 / 0.99 at
-    n_probe_groups 2 / 3 / 4 — test pins ≥0.9 at the default 3; at
-    deployment sizing the probed fraction p/√k is far smaller, so
-    tune n_probe_groups against a measured agreement sample). Use the
-    exact form for oracle-checked queries; use this one when k·d makes
-    the exact form the bottleneck."""
-    import math as _math
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
-
-    C = np.array(cents_normed, dtype=np.float64)
-    k = len(C)
-    g = n_groups if n_groups is not None else max(1, int(_math.isqrt(k)))
-    g = min(g, k)
-    # deterministic numpy k-means over the CENTROIDS (seed = first g,
-    # 3 Lloyd rounds, same pin + tie rules as the distributed form)
-    reps = C[:g].copy()
-    for _ in range(3):
-        s = C @ reps.T
-        s = np.sign(s) * np.floor(np.abs(s) * 1e9 + 0.5) / 1e9
-        assign = np.argsort(s, axis=1, kind="stable")[:, ::-1][:, 0]
-        for j in range(g):
-            members = C[assign == j]
-            if len(members):
-                m = members.mean(axis=0)
-                m = np.sign(m) * np.floor(np.abs(m) * 1e9 + 0.5) / 1e9
-                nrm = np.sqrt((m * m).sum()) or 1.0
-                reps[j] = m / nrm
-    s = C @ reps.T
-    s = np.sign(s) * np.floor(np.abs(s) * 1e9 + 0.5) / 1e9
-    group_of = np.argsort(s, axis=1, kind="stable")[:, ::-1][:, 0]
-    members_idx = [np.nonzero(group_of == j)[0] for j in range(g)]
-    # round-6 advice #4: empty groups keep stale reps and could be
-    # ranked into a row's top-p probe set — in the worst case ALL of a
-    # row's probed groups are empty and the cells array comes out
-    # empty, silently parking the row in a null cell downstream.
-    # Restrict the probe ranking to groups that actually have member
-    # centroids; every row then always scores >= 1 real centroid.
-    nonempty = [j for j in range(g) if len(members_idx[j])]
-    reps = reps[nonempty]
-    members_idx = [members_idx[j] for j in nonempty]
-    g = len(nonempty)
-    p = min(n_probe_groups, g)
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, ArrayType(IntegerType()))]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            if len(pdf) == 0:
-                pdf[out_col] = pd.Series([], dtype=object)
-                yield pdf
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            b = len(mat)
-            sg = mat @ reps.T
-            sg = np.sign(sg) * np.floor(np.abs(sg) * 1e9 + 0.5) / 1e9
-            top_groups = np.argsort(sg, axis=1, kind="stable")[:, ::-1][:, :p]
-            # per candidate group: one GEMM over the rows probing it,
-            # merged into per-row (key, cell) pools — rows only ever
-            # score member centroids of their own top-p groups
-            pool_keys = np.full((b, 0), -np.inf)
-            pool_cells = np.full((b, 0), -1, dtype=np.int64)
-            for j in range(g):
-                rows = np.nonzero((top_groups == j).any(axis=1))[0]
-                mem = members_idx[j]
-                if not len(rows) or not len(mem):
-                    continue
-                sj = mat[rows] @ C[mem].T
-                sj = np.sign(sj) * np.floor(np.abs(sj) * 1e9 + 0.5) / 1e9
-                w = sj.shape[1]
-                keys = np.full((b, w), -np.inf)
-                cells = np.full((b, w), -1, dtype=np.int64)
-                keys[rows] = sj
-                cells[rows] = mem
-                pool_keys = np.concatenate([pool_keys, keys], axis=1)
-                pool_cells = np.concatenate([pool_cells, cells], axis=1)
-            # top-n by (key DESC, cell DESC) from each row's pool
-            out = []
-            for i in range(b):
-                ki, ci = pool_keys[i], pool_cells[i]
-                valid = ci >= 0
-                ki, ci = ki[valid], ci[valid]
-                order = np.lexsort((ci, ki))[::-1][:n]
-                out.append(ci[order].astype("int32").tolist())
-            pdf[out_col] = out
             yield pdf
 
     return df.mapInPandas(gen, schema)
@@ -589,12 +472,7 @@ def ivf_topk(
             "query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("cos")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", 4).alias("cos"))
-    )
+    return _topk_by_cos(scored, k)
 
 
 def embedding_near_dup_lsh_pairs(
@@ -884,7 +762,6 @@ def semdedup(
     kmeans_iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assignment: str = "exact",
 ) -> DataFrame:
     """SemDeDup semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
     k-means-cluster the embeddings, then WITHIN each cluster drop every
@@ -901,7 +778,8 @@ def semdedup(
 
     Spark plan: deterministic spherical k-means (``kmeans_centroids`` —
     the same centroid machinery the ann_ivf DuckDB oracle re-derives as
-    unrolled CTE rounds), JVM-side argmax cell assignment, then ONE
+    unrolled CTE rounds), the pinned GEMM argmax cell assignment
+    (``assign_cells_gemm``, as in ``ivf_topk``), then ONE
     exchange grouping each cell's vectors into an Arrow batch where a
     single float64 matmul scores all of the cell's pairs and a
     column-wise any() marks the dropped ids (applyInPandas; no pair
@@ -910,17 +788,10 @@ def semdedup(
     clusters for LAION-scale corpora); a skewed giant cell concentrates
     its n_c² matmul in one task — raise n_centroids or pre-split hot
     cells with the block-pair trick of ``embedding_near_dup_gemm``
-    before shipping a cluster-scale run. ``assignment='coarse'``
-    switches the final cell assignment to the two-level coarse
-    quantizer (``assign_cells_coarse`` — ~p/√k of the GEMM flops, the
-    110k-cluster deployment shape); approximate by that function's
-    documented contract, so the oracle-checked query stays on
-    'exact'."""
+    before shipping a cluster-scale run."""
     import numpy as np
     import pandas as pd
 
-    if assignment not in ("exact", "coarse"):
-        raise ValueError(f"assignment must be 'exact' or 'coarse', got {assignment!r}")
     sess = corpus.sparkSession
     id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"id {id_type}, cell int, kept boolean"
@@ -930,8 +801,7 @@ def semdedup(
     )
     if not cents:
         return sess.createDataFrame([], out_schema)
-    assign_fn = assign_cells_gemm if assignment == "exact" else assign_cells_coarse
-    assigned = assign_fn(
+    assigned = assign_cells_gemm(
         spread(corpus).select(
             F.col(id_col).alias("id"), _to_double(F.col(vec_col)).alias("v")
         ),
@@ -946,14 +816,9 @@ def semdedup(
         mat /= nrm
         sims = mat @ mat.T
         # dropped[j] ⇔ ∃ i<j with cos(i,j) ≥ θ; ids are sorted, so
-        # "earlier id" is exactly the strict upper triangle. The cosine
-        # is pinned to the 1e-9 HALF-AWAY grid before the compare (the
-        # same form as assign_cells_gemm — np.round is half-EVEN and
-        # would disagree with the oracle's ROUND exactly at grid
-        # boundaries); BLAS pairwise summation and the oracle's
-        # sequential list_cosine_similarity fold differ by ~1e-15.
-        pinned = np.sign(sims) * np.floor(np.abs(sims) * 1e9 + 0.5) / 1e9
-        hot = pinned >= threshold
+        # "earlier id" is exactly the strict upper triangle; the cosine
+        # is pinned before the compare, like the oracle's ROUND(.., 9).
+        hot = _pin9(sims) >= threshold
         hot[np.tril_indices(len(pdf))] = False
         dropped = hot.any(axis=0)
         return pd.DataFrame(
@@ -991,36 +856,6 @@ def _unit_vec(vec: Column) -> Column:
     return F.transform(vd, lambda x: x / F.sqrt(dot(vd, vd)))
 
 
-def _pq_dist_key_sql(u_sql: str, s: int, dsub: int, cvec: list[float]) -> str:
-    """Monotone L2 key for subspace ``s``: ‖u_s − c‖² minus the
-    centroid-independent ‖u_s‖² term — i.e. −2⟨u_s,c⟩ + ‖c‖², with
-    ‖c‖² computed by the same sequential fold on both engines.
-    Rendered as SQL text (see _sql_dot rationale)."""
-    sub = f"slice({u_sql}, {s * dsub + 1}, {dsub})"
-    c2 = 0.0
-    for c in cvec:
-        c2 = c2 + float(c) * float(c)
-    return f"CAST(-2.0 AS DOUBLE) * ({_sql_dot(sub, cvec)}) + {_dlit(c2)}"
-
-
-def _pq_argmin_code(
-    u_name: str, s: int, dsub: int, cents_s: list[list[float]]
-) -> Column:
-    """Nearest-centroid code for subspace ``s``: ascending struct-array
-    sort on (distance key, index) — ties take the smaller index,
-    mirrored by the oracle's ORDER BY key ASC, c ASC. ``u_name`` is the
-    unit-vector COLUMN NAME; the ksub×dsub literal block renders as one
-    SQL string. Kept as the JVM-fold twin of ``assign_pq_codes_gemm``
-    (tests pin their agreement); production encoding goes through the
-    GEMM form."""
-    u_sql = f"`{u_name}`"
-    scored = "array(" + ", ".join(
-        f"named_struct('d', {_pq_dist_key_sql(u_sql, s, dsub, cvec)}, 'c', {j})"
-        for j, cvec in enumerate(cents_s)
-    ) + ")"
-    return F.expr(f"array_sort({scored})[0].c")
-
-
 def _pq_np_setup(codebooks: list[list[list[float]]]):
     """(m, dsub, centroid matrices, sequential-fold ‖c‖² rows) — the
     shared numpy view of a PQ codebook set."""
@@ -1050,8 +885,7 @@ def _pq_codes_np(mat, cs, c2s, dsub: int):
     out = []
     for s in range(len(cs)):
         key = -2.0 * (mat[:, s * dsub:(s + 1) * dsub] @ cs[s].T) + c2s[s]
-        key = np.sign(key) * np.floor(np.abs(key) * 1e9 + 0.5) / 1e9
-        out.append(np.argmin(key, axis=1))
+        out.append(np.argmin(_pin9(key), axis=1))
     return out
 
 
@@ -1124,11 +958,11 @@ def assign_pq_codes_gemm(
     n·m·ksub·dsub multiplies however it's computed, and the fold form
     made it the dominant term of ann_pq at 500k vectors).
 
-    Distance key and tie rule match ``_pq_argmin_code`` exactly:
+    Distance key and tie rule match the JVM-fold twin in
+    tests/test_similarity.py exactly:
     −2⟨u_s,c⟩ + ‖c‖² with ‖c‖² accumulated SEQUENTIALLY in Python
-    (bit-identical to both engines' fold), the key pinned to the 1e-9
-    half-away grid before the argmin (the oracle mirrors with
-    ROUND(.., 9)), ties → smaller code index (np.argmin's first-hit
+    (bit-identical to both engines' fold), the key pinned by ``_pin9``
+    before the argmin (the oracle mirrors with ROUND(.., 9)), ties → smaller code index (np.argmin's first-hit
     rule). ``normalize=True`` unit-normalizes inside the batch
     (``_np_unit``), letting callers pass the raw embedding and skip
     the interpreted JVM ``_unit_vec`` pass AND the 2× Arrow width of a
@@ -1232,6 +1066,57 @@ def pq_codebooks(
     return cents
 
 
+def _lut(cb: list[list[list[float]]]) -> Column:
+    """Per-query ADC lookup table over the unit query column ``qu``:
+    the flat array lut[s*ksub + j] = ⟨q_s, c_{s,j}⟩, one SQL expression
+    (see _sql_dot)."""
+    dsub = len(cb[0][0])
+    return F.expr("array(" + ", ".join(
+        _sql_dot(f"slice(`qu`, {s * dsub + 1}, {dsub})", cvec)
+        for s, cents_s in enumerate(cb)
+        for cvec in cents_s
+    ) + ")")
+
+
+def _adc_rerank(
+    pairs: DataFrame,
+    corpus: DataFrame,
+    cb: list[list[list[float]]],
+    k: int,
+    rerank: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """ADC scan + exact re-rank, shared by ``pq_topk`` and
+    ``ivfpq_topk``: ``pairs`` holds the (query, doc) rows that meet
+    (query_id, neighbor_id, qv_raw, lut, code_0..code_{m-1}); each ADC
+    score is m LUT lookups summed left to right, the top ``rerank`` per
+    query by (score DESC, neighbor_id ASC) join back their raw vectors,
+    and ``_topk_by_cos`` ranks them by exact cosine."""
+    ksub = len(cb[0])
+    score = None
+    for s in range(len(cb)):
+        term = F.element_at(
+            F.col("lut"), F.lit(s * ksub) + F.col(f"code_{s}") + 1
+        )
+        score = term if score is None else score + term
+    aw = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    cand = (
+        pairs.select("query_id", "neighbor_id", "qv_raw", score.alias("score"))
+        .withColumn("arank", F.row_number().over(aw))
+        .filter(F.col("arank") <= rerank)
+    )
+    nvec = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv_raw")
+    )
+    scored = cand.join(nvec, "neighbor_id").select(
+        "query_id",
+        "neighbor_id",
+        cosine(F.col("qv_raw"), F.col("cv_raw")).alias("cos"),
+    )
+    return _topk_by_cos(scored, k)
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1265,7 +1150,6 @@ def pq_topk(
     cb = pq_codebooks(
         corpus, m=m, ksub=ksub, n_iters=n_iters, id_col=id_col, vec_col=vec_col
     )
-    dsub = len(cb[0][0])
     # the ADC scan reads ONLY the code columns — the raw vector never
     # rides through the n×q join (that would undo the 32× compression);
     # re-rank joins it back for just q·rerank candidate rows
@@ -1275,50 +1159,13 @@ def pq_topk(
         ),
         cb, "rv", normalize=True,
     ).drop("rv")
-    # per-query LUT: flat array lut[s*ksub + j] = ⟨q_s, c_{s,j}⟩
-    qu = queries.select(
+    qlut = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv_raw"),
         _unit_vec(F.col(vec_col)).alias("qu"),
-    )
-    lut_sql = "array(" + ", ".join(
-        _sql_dot(f"slice(`qu`, {s * dsub + 1}, {dsub})", cb[s][j])
-        for s in range(m)
-        for j in range(ksub)
-    ) + ")"
-    qlut = qu.select(
-        "query_id",
-        "qv_raw",
-        F.expr(lut_sql).alias("lut"),
-    )
-    score = None
-    for s in range(m):
-        term = F.element_at(
-            F.col("lut"), F.lit(s * ksub) + F.col(f"code_{s}") + 1
-        )
-        score = term if score is None else score + term
-    adc = codes.join(
-        F.broadcast(qlut), F.col("neighbor_id") != F.col("query_id")
-    ).select("query_id", "neighbor_id", "qv_raw", score.alias("score"))
-    aw = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    cand = adc.withColumn("arank", F.row_number().over(aw)).filter(
-        F.col("arank") <= rerank
-    )
-    nvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv_raw")
-    )
-    rw = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cand.join(nvec, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qv_raw"), F.col("cv_raw")).alias("cos"),
-        )
-        .withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", 4).alias("cos"))
-    )
+    ).select("query_id", "qv_raw", _lut(cb).alias("lut"))
+    pairs = codes.join(F.broadcast(qlut), F.col("neighbor_id") != F.col("query_id"))
+    return _adc_rerank(pairs, corpus, cb, k, rerank, id_col, vec_col)
 
 
 def ivfpq_topk(
@@ -1361,7 +1208,6 @@ def ivfpq_topk(
     cb = pq_codebooks(
         corpus, m=m, ksub=ksub, n_iters=pq_iters, id_col=id_col, vec_col=vec_col
     )
-    dsub = len(cb[0][0])
     cu = assign_cells_gemm(
         spread(corpus).select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("rv")
@@ -1375,59 +1221,25 @@ def ivfpq_topk(
         F.explode("cells").alias("cell"),
         *[f"code_{s}" for s in range(m)],
     )
-    qu = assign_cells_gemm(
+    qlut = assign_cells_gemm(
         queries.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qv_raw"),
             _unit_vec(F.col(vec_col)).alias("qu"),
         ),
         cents, n_probe, "qv_raw",
-    ).withColumnRenamed("cells", "qcells")
-    lut_sql = "array(" + ", ".join(
-        _sql_dot(f"slice(`qu`, {s * dsub + 1}, {dsub})", cb[s][j])
-        for s in range(m)
-        for j in range(ksub)
-    ) + ")"
-    qlut = qu.select(
-        "query_id",
-        "qv_raw",
-        F.expr(lut_sql).alias("lut"),
-        F.explode("qcells").alias("cell"),
+    ).withColumnRenamed("cells", "qcells").select(
+        "query_id", "qv_raw", _lut(cb).alias("lut"), F.explode("qcells").alias("cell")
     )
-    score = None
-    for s in range(m):
-        term = F.element_at(
-            F.col("lut"), F.lit(s * ksub) + F.col(f"code_{s}") + 1
-        )
-        score = term if score is None else score + term
     # a pair can meet through several shared cells under
     # multi-assignment — its code/LUT values are identical on every
     # meeting, so dedup before scoring is value-deterministic
-    adc = (
+    pairs = (
         codes.join(F.broadcast(qlut), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
-        .select("query_id", "neighbor_id", "qv_raw", score.alias("score"))
     )
-    aw = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    cand = adc.withColumn("arank", F.row_number().over(aw)).filter(
-        F.col("arank") <= rerank
-    )
-    nvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv_raw")
-    )
-    rw = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cand.join(nvec, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qv_raw"), F.col("cv_raw")).alias("cos"),
-        )
-        .withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", 4).alias("cos"))
-    )
+    return _adc_rerank(pairs, corpus, cb, k, rerank, id_col, vec_col)
 
 
 def embedding_outliers(

@@ -35,6 +35,7 @@ the 100 TB pipeline needs (driver instruction; not in the reference).
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,7 +76,9 @@ from .operators.similarity import (
     embedding_near_dup_lsh_pairs,
     gemm_topk,
     ivf_topk,
+    ivfpq_topk,
     lsh_topk,
+    pq_topk,
     semdedup,
 )
 
@@ -1319,11 +1322,31 @@ def ann_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
 
 
-@q(
-    "ann_lsh_recall",
-    _lsh_cte()
-    + """,
-    lsh AS (SELECT query_id, neighbor_id FROM lsh_ranked WHERE rank <= 5),
+def _recall_at_5(
+    spark: SparkSession, sf_dir: str, approx_topk: Callable[..., DataFrame]
+) -> DataFrame:
+    """(n_exact, n_hit, recall_at_5) of ``approx_topk(corpus, queries,
+    k=5)`` against the exact brute-force top-5, for the queries
+    vec_id < 10 — the Spark side of every ``ann_*_recall`` query."""
+    emb = T(spark, sf_dir, "embeddings")
+    queries_df = emb.filter(F.col("vec_id") < 10)
+    exact = brute_force_topk(emb, queries_df, k=5).select("query_id", "neighbor_id")
+    approx = approx_topk(emb, queries_df, k=5).select("query_id", "neighbor_id")
+    hit = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
+    return exact.agg(F.count("*").alias("n_exact")).crossJoin(
+        hit.agg(F.count("*").alias("n_hit"))
+    ).select(
+        "n_exact",
+        "n_hit",
+        F.round(F.col("n_hit") / F.col("n_exact"), 4).alias("recall_at_5"),
+    )
+
+
+def _recall_sql(cte: str, approx: str, ranked: str) -> str:
+    """DuckDB twin of ``_recall_at_5``: ``cte`` ends in the ``ranked``
+    CTE of the approximate path, whose top-5 becomes ``approx``."""
+    return cte + f""",
+    {approx} AS (SELECT query_id, neighbor_id FROM {ranked} WHERE rank <= 5),
     bf_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                          list_cosine_similarity(q.v, c.v) AS cos_raw
                   FROM e q JOIN e c ON q.vec_id <> c.vec_id
@@ -1336,27 +1359,21 @@ def ann_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
            WHERE rank <= 5),
     stats AS (SELECT (SELECT COUNT(*) FROM bf) AS n_exact,
                      (SELECT COUNT(*) FROM bf
-                      JOIN lsh USING (query_id, neighbor_id)) AS n_hit)
+                      JOIN {approx} USING (query_id, neighbor_id)) AS n_hit)
     SELECT n_exact, n_hit, ROUND(n_hit / n_exact, 4) AS recall_at_5 FROM stats
-    """,
+    """
+
+
+@q(
+    "ann_lsh_recall",
+    _recall_sql(_lsh_cte(), "lsh", "lsh_ranked"),
 )
 def ann_lsh_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantitative check for the approximate path: recall@5 of the
     hyperplane-LSH top-k against the exact brute-force top-k — now with
     a full DuckDB twin (both the LSH candidate set and the brute-force
     reference are recomputed in SQL from the same plane constants)."""
-    emb = T(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, queries_df, k=5).select("query_id", "neighbor_id")
-    approx = lsh_topk(emb, queries_df, k=5).select("query_id", "neighbor_id")
-    hit = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
-    return exact.agg(F.count("*").alias("n_exact")).crossJoin(
-        hit.agg(F.count("*").alias("n_hit"))
-    ).select(
-        "n_exact",
-        "n_hit",
-        F.round(F.col("n_hit") / F.col("n_exact"), 4).alias("recall_at_5"),
-    )
+    return _recall_at_5(spark, sf_dir, lsh_topk)
 
 
 @q(
@@ -1567,42 +1584,14 @@ def ann_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "ann_ivf_recall",
-    _ivf_cte()
-    + """,
-    ivf AS (SELECT query_id, neighbor_id FROM ivf_ranked WHERE rank <= 5),
-    bf_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                         list_cosine_similarity(q.v, c.v) AS cos_raw
-                  FROM e q JOIN e c ON q.vec_id <> c.vec_id
-                  WHERE q.vec_id < 10),
-    bf AS (SELECT query_id, neighbor_id
-           FROM (SELECT query_id, neighbor_id,
-                        ROW_NUMBER() OVER (PARTITION BY query_id
-                                           ORDER BY cos_raw DESC, neighbor_id) AS rank
-                 FROM bf_scored)
-           WHERE rank <= 5),
-    stats AS (SELECT (SELECT COUNT(*) FROM bf) AS n_exact,
-                     (SELECT COUNT(*) FROM bf
-                      JOIN ivf USING (query_id, neighbor_id)) AS n_hit)
-    SELECT n_exact, n_hit, ROUND(n_hit / n_exact, 4) AS recall_at_5 FROM stats
-    """,
+    _recall_sql(_ivf_cte(), "ivf", "ivf_ranked"),
 )
 def ann_ivf_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the IVF path vs exact brute force (the IVF scan
     prunes to ~n_probe*n_assign/n_centroids of the corpus — 4x pruning
     at the defaults; k-means cells + boundary spilling hold recall
     ≥0.95 there) — now with a full DuckDB twin recomputing both sides."""
-    emb = T(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, queries_df, k=5).select("query_id", "neighbor_id")
-    approx = ivf_topk(emb, queries_df, k=5).select("query_id", "neighbor_id")
-    hit = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
-    return exact.agg(F.count("*").alias("n_exact")).crossJoin(
-        hit.agg(F.count("*").alias("n_hit"))
-    ).select(
-        "n_exact",
-        "n_hit",
-        F.round(F.col("n_hit") / F.col("n_exact"), 4).alias("recall_at_5"),
-    )
+    return _recall_at_5(spark, sf_dir, ivf_topk)
 
 
 # PQ (product-quantization) ANN oracle: all vector arithmetic rides
@@ -1695,32 +1684,13 @@ def ann_pq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks (Lloyd rounds as CTEs), re-encodes the corpus, rebuilds
     the per-query ADC lookup tables, and reproduces both the ADC
     candidate cut and the exact-cosine re-rank bit-for-bit."""
-    from .operators.similarity import pq_topk
-
     emb = T(spark, sf_dir, "embeddings")
     return pq_topk(emb, emb.filter(F.col("vec_id") < 10), k=5, rerank=100)
 
 
 @q(
     "ann_pq_recall",
-    _pq_cte()
-    + """,
-    pq AS (SELECT query_id, neighbor_id FROM pq_ranked WHERE rank <= 5),
-    bf_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                         list_cosine_similarity(q.v, c.v) AS cos_raw
-                  FROM e q JOIN e c ON q.vec_id <> c.vec_id
-                  WHERE q.vec_id < 10),
-    bf AS (SELECT query_id, neighbor_id
-           FROM (SELECT query_id, neighbor_id,
-                        ROW_NUMBER() OVER (PARTITION BY query_id
-                                           ORDER BY cos_raw DESC, neighbor_id) AS rank
-                 FROM bf_scored)
-           WHERE rank <= 5),
-    stats AS (SELECT (SELECT COUNT(*) FROM bf) AS n_exact,
-                     (SELECT COUNT(*) FROM bf
-                      JOIN pq USING (query_id, neighbor_id)) AS n_hit)
-    SELECT n_exact, n_hit, ROUND(n_hit / n_exact, 4) AS recall_at_5 FROM stats
-    """,
+    _recall_sql(_pq_cte(), "pq", "pq_ranked"),
 )
 def ann_pq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the PQ+re-rank path vs exact brute force: the ADC
@@ -1729,22 +1699,7 @@ def ann_pq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank=100 on sf0.01 (ADC alone ranks near-ties poorly, ~0.32 —
     the re-rank stage is where FAISS-style PQ gets its quality, and
     this query keeps that trade measured rather than hidden)."""
-    from .operators.similarity import pq_topk
-
-    emb = T(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, queries_df, k=5).select("query_id", "neighbor_id")
-    approx = pq_topk(emb, queries_df, k=5, rerank=100).select(
-        "query_id", "neighbor_id"
-    )
-    hit = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
-    return exact.agg(F.count("*").alias("n_exact")).crossJoin(
-        hit.agg(F.count("*").alias("n_hit"))
-    ).select(
-        "n_exact",
-        "n_hit",
-        F.round(F.col("n_hit") / F.col("n_exact"), 4).alias("recall_at_5"),
-    )
+    return _recall_at_5(spark, sf_dir, partial(pq_topk, rerank=100))
 
 
 # IVF+PQ composed oracle (FAISS IVFADC): the _ivf_cents_cte rounds give
@@ -1856,54 +1811,20 @@ def ann_ivfpq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully oracle-checked — DuckDB re-derives BOTH deterministic
     trainings (Lloyd cell rounds + per-subspace codebook rounds), the
     cell-restricted ADC cut, and the exact re-rank."""
-    from .operators.similarity import ivfpq_topk
-
     emb = T(spark, sf_dir, "embeddings")
     return ivfpq_topk(emb, emb.filter(F.col("vec_id") < 10), k=5, rerank=50)
 
 
 @q(
     "ann_ivfpq_recall",
-    _ivfpq_cte()
-    + """,
-    ivfpq AS (SELECT query_id, neighbor_id FROM pq_ranked WHERE rank <= 5),
-    bf_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                         list_cosine_similarity(q.v, c.v) AS cos_raw
-                  FROM e q JOIN e c ON q.vec_id <> c.vec_id
-                  WHERE q.vec_id < 10),
-    bf AS (SELECT query_id, neighbor_id
-           FROM (SELECT query_id, neighbor_id,
-                        ROW_NUMBER() OVER (PARTITION BY query_id
-                                           ORDER BY cos_raw DESC, neighbor_id) AS rank
-                 FROM bf_scored)
-           WHERE rank <= 5),
-    stats AS (SELECT (SELECT COUNT(*) FROM bf) AS n_exact,
-                     (SELECT COUNT(*) FROM bf
-                      JOIN ivfpq USING (query_id, neighbor_id)) AS n_hit)
-    SELECT n_exact, n_hit, ROUND(n_hit / n_exact, 4) AS recall_at_5 FROM stats
-    """,
+    _recall_sql(_ivfpq_cte(), "ivfpq", "pq_ranked"),
 )
 def ann_ivfpq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the composed IVF+PQ path vs exact brute force — the
     number that shows what the DOUBLE approximation (cell pruning AND
     code compression) costs together, kept measured rather than hidden
     like its ann_ivf_recall / ann_pq_recall siblings."""
-    from .operators.similarity import ivfpq_topk
-
-    emb = T(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, queries_df, k=5).select("query_id", "neighbor_id")
-    approx = ivfpq_topk(emb, queries_df, k=5, rerank=50).select(
-        "query_id", "neighbor_id"
-    )
-    hit = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
-    return exact.agg(F.count("*").alias("n_exact")).crossJoin(
-        hit.agg(F.count("*").alias("n_hit"))
-    ).select(
-        "n_exact",
-        "n_hit",
-        F.round(F.col("n_hit") / F.col("n_exact"), 4).alias("recall_at_5"),
-    )
+    return _recall_at_5(spark, sf_dir, partial(ivfpq_topk, rerank=50))
 
 
 @q(

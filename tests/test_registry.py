@@ -8,7 +8,8 @@ Only ``session.py`` reads the environment: its settings are deployment
 settings, and nothing else in the library grows an env-var knob. No
 function in the library is over 150 lines. The crawl and lifecycle
 table schemas are defined in ``schemas.py`` alone. Driver metadata is
-written by ``Warehouse.write_meta`` alone.
+written by ``Warehouse.write_meta`` alone. The ANN operators share one
+1e-9 pin and one per-query rank window.
 """
 
 from __future__ import annotations
@@ -171,3 +172,50 @@ def test_metadata_has_one_atomic_writer():
                     if (rel, func) not in allowed
                 ]
     assert not writes, writes
+
+
+def _calls_by_function(node, func=None):
+    """(innermost enclosing function, call node) for each call."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        func = node.name
+    if isinstance(node, ast.Call):
+        yield func, node
+    for child in ast.iter_child_nodes(node):
+        yield from _calls_by_function(child, func)
+
+
+def test_ann_core_is_written_once():
+    """No ``np.floor`` under ``operators/`` outside ``similarity._pin9``
+    (the 1e-9 half-away pin the oracles' ROUND(.., 9) mirrors), and no
+    ``row_number`` window keyed on query_id in ``similarity.py`` outside
+    ``_topk_by_cos`` and ``_adc_rerank``."""
+    ops = os.path.join(PKG, "operators")
+    found = []
+    for dirpath, _, files in os.walk(ops):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, ops)
+            calls = list(_calls_by_function(ast.parse(open(path).read(), path)))
+            found += [
+                f"{rel}:{c.lineno} np.floor in {func}"
+                for func, c in calls
+                if isinstance(c.func, ast.Attribute) and c.func.attr == "floor"
+                and getattr(c.func.value, "id", None) == "np"
+                and (rel, func) != ("similarity.py", "_pin9")
+            ]
+            if rel != "similarity.py":
+                continue
+            keyed = {
+                func for func, c in calls
+                if getattr(c.func, "attr", None) == "partitionBy"
+                and any(isinstance(a, ast.Constant) and a.value == "query_id" for a in c.args)
+            }
+            found += [
+                f"{rel}:{c.lineno} query_id row_number in {func}"
+                for func, c in calls
+                if getattr(c.func, "attr", None) == "row_number"
+                and func in keyed and func not in ("_topk_by_cos", "_adc_rerank")
+            ]
+    assert not found, found

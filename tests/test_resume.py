@@ -23,8 +23,8 @@ def _mk_runner(spark, root, site, web=None, **kw):
     web = web if web is not None else spark.createDataFrame(
         web_rows(site), "url string, html string"
     )
-    return CrawlRunner(spark=spark, warehouse_root=str(root), web=web,
-                       spider_type="active", **kw)
+    kw.setdefault("spider_type", "active")
+    return CrawlRunner(spark=spark, warehouse_root=str(root), web=web, **kw)
 
 
 def _final_state(runner):
@@ -153,3 +153,24 @@ def test_resume_with_changed_n_shards_raises(spark, tmp_path):
     del state["n_shards"]
     ckpt.write_text(json.dumps(state))
     assert _mk_runner(spark, root, site, n_shards=7).wave == 0
+
+
+def test_resume_with_changed_spider_type_raises(spark, tmp_path):
+    """spider_type picks the stop rule (no-new threshold 3 for active, 1
+    for sold) the checkpointed per-city counters were kept under, so a
+    resume as another spider type must raise; a checkpoint written
+    before spider_type was recorded loads as before."""
+    site = build_site(seed=43, cities=("emmen",), listings_per_city=20, page_size=10)
+    root = tmp_path / "spider"
+    r = _mk_runner(spark, root, site)
+    r.init([(site.search_url("emmen", 1), "emmen")])
+    del r
+    with pytest.raises(ValueError, match="spider_type='active'"):
+        _mk_runner(spark, root, site, spider_type="sold")
+    assert _mk_runner(spark, root, site).wave == 0
+
+    ckpt = root / "checkpoint.json"
+    state = json.loads(ckpt.read_text())
+    del state["spider_type"]
+    ckpt.write_text(json.dumps(state))
+    assert _mk_runner(spark, root, site, spider_type="sold").wave == 0

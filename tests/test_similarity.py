@@ -10,6 +10,9 @@ from pyspark.sql import functions as F
 
 from fundamental_spark.operators.dedup import spread
 from fundamental_spark.operators.similarity import (
+    _dlit,
+    _sql_dot,
+    _sql_to_double,
     brute_force_topk,
     cosine,
     embedding_near_dup_gemm,
@@ -30,6 +33,51 @@ def embedding_near_dup_pairs(corpus, threshold=0.4, id_col="vec_id", vec_col="em
     return pairs.select(
         "id_a", "id_b", F.round(cos, 4).alias("cos")
     ).filter(F.col("cos") >= threshold)
+
+
+# ---- interpreted JVM-fold twins of the GEMM assignment paths ---------------
+#
+# Test references for assign_cells_gemm and assign_pq_codes_gemm: the
+# same selection rules as the library's BLAS forms, written as one SQL
+# fold expression per row (see similarity._sql_dot).
+
+
+def _nearest_cells_col(cents_normed, vec_name, n):
+    """Array of the n nearest centroid indices, computed JVM-side.
+    Centroids are unit-normalized, so cosine argmax reduces to a dot
+    product (the per-vector norm divides every score equally); ties
+    take the larger cell index."""
+    vd = _sql_to_double(f"`{vec_name}`")
+    scored = "array(" + ", ".join(
+        f"named_struct('s', {_sql_dot(vd, cvec)}, 'c', {i})"
+        for i, cvec in enumerate(cents_normed)
+    ) + ")"
+    return F.expr(
+        f"transform(slice(reverse(array_sort({scored})), 1, {n}), t -> t.c)"
+    )
+
+
+def _pq_dist_key_sql(u_sql, s, dsub, cvec):
+    """Monotone L2 key for subspace ``s``: ‖u_s − c‖² minus the
+    centroid-independent ‖u_s‖² term — i.e. −2⟨u_s,c⟩ + ‖c‖², with
+    ‖c‖² computed by the same sequential fold on both engines."""
+    sub = f"slice({u_sql}, {s * dsub + 1}, {dsub})"
+    c2 = 0.0
+    for c in cvec:
+        c2 = c2 + float(c) * float(c)
+    return f"CAST(-2.0 AS DOUBLE) * ({_sql_dot(sub, cvec)}) + {_dlit(c2)}"
+
+
+def _pq_argmin_code(u_name, s, dsub, cents_s):
+    """Nearest-centroid code for subspace ``s``: ascending struct-array
+    sort on (distance key, index) — ties take the smaller index,
+    mirrored by the oracle's ORDER BY key ASC, c ASC."""
+    u_sql = f"`{u_name}`"
+    scored = "array(" + ", ".join(
+        f"named_struct('d', {_pq_dist_key_sql(u_sql, s, dsub, cvec)}, 'c', {j})"
+        for j, cvec in enumerate(cents_s)
+    ) + ")"
+    return F.expr(f"array_sort({scored})[0].c")
 
 
 @pytest.fixture(scope="module")
@@ -300,11 +348,7 @@ def test_semdedup_greedy_rule_vs_numpy_reference(vectors, spark):
     earlier-id same-cell witness at >= threshold."""
     import numpy as np
 
-    from fundamental_spark.operators.similarity import (
-        _nearest_cells_col,
-        kmeans_centroids,
-        semdedup,
-    )
+    from fundamental_spark.operators.similarity import kmeans_centroids, semdedup
 
     emb, _ = vectors
     thr = 0.9
@@ -436,8 +480,6 @@ def test_gemm_assignment_agrees_with_jvm_fold_twins(spark):
     1e-9-pinned dots — agreement everywhere the corpus has no sub-1e-9
     argmax tie, which this sweep asserts on sf0.01's 500 vectors."""
     from fundamental_spark.operators.similarity import (
-        _nearest_cells_col,
-        _pq_argmin_code,
         _unit_vec,
         assign_cells_gemm,
         assign_pq_codes_gemm,
@@ -478,58 +520,19 @@ def test_gemm_assignment_agrees_with_jvm_fold_twins(spark):
     assert fold_codes == gemm_codes
 
 
-def test_coarse_assignment_exact_when_probing_all_groups(spark):
-    """Two-level coarse assignment: probing ALL groups must reproduce
-    assign_cells_gemm EXACTLY (same keys, pin, tie rule — the pools
-    then cover every centroid); at the default n_probe_groups=3 the
-    approximation must agree with the exact argmax on >=90% of the
-    sf0.01 embeddings (the coarse-quantizer recall trade; measured
-    0.946, with 0.874 at p=2 and 0.99 at p=4)."""
-    from fundamental_spark.operators.similarity import (
-        assign_cells_coarse,
-        assign_cells_gemm,
-        kmeans_centroids,
-    )
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    cents = kmeans_centroids(emb, n_centroids=32, n_iters=2)
-    base = emb.select("vec_id", "embedding")
-    exact = {
-        r["vec_id"]: tuple(r["cells"])
-        for r in assign_cells_gemm(base, cents, 2, "embedding").collect()
-    }
-    full_probe = {
-        r["vec_id"]: tuple(r["cells"])
-        for r in assign_cells_coarse(
-            base, cents, 2, "embedding", n_probe_groups=10 ** 6
-        ).collect()
-    }
-    assert full_probe == exact
-    approx = {
-        r["vec_id"]: tuple(r["cells"])
-        for r in assign_cells_coarse(base, cents, 2, "embedding").collect()
-    }
-    agree = sum(1 for k, v in exact.items() if approx[k][0] == v[0])
-    assert agree / len(exact) >= 0.9, agree / len(exact)
+def test_pin9_matches_duckdb_round_half_away():
+    """``_pin9`` is the cross-engine contract behind every pinned GEMM
+    compare: it must equal the oracles' DuckDB ``ROUND(x, 9)`` on grid
+    boundaries, where numpy's half-to-even ``np.round`` disagrees."""
+    import duckdb
+    import numpy as np
 
+    from fundamental_spark.operators.similarity import _pin9
 
-def test_semdedup_coarse_assignment_mode(vectors, spark):
-    """semdedup(assignment='coarse') runs the two-level quantizer end
-    to end: the planted twin (200 ~ 0) still shares a cell and drops
-    (near-identical vectors share coarse groups by construction), and
-    the kept/dropped partition stays internally consistent (every
-    dropped id has an earlier-id same-cell witness — re-checked by the
-    exact in-cell rule on the coarse cells)."""
-    from fundamental_spark.operators.similarity import semdedup
-
-    emb, _ = vectors
-    got = {r["id"]: (r["cell"], r["kept"]) for r in
-           semdedup(emb, threshold=0.9, n_centroids=4,
-                    assignment="coarse").collect()}
-    assert len(got) == emb.count()
-    assert got[200][0] == got[0][0]
-    assert got[0][1] and not got[200][1]
-    import pytest
-
-    with pytest.raises(ValueError):
-        semdedup(emb, assignment="nope")
+    vals = [2.5e-9, -2.5e-9, 5e-10, 0.1234567885, 3.0000000005]
+    con = duckdb.connect()
+    want = [con.execute("SELECT ROUND(?::DOUBLE, 9)", [v]).fetchone()[0] for v in vals]
+    assert _pin9(np.array(vals)).tolist() == want
+    assert _pin9(np.array([vals, vals])).tolist() == [want, want]  # batch shape
+    assert all(np.round(v, 9) != w for v, w in zip(vals, want))
