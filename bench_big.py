@@ -174,7 +174,7 @@ def bpe_leg(spark, src_dir: str, n_merges: int = 1000, batch: int = 32) -> dict:
     rounds may under-fill) and merges/sec."""
     from pyspark.sql import functions as F
 
-    from fundamental_spark.operators.pipeline import bpe_train, bpe_train_batched
+    from fundamental_spark.operators.pipeline import bpe_train
 
     # the sf0.1 table has only 31 distinct words (fully merged by ~90
     # rounds — data exhaustion, not an algorithm bound), so the leg
@@ -198,7 +198,7 @@ def bpe_leg(spark, src_dir: str, n_merges: int = 1000, batch: int = 32) -> dict:
     # cluster around common symbols, so disjoint yield per window is
     # limited) and an uncapped round budget — the loop stops when the
     # merge target is reached or the vocabulary is exhausted
-    merges = bpe_train_batched(
+    merges = bpe_train(
         docs, n_merges=n_merges, batch=batch,
         candidates_factor=16, max_rounds=n_merges,
     ).collect()

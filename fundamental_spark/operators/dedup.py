@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint
+from ..functions.text import fingerprint, tokens
 
 # MinHash position i is pmod(a_i*h + b_i, P31) with a_i < 2^30 and
 # h < 2^31: a*h < 2^61 fits int64 and the modulus wraps ~2^30 times, so
@@ -87,6 +87,17 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     return F.array_distinct(word_kgrams(text, n))
 
 
+def _doc_gram_counts(docs: DataFrame, grams: Column, id_col: str) -> DataFrame:
+    """(doc, g, c): how often each gram of the array ``grams`` occurs
+    in each document — the explode → (doc, gram) partial-aggregable
+    groupBy, O(len) per row and keyed wide enough never to hot-spot."""
+    return (
+        docs.select(F.col(id_col).alias("doc"), F.explode(grams).alias("g"))
+        .groupBy("doc", "g")
+        .agg(F.count("*").alias("c"))
+    )
+
+
 def _md5_hash60(s: Column) -> Column:
     """60-bit integer hash from md5 — chosen because BOTH Spark
     (conv(hex,16,10)) and DuckDB (CAST('0x'||hex AS BIGINT)) can
@@ -107,8 +118,13 @@ def winnow_fingerprints(text: Column, n: int = 3, window: int = 4) -> Column:
     the window lambda and recomputed per window — fine for fixtures;
     hot paths must use the staged pipeline in ``winnow_pairs`` (hash
     array materialized once per row; 28 s -> 2 s at sf0.1)."""
-    grams = word_kgrams(text, n)
-    hs = F.transform(grams, _md5_hash60)
+    return _winnow(F.transform(word_kgrams(text, n), _md5_hash60), window)
+
+
+def _winnow(hs: Column, window: int) -> Column:
+    """Distinct minima of every ``window``-wide slice of the hash array
+    ``hs``; all of ``hs``, deduplicated, when it is shorter than one
+    window."""
     idx = F.sequence(F.lit(1), F.size(hs) - window + 1)
     mins = F.transform(idx, lambda i: F.array_min(F.slice(hs, i, window)))
     return F.when(F.size(hs) >= window, F.array_distinct(mins)).otherwise(
@@ -656,12 +672,7 @@ def winnow_pairs(
         )
         .select("doc", F.transform("grams", _md5_hash60).alias("hs"))
     )
-    idx = F.sequence(F.lit(1), F.size("hs") - window + 1)
-    mins = F.transform(idx, lambda i: F.array_min(F.slice(F.col("hs"), i, window)))
-    fp_arr = F.when(F.size("hs") >= window, F.array_distinct(mins)).otherwise(
-        F.array_distinct(F.col("hs"))
-    )
-    fps = hashed.select("doc", F.explode(fp_arr).alias("fp"))
+    fps = hashed.select("doc", F.explode(_winnow(F.col("hs"), window)).alias("fp"))
     if max_fp_df is not None:
         # document-frequency guard as a WINDOW filter, not a separate
         # df-aggregate + anti-join: the aggregate form re-evaluates the
@@ -702,17 +713,13 @@ def simhash_bits(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     computation reproducible in DuckDB, so simhash pairs get a REAL
     oracle twin (queries.dedup_simhash); 60 = 4 clean 15-bit blocks
     for the hamming≤3 pigeonhole."""
-    toks = spread(docs).select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("tok"),
-    )
-    tf = toks.groupBy("doc", "tok").agg(F.count("*").alias("w")).withColumn(
-        "h", _md5_hash60(F.col("tok"))
-    )
+    tf = _doc_gram_counts(
+        spread(docs), tokens(F.lower(F.col(text_col))), id_col
+    ).withColumn("h", _md5_hash60(F.col("g")))
     votes = [
         F.sum(
-            F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, F.col("w"))
-            .otherwise(-F.col("w"))
+            F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, F.col("c"))
+            .otherwise(-F.col("c"))
         ).alias(f"v{i}")
         for i in range(SIMHASH_BITS)
     ]

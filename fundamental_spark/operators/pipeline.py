@@ -11,20 +11,29 @@ shaped for 100 TB:
 - splits are a row-wise hash mod (zero shuffle);
 - repetition metrics use the explode → (doc, gram) groupBy inverted
   pattern, NOT an O(len²) per-row HOF scan — shuffle is on (doc, gram),
-  bounded by corpus token count, never by document length²;
+  bounded by corpus token count, never by document length². That count
+  is written once (``dedup._doc_gram_counts``), and so is whitespace
+  tokenization (``functions.text.tokens``);
 - contamination is an inverted-index join on shingles (the dedup
   pattern) against a broadcast-size benchmark shingle set;
 - packing windows are PARTITIONED (per lang shard) so the global sort a
   naive packer needs never exists; each shard packs independently,
   exactly how a multi-executor packer shards work.
+
+BPE training has one trainer, ``bpe_train``: ``batch=1`` is the
+sequential Sennrich spec, larger batches learn mutually-disjoint merges
+per Spark round-trip.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _md5_hash60, word_kgrams, word_shingles
+from ..functions.text import stopword_ratio, token_count, tokens
+from .dedup import _doc_gram_counts, _md5_hash60, spread, word_kgrams, word_shingles
 
 # ---------------------------------------------------------------------------
 # Deterministic train/val/test split (hash-bucket, reproducible anywhere)
@@ -58,7 +67,7 @@ def split_stats(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         .groupBy("split")
         .agg(
             F.count("*").alias("n_docs"),
-            F.sum(F.size(F.split(F.trim("text"), r"\s+"))).alias("n_tokens"),
+            F.sum(token_count(F.col("text"))).alias("n_tokens"),
         )
     )
 
@@ -88,29 +97,17 @@ def repetition_metrics(
     per-row-heavy kind that a 2-partition small-file scan serializes
     (openCostInBytes floors split sizes) — same rule as the other
     text operators, a no-op at cluster scale."""
-    from .dedup import spread
-
     docs = spread(docs)
-    toks = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
-    )
     uni = (
-        toks.groupBy("doc", "tok")
-        .agg(F.count("*").alias("c"))
+        _doc_gram_counts(docs, tokens(F.col(text_col)), id_col)
         .groupBy("doc")
         .agg(
             F.sum("c").alias("n_tokens"),
             F.count("*").alias("n_distinct"),
         )
     )
-    bg = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(word_kgrams(F.col(text_col), 2)).alias("bigram"),
-    )
     big = (
-        bg.groupBy("doc", "bigram")
-        .agg(F.count("*").alias("c"))
+        _doc_gram_counts(docs, word_kgrams(F.col(text_col), 2), id_col)
         .groupBy("doc")
         .agg(F.max("c").alias("top_bigram_n"), F.sum("c").alias("n_bigrams"))
     )
@@ -198,8 +195,6 @@ def contamination_check(
     once. Input spread (round 7): the 5-gram explode ran on the raw
     2-partition scan — 2-task 3.5 s-CPU stages at sf1.0; measured
     6.8 s → 1.4 s with the spread."""
-    from .dedup import spread
-
     docs = spread(docs)
     cand = docs.select(
         F.col(id_col).alias("doc"),
@@ -239,7 +234,7 @@ def pack_sequences(
     the scale property: each shard's window is independent, so packing
     parallelizes across executors and no global sort ever exists. The
     whole plan is two window functions over one exchange."""
-    n_tok = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+    n_tok = token_count(F.col(text_col))
     w = (
         Window.partitionBy("shard")
         .orderBy(id_col)
@@ -405,8 +400,6 @@ def line_occurrences(
     requested passthrough columns ever shuffle. Input spread (round
     7): the chunk/split explode is per-row-heavy; measured
     8.3 s → 4.0 s for line_dedup_stats at sf1.0 with the spread."""
-    from .dedup import spread
-
     docs = spread(docs)
     cols = [id_col, *extra_cols]
     if chunk_words is not None:
@@ -548,8 +541,6 @@ def lm_fluency(
     excluded (unscoreable, exactly as CCNet drops empty lines).
 
     Returns (doc_id, lang, n_bigrams, score_ppm)."""
-    from .dedup import spread
-
     base = spread(docs).select(
         F.col(id_col).alias("doc"), F.col("lang"), F.col(text_col).alias("t")
     )
@@ -559,7 +550,7 @@ def lm_fluency(
         F.explode(word_kgrams(F.col("t"), 2)).alias("bg"),
     ).withColumn("prev", F.split_part(F.col("bg"), F.lit(" "), F.lit(1)))
     uni = (
-        base.select(F.explode(F.split(F.trim("t"), r"\s+")).alias("prev"))
+        base.select(F.explode(tokens(F.col("t"))).alias("prev"))
         .groupBy("prev")
         .agg(F.count("*").alias("c_uni"))
     )
@@ -711,10 +702,6 @@ def dsir_weights(
     joined back to the checkpointed per-doc counts.
 
     Returns (doc_id, source, n_feats, logw_micro)."""
-    import math
-
-    from .dedup import spread
-
     base = spread(docs).select(
         F.col(id_col).alias("doc"),
         F.col("source"),
@@ -727,7 +714,7 @@ def dsir_weights(
         "is_target",
         F.explode(
             F.concat(
-                F.split(F.trim("t"), r"\s+"),
+                tokens(F.col("t")),
                 word_kgrams(F.col("t"), 2),
             )
         ).alias("g"),
@@ -805,10 +792,6 @@ def training_order(
     out_shard carves the order into ``n_out_shards`` contiguous
     equal-size ranges (the shard files a writer would emit).
     Returns (doc_id, global_pos, out_shard)."""
-    import math
-
-    from .dedup import spread
-
     assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of 2"
     shift = 60 - int(math.log2(n_buckets))
     h = _md5_hash60(F.col(id_col).cast("string"))
@@ -847,6 +830,9 @@ _BPE_R = "\x1f"  # symbol-close sentinel (unit separator)
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 12,
+    batch: int = 1,
+    candidates_factor: int = 4,
+    max_rounds: int | None = None,
     text_col: str = "text",
     return_vocab: bool = False,
 ):
@@ -854,7 +840,9 @@ def bpe_train(
     tokenizer fitting (Sennrich et al. 2016): start from characters,
     repeatedly merge the most frequent adjacent symbol pair. Returns
     the learned merge table (merge_rank, lhs, rhs, pair_count) —
-    the artifact a tokenizer ships.
+    the artifact a tokenizer ships. ``batch=1`` is the Sennrich
+    sequential spec: one merge per round, the top pair by (count DESC,
+    lhs, rhs) — pinned by test against a separate sequential loop.
 
     Distribution: the corpus collapses to the UNIQUE-WORD vocabulary
     with frequencies first (the classic Sennrich move — pair counts
@@ -865,99 +853,28 @@ def bpe_train(
     and non-overlapping in both Spark and DuckDB, which IS greedy BPE
     merge semantics, and the sentinels make mid-symbol false matches
     impossible. Per round: one map-side-combinable pair-count agg over
-    the vocab, an argmax collect of ONE row (ties broken (count desc,
-    lhs, rhs) for engine-exact determinism), one replace pass,
+    the vocab, a collect of the top candidate rows, one replace pass,
     localCheckpoint to truncate lineage. Pairs are counted with
     overlaps (aaa -> (a,a) twice), exactly as the reference impl's
-    get_stats.
+    get_stats. Sentinel bytes must not occur in the text (true for any
+    printable corpus; they are stripped defensively).
 
-    Scale note: the loop is O(n_merges) Spark jobs; a production 30k-
-    merge run batches rounds with a pair-delta cache (HF tokenizers
-    style) — this operator is the exact-spec form those optimize, and
-    the per-round plan (explode -> partial-agg -> 1-row argmax) is the
-    shape that scales. Sentinel bytes must not occur in the text (true
-    for any printable corpus; they are stripped defensively)."""
-    from .dedup import spread
-
-    enc0 = F.regexp_replace(
-        F.regexp_replace(F.col("word"), f"[{_BPE_L}{_BPE_R}]", ""),
-        "(.)",
-        _BPE_L + "$1" + _BPE_R,
-    )
-    vocab = (
-        spread(docs)
-        .select(F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-        .select("word", "freq", enc0.alias("enc"))
-        .localCheckpoint(eager=True)
-    )  # one eager materialization: the corpus-sized agg runs once
-    sep = _BPE_R + _BPE_L
-    syms = F.split(F.expr(f"substring(enc, 2, length(enc) - 2)"), sep)
-    pair_expr = F.expr(
-        "zip_with(slice(s, 1, size(s) - 1), slice(s, 2, size(s) - 1), "
-        "(a, b) -> struct(a, b))"
-    )
-    merges = []
-    for rank in range(1, n_merges + 1):
-        top = (
-            vocab.select("freq", syms.alias("s"))
-            .select("freq", F.explode(pair_expr).alias("p"))
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("freq").alias("c"))
-            .orderBy(F.desc("c"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        a, b, c = top[0]["a"], top[0]["b"], top[0]["c"]
-        merges.append((rank, a, b, int(c)))
-        pat = _BPE_L + a + _BPE_R + _BPE_L + b + _BPE_R
-        rep = _BPE_L + a + b + _BPE_R
-        # lazy checkpoint: truncates lineage when the NEXT round's agg
-        # materializes it — eager=True here cost one extra no-op job
-        # per round (measured 30 s -> 9 s for 12 rounds at sf0.1)
-        vocab = vocab.select(
-            "word", "freq", F.expr("replace(enc, {}, {})".format(
-                _sql_str(pat), _sql_str(rep)
-            )).alias("enc"),
-        ).localCheckpoint(eager=False)
-    merges_df = docs.sparkSession.createDataFrame(
-        merges, "merge_rank int, lhs string, rhs string, pair_count bigint"
-    )
-    if return_vocab:
-        return merges_df, vocab
-    return merges_df
-
-
-def bpe_train_batched(
-    docs: DataFrame,
-    n_merges: int = 12,
-    batch: int = 4,
-    candidates_factor: int = 4,
-    max_rounds: int | None = None,
-    text_col: str = "text",
-    return_vocab: bool = False,
-):
-    """Batched BPE training — the standard distributed-BPE trick that
-    makes 30k-merge production runs feasible: per round, learn up to
-    ``batch`` MUTUALLY-DISJOINT pairs (no shared symbol among either
-    pick's operands OR its result a+b) instead of one, so the
-    sequential form's O(n_merges) Spark round-trips become
-    O(n_merges/batch). Disjointness is what makes the batch exact:
-    merging (a,b) only perturbs adjacencies TOUCHING a, b, or the new
-    symbol ab, so every disjoint pair's count — and its replace()
-    application — is invariant under the others; the batch is
-    order-independent and each selected pair carries the same count it
-    would sequentially. (Result symbols count as conflicts because a
-    pick whose operand equals another pick's RESULT would also merge
+    Batching — the standard distributed-BPE trick that makes 30k-merge
+    production runs feasible: per round, learn up to ``batch``
+    MUTUALLY-DISJOINT pairs (no shared symbol among either pick's
+    operands OR its result a+b), so O(n_merges) Spark round-trips
+    become O(n_merges/batch). Disjointness is what makes the batch
+    exact: merging (a,b) only perturbs adjacencies TOUCHING a, b, or
+    the new symbol ab, so every disjoint pair's count — and its
+    replace() application — is invariant under the others; the batch
+    is order-independent and each selected pair carries the same count
+    it would sequentially. (Result symbols count as conflicts because
+    a pick whose operand equals another pick's RESULT would also merge
     tokens created in the same round — a cascade the sequential form
     never performs at the recorded count.)
 
     Deterministic selection contract (mirrored verbatim by the DuckDB
-    oracle): rank all pairs by (count DESC, lhs, rhs); restrict to the
+    oracles): rank all pairs by (count DESC, lhs, rhs); restrict to the
     top ``candidates_factor·batch`` candidate window; greedily take
     the best candidate disjoint from everything already taken this
     round, up to min(batch, merges still needed). With the default
@@ -972,14 +889,11 @@ def bpe_train_batched(
     ``batch`` merges, and the loop stops early once ``n_merges`` are
     learned or the vocabulary is exhausted.
 
-    Deviation contract vs ``bpe_train``: at batch=1 the two are
-    IDENTICAL (pinned by test). At batch>1 the learned sequence can
-    diverge whenever sequential BPE's next-best pair would involve a
-    symbol CREATED earlier in the same round (e.g. (t,h) then (th,e))
-    — batching defers such dependent merges to the next round; counts
-    of the pairs actually chosen are exact either way."""
-    from .dedup import spread
-
+    Deviation contract vs the sequential spec: at batch>1 the learned
+    sequence can diverge whenever sequential BPE's next-best pair would
+    involve a symbol CREATED earlier in the same round (e.g. (t,h) then
+    (th,e)) — batching defers such dependent merges to the next round;
+    counts of the pairs actually chosen are exact either way."""
     if batch < 1:
         raise ValueError(f"batch must be >= 1, got {batch}")
     enc0 = F.regexp_replace(
@@ -989,37 +903,32 @@ def bpe_train_batched(
     )
     vocab = (
         spread(docs)
-        .select(F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"))
+        .select(F.explode(tokens(F.col(text_col))).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
         .select("word", "freq", enc0.alias("enc"))
         .localCheckpoint(eager=True)
-    )
+    )  # one eager materialization: the corpus-sized agg runs once
     sep = _BPE_R + _BPE_L
     syms = F.split(F.expr("substring(enc, 2, length(enc) - 2)"), sep)
     pair_expr = F.expr(
         "zip_with(slice(s, 1, size(s) - 1), slice(s, 2, size(s) - 1), "
         "(a, b) -> struct(a, b))"
     )
-    import math as _math
-
     merges: list[tuple[int, str, str, int]] = []
-    n_rounds = (
-        max_rounds if max_rounds is not None else _math.ceil(n_merges / batch)
-    )
+    n_rounds = max_rounds if max_rounds is not None else math.ceil(n_merges / batch)
     for _ in range(n_rounds):
         need = min(batch, n_merges - len(merges))
         if need <= 0:
             break
-        window_k = candidates_factor * batch
         cand = (
             vocab.select("freq", syms.alias("s"))
             .select("freq", F.explode(pair_expr).alias("p"))
             .groupBy("p.a", "p.b")
             .agg(F.sum("freq").alias("c"))
             .orderBy(F.desc("c"), F.asc("a"), F.asc("b"))
-            .limit(window_k)
+            .limit(candidates_factor * batch)
             .collect()
         )
         if not cand:
@@ -1052,6 +961,9 @@ def bpe_train_batched(
             pat = _BPE_L + a + _BPE_R + _BPE_L + b + _BPE_R
             rep = _BPE_L + a + b + _BPE_R
             enc_col = F.call_function("replace", enc_col, F.lit(pat), F.lit(rep))
+        # lazy checkpoint: truncates lineage when the NEXT round's agg
+        # materializes it — eager=True here cost one extra no-op job
+        # per round (measured 30 s -> 9 s for 12 rounds at sf0.1)
         vocab = vocab.select(
             "word", "freq", enc_col.alias("enc")
         ).localCheckpoint(eager=False)
@@ -1076,8 +988,6 @@ def bpe_token_stats(
     encoding the corpus is a hash join of the word stream against the
     O(|vocab|) token-count table — the document text is never
     re-scanned symbol by symbol."""
-    from .dedup import spread
-
     _, vocab = bpe_train(
         docs, n_merges=n_merges, text_col=text_col, return_vocab=True
     )
@@ -1090,7 +1000,7 @@ def bpe_token_stats(
     )
     words = spread(docs).select(
         "lang",
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"),
+        F.explode(tokens(F.col(text_col))).alias("word"),
     ).filter(F.col("word") != "")
     return (
         words.join(tok, "word")
@@ -1102,11 +1012,6 @@ def bpe_token_stats(
             F.round(F.sum("n_tok") / F.count("*"), 4).alias("tokens_per_word"),
         )
     )
-
-
-def _sql_str(s: str) -> str:
-    """SQL single-quoted literal (the only escape needed is ')."""
-    return "'" + s.replace("'", "''") + "'"
 
 
 # ---------------------------------------------------------------------------
@@ -1152,9 +1057,6 @@ def gopher_quality(
     ``dedup.dup_spans`` — at a corpus level rather than per-doc.
 
     Returns per-doc features + the conjunction ``keep``."""
-    from ..functions.text import tokens
-    from .dedup import spread
-
     t = F.col(text_col)
     toks = tokens(t)
     n_words = F.size(toks)
@@ -1179,13 +1081,8 @@ def gopher_quality(
     )
 
     def top_frac(n: int, out: str) -> DataFrame:
-        grams = docs.select(
-            F.col(id_col).alias("doc"),
-            F.explode(word_kgrams(F.col(text_col), n)).alias("g"),
-        )
         per = (
-            grams.groupBy("doc", "g")
-            .agg(F.count("*").alias("c"))
+            _doc_gram_counts(docs, word_kgrams(F.col(text_col), n), id_col)
             .select(
                 "doc",
                 F.struct(
@@ -1199,13 +1096,8 @@ def gopher_quality(
             "doc", (F.col("top.c") * F.col("top.l")).alias(out)
         )
 
-    g5 = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(word_kgrams(F.col(text_col), 5)).alias("g"),
-    )
     dup5 = (
-        g5.groupBy("doc", "g")
-        .agg(F.count("*").alias("c"))
+        _doc_gram_counts(docs, word_kgrams(F.col(text_col), 5), id_col)
         .filter(F.col("c") >= 2)
         .groupBy("doc")
         .agg(
@@ -1257,11 +1149,6 @@ def gopher_quality(
 _EN_STOPS = ("the", "a", "of", "to", "and", "in", "is", "it", "that", "was")
 
 
-def _stop_frac(toks, words) -> F.Column:
-    hits = F.size(F.filter(toks, lambda t: t.isin(*words)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_lr_fit(
     docs: DataFrame,
     n_steps: int = 8,
@@ -1289,21 +1176,19 @@ def quality_lr_fit(
     driver. Per-step weights are pinned to a 1e-9 grid in BOTH engines
     (the k-means/PQ trick) so float drift cannot compound across
     steps."""
-    from .dedup import spread
-
     # spread (round 7): the feature expressions (stopword fraction via
     # array HOFs, distinct-token fraction) are per-row-heavy and ran on
     # the raw 2-partition scan; every cross-row float this fit produces
     # (moments, gradients, weights) is pinned to the 1e-9 grid by
     # design, so the distribution change cannot perturb results.
     docs = spread(docs)
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = tokens(F.lower(F.col(text_col)))
     labels = repetition_metrics(docs, id_col=id_col, text_col=text_col).select(
         id_col, F.col("keep").cast("double").alias("y")
     )
     raw = docs.join(labels, id_col).select(
         "y",
-        F.round(_stop_frac(toks, _EN_STOPS), 9).alias("x1"),
+        F.round(stopword_ratio(F.col(text_col), _EN_STOPS), 9).alias("x1"),
         F.round(
             F.size(F.array_distinct(toks)) / F.greatest(F.size(toks), F.lit(1)),
             9,

@@ -2547,9 +2547,9 @@ def bpe_merges_batched_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps each picked pair's count exactly its sequential value; the
     oracle re-runs the full rank-window-greedy selection as unrolled
     CTE steps."""
-    from .operators.pipeline import bpe_train_batched
+    from .operators.pipeline import bpe_train
 
-    return bpe_train_batched(T(spark, sf_dir, "documents"), n_merges=12, batch=4)
+    return bpe_train(T(spark, sf_dir, "documents"), n_merges=12, batch=4)
 
 
 @q("bpe_token_stats", _bpe_token_stats_oracle(12))

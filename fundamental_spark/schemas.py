@@ -148,6 +148,15 @@ PROPERTIES_SCHEMA = StructType(
     ]
 )
 
+# the corpus ``documents`` table (doc_id, text, lang, source, n_chars)
+# that the streaming dedup drains read from a directory, as the DDL
+# string readStream.schema takes. The schema guard in
+# tests/test_registry.py looks only for StructType/pyarrow builders, so
+# it does not catch a copy of this string (or any other DDL string).
+CORPUS_DOCUMENTS_DDL = (
+    "doc_id bigint, text string, lang string, source string, n_chars bigint"
+)
+
 # append-only lineage log (database.go:420-429)
 PROPERTY_HISTORY_SCHEMA = StructType(
     [

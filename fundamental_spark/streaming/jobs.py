@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.extractors import extract_items
 from ..operators.lifecycle import upsert_properties
-from ..schemas import DOCUMENTS_SCHEMA
+from ..schemas import CORPUS_DOCUMENTS_DDL, DOCUMENTS_SCHEMA
 from ..tableformat import Warehouse
 
 
@@ -392,10 +392,7 @@ def drain_dedup(
     dedup (availableNow, one file per micro-batch so the dedup state
     genuinely carries across batches)."""
     ds = (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, "
-            "n_chars bigint"
-        )
+        spark.readStream.schema(CORPUS_DOCUMENTS_DDL)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(docs_dir)
     )
@@ -511,10 +508,7 @@ def drain_neardup(
         )
 
     ds = (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, "
-            "n_chars bigint"
-        )
+        spark.readStream.schema(CORPUS_DOCUMENTS_DDL)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(docs_dir)
     )

@@ -4,6 +4,7 @@ behavior; cross-engine parity is covered by the registered oracles."""
 
 from __future__ import annotations
 
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 
 from fundamental_spark.operators.pipeline import (
@@ -535,18 +536,75 @@ def test_mixture_sample_rate_zero_drops_source(spark):
         mixture_sample(docs, {"wiki": -0.5})
 
 
+def _bpe_sequential(docs, n_merges: int, text_col: str = "text"):
+    """Reference sequential BPE trainer (Sennrich 2016) as its own
+    loop: per round, the single top pair by (count DESC, lhs, rhs) over
+    the frequency-weighted unique-word vocabulary, applied as one SQL
+    ``replace()`` on the sentinel-wrapped symbol strings. Returns
+    [(merge_rank, lhs, rhs, pair_count)]."""
+    from fundamental_spark.operators.dedup import spread
+    from fundamental_spark.operators.pipeline import _BPE_L, _BPE_R
+
+    def sql_str(s: str) -> str:
+        return "'" + s.replace("'", "''") + "'"
+
+    enc0 = F.regexp_replace(
+        F.regexp_replace(F.col("word"), f"[{_BPE_L}{_BPE_R}]", ""),
+        "(.)",
+        _BPE_L + "$1" + _BPE_R,
+    )
+    vocab = (
+        spread(docs)
+        .select(F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"))
+        .filter(F.col("word") != "")
+        .groupBy("word")
+        .agg(F.count("*").alias("freq"))
+        .select("word", "freq", enc0.alias("enc"))
+        .localCheckpoint(eager=True)
+    )
+    sep = _BPE_R + _BPE_L
+    syms = F.split(F.expr("substring(enc, 2, length(enc) - 2)"), sep)
+    pair_expr = F.expr(
+        "zip_with(slice(s, 1, size(s) - 1), slice(s, 2, size(s) - 1), "
+        "(a, b) -> struct(a, b))"
+    )
+    merges = []
+    for rank in range(1, n_merges + 1):
+        top = (
+            vocab.select("freq", syms.alias("s"))
+            .select("freq", F.explode(pair_expr).alias("p"))
+            .groupBy("p.a", "p.b")
+            .agg(F.sum("freq").alias("c"))
+            .orderBy(F.desc("c"), F.asc("a"), F.asc("b"))
+            .limit(1)
+            .collect()
+        )
+        if not top:
+            break
+        a, b, c = top[0]["a"], top[0]["b"], top[0]["c"]
+        merges.append((rank, a, b, int(c)))
+        pat = _BPE_L + a + _BPE_R + _BPE_L + b + _BPE_R
+        rep = _BPE_L + a + b + _BPE_R
+        vocab = vocab.select(
+            "word", "freq", F.expr("replace(enc, {}, {})".format(
+                sql_str(pat), sql_str(rep)
+            )).alias("enc"),
+        ).localCheckpoint(eager=False)
+    return merges
+
+
 def test_bpe_batched_equals_sequential_at_batch1(spark):
-    """batch=1 must reproduce bpe_train EXACTLY (ranks, pairs, counts)
-    — the sequential-equivalence pin for the batched trainer."""
-    from fundamental_spark.operators.pipeline import bpe_train, bpe_train_batched
+    """batch=1 must reproduce the sequential reference trainer EXACTLY
+    (ranks, pairs, counts) — the sequential-spec pin for bpe_train."""
+    from fundamental_spark.operators.pipeline import bpe_train
 
     docs = spark.createDataFrame(
         [("d1", "low lower lowest low low"), ("d2", "new newer newest new"),
          ("d3", "wide wider widest wide low")],
         "doc_id string, text string",
     )
-    seq = [tuple(r) for r in bpe_train(docs, n_merges=8).collect()]
-    b1 = [tuple(r) for r in bpe_train_batched(docs, n_merges=8, batch=1).collect()]
+    seq = _bpe_sequential(docs, n_merges=8)
+    b1 = [tuple(r) for r in bpe_train(docs, n_merges=8, batch=1).collect()]
     assert seq == b1
 
 
@@ -558,7 +616,7 @@ def test_bpe_batched_disjoint_and_counts_exact(spark):
     identical count (disjoint picks leave each other's counts
     untouched; a cross-trainer count shift would mean the batch
     violated disjointness somewhere)."""
-    from fundamental_spark.operators.pipeline import bpe_train, bpe_train_batched
+    from fundamental_spark.operators.pipeline import bpe_train
 
     docs = spark.createDataFrame(
         [("d1", "the quick brown fox jumps over the lazy dog " * 3),
@@ -567,7 +625,7 @@ def test_bpe_batched_disjoint_and_counts_exact(spark):
         "doc_id string, text string",
     )
     batched = [tuple(r) for r in
-               bpe_train_batched(docs, n_merges=8, batch=4).collect()]
+               bpe_train(docs, n_merges=8, batch=4).collect()]
     # per-round disjointness: ranks 1-4 = round 1, 5-8 = round 2
     for lo in (0, 4):
         used: set[str] = set()
@@ -582,3 +640,32 @@ def test_bpe_batched_disjoint_and_counts_exact(spark):
     assert shared, "fixture produced no shared pairs"
     for a, b, c in shared:
         assert seq[(a, b)] == c, (a, b, c, seq[(a, b)])
+
+
+def test_bpe_round_schedule(spark):
+    """batch=0 is refused before any Spark work. With max_rounds=None
+    the schedule is fixed at ceil(n_merges/batch) rounds, so a
+    conflict-starved corpus (single-letter words: every hot pair shares
+    the symbol 'a') under-fills; a large max_rounds reaches exactly
+    n_merges and stops as soon as it does."""
+    import pytest
+
+    from fundamental_spark.operators.pipeline import bpe_train
+
+    docs = spark.createDataFrame(
+        [(n, " ".join(["a" * n] * (41 - n))) for n in range(2, 41)],
+        "doc_id bigint, text string",
+    )
+    with pytest.raises(ValueError):
+        bpe_train(docs, batch=0)
+    fixed = [tuple(r) for r in bpe_train(docs, n_merges=8, batch=4).collect()]
+    assert 0 < len(fixed) < 8
+    assert [r[0] for r in fixed] == list(range(1, len(fixed) + 1))
+    with spark_jobs(spark) as jobs:
+        long = [
+            tuple(r)
+            for r in bpe_train(docs, n_merges=8, batch=4, max_rounds=100).collect()
+        ]
+    assert [r[0] for r in long] == list(range(1, 9))
+    assert long[: len(fixed)] == fixed  # same rounds, same picks
+    assert len(jobs) < 100  # stopped at the merge target, not at max_rounds

@@ -219,3 +219,26 @@ def test_ann_core_is_written_once():
                 and func in keyed and func not in ("_topk_by_cos", "_adc_rerank")
             ]
     assert not found, found
+
+
+def test_whitespace_tokenizer_is_written_once():
+    """No ``split`` call on the ``\\s+`` pattern under the library
+    outside ``functions/text.py::tokens``: every whitespace tokenization
+    goes through that one function (or ``token_count``/``stopword_ratio``
+    built on it)."""
+    found = []
+    for dirpath, _, files in os.walk(PKG):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, PKG)
+            found += [
+                f"{rel}:{c.lineno} in {func}"
+                for func, c in _calls_by_function(ast.parse(open(path).read(), path))
+                if getattr(c.func, "attr", getattr(c.func, "id", None)) == "split"
+                and any(isinstance(a, ast.Constant) and a.value == r"\s+" for a in c.args)
+                and (rel, func) != (os.path.join("functions", "text.py"), "tokens")
+            ]
+    assert not found, found
+
