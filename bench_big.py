@@ -78,7 +78,7 @@ def scheduler_leg(spark, cpus: int) -> dict:
     from fundamental_spark.synth.site import build_site, spec_web_rows
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from jobs.scheduler import simulate_day_batched
+    from jobs.scheduler import simulate_day
 
     n_cities, listings = 400, 300
     site = build_site(
@@ -115,7 +115,7 @@ def scheduler_leg(spark, cpus: int) -> dict:
 
         args = SimpleNamespace(warehouse=day_root, max_pages=100)
         t0 = time.perf_counter()
-        day = simulate_day_batched(spark, args, web, site, weekday=0)
+        day = simulate_day(spark, args, web, site, weekday=0)
         out["day_sec"] = round(time.perf_counter() - t0, 2)
         out["jobs"] = len(day)
         out["day_pages_total"] = int(

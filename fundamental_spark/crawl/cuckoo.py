@@ -52,7 +52,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-CUCKOO_SCHEMA = "domain_shard int, m long, f int, table binary, stash binary"
+from ..schemas import CUCKOO_SCHEMA
 
 _SLOTS = 4
 _F_BITS = 12

@@ -43,8 +43,6 @@ from ..schemas import DOCUMENTS_SCHEMA
 
 DOC_SCHEMA = to_arrow_schema(DOCUMENTS_SCHEMA)
 
-SINK_SUMMARY_DDL = "file string, n_docs long"
-
 
 def _doc_batch(
     urls: list,

@@ -20,9 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType
 
-from ..schemas import SPAN_SCHEMA
-
-SEARCH_ITEMS_SCHEMA = "struct<itemListElement:array<struct<position:int,url:string>>>"
+from ..schemas import SEARCH_ITEMS_SCHEMA, SPAN_SCHEMA
 
 _LD_RE = r'<script type="application/ld\+json">(.*?)</script>'
 

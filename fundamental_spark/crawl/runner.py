@@ -62,7 +62,10 @@ from ..schemas import (
     NEARDUP_PAIRS_SCHEMA,
     REFRESHED_URLS_SCHEMA,
     RESPONSE_CACHE_SCHEMA,
+    SEARCH_FRONTIER_DDL,
+    SINK_SUMMARY_DDL,
     URL_SEEN_SCHEMA,
+    URLS_DDL,
     WAVE_METRICS_SCHEMA,
 )
 from ..tableformat import Warehouse
@@ -206,7 +209,7 @@ class CrawlRunner:
     # only, looser '/koop/' path filter, NO seen filtering, NO detail
     # fetches, NO stop counters and NO manual pagination fallback —
     # collected URLs land in the refreshed_urls table and feed
-    # lifecycle.mark_inactive (scheduler.go:214-254)
+    # lifecycle.mark_inactive_from_refresh (scheduler.go:214-254)
     mode: str = "crawl"
     # robots.txt body for the crawled domain (north rule: honor robots
     # + crawl-delay; the reference sets ROBOTSTXT_OBEY=False). When set,
@@ -402,8 +405,7 @@ class CrawlRunner:
         page_idx), enqueued in ``wave``."""
         df = self.spark.createDataFrame(
             [(u, "search", priority, c, p, p - 1, 0, 0, "pending") for (u, c, p) in pages],
-            "url string, kind string, priority int, city string, page_idx int, "
-            "discovered_on_page int, page_pos int, attempt int, state string",
+            SEARCH_FRONTIER_DDL,
         )
         return (
             with_url_keys(df, n_shards=self.n_shards)
@@ -449,7 +451,7 @@ class CrawlRunner:
             n_seen = seen_src.count()
         else:
             seen_src = spark.createDataFrame(
-                [(u,) for u in (existing_urls or [])], "url string"
+                [(u,) for u in (existing_urls or [])], URLS_DDL
             )
             n_seen = len(existing_urls or [])
         seen = (
@@ -812,7 +814,7 @@ class CrawlRunner:
         return to the JVM — only a one-row-per-task file manifest
         does (the Iceberg task-file commit shape). This is what keeps
         per-page DRAM traffic flat as executors are added."""
-        from .docsink import SINK_SUMMARY_DDL, make_documents_sink, write_empty_documents
+        from .docsink import make_documents_sink, write_empty_documents
 
         doc_cols = ["url", "html", "city", "discovered_on_page", "page_pos"]
         if self._has_spec:

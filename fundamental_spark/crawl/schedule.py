@@ -19,15 +19,12 @@ all 7 midnight slots first (Sun..Sat), then all 7 4am slots, etc. —
 and city i takes slot i. 42 slots; cities beyond 42 never refresh
 (faithful to the reference). Each city refreshes once per WEEK.
 
-This module is the slot computation + a serial week simulator; the
-spark-submit orchestration entry that drives the actual runner modes is
-jobs/scheduler.py. Weekday numbering follows Go's time.Weekday:
-Sunday=0 .. Saturday=6.
+This module is the slot computation; the spark-submit orchestration
+entry that drives the actual runner modes is jobs/scheduler.py.
+Weekday numbering follows Go's time.Weekday: Sunday=0 .. Saturday=6.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 REFRESH_TIME_SLOTS = (0, 4, 8, 12, 16, 20)
 N_WEEKDAYS = 7  # Sunday=0 .. Saturday=6 (Go time.Weekday)
@@ -66,13 +63,3 @@ def jobs_at(
                 jobs.append(("refresh", city))
     return jobs
 
-
-def simulate_week(cities: list[str]) -> Iterator[tuple[int, int, int, str, str]]:
-    """Every job of one scheduler week in execution order:
-    (weekday, hour, minute, job_type, city). Serial by construction —
-    the jobMutex twin: a job list is a total order, never a DAG."""
-    for weekday in range(N_WEEKDAYS):
-        for hour in range(24):
-            for minute in (0, 30):
-                for job_type, city in jobs_at(weekday, hour, minute, cities):
-                    yield (weekday, hour, minute, job_type, city)

@@ -32,16 +32,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-ish regex segmentation: words, numbers, punctuation runs —
-    the standard pre-tokenizer shape (GPT-2-style regex, public)."""
-    return F.size(
-        F.regexp_extract_all(
-            text, F.lit(r"[A-Za-z]+|\d+|[^\sA-Za-z\d]+"), 0
-        )
-    )
-
-
 def punct_ratio(text: Column) -> Column:
     n_punct = F.length(F.regexp_replace(text, r"[^.,!?;:]", ""))
     return n_punct / F.greatest(F.length(text), F.lit(1))
@@ -112,14 +102,6 @@ def _hits(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, pred))
 
 
-def langid_scores(text: Column) -> list[Column]:
-    toks = tokens(F.lower(text))
-    out = []
-    for lang, words in LANG_STOPWORDS.items():
-        out.append(_hits(toks, words).alias(f"score_{lang}"))
-    return out
-
-
 def langid(text: Column) -> Column:
     """Stopword-vote language ID: argmax over per-language hit counts;
     'und' when nothing matches. Pure JVM expression."""
@@ -132,20 +114,6 @@ def langid(text: Column) -> Column:
         best = F.when(cond, F.lit(lang)).otherwise(best)
         best_score = F.when(cond, hits).otherwise(best_score)
     return best
-
-
-def with_text_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return docs.select(
-        "*",
-        token_count(t).alias("n_tokens"),
-        bpe_ish_token_count(t).alias("n_bpe_tokens"),
-        F.round(punct_ratio(t), 4).alias("punct_ratio"),
-        F.round(stopword_ratio(t), 4).alias("stopword_ratio"),
-        quality_score(t).alias("quality"),
-        fingerprint(t).alias("fp"),
-        langid(t).alias("lang_pred"),
-    )
 
 
 def bm25_topk(

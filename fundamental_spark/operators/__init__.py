@@ -1,2 +1,2 @@
 """Relational operator library (SURVEY.md §2): analytics, lifecycle,
-dedup, similarity, text analysis, multimodal plumbing."""
+dedup, similarity, text analysis."""

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..schemas import METRO_AREAS_DDL, METRO_CITIES_DDL
 from ..tableformat import Warehouse
 
 # data-quality bounds (database.go:1334-1340): "reasonable" size/price
@@ -163,10 +164,6 @@ def with_district_analysis(
 # ---------------------------------------------------------------------------
 # Metropolitan-area config tables (database.go:918-1009, 1142-1165)
 # ---------------------------------------------------------------------------
-METRO_AREAS_DDL = (
-    "id bigint, name string, center_lat double, center_lng double, zoom_level int"
-)
-METRO_CITIES_DDL = "metropolitan_area_id bigint, city string, lat double, lng double"
 
 
 def init_metro_tables(

@@ -28,11 +28,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..schemas import HULL_SCHEMA
+
 # Netherlands bounding box, geocoder.go:32-38
 NL_LAT = (50.75, 53.55)
 NL_LNG = (3.35, 7.22)
-
-HULL_SCHEMA = "district string, city string, hull_json string, point_count int"
 
 
 def nl_bbox_filter(df: DataFrame, lat: str = "latitude", lng: str = "longitude") -> DataFrame:

@@ -71,46 +71,18 @@ def upsert_properties(wh: Warehouse, items: DataFrame, wave: int) -> None:
     wh.append_delta("property_history", hist)
 
 
-def _apply_inactive(wh: Warehouse, stale: DataFrame, wave: int) -> int:
-    """Transition the given stale urls to 'inactive' + history append.
-
-    Expressed as a MERGE whose batch is the stale rows with status
-    flipped: the bucketed Warehouse rewrites only the buckets holding
-    stale urls (Iceberg MERGE file pruning), not the whole snapshot."""
-    n = stale.count()
-    if n == 0:
-        return 0
-    wh.ensure_bucketed("properties", key="url", n_buckets=PROPERTIES_BUCKETS)
-    batch = wh.read_matching("properties", stale.select("url"), key="url").withColumn(
-        "status", F.lit("inactive")
-    )
-    wh.merge_upsert("properties", batch, key="url", schema=PROPERTIES_SCHEMA)
-    hist = wh.read_matching("properties", stale.select("url"), key="url").select(
-        "url", "status", "price", "listing_date", F.lit(wave).alias("wave")
-    )
-    wh.append_delta("property_history", hist)
-    return n
-
-
-def mark_inactive(wh: Warehouse, city: str, refreshed_urls: DataFrame, wave: int) -> int:
-    """Active rows of `city` not present in refreshed_urls(url) ->
-    'inactive' (J3, database.go:1252-1323). Returns #transitioned."""
-    props = wh.read("properties")
-    target = props.filter(
-        (F.lower(F.col("city")) == city.lower()) & (F.col("status") == "active")
-    )
-    stale = target.join(refreshed_urls.select("url"), "url", "left_anti").select("url")
-    return _apply_inactive(wh, stale, wave)
-
-
 def mark_inactive_from_refresh(wh: Warehouse, refreshed: DataFrame, wave: int) -> int:
     """Set-based twin of the reference's per-city refresh loop
-    (scheduler.go:214-254 → MarkInactiveProperties): for every city the
-    refresh crawl visited, active rows whose url was NOT collected
-    become 'inactive' — one anti-join across all cities at once.
+    (scheduler.go:214-254 → MarkInactiveProperties, J3): for every city
+    the refresh crawl visited, active rows whose url was NOT collected
+    become 'inactive' — one anti-join across all cities at once — plus
+    a history append. Returns #transitioned.
 
     ``refreshed``: the CrawlRunner(mode='refresh') refreshed_urls table
-    (url, city, ...)."""
+    (url, city, ...). The transition is a MERGE whose batch is the stale
+    rows with status flipped: the bucketed Warehouse rewrites only the
+    buckets holding stale urls (Iceberg MERGE file pruning), not the
+    whole snapshot."""
     props = wh.read("properties")
     cities = refreshed.select(F.lower(F.col("city")).alias("_rc")).distinct()
     target = (
@@ -118,7 +90,19 @@ def mark_inactive_from_refresh(wh: Warehouse, refreshed: DataFrame, wave: int) -
         .join(F.broadcast(cities), F.lower(F.col("city")) == F.col("_rc"), "left_semi")
     )
     stale = target.join(refreshed.select("url"), "url", "left_anti").select("url")
-    return _apply_inactive(wh, stale, wave)
+    n = stale.count()
+    if n == 0:
+        return 0
+    wh.ensure_bucketed("properties", key="url", n_buckets=PROPERTIES_BUCKETS)
+    batch = wh.read_matching("properties", stale, key="url").withColumn(
+        "status", F.lit("inactive")
+    )
+    wh.merge_upsert("properties", batch, key="url", schema=PROPERTIES_SCHEMA)
+    hist = wh.read_matching("properties", stale, key="url").select(
+        "url", "status", "price", "listing_date", F.lit(wave).alias("wave")
+    )
+    wh.append_delta("property_history", hist)
+    return n
 
 
 def previous_price(history: DataFrame) -> DataFrame:

@@ -1399,11 +1399,10 @@ def ann_lsh_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-minute inactivity gap) — the batch
-    twin of the applyInPandasWithState streaming operator
-    (streaming/stateful.py): lag → new-session flag → running sum →
-    per-session rollup. Classic stateful shape a training-data event
-    pipeline needs; not in the reference."""
+    """Gap-based sessionization (30-minute inactivity gap): lag →
+    new-session flag → running sum → per-session rollup. Classic
+    stateful shape a training-data event pipeline needs; not in the
+    reference."""
     # explicit user_id repartition: AQE's size-based coalescing squeezes
     # the window exchange (~17MB) onto 2 tasks and serializes the
     # session sort (measured 1.7 s on 2 tasks at sf1.0, round 7); the

@@ -6,6 +6,11 @@ the span parser, the documents stream and the properties lifecycle
 import it. ``documents`` is BASELINE.json's ``input_hint``:
 (doc_id, spans:array<struct<kind,text,media_ref,offset:int32>>) plus
 its crawl lineage columns.
+
+Layouts a reader, stream or pandas UDF takes as a DDL string (the
+cuckoo filter rows, the sink manifest, the streams' sources, the
+district hulls, the metro config tables) are defined here too, as
+strings.
 """
 
 from __future__ import annotations
@@ -149,13 +154,51 @@ PROPERTIES_SCHEMA = StructType(
 )
 
 # the corpus ``documents`` table (doc_id, text, lang, source, n_chars)
-# that the streaming dedup drains read from a directory, as the DDL
-# string readStream.schema takes. The schema guard in
-# tests/test_registry.py looks only for StructType/pyarrow builders, so
-# it does not catch a copy of this string (or any other DDL string).
+# that the streaming near-dup drain reads from a directory, as the DDL
+# string readStream.schema takes
 CORPUS_DOCUMENTS_DDL = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
 )
+
+# the drain's persisted state under its state_dir: the band index is
+# keyed on the corpus' bigint doc_id, unlike the crawl's url-keyed
+# NEARDUP_BANDS_SCHEMA, and the verification texts
+DRAIN_BANDS_DDL = "doc bigint, band_idx int, band_hash string"
+DRAIN_TEXTS_DDL = "doc_id bigint, text string"
+
+# the corpus ``events`` table, read as a file-source stream
+EVENTS_DDL = (
+    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+    "value double, props string"
+)
+
+# pending search-page frontier rows before their url keys and
+# wave_enqueued are added (a column subset of FRONTIER_SCHEMA)
+SEARCH_FRONTIER_DDL = (
+    "url string, kind string, priority int, city string, page_idx int, "
+    "discovered_on_page int, page_pos int, attempt int, state string"
+)
+
+# a bare url list (the pre-seen set a crawl starts from)
+URLS_DDL = "url string"
+
+# JSON-LD ItemList of a search page, as from_json parses it
+SEARCH_ITEMS_SCHEMA = "struct<itemListElement:array<struct<position:int,url:string>>>"
+
+# one per-shard cuckoo filter row (crawl/cuckoo.py builds and applies it)
+CUCKOO_SCHEMA = "domain_shard int, m long, f int, table binary, stash binary"
+
+# the documents sink's one-row-per-task file manifest
+SINK_SUMMARY_DDL = "file string, n_docs long"
+
+# the district_hulls table (operators/geo.py::district_hulls)
+HULL_SCHEMA = "district string, city string, hull_json string, point_count int"
+
+# metropolitan-area config tables (database.go:918-1009, 1142-1165)
+METRO_AREAS_DDL = (
+    "id bigint, name string, center_lat double, center_lng double, zoom_level int"
+)
+METRO_CITIES_DDL = "metropolitan_area_id bigint, city string, lat double, lng double"
 
 # append-only lineage log (database.go:420-429)
 PROPERTY_HISTORY_SCHEMA = StructType(

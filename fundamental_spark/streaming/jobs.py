@@ -29,7 +29,13 @@ from pyspark.sql import functions as F
 
 from ..functions.extractors import extract_items
 from ..operators.lifecycle import upsert_properties
-from ..schemas import CORPUS_DOCUMENTS_DDL, DOCUMENTS_SCHEMA
+from ..schemas import (
+    CORPUS_DOCUMENTS_DDL,
+    DOCUMENTS_SCHEMA,
+    DRAIN_BANDS_DDL,
+    DRAIN_TEXTS_DDL,
+    EVENTS_DDL,
+)
 from ..tableformat import Warehouse
 
 
@@ -333,10 +339,7 @@ def stream_event_counts(
     """Event-time windowed aggregation with watermark (late-data
     handling) over a file-source event stream; append-mode windows
     finalize once the watermark passes (A10's rollup, streaming)."""
-    reader = spark.readStream.schema(
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string"
-    )
+    reader = spark.readStream.schema(EVENTS_DDL)
     if os.path.isfile(events_path):  # file source needs a directory
         reader = reader.option("pathGlobFilter", os.path.basename(events_path))
         events_path = os.path.dirname(events_path)
@@ -355,50 +358,6 @@ def stream_event_counts(
     )
     q = (
         agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def dedup_stream(docs: DataFrame) -> DataFrame:
-    """Streaming exact dedup (T11): keep the first-arriving document
-    per content fingerprint, state carried across micro-batches by the
-    built-in stateful ``dropDuplicates`` — the streaming twin of
-    ``operators.dedup.exact_dedup`` (keep-first instead of keep-min-id;
-    under an id-ordered drain the two agree, pinned by
-    tests/test_stateful_streaming.py). Spark-first: no custom state
-    handler needed — exact-dedup-on-a-stream is precisely what the
-    built-in operator's state store implements; a 24/7 deployment
-    bounds state with ``withWatermark`` +
-    ``dropDuplicatesWithinWatermark`` (documented trade: re-admits a
-    dup after the horizon)."""
-    from ..functions.text import fingerprint
-
-    return docs.withColumn("fp", fingerprint(F.col("text"))).dropDuplicates(["fp"])
-
-
-def drain_dedup(
-    spark: SparkSession,
-    docs_dir: str,
-    checkpoint_dir: str,
-    output_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Bounded drain of a documents directory through the streaming
-    dedup (availableNow, one file per micro-batch so the dedup state
-    genuinely carries across batches)."""
-    ds = (
-        spark.readStream.schema(CORPUS_DOCUMENTS_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
-    q = (
-        dedup_stream(ds)
-        .writeStream.outputMode("append")
         .format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
@@ -455,8 +414,6 @@ def drain_neardup(
     bands_dir = os.path.join(state_dir, "bands")
     texts_dir = os.path.join(state_dir, "texts")
     pairs_dir = os.path.join(state_dir, "pairs")
-    bands_schema = "doc bigint, band_idx int, band_hash string"
-    texts_schema = "doc_id bigint, text string"
 
     def _hadoop_path_exists(path: str) -> bool:
         # existence via Spark's Hadoop FileSystem API (round-6 advice
@@ -486,8 +443,8 @@ def drain_neardup(
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select("doc_id", "text").localCheckpoint(eager=True)
-        index = _read_state(bands_dir, bands_schema, batch_id)
-        prior_texts = _read_state(texts_dir, texts_schema, batch_id)
+        index = _read_state(bands_dir, DRAIN_BANDS_DDL, batch_id)
+        prior_texts = _read_state(texts_dir, DRAIN_TEXTS_DDL, batch_id)
         pairs, batch_bands = minhash_probe_band_index(
             batch,
             index,

@@ -26,77 +26,21 @@ import argparse
 import json
 
 
-def execute_job(spark, job_type: str, city: str, args, web, site) -> dict:
-    """Run ONE scheduler job to completion (serial: caller must not
-    overlap calls — the jobMutex contract)."""
-    from pyspark.sql import functions as F
-
-    from fundamental_spark.crawl.runner import CrawlRunner
-    from fundamental_spark.functions.extractors import extract_items
-    from fundamental_spark.operators.lifecycle import (
-        mark_inactive_from_refresh,
-        upsert_properties,
-    )
-    from fundamental_spark.tableformat import Warehouse
-
-    wh_root = f"{args.warehouse}/{job_type}_{city}"
-    props = Warehouse(spark, f"{args.warehouse}/props")
-
-    if job_type == "hulls":
-        # rebuild hulls from the accumulated district_points table (the
-        # reference reads its district points from the DB the same way,
-        # district.go:60-90); nothing geocoded yet -> skip, like a fresh
-        # deployment's first 00:30 tick
-        from fundamental_spark.operators.geo import dedup_points, district_hulls
-
-        if not props.exists("district_points"):
-            return {"job": job_type, "skipped": "no district points yet"}
-        hulls = district_hulls(dedup_points(props.read("district_points")))
-        props.overwrite("district_hulls", hulls)
-        return {"job": job_type, "districts": hulls.count()}
-
-    mode = "refresh" if job_type == "refresh" else "crawl"
-    runner = CrawlRunner(
-        spark=spark,
-        warehouse_root=wh_root,
-        web=web,
-        spider_type="sold" if job_type == "sold" else "active",
-        mode=mode,
-        max_pages=args.max_pages,
-    )
-    runner.init([(site.search_url(city, 1), city)])
-    waves = runner.run()
-    out = {"job": job_type, "city": city, "waves": waves}
-    if mode == "refresh":
-        refreshed = runner.table("refreshed_urls")
-        if props.exists("properties"):
-            out["marked_inactive"] = mark_inactive_from_refresh(
-                props, refreshed, wave=runner.wave
-            )
-        out["refreshed_urls"] = refreshed.count()
-    else:
-        docs = runner.table("documents")
-        items = extract_items(docs)
-        if job_type == "sold":
-            items = items.withColumn("status", F.lit("sold"))
-        upsert_properties(props, items, wave=runner.wave)
-        out["documents"] = docs.count()
-    return out
-
-
-def execute_job_batched(
+def execute_job(
     spark, job_type: str, cities: list[str], args, web, site, seen_urls=None
 ) -> dict:
-    """One scheduler job TYPE for a whole tick, all cities in ONE
-    multi-seed runner. The reference runs one spider process per city
-    strictly serially under the jobMutex; per-city frontiers are
-    independent, so draining their union in one distributed runner
-    computes the identical result (each wave still honors per-city
-    stop rules — they key on the city column) while the SERIAL contract
-    is preserved at the granularity that matters for correctness: job
-    TYPES within a tick still execute in the reference order
-    (sold -> hulls -> active -> refresh). This is the 10x-scale path:
-    9,600 per-city drains/day collapse to 25 distributed drains.
+    """Run ONE scheduler job to completion (serial: caller must not
+    overlap calls — the jobMutex contract): one job TYPE for the given
+    cities, all of them in ONE multi-seed runner. The reference runs one
+    spider process per city strictly serially under the jobMutex;
+    per-city frontiers are independent, so draining their union in one
+    distributed runner computes the identical result (each wave still
+    honors per-city stop rules — they key on the city column) while the
+    SERIAL contract is preserved at the granularity that matters for
+    correctness: job TYPES within a tick still execute in the reference
+    order (sold -> hulls -> active -> refresh). This is the 10x-scale
+    path: 9,600 per-city drains/day collapse to 25 distributed drains.
+    ``main`` passes one city per call, the reference's per-city shape.
 
     ``seen_urls``: one-column DataFrame of already-known listing URLs
     (the DB-backed set funda_spider.py:46 passes to the spider) — an
@@ -115,6 +59,10 @@ def execute_job_batched(
     props = Warehouse(spark, f"{args.warehouse}/props")
 
     if job_type == "hulls":
+        # rebuild hulls from the accumulated district_points table (the
+        # reference reads its district points from the DB the same way,
+        # district.go:60-90); nothing geocoded yet -> skip, like a fresh
+        # deployment's first 00:30 tick
         from fundamental_spark.operators.geo import dedup_points, district_hulls
 
         if not props.exists("district_points"):
@@ -126,7 +74,7 @@ def execute_job_batched(
     mode = "refresh" if job_type == "refresh" else "crawl"
     runner = CrawlRunner(
         spark=spark,
-        warehouse_root=f"{args.warehouse}/{job_type}_batch",
+        warehouse_root=f"{args.warehouse}/{job_type}",
         web=web,
         spider_type="sold" if job_type == "sold" else "active",
         mode=mode,
@@ -159,12 +107,12 @@ def execute_job_batched(
     return out
 
 
-def simulate_day_batched(spark, args, web, site, weekday: int = 0) -> list[dict]:
-    """One full simulated scheduler day (48 ticks) in batched mode:
-    every tick's job list comes from the same jobs_at cadence twin the
-    per-city mode uses; consecutive jobs of one type batch into one
-    runner. The known-URL set (props 'properties' table) carries
-    across ticks so hourly re-crawls stop on the no-new rule."""
+def simulate_day(spark, args, web, site, weekday: int = 0) -> list[dict]:
+    """One full simulated scheduler day (48 ticks): every tick's job
+    list comes from the jobs_at cadence twin; consecutive jobs of one
+    type batch into one runner. The known-URL set (props 'properties'
+    table) carries across ticks so hourly re-crawls stop on the no-new
+    rule."""
     from fundamental_spark.crawl.schedule import jobs_at
     from fundamental_spark.tableformat import Warehouse
 
@@ -186,7 +134,7 @@ def simulate_day_batched(spark, args, web, site, weekday: int = 0) -> list[dict]
                     if job_type in ("active", "sold") and props.exists("properties")
                     else None
                 )
-                res = execute_job_batched(
+                res = execute_job(
                     spark, job_type, cities, args, web, site, seen_urls=seen
                 )
                 res.update({"weekday": weekday, "hour": hour, "minute": minute})
@@ -205,7 +153,6 @@ def main() -> None:
     ap.add_argument("--weekday", type=int, default=0, help="Go weekday: Sunday=0")
     ap.add_argument("--hours", type=int, nargs="+", default=[0],
                     help="which hours of the simulated day to tick")
-    ap.add_argument("--max-jobs", type=int, default=0, help="0 = unlimited")
     args = ap.parse_args()
 
     from fundamental_spark.crawl.schedule import jobs_at
@@ -225,10 +172,9 @@ def main() -> None:
     for hour in args.hours:
         for minute in (0, 30):
             for job_type, city in jobs_at(args.weekday, hour, minute, args.cities):
-                if args.max_jobs and len(executed) >= args.max_jobs:
-                    break
-                res = execute_job(spark, job_type, city, args, web, site)
-                res.update({"weekday": args.weekday, "hour": hour, "minute": minute})
+                res = execute_job(spark, job_type, [city], args, web, site)
+                res.update({"city": city, "weekday": args.weekday, "hour": hour,
+                            "minute": minute})
                 executed.append(res)
                 print(json.dumps(res), flush=True)
     print(json.dumps({"total_jobs": len(executed)}), flush=True)

@@ -113,7 +113,8 @@ def test_delete_stash_collision_removes_one_occurrence(spark):
     sibling's entry (and its membership) intact. The old setdiff1d
     form stripped ALL occurrences, turning the sibling into a false
     negative — the one guarantee a cuckoo prefilter must never break."""
-    from fundamental_spark.crawl.cuckoo import CUCKOO_SCHEMA, _fp_i1_i2, _stash_key
+    from fundamental_spark.crawl.cuckoo import _fp_i1_i2, _stash_key
+    from fundamental_spark.schemas import CUCKOO_SCHEMA
 
     m, f = 16, 12
     h1, h2 = 244, 402  # found by search: same stash key at m=16

@@ -8,7 +8,7 @@ import datetime
 from pyspark.sql import functions as F
 
 from fundamental_spark.operators.lifecycle import (
-    mark_inactive,
+    mark_inactive_from_refresh,
     previous_price,
     upsert_properties,
 )
@@ -36,8 +36,8 @@ def test_upsert_republish_and_mark_inactive(spark, tmp_path):
     assert props["u1"]["status"] == "active" and props["u1"]["republish_count"] == 0
 
     # u2 disappears from the refreshed crawl -> inactive
-    refreshed = spark.createDataFrame([("u1",)], "url string")
-    n = mark_inactive(wh, "amsterdam", refreshed, wave=2)
+    refreshed = spark.createDataFrame([("u1", "amsterdam")], "url string, city string")
+    n = mark_inactive_from_refresh(wh, refreshed, wave=2)
     assert n == 1
     props = {r["url"]: r for r in wh.read("properties").collect()}
     assert props["u2"]["status"] == "inactive"

@@ -7,9 +7,11 @@ for the per-round correctness window lives in ``__spark_entry__``.
 Only ``session.py`` reads the environment: its settings are deployment
 settings, and nothing else in the library grows an env-var knob. No
 function in the library is over 150 lines. The crawl and lifecycle
-table schemas are defined in ``schemas.py`` alone. Driver metadata is
-written by ``Warehouse.write_meta`` alone. The ANN operators share one
-1e-9 pin and one per-query rank window.
+table schemas, DDL strings included, are defined in ``schemas.py``
+alone. Driver metadata is written by ``Warehouse.write_meta`` alone.
+The ANN operators share one 1e-9 pin and one per-query rank window.
+Every library function has a caller outside the tests, or a reason to
+stay in ``KEPT``.
 """
 
 from __future__ import annotations
@@ -111,15 +113,49 @@ def test_library_functions_stay_short():
     assert not long, long
 
 
+def _str_constant(node) -> bool:
+    return isinstance(node, ast.Constant) and isinstance(node.value, str)
+
+
 def test_table_schemas_are_defined_only_in_schemas_module():
-    """The crawl and lifecycle layers import their table schemas from
-    ``schemas.py`` (or derive them from it): none of their modules
-    builds a Spark or pyarrow schema of its own."""
+    """Every table layout lives in ``schemas.py``:
+
+    - no module-level string named ``*_SCHEMA`` or ``*_DDL`` anywhere
+      else in the library;
+    - the crawl, lifecycle, geo, metro and stream modules build no Spark
+      or pyarrow schema of their own and pass no DDL string literal to
+      ``createDataFrame`` or ``.schema(...)``: they import their table
+      schemas from ``schemas.py`` (or derive them from it).
+
+    Operator-internal UDF and scratch-frame shapes (such as the
+    micro-batch row layout in ``pipeline.py`` or the neighbour rows in
+    ``similarity.py``) are not tables; they stay beside the code that
+    builds them."""
+    named = []
+    for dirpath, _, files in os.walk(PKG):
+        for name in sorted(files):
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, PKG)
+            if not name.endswith(".py") or rel == "schemas.py":
+                continue
+            named += [
+                f"{rel}:{node.lineno} {t.id}"
+                for node in ast.parse(open(path).read(), path).body
+                if isinstance(node, ast.Assign) and _str_constant(node.value)
+                for t in node.targets
+                if isinstance(t, ast.Name) and t.id.endswith(("_SCHEMA", "_DDL"))
+            ]
     paths = [
         os.path.join(PKG, "crawl", name)
         for name in sorted(os.listdir(os.path.join(PKG, "crawl")))
         if name.endswith(".py")
-    ] + [os.path.join(PKG, "operators", "lifecycle.py"), os.path.join(PKG, "streaming", "jobs.py")]
+    ] + [
+        os.path.join(PKG, *rel)
+        for rel in (
+            ("operators", "lifecycle.py"), ("operators", "geo.py"),
+            ("operators", "analysis.py"), ("streaming", "jobs.py"),
+        )
+    ]
     builders = []
     for path in paths:
         for node in ast.walk(ast.parse(open(path).read(), path)):
@@ -128,11 +164,14 @@ def test_table_schemas_are_defined_only_in_schemas_module():
             f = node.func
             name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
             owner = getattr(getattr(f, "value", None), "id", None)
-            if name in ("StructType", "StructField") or (
+            ddl = name in ("createDataFrame", "schema") and any(
+                _str_constant(a) for a in node.args + [k.value for k in node.keywords]
+            )
+            if ddl or name in ("StructType", "StructField") or (
                 owner in ("pa", "pyarrow") and name in ("schema", "struct", "field")
             ):
                 builders.append(f"{os.path.relpath(path, PKG)}:{node.lineno} {name}")
-    assert not builders, builders
+    assert not named + builders, "\n".join(named + builders)
 
 
 def _file_writes(node, func=None):
@@ -242,3 +281,87 @@ def test_whitespace_tokenizer_is_written_once():
             ]
     assert not found, found
 
+
+
+# Library functions and classes with no caller outside the tests, kept
+# on purpose. Each entry names the capability it stands for: a SURVEY
+# row of the reference, or the verifier role it plays.
+KEPT = {
+    "operators/geo.py::nl_bbox_filter": "S11 geocoder NL bounding-box check",
+    "operators/geo.py::geocode_enrich": "S11 geocode cache join",
+    "operators/geo.py::geocode_metro_cities": "S11 city geocoding for metro areas",
+    "operators/geo.py::parse_wkt_point": "F14 coordinates from a WKT point",
+    "operators/geo.py::geocode_candidates": "F13 geocode candidate filter",
+    "operators/geo.py::unique_districts": "F10 valid-postal district list",
+    "operators/geo.py::hulls_to_geojson": "S13 GeoJSON sink of the district hulls",
+    "operators/analysis.py::init_metro_tables": "J4 metro config tables",
+    "operators/analysis.py::metro_rollup": "J4 metro area to city rollup",
+    "operators/analysis.py::update_metro_centers": "A6 metro centers",
+    "operators/analysis.py::metro_city_expansion": "J8 metro area to city filter",
+    "operators/lifecycle.py::previous_price": "W4 previous price per listing",
+    "streaming/jobs.py::stream_new_listing_alerts": "S14 new-listing alert sink",
+    "streaming/jobs.py::stream_event_counts": "T10 watermarked windowed counts",
+    "streaming/jobs.py::drain_neardup": "T12 streaming near-dup drain",
+    "synth/reference_sim.py::simulate_crawl": "verifier until ROADMAP #5",
+    "synth/reference_sim.py::simulate_refresh": "verifier until ROADMAP #5",
+    "crawl/parse.py::parse_spans_udf": "S7 detail-page spans as a column UDF",
+    "functions/extractors.py::normalize_city": "P11 city normalization",
+    "operators/dedup.py::winnow_fingerprints": "D5 winnowing fingerprints as one column",
+}
+
+
+def _caller_sources():
+    """Every non-test Python file: the library, the jobs, the bench
+    scripts, the entry module and the benchmark harness."""
+    for base in ("fundamental_spark", "jobs", "perfbench"):
+        for dirpath, _, files in os.walk(os.path.join(REPO, base)):
+            yield from (os.path.join(dirpath, f) for f in sorted(files) if f.endswith(".py"))
+    for name in sorted(os.listdir(REPO)):
+        if name.endswith(".py") and (name.startswith("bench") or name == "__spark_entry__.py"):
+            yield os.path.join(REPO, name)
+
+
+def _references(node, owner, out):
+    """Add (name, owner) for each Name, Attribute and ImportFrom name
+    under ``node``; ``owner`` is the enclosing top-level definition."""
+    if isinstance(node, ast.Name):
+        out.add((node.id, owner))
+    elif isinstance(node, ast.Attribute):
+        out.add((node.attr, owner))
+    elif isinstance(node, ast.ImportFrom):
+        out.update((a.name, owner) for a in node.names)
+    for child in ast.iter_child_nodes(node):
+        _references(child, owner, out)
+
+
+def test_every_library_function_has_a_caller():
+    """Each top-level function and class under ``fundamental_spark/``,
+    private ones included, is referenced from outside its own body by
+    a non-test file, or registered with ``@q``, or listed in ``KEPT``.
+    Code only the tests call belongs in the tests, or goes. A ``KEPT``
+    entry that gained a caller, or names nothing, fails too."""
+    refs = set()  # (name, (file, enclosing top-level definition))
+    defs = []
+    for path in _caller_sources():
+        for top in ast.parse(open(path).read(), path).body:
+            name = getattr(top, "name", None)
+            _references(top, (path, name), refs)
+            if path.startswith(PKG + os.sep) and isinstance(
+                top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) and not any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "q"
+                for d in top.decorator_list
+            ):
+                defs.append((path, name))
+    owners = {}
+    for name, owner in refs:
+        owners.setdefault(name, set()).add(owner)
+    uncalled = {
+        f"{os.path.relpath(path, PKG)}::{name}"
+        for path, name in defs
+        if not owners.get(name, set()) - {(path, name)}
+    }
+    orphans = sorted(uncalled - set(KEPT))
+    assert not orphans, "no caller outside tests/:\n" + "\n".join(orphans)
+    stale = sorted(set(KEPT) - uncalled)
+    assert not stale, "KEPT entries with a caller or no definition:\n" + "\n".join(stale)

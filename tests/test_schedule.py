@@ -13,15 +13,26 @@ from __future__ import annotations
 
 import importlib.util
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import functions as F
 
 from fundamental_spark.crawl.schedule import (
-    REFRESH_TIME_SLOTS,
+    N_WEEKDAYS,
     jobs_at,
     refresh_slot_table,
-    simulate_week,
 )
+
+
+def simulate_week(cities: list[str]) -> Iterator[tuple[int, int, int, str, str]]:
+    """Every job of one scheduler week in execution order:
+    (weekday, hour, minute, job_type, city). Serial by construction —
+    the jobMutex twin: a job list is a total order, never a DAG."""
+    for weekday in range(N_WEEKDAYS):
+        for hour in range(24):
+            for minute in (0, 30):
+                for job_type, city in jobs_at(weekday, hour, minute, cities):
+                    yield (weekday, hour, minute, job_type, city)
 
 
 # ---- straight port of scheduler.go:209-253 (test oracle) -----------------
@@ -151,7 +162,7 @@ def test_orchestration_executes_a_midnight_tick(spark, tmp_path):
     results = []
     for hour, minute in ((0, 0), (0, 30)):
         for job_type, city in jobs_at(0, hour, minute, cities):
-            results.append(sched.execute_job(spark, job_type, city, args, web, site))
+            results.append(sched.execute_job(spark, job_type, [city], args, web, site))
 
     kinds = [r["job"] for r in results]
     assert kinds == ["sold", "active", "refresh", "hulls"]
@@ -168,11 +179,11 @@ def test_orchestration_executes_a_midnight_tick(spark, tmp_path):
 
 
 def test_batched_tick_equals_per_city(spark, tmp_path):
-    """Round-5 (r4 verdict #6): execute_job_batched — the 10x scheduler
-    path that collapses a tick's per-city jobs of one type into one
-    multi-seed distributed drain — must land the same properties table
-    as the reference-shaped per-city serial jobs, and report the
-    summed wave totals."""
+    """execute_job over a tick's cities — the 10x scheduler path that
+    collapses a tick's per-city jobs of one type into one multi-seed
+    distributed drain — must land the same properties table as the
+    reference-shaped per-city serial jobs, and report the summed wave
+    totals."""
     from types import SimpleNamespace
 
     from fundamental_spark.synth.site import build_site, web_rows
@@ -187,11 +198,11 @@ def test_batched_tick_equals_per_city(spark, tmp_path):
 
     args1 = SimpleNamespace(warehouse=str(tmp_path / "wh1"), max_pages=100)
     for c in cities:
-        sched.execute_job(spark, "active", c, args1, web, site)
+        sched.execute_job(spark, "active", [c], args1, web, site)
     p1 = Warehouse(spark, str(tmp_path / "wh1" / "props")).read("properties")
 
     args2 = SimpleNamespace(warehouse=str(tmp_path / "wh2"), max_pages=100)
-    res = sched.execute_job_batched(spark, "active", cities, args2, web, site)
+    res = sched.execute_job(spark, "active", cities, args2, web, site)
     p2 = Warehouse(spark, str(tmp_path / "wh2" / "props")).read("properties")
 
     assert res["pages_fetched"] > 0 and res["cities"] == 2
@@ -201,7 +212,7 @@ def test_batched_tick_equals_per_city(spark, tmp_path):
     # a second batched tick with the known-URL set fetches search pages
     # only (the reference's steady-state hourly tick)
     seen = p2.select("url")
-    res2 = sched.execute_job_batched(
+    res2 = sched.execute_job(
         spark, "active", cities, args2, web, site, seen_urls=seen
     )
     assert res2["new_listing_urls"] == 0

@@ -1,99 +1,13 @@
-"""applyInPandasWithState sessionization: the streamed closed sessions
-must agree exactly with the batch twin (queries.event_sessions) — the
-custom-stateful-operator contract."""
+"""Streaming near-dup drain (``streaming/jobs.py::drain_neardup``): the
+union of its per-micro-batch pairs equals the one-shot full-corpus
+MinHash-LSH pair set, its micro-batch job count is pinned, and it
+refuses a low-recall config before the query starts."""
 
 from __future__ import annotations
 
-import glob
-
 from pyspark.sql import functions as F
 
-from fundamental_spark.queries import event_sessions
-from fundamental_spark.streaming.stateful import drain_sessions
-
 SF = "/root/testdata/sf0.001"
-
-
-def test_streamed_sessions_match_batch(spark, tmp_path):
-    # split events into several files so state must carry across
-    # micro-batches (one file per trigger). The parquet file source
-    # orders files by MODIFICATION TIME, so write the ts-slices
-    # sequentially — the operator's contract is in-order micro-batches
-    # (a 24/7 deployment gets that from the upstream log).
-    import time as _time
-
-    from pyspark.sql import Window as W
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    sliced = ev.withColumn("_slice", F.ntile(4).over(W.orderBy("ts", "event_id")))
-    src = str(tmp_path / "events_src")
-    for i in range(1, 5):
-        sliced.filter(F.col("_slice") == i).drop("_slice").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        _time.sleep(1.1)
-    assert len(glob.glob(src + "/part-*")) >= 4
-
-    out = str(tmp_path / "sessions")
-    drain_sessions(spark, src, str(tmp_path / "ckpt"), out)
-
-    streamed = spark.read.parquet(out)
-    batch = event_sessions(spark, SF)
-
-    # the operator emits sessions CLOSED by a later event; the final
-    # open session per user has no successor to close it in a bounded
-    # drain. So: streamed == batch minus each user's last session.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("session_no"))
-    closed_expected = (
-        batch.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") > 1)
-        .drop("_rk")
-    )
-    key = ["user_id", "session_start", "session_end", "n_events", "total_value"]
-    got = {tuple(r[k] for k in key) for r in streamed.collect()}
-    want = {tuple(r[k] for k in key) for r in closed_expected.collect()}
-    assert got == want
-    assert len(got) > 0  # the gap rule actually closed sessions mid-stream
-
-
-def test_streamed_dedup_matches_batch_keep_first(spark, tmp_path):
-    """Streaming exact dedup (built-in stateful dropDuplicates) over an
-    id-ordered multi-file drain keeps exactly the batch keep-min-id
-    representative set — including dups planted ACROSS micro-batches."""
-    import time as _time
-
-    from fundamental_spark.operators.dedup import exact_dedup
-    from fundamental_spark.streaming.jobs import drain_dedup
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    # plant a cross-batch dup: copy doc 0's text onto a high id
-    first_text = docs.orderBy("doc_id").first()["text"]
-    extra = spark.createDataFrame(
-        [(99990, first_text, "en", "srcX", len(first_text))],
-        "doc_id bigint, text string, lang string, source string, n_chars bigint",
-    )
-    all_docs = docs.unionByName(extra)
-    src = str(tmp_path / "docs_src")
-    n = docs.count()
-    bounds = [(0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, 10 ** 9)]
-    for i, (lo, hi) in enumerate(bounds):
-        (all_docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-         .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)  # file source orders by mtime
-    out = str(tmp_path / "out")
-    drain_dedup(spark, src, str(tmp_path / "ckpt"), out)
-    out_rows = spark.read.parquet(out).collect()
-    kept_ids = {r["doc_id"] for r in out_rows}
-    kept_fps = {r["fp"] for r in out_rows}
-    groups = exact_dedup(all_docs).collect()
-    # exactly one survivor per distinct fingerprint, covering all of them
-    assert len(out_rows) == len(groups)
-    assert kept_fps == {r["fp"] for r in groups}
-    # the planted CROSS-batch dup is dropped via carried state — this
-    # part is deterministic regardless of within-batch first-row picks
-    assert 99990 not in kept_ids
 
 
 def test_streamed_neardup_matches_full_corpus_lsh(spark, tmp_path):
